@@ -140,19 +140,7 @@ object Tables {
   // The split count is a pure function of (file layout, session read
   // confs), so probe the RAW documents scan — a leaf plan, no stages
   // to materialize — once per (session, dir) and reuse the decision.
-  private val scanPartsCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Int]]()
-
-  private def scanParallelism(spark: SparkSession, dir: String): Int = {
-    val memo = scanPartsCache.synchronized {
-      Option(scanPartsCache.get(spark)).getOrElse {
-        val m = scala.collection.concurrent.TrieMap.empty[String, Int]
-        scanPartsCache.put(spark, m)
-        m
-      }
-    }
-    memo.getOrElseUpdate(dir,
+  private def scanParallelism(spark: SparkSession, dir: String): Int =
+    graft.pipeline.ArtifactCache.memo(spark, s"scanparts:$dir")(
       documents(spark, dir).rdd.getNumPartitions)
-  }
 }

@@ -112,20 +112,22 @@ private[graft] object ServingCoalescer {
   private[graft] val batchesRun = new AtomicLong(0L)
   private[graft] val requestsServed = new AtomicLong(0L)
 
-  /** One session's pending queue + pump ownership flag. `busy` is
-    * held by exactly one pump task at a time; the enqueue/exit
-    * handshake (add-then-CAS on enqueue, recheck-after-release on
-    * exit) makes a lost wakeup impossible: whichever side observes the
-    * non-empty queue with the flag free claims the pump. */
+  /** One session's pending queue + pump ownership flag + serving-key
+    * registry. `busy` is held by exactly one pump task at a time; the
+    * enqueue/exit handshake (add-then-CAS on enqueue, recheck-after-
+    * release on exit) makes a lost wakeup impossible: whichever side
+    * observes the non-empty queue with the flag free claims the pump. */
   private final class Lane {
     val q = new ConcurrentLinkedQueue[Pending]()
     val busy = new AtomicBoolean(false)
+    val reg = new Registry
   }
 
-  /** Session → lane, weak-keyed like ArtifactCache's artifact map so a
-    * churned-and-dropped SparkSession's lane (and registry below) dies
-    * with it instead of pinning the session forever — the serving
-    * front end is the longest-lived object in a deployment. */
+  /** Session → lane, weak-keyed so a churned-and-dropped SparkSession's
+    * lane dies with it instead of pinning the session forever — the
+    * serving front end is the longest-lived object in a deployment.
+    * Not in ArtifactCache: a lane is a live request queue, not derived
+    * state, and `ArtifactCache.clear()` must never drop one. */
   private val lanes = new java.util.WeakHashMap[SparkSession, Lane]()
 
   private def laneOf(spark: SparkSession): Lane =
@@ -195,7 +197,7 @@ private[graft] object ServingCoalescer {
           weightInChunk += weightOf(next)
           next = lane.q.peek()
         }
-        if (chunk.nonEmpty) runChunk(spark, chunk.toSeq)
+        if (chunk.nonEmpty) runChunk(spark, lane.reg, chunk.toSeq)
         else {
           lane.busy.set(false)
           // exit handshake: a producer may have enqueued between the
@@ -243,15 +245,6 @@ private[graft] object ServingCoalescer {
     var unionFp: String = ""
   }
 
-  private val registries = new java.util.WeakHashMap[SparkSession, Registry]()
-
-  private def registryOf(spark: SparkSession): Registry =
-    registries.synchronized {
-      Option(registries.get(spark)).getOrElse {
-        val r = new Registry; registries.put(spark, r); r
-      }
-    }
-
   /** The cached union of every registered cube for this session.
     * Cached under a key-set fingerprint: registering a NEW key builds
     * (and caches) the widened union and drops the superseded one.
@@ -264,7 +257,7 @@ private[graft] object ServingCoalescer {
     }.mkString("|")
     if (fp != reg.unionFp) {
       if (reg.unionFp.nonEmpty)
-        graft.pipeline.ArtifactCache.drop(spark, s"servunion:${reg.unionFp}")
+        graft.pipeline.ArtifactCache.drop(s"servunion:${reg.unionFp}")
       reg.unionFp = fp
     }
     graft.pipeline.ArtifactCache.cached(spark, s"servunion:$fp") {
@@ -275,8 +268,8 @@ private[graft] object ServingCoalescer {
     }
   }
 
-  private def runChunk(spark: SparkSession, all: Seq[Pending]): Unit = {
-    val reg = registryOf(spark)
+  private def runChunk(spark: SparkSession, reg: Registry,
+      all: Seq[Pending]): Unit = {
     // key registration is driver-side and per-key: a key whose serving
     // cube cannot be constructed (unknown dataset/variable) fails only
     // its own pendings; the shared job proceeds over the healthy keys.

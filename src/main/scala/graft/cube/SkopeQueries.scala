@@ -138,25 +138,22 @@ object SkopeQueries {
   private val cubeDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** The same zonal mean answered from the MATERIALIZED cube
-    * (CubeWriter) instead of raw events: dataset selection is a
-    * partition-directory prune (`PartitionFilters`) and the band range
-    * prunes row groups via the within-file band sort — the 100 TB read
-    * path, exercised by a CHECKED query (its oracle is identical to
-    * skope_zonal_mean's, so the materialization must be
-    * semantics-preserving end-to-end). */
-  def cubeZonal(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + ":" + dir
-    val path = cubeDirs.computeIfAbsent(key, _ => {
+  /** The JVM-lifetime temp directory for (application, `tag`, `dir`),
+    * created once through `fill`. */
+  private def jvmTempDir(spark: SparkSession, tag: String, name: String,
+      dir: String)(fill: String => Unit): String =
+    cubeDirs.computeIfAbsent(
+        spark.sparkContext.applicationId + ":" + tag + dir, _ => {
       // per-JVM location (pid in the path): a shared fixed path would
       // race a CONCURRENT application overwriting it mid-scan; the /tmp
       // accumulation that a unique path reintroduces is handled by the
       // shutdown hook deleting this JVM's copies on exit
       val hash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+        .digest((tag + dir).getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.take(12)
       val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft-cube-$hash-${ProcessHandle.current().pid()}")
-      CubeWriter.materialize(spark, dir, p.toString)
+        s"graft-$name-$hash-${ProcessHandle.current().pid()}")
+      fill(p.toString)
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
@@ -165,6 +162,17 @@ object SkopeQueries {
       }))
       p.toString
     })
+
+  /** The same zonal mean answered from the MATERIALIZED cube
+    * (CubeWriter) instead of raw events: dataset selection is a
+    * partition-directory prune (`PartitionFilters`) and the band range
+    * prunes row groups via the within-file band sort — the 100 TB read
+    * path, exercised by a CHECKED query (its oracle is identical to
+    * skope_zonal_mean's, so the materialization must be
+    * semantics-preserving end-to-end). */
+  def cubeZonal(spark: SparkSession, dir: String): DataFrame = {
+    val path = jvmTempDir(spark, "", "cube", dir)(
+      CubeWriter.materialize(spark, dir, _))
     val slice = CubeWriter.readSlice(spark, path, DefaultDataset, ReqLo, ReqHi)
       .filter(DefaultBBox.contains(col("x"), col("y")))
     r6(slice.groupBy(col("band")).agg(avg(col("v")).as("zv")))
@@ -177,22 +185,8 @@ object SkopeQueries {
     * measures the per-file footprint shrink). Oracle identical to
     * skope_zonal_mean: both lake layouts must be semantics-preserving. */
   def cubeSpatialZonal(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + ":z:" + dir
-    val path = cubeDirs.computeIfAbsent(key, _ => {
-      val hash = java.security.MessageDigest.getInstance("MD5")
-        .digest(("z:" + dir).getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft-zcube-$hash-${ProcessHandle.current().pid()}")
-      CubeWriter.materializeZOrdered(spark, dir, p.toString)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(p)
-      }))
-      p.toString
-    })
+    val path = jvmTempDir(spark, "z:", "zcube", dir)(
+      CubeWriter.materializeZOrdered(spark, dir, _))
     val slice = CubeWriter.readSpatialSlice(spark, path, DefaultDataset,
       DefaultBBox.x0, DefaultBBox.x1, DefaultBBox.y0, DefaultBBox.y1,
       ReqLo, ReqHi)
@@ -212,22 +206,8 @@ object SkopeQueries {
     * the cube in SQL (float32 value cast mirrored engine-side). */
   def geotiffExport(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = spark.sparkContext.applicationId + ":tif:" + dir
-    val outBase = cubeDirs.computeIfAbsent(key, _ => {
-      val hash = java.security.MessageDigest.getInstance("MD5")
-        .digest(("tif:" + dir).getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val p = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft-tifexp-$hash-${ProcessHandle.current().pid()}")
-      p.mkdirs()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(p)
-      }))
-      p.toString
-    })
+    val outBase = jvmTempDir(spark, "tif:", "tifexp", dir)(
+      p => new java.io.File(p).mkdirs())
     val w = EventCube.GridWidth
     val h = Geometry.GridHeight
     // clip to the raster region: the grid is the dataset's declared

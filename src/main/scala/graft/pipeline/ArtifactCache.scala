@@ -1,65 +1,98 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Per-(session, corpus) cache of derived artifacts (shingle sets,
-  * signatures, normalized vectors, cluster labels) — the in-memory
-  * analogue of the parquet artifacts an ingestion job would write next
-  * to the corpus, shared by every operator of a family.
-  *
-  * Weak identity map session → (key → persisted frame): entries die
-  * with their SparkSession (no cross-lifecycle leak, no hash-code
-  * collision after GC — judge-advice fix); `clear()` is the explicit
-  * unpersist hook (graft-visible: the bench clears artifacts between
-  * its timing passes so cached builds don't vanish from the min). */
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+
+/** The one memo of per-session derived state: persisted artifact
+  * frames (shingle sets, signature views, training frames) and
+  * driver-side values (corpus fingerprints, trained weights and
+  * codebooks, basis snapshots, scan probes). One policy covers all of
+  * it:
+  *  - per session: an entry belongs to one (session, key);
+  *  - weakly held: the session map has weak keys, so a session's
+  *    entries die with it (a cached DataFrame references its own
+  *    session, so frames are released by `drop`/`clear`);
+  *  - built once: concurrent callers of a missing (session, key) wait
+  *    on a single build; a build that throws is forgotten, so the next
+  *    caller builds afresh;
+  *  - `drop(key)` evicts the key in EVERY live session and unpersists
+  *    it — a takedown or a new generation is a fact about the lake,
+  *    not about the session that caused it;
+  *  - `clear()` removes everything (the bench's between-pass reset, so
+  *    pass 2 re-pays every build cost).
+  * Keys share one namespace; each family prefixes its own. */
 private[graft] object ArtifactCache {
 
-  private val cache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
+  /** A lazily built entry. `released` covers a drop that lands while
+    * the build runs: the finished frame is unpersisted, not leaked. */
+  private final class Slot(private[this] var build: () => Any) {
+    @volatile private[this] var value: Option[Any] = None
+    @volatile private[this] var released = false
 
-  /** Unpersist and forget every cached artifact — including the
-    * family's driver-held derived state (trained codebooks, corpus
-    * counts), so the bench's between-pass clear makes pass 2 re-pay
-    * EVERY build cost, not just the DataFrame ones. */
-  def clear(): Unit = {
-    cache.synchronized {
-      import scala.jdk.CollectionConverters._
-      cache.values.asScala.foreach(_.values.foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () }))
-      cache.clear()
+    def get: Any = value.getOrElse(synchronized {
+      value.getOrElse {
+        val v = build()
+        build = null
+        value = Some(v)
+        if (released) release()
+        v
+      }
+    })
+
+    def release(): Unit = {
+      released = true
+      value.foreach {
+        case ds: org.apache.spark.sql.Dataset[_] =>
+          try ds.unpersist() catch { case _: Throwable => () }
+        case _ => ()
+      }
     }
-    Similarity.clearDriverCaches()
-    Dedup.clearDriverCaches()
-    Bpe.clearCache()
-    QualityClf.clearCache()
-    LangIdClf.clearCache()
   }
 
-  /** Unpersist and forget one artifact (e.g. a superseded serving
-    * union when its key set widens). No-op if absent. */
-  def drop(spark: SparkSession, key: String): Unit = {
-    val perSession = cache.synchronized(Option(cache.get(spark)))
-    perSession.flatMap(_.remove(key)).foreach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
-  }
+  private val sessions =
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, Slot]]()
 
-  def cached(spark: SparkSession, key: String)
-      (build: => DataFrame): DataFrame = {
-    val perSession = cache.synchronized {
-      Option(cache.get(spark)).getOrElse {
-        val m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        cache.put(spark, m)
+  private def slots(spark: SparkSession): TrieMap[String, Slot] =
+    sessions.synchronized {
+      Option(sessions.get(spark)).getOrElse {
+        val m = TrieMap.empty[String, Slot]
+        sessions.put(spark, m)
         m
       }
     }
-    perSession.getOrElseUpdate(key, {
+
+  private def live: Seq[TrieMap[String, Slot]] =
+    sessions.synchronized(sessions.values.asScala.toList)
+
+  private def evict(m: TrieMap[String, Slot], key: String): Unit =
+    m.remove(key).foreach(_.release())
+
+  /** Unpersist and forget every entry of every session. */
+  def clear(): Unit = live.foreach(m => m.keys.foreach(evict(m, _)))
+
+  /** Unpersist and forget `key` in every live session. No-op if absent. */
+  def drop(key: String): Unit = live.foreach(evict(_, key))
+
+  /** The driver-side value for (session, key), built on first use. */
+  def memo[T](spark: SparkSession, key: String)(build: => T): T = {
+    val m = slots(spark)
+    val slot = m.getOrElseUpdate(key, new Slot(() => build))
+    try slot.get.asInstanceOf[T]
+    catch { case t: Throwable => m.remove(key, slot); throw t }
+  }
+
+  /** [[memo]] for frames: the stored frame is persisted. */
+  def cached(spark: SparkSession, key: String)
+      (build: => DataFrame): DataFrame =
+    memo(spark, key) {
       val df = build
       // a build that persisted (and materialized) itself is stored
       // as-is — re-persisting would only log a cache-manager warning
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (df.storageLevel == StorageLevel.NONE)
+        df.persist(StorageLevel.MEMORY_AND_DISK)
       else df
-    })
-  }
+    }
 }

@@ -57,13 +57,6 @@ object Bpe {
     * vocabulary every word collapses to a single token first. */
   val MergesTrainedCap = 512
 
-  // trained merges per (session, corpus) — training is an action, so
-  // cache it like the other per-session derived artifacts
-  private val trained =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-
-  private[pipeline] def clearCache(): Unit = trained.clear()
-
   private def bpeGenSuffix(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
     dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
@@ -122,9 +115,8 @@ object Bpe {
     * reloaded merges ARE the trained merges and the oracle stays
     * exact. */
   private[graft] def trainMerges(spark: SparkSession,
-      dir: String): Seq[(String, String)] = {
-    val key = spark.sparkContext.applicationId + ":" + dir
-    trained.computeIfAbsent(key, _ => {
+      dir: String): Seq[(String, String)] =
+    ArtifactCache.memo(spark, s"bpe:$dir") {
       val tbl = "graft_bpe_" + bpeGenSuffix(spark, dir)
       if (spark.catalog.tableExists(tbl))
         spark.table(tbl).collect()
@@ -140,8 +132,7 @@ object Bpe {
           .format("parquet").option("path", path).saveAsTable(tbl)
         merges
       }
-    })
-  }
+    }
 
   private def trainFresh(spark: SparkSession,
       dir: String): Seq[(String, String)] =
@@ -208,9 +199,8 @@ object Bpe {
     * reference trainer instead. Sidecar-persisted per (corpus, k),
     * the trainMerges discipline. */
   private[graft] def trainMergesK(spark: SparkSession, dir: String,
-      k: Int): Seq[(String, String)] = {
-    val key = spark.sparkContext.applicationId + ":" + dir + ":k" + k
-    trained.computeIfAbsent(key, _ => {
+      k: Int): Seq[(String, String)] =
+    ArtifactCache.memo(spark, s"bpe:$dir:k$k") {
       val tbl = s"graft_bpek${k}_" + bpeGenSuffix(spark, dir)
       if (spark.catalog.tableExists(tbl))
         spark.table(tbl).collect()
@@ -226,8 +216,7 @@ object Bpe {
           .format("parquet").option("path", path).saveAsTable(tbl)
         merges
       }
-    })
-  }
+    }
 
   /** The `|tok||tok|` representation of a document's words after all
     * trained merges — a chain of codegen'd `replace` calls (StringReplace,

@@ -77,10 +77,6 @@ object Dedup {
         (col("doc_id") =!= col("canonical_id")).as("is_dup"))
   }
 
-  /** Unpersist and forget every cached artifact (delegates to the
-    * family-shared ArtifactCache). */
-  def clearShingleCache(): Unit = ArtifactCache.clear()
-
   /** Per-document shingle sets: (doc_id, hs) with hs = ascending-sorted
     * distinct 64-bit hashes of the word 3-grams
     * (HashKernels.shingle3SortedHashes — one kernel call per document).
@@ -366,15 +362,6 @@ object Dedup {
     * plus hashed-relation overhead. */
   private val PostingRowBytes = 64L
 
-  // per-(session, corpus) memo of the corpus fingerprint — one
-  // doc-linear agg per session, not per index lookup
-  private val fpCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-
-  private[graft] def clearDriverCaches(): Unit =
-    fpCache.synchronized(fpCache.clear())
-
   /** Content fingerprint of the corpus at `dir`, folded into the names
     * of the persisted index tables (judge-advice fix): a regenerated
     * corpus then misses the catalog check and rebuilds its index
@@ -387,22 +374,14 @@ object Dedup {
     * partitionings, and the scan is one narrow doc-linear agg,
     * memoized per session. */
   private[pipeline] def corpusFingerprint(spark: SparkSession,
-      dir: String): String = {
-    val perSession = fpCache.synchronized {
-      Option(fpCache.get(spark)).getOrElse {
-        val m = scala.collection.concurrent.TrieMap.empty[String, String]
-        fpCache.put(spark, m)
-        m
-      }
-    }
-    perSession.getOrElseUpdate(dir, {
+      dir: String): String =
+    ArtifactCache.memo(spark, s"fp:$dir") {
       val r = Tables.documents(spark, dir)
         .agg(count(lit(1)).as("n"),
           bit_xor(xxhash64(col("doc_id"), col("text"))).as("h"))
         .head()
       java.lang.Long.toHexString(r.getLong(0) * 31L + r.getLong(1))
-    })
-  }
+    }
 
   private def indexTableName(spark: SparkSession, dir: String,
       prefix: String): String =

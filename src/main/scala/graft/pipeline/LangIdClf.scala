@@ -162,14 +162,6 @@ object LangIdClf {
 
   // ------------------------------------------------------ training --
 
-  // per-(session, corpus) memo of the trained sparse weight rows
-  private val wCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Seq[(Int, Long, Double)]]]()
-
-  private[pipeline] def clearCache(): Unit =
-    wCache.synchronized(wCache.clear())
-
   private def liclfName(spark: SparkSession, dir: String): String =
     "graft_liclf_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
       "_" + Dedup.corpusFingerprint(spark, dir) +
@@ -189,18 +181,11 @@ object LangIdClf {
   /** Trained sparse weights (c, b, w), persisted like the PQ
     * codebooks: TrainRounds passes run once per (corpus content,
     * basis), land in a ≤ 20k-row parquet table, and every later
-    * session reads them back. Doubles round-trip parquet bit-exactly. */
+    * session reads them back. Doubles round-trip parquet bit-exactly.
+    * Memoized per (session, corpus). */
   private[pipeline] def trainedWeights(spark: SparkSession,
-      dir: String): Seq[(Int, Long, Double)] = {
-    val perSession = wCache.synchronized {
-      Option(wCache.get(spark)).getOrElse {
-        val m = scala.collection.concurrent
-          .TrieMap.empty[String, Seq[(Int, Long, Double)]]
-        wCache.put(spark, m)
-        m
-      }
-    }
-    perSession.getOrElseUpdate(dir, {
+      dir: String): Seq[(Int, Long, Double)] =
+    ArtifactCache.memo(spark, s"liclf_w:$dir") {
       val tbl = liclfName(spark, dir)
       import spark.implicits._
       if (spark.catalog.tableExists(tbl)) {
@@ -214,8 +199,7 @@ object LangIdClf {
           .format("parquet").option("path", path).saveAsTable(tbl)
         w
       }
-    })
-  }
+    }
 
   /** z₀..z₄ pivot columns from a (doc_id, b[, …]) frame joined against
     * a weight frame — 6-dp rounded per class (the roundEps discipline

@@ -259,15 +259,21 @@ object Multimodal {
     // session-cache the FILTERED view: one pair query consults it three
     // times (bucketPairs' hot probe + both join sides), and uncached each
     // consumption re-pays the bucketed scan + both anti-joins (measured
-    // +0.8 s warm vs the r19 session cache). The takedown and compaction
-    // hooks drop the entry, so a deletion is visible immediately —
-    // TakedownSpec's filtered-view identity stays exact.
-    else ArtifactCache.cached(spark, s"dhsigs:$dir")(
-      Registry.minus(spark,
-        Tombstones.minus(spark, spark.table(tbl),
-          mmTombName(spark, dir), "doc_id"),
-        dir, Registry.Doc, "doc_id"))
+    // +0.8 s warm vs the r19 session cache). Keyed by the
+    // fingerprint-named table, looked up under the family lock (plan
+    // construction only — materialization runs outside it), and dropped
+    // in every session by the takedown and compaction hooks, so a
+    // deletion is visible immediately everywhere.
+    else Maintenance.IndexLocks.withLock("mm", dir) {
+      ArtifactCache.cached(spark, sigViewKey(tbl))(
+        Registry.minus(spark,
+          Tombstones.minus(spark, spark.table(tbl),
+            mmTombName(spark, dir), "doc_id"),
+          dir, Registry.Doc, "doc_id"))
+    }
   }
+
+  private def sigViewKey(tbl: String): String = s"dhsigs:$tbl"
 
   /** Takedown hook for the image family (the [[Maintenance.takedown]]
     * fan-out): records doc ids in the mm deletion sidecar (and the
@@ -278,7 +284,7 @@ object Multimodal {
     Maintenance.IndexLocks.withLock("mm", dir) {
       if (permanent) Registry.addPermanent(spark, dir, Registry.Doc, docIds)
       val n = Tombstones.add(spark, mmTombName(spark, dir), docIds)
-      ArtifactCache.drop(spark, s"dhsigs:$dir")
+      ArtifactCache.drop(sigViewKey(dhashSigName(spark, dir)))
       n
     }
 
@@ -298,7 +304,7 @@ object Multimodal {
             Tombstones.minus(spark, df, tomb, "doc_id"),
             dir, Registry.Doc, "doc_id"))
       Tombstones.clear(spark, tomb)
-      ArtifactCache.drop(spark, s"dhsigs:$dir")
+      ArtifactCache.drop(sigViewKey(tbl))
       1
     }
   }

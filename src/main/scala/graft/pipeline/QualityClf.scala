@@ -151,30 +151,14 @@ object QualityClf {
   private def pExpr(w: Array[Double]): Column =
     lit(1.0) / (lit(1.0) + exp(-zExpr(w)))
 
-  // per-(session, corpus) memo of the trained weight vector — training
-  // is TrainRounds passes over the cached frame; score + apply reuse it
-  private val wCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Array[Double]]]()
-
-  private[pipeline] def clearCache(): Unit =
-    wCache.synchronized(wCache.clear())
-
   /** The fixed-round GD trainer. Each round: one aggregation over the
     * cached frame → NumFeatures gradient scalars on the driver →
     * 6-dp-rounded weight update (both roundings mirrored in the oracle
-    * CTE chain, so the trajectory is engine-exact). */
+    * CTE chain, so the trajectory is engine-exact). Memoized per
+    * (session, corpus): score + apply reuse the trained vector. */
   private[pipeline] def trainedWeights(spark: SparkSession,
-      dir: String): Array[Double] = {
-    val perSession = wCache.synchronized {
-      Option(wCache.get(spark)).getOrElse {
-        val m = scala.collection.concurrent
-          .TrieMap.empty[String, Array[Double]]
-        wCache.put(spark, m)
-        m
-      }
-    }
-    perSession.getOrElseUpdate(dir, {
+      dir: String): Array[Double] =
+    ArtifactCache.memo(spark, s"qclf_w:$dir") {
       // persisted like the PQ codebooks (persistedBook discipline):
       // the trained weights are a write-time artifact — a fresh
       // session reloads them instead of re-paying the TrainRounds
@@ -195,8 +179,7 @@ object QualityClf {
           .format("parquet").option("path", path).saveAsTable(tbl)
         w
       }
-    })
-  }
+    }
 
   private def qclfName(spark: SparkSession, dir: String): String =
     "graft_qclf_" + dir.replaceAll("[^A-Za-z0-9]", "_") +

@@ -101,32 +101,19 @@ private[graft] object Registry {
 
   // ------------------------------------------------- model basis --
 
-  // per-session memo of basis id snapshots (read once per (dir,
-  // domain), invalidated by advanceBasis — basis mutation is
-  // driver-coordinated like every lake write, so same-JVM
-  // invalidation is the contract)
-  private val basisCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Seq[Long]]]()
-
-  private def basisMemo(spark: SparkSession) = basisCache.synchronized {
-    Option(basisCache.get(spark)).getOrElse {
-      val m = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-      basisCache.put(spark, m)
-      m
-    }
-  }
-
   /** The id snapshot the current trained-artifact generation excludes
-    * (sorted; empty before any model refresh ever ran). */
+    * (sorted; empty before any model refresh ever ran). Memoized per
+    * session; [[advanceBasis]] invalidates it in every session (basis
+    * mutation is driver-coordinated like every lake write, so same-JVM
+    * invalidation is the contract). */
   def basisIds(spark: SparkSession, dir: String,
       domain: String): Seq[Long] =
-    basisMemo(spark).getOrElseUpdate(s"$domain:$dir", {
+    ArtifactCache.memo(spark, s"basis:$domain:$dir") {
       import spark.implicits._
       val tbl = basisName(dir, domain)
       if (!spark.catalog.tableExists(tbl)) Nil
       else spark.table(tbl).as[Long].collect().distinct.sorted.toSeq
-    })
+    }
 
   /** Name suffix of the current trained-artifact generation: "" for
     * the never-refreshed generation (so every existing artifact name
@@ -152,8 +139,9 @@ private[graft] object Registry {
 
   /** Advance the basis to the registry's current snapshot (the
     * refresh moment): overwrite the basis table, invalidate every
-    * in-session artifact memo (names changed — stale trained state
-    * must not serve the new generation), return the new basis. */
+    * session's memo, basis snapshots included (names changed — stale
+    * trained state must not serve the new generation), return the new
+    * basis. */
   def advanceBasis(spark: SparkSession, dir: String,
       domain: String): Seq[Long] = {
     import spark.implicits._
@@ -163,7 +151,6 @@ private[graft] object Registry {
     snapshot.toDF("id").coalesce(1)
       .write.mode(SaveMode.Overwrite).format("parquet")
       .option("path", path).saveAsTable(tbl)
-    basisMemo(spark).put(s"$domain:$dir", snapshot)
     ArtifactCache.clear()
     snapshot
   }

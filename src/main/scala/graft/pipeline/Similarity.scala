@@ -309,10 +309,6 @@ object Similarity {
     * engines. */
   val PcaK = 4
 
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Array[Double], Array[Array[Double]])]()
-
   /** First principal component of the embedding corpus by DETERMINISTIC
     * power iteration — the k-means-trainer discipline applied to PCA
     * (whitening / outlier scoring / drift diagnostics are standard
@@ -339,9 +335,8 @@ object Similarity {
     * recursion reduces exactly to the r13 pc1/pc2 formulation, so the
     * emb_pca oracle is unchanged. */
   private[pipeline] def pcaStateK(spark: SparkSession,
-      dir: String): (Array[Double], Array[Array[Double]]) = {
-    val key = spark.sparkContext.applicationId + ":" + dir
-    pcaCache.computeIfAbsent(key, _ => {
+      dir: String): (Array[Double], Array[Array[Double]]) =
+    ArtifactCache.memo(spark, s"pca:$dir") {
       // PERSISTED trained artifact (r18 verdict item 1): the 8+8·k
       // power-iteration passes run once per (corpus content, basis)
       // and land as a tiny 5-row book table — every later session
@@ -355,8 +350,7 @@ object Similarity {
         Array(Array(mu), comps)
       }
       (packed(0)(0), packed(1))
-    })
-  }
+    }
 
   /** The PCA training pass proper — deterministic deflated power
     * iteration over the TRAINED-ARTIFACT population ([[basisVecs]]:
@@ -613,14 +607,6 @@ object Similarity {
   val PqKTrained = 256
   val PqSubDimTrained: Int = Dim / PqMTrained
 
-  // trained codebooks are tiny (PqM×PqK×PqSubDim doubles = 8 KB) but
-  // cost KmIters corpus passes to build — cached per (session, corpus)
-  // like the DataFrame artifacts (WeakHashMap: entries die with the
-  // session)
-  private val cbCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Array[Array[Array[Double]]]]]()
-
   /** Fan-in of the trainers' deterministic tree combine. */
   private val CombineFanIn = 16
 
@@ -663,20 +649,6 @@ object Similarity {
     cur.collect().sortBy(_._1).map(_._2).reduceLeft(merge)
   }
 
-  /** Per-(session, key) memo around the codebook caches. */
-  private def cbMemo(spark: SparkSession, key: String)
-      (build: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] = {
-    val perSession = cbCache.synchronized {
-      Option(cbCache.get(spark)).getOrElse {
-        val m = scala.collection.concurrent
-          .TrieMap.empty[String, Array[Array[Array[Double]]]]
-        cbCache.put(spark, m)
-        m
-      }
-    }
-    perSession.getOrElseUpdate(key, build)
-  }
-
   /** Trained codebooks/centroids as PERSISTED sidecar tables — the
     * write-time discipline the dedup family already follows
     * (Dedup.minhashIndexTable): the KmIters training passes run ONCE
@@ -687,11 +659,11 @@ object Similarity {
     * a_ivfpqt/a_ivfpqr's 11-12 s of per-session training topped the
     * sf10 bench). Doubles round-trip parquet bit-exactly, so the
     * reloaded book is the trained book and every oracle stays exact.
-    * The in-memory cbMemo stays on top so repeat calls in one session
-    * skip even the read. */
+    * The ArtifactCache memo stays on top so repeat calls in one
+    * session skip even the read. */
   private def persistedBook(spark: SparkSession, dir: String, kind: String)
       (build: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] =
-    cbMemo(spark, s"$kind:$dir") {
+    ArtifactCache.memo(spark, s"cb:$kind:$dir") {
       val tbl = "graft_anncb_" + kind + "_" +
         dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
         embFingerprint(spark, dir) +
@@ -1803,37 +1775,10 @@ object Similarity {
   val SemFineRoute = 2
 
   /** Per-(session, corpus) vector count — sizes the centroid axes and
-    * the verify-join byte probe; cached so repeat invocations skip
+    * the verify-join byte probe; memoized so repeat invocations skip
     * even that one action (judge-advice round-9). */
-  private val countCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Long]]()
-
-  /** Forget the driver-held derived state (trained codebooks/centroids,
-    * corpus counts) — called from ArtifactCache.clear() so the bench's
-    * between-pass clear re-pays training like every other artifact. */
-  private[pipeline] def clearDriverCaches(): Unit = {
-    cbCache.synchronized(cbCache.clear())
-    countCache.synchronized(countCache.clear())
-    pcaCache.clear()
-  }
-
-  private def corpusCount(spark: SparkSession, dir: String): Long = {
-    val perSession = countCache.synchronized {
-      Option(countCache.get(spark)).getOrElse {
-        val m = scala.collection.concurrent.TrieMap.empty[String, Long]
-        countCache.put(spark, m)
-        m
-      }
-    }
-    perSession.getOrElseUpdate(dir, normedVecs(spark, dir).count())
-  }
-
-  // per-(session, corpus) memo of the embeddings-content fingerprint —
-  // the Dedup.corpusFingerprint discipline applied to the vector table
-  private val embFpCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+  private def corpusCount(spark: SparkSession, dir: String): Long =
+    ArtifactCache.memo(spark, s"veccount:$dir")(normedVecs(spark, dir).count())
 
   /** Content fingerprint of the embeddings corpus at `dir`, folded into
     * the persisted posting table's name: a regenerated corpus misses
@@ -1841,23 +1786,16 @@ object Similarity {
     * assignments, and same-sanitized dirs can only share a table when
     * their content is identical too. Order-independent (bit_xor of
     * per-row xxhash64 over id+vector), one narrow corpus-linear agg,
-    * memoized per session. */
-  private def embFingerprint(spark: SparkSession, dir: String): String = {
-    val perSession = embFpCache.synchronized {
-      Option(embFpCache.get(spark)).getOrElse {
-        val m = scala.collection.concurrent.TrieMap.empty[String, String]
-        embFpCache.put(spark, m)
-        m
-      }
-    }
-    perSession.getOrElseUpdate(dir, {
+    * memoized per session — the Dedup.corpusFingerprint discipline
+    * applied to the vector table. */
+  private def embFingerprint(spark: SparkSession, dir: String): String =
+    ArtifactCache.memo(spark, s"embfp:$dir") {
       val r = Tables.embeddings(spark, dir)
         .agg(count(lit(1)).as("n"),
           bit_xor(xxhash64(col("vec_id"), col("embedding"))).as("h"))
         .head()
       java.lang.Long.toHexString(r.getLong(0) * 31L + r.getLong(1))
-    })
-  }
+    }
 
   /** The semantic-dedup cluster assignment as a PERSISTED bucketed
     * lake table — the write-time artifact a production SemDeDup run

@@ -70,12 +70,12 @@ class BpeSpec extends SparkSpec {
     tampered.toSeq.toDF("rank", "l", "r").coalesce(1)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").option("path", path).saveAsTable(tbl)
-    Bpe.clearCache()
+    ArtifactCache.drop(s"bpe:$sfDir")
     assert(Bpe.trainMerges(spark, sfDir).head === (("zz", "qq")),
       "a second session must read the stored sidecar, not retrain")
     // restore: drop the sidecar → retrain reproduces the original
     spark.sql(s"DROP TABLE $tbl")
-    Bpe.clearCache()
+    ArtifactCache.drop(s"bpe:$sfDir")
     assert(Bpe.trainMerges(spark, sfDir) === m1,
       "retraining after sidecar loss must reproduce the trained merges")
     assert(spark.catalog.tableExists(tbl), "sidecar must be rewritten")

@@ -82,7 +82,8 @@ class ModelRefreshSpec extends SparkSpec {
       === rowSet(TrainingPrep.bigramLogprob(spark, m)))
     assert(rowSet(QualityClf.qualityClf(spark, d))
       === rowSet(QualityClf.qualityClf(spark, m)))
-    Bpe.clearCache() // force the persisted-table read of the new gen
+    // force the persisted-table read of the new gen
+    ArtifactCache.drop(s"bpe:$d")
     assert(Bpe.trainMerges(spark, d) === Bpe.trainMerges(spark, m))
     assert(oldMerges.nonEmpty) // the old generation really trained
     // the FOLDED (stream-only) docs' scores SURVIVE the refresh —
@@ -121,6 +122,23 @@ class ModelRefreshSpec extends SparkSpec {
     // (registry filtering, not retraining)
     assert(TrainingPrep.bigramLogprob(spark, d)
       .filter(col("doc_id").isin(one: _*)).count() === 0L)
+  }
+
+  test("a basis advance reaches a session that read the old basis") {
+    val d = java.nio.file.Files.createTempDirectory("graft_refresh_x")
+      .toString
+    graft.Tables.documents(spark, sfDir).limit(100)
+      .write.parquet(d + "/documents.parquet")
+    val b = spark.newSession()
+    assert(Registry.basisSuffix(b, d, Registry.Doc) === "")
+    // 5% permanently removed — crosses the 1% threshold
+    val removed = graft.Tables.documents(spark, d).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.take(5).toSeq
+    Registry.addPermanent(spark, d, Registry.Doc, removed)
+    Maintenance.compactAll(spark, d)
+    val advanced = Registry.basisSuffix(spark, d, Registry.Doc)
+    assert(advanced.startsWith("_g"))
+    assert(Registry.basisSuffix(b, d, Registry.Doc) === advanced)
   }
 
   test("vec domain: threshold crossing retrains books + codes to fresh-train-minus identity") {

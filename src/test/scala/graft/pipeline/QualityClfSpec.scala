@@ -20,8 +20,8 @@ class QualityClfSpec extends SparkSpec {
     // (a) reload path: memo cleared, persisted sidecar present — the
     // reloaded model must BE the trained model (parquet doubles
     // round-trip bit-exactly, the persistedBook discipline)
-    QualityClf.clearCache()
-    ArtifactCache.drop(spark, s"quality_train_$sfDir")
+    ArtifactCache.drop(s"qclf_w:$sfDir")
+    ArtifactCache.drop(s"quality_train_$sfDir")
     val w2 = QualityClf.trainedWeights(spark, sfDir)
     assert(w1.toSeq == w2.toSeq)
     // (b) true retrain: drop the sidecar too, so the whole GD chain
@@ -34,8 +34,8 @@ class QualityClfSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $tbl")
     val p = new org.apache.hadoop.fs.Path(loc)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    QualityClf.clearCache()
-    ArtifactCache.drop(spark, s"quality_train_$sfDir")
+    ArtifactCache.drop(s"qclf_w:$sfDir")
+    ArtifactCache.drop(s"quality_train_$sfDir")
     val w3 = QualityClf.trainedWeights(spark, sfDir)
     assert(w1.toSeq == w3.toSeq)
     // every weight sits on the 6-dp lattice the oracle mirrors

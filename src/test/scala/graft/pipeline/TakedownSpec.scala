@@ -157,6 +157,24 @@ class TakedownSpec extends SparkSpec {
         n.startsWith("graft_tomb_mm_")) && n.contains(cSlug)) === 0)
   }
 
+  test("a takedown reaches the signature view another session already read") {
+    // own corpus: no mm sidecar exists when session B first reads, so
+    // B's view was built with Tombstones.minus as the identity
+    val d = java.nio.file.Files.createTempDirectory("graft_takedown_x")
+      .toString
+    graft.Tables.documents(spark, sfDir).limit(60)
+      .write.parquet(d + "/documents.parquet")
+    val b = spark.newSession()
+    def sigIds(s: org.apache.spark.sql.SparkSession): Set[Long] =
+      Multimodal.dhashSigs(s, d).select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+    val before = sigIds(b)
+    val gone = before.min
+    assert(Maintenance.takedown(spark, d, Seq(gone))("mm") === 1L)
+    assert(sigIds(b) === before - gone)
+    assert(sigIds(spark) === before - gone)
+  }
+
   test("permanent takedown records both id domains in the registry once") {
     // separate corpus: registry state must not leak into the main test
     val d = java.nio.file.Files.createTempDirectory("graft_takedown_p")
