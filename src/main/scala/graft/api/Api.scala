@@ -158,10 +158,11 @@ object Api {
     * 0 ≤ t ≤ this and enforced at materialization). */
   val MaxProcessingTimeMs: Long = 15000L
 
-  /** Serving-path zonal jobs route through [[ServingCoalescer]]'s
-    * shared micro-batch plan by default; only an explicit opt-out
-    * value disables it (the ServeFastPath flag discipline). A var so
-    * CoalescerSpec can pin coalesced-vs-solo parity in one JVM. */
+  /** Serving-path zonal series are answered by [[ServingCoalescer]]
+    * from its driver-side index by default; only an explicit opt-out
+    * value selects the solo per-request job over the cached cube (the
+    * ServeFastPath flag discipline). A var so CoalescerSpec can pin
+    * coalesced-vs-solo parity in one JVM. */
   private[api] var ServeCoalesce: Boolean =
     sys.env.get("SPARK_GRAFT_SERVE_COALESCE")
       .forall(v => !Set("0", "false", "no", "off").contains(v.trim.toLowerCase))
@@ -410,11 +411,12 @@ object Api {
     // each re-analyzed, re-codegen'd and re-EXECUTED per request, with
     // stats re-running the whole window chain. The reference's own
     // request shape is one bounded window read + NumPy series math —
-    // mirrored here: ONE cluster job (the zonal reduce over the cached
-    // cube — its input is MaxCells-bounded like the reference's
-    // rasterio window, its output ≤ #bands rows), then transforms /
-    // smoothers / stats run driver-side over the collected series with
-    // EXACTLY the batch path's window semantics (ServingCacheSpec
+    // mirrored here: the zonal series is read from the serving
+    // coalescer's driver-side index of the cached cube (its input is
+    // MaxCells-bounded like the reference's rasterio window, its
+    // output ≤ #bands rows; no Spark job once the index is built), then
+    // transforms / smoothers / stats run driver-side over the series
+    // with EXACTLY the batch path's window semantics (ServingCacheSpec
     // sweeps row-identity; the Welford recurrence in ServingMath is
     // CentralMomentAgg's own update rule, so the sd == 0 → NULL branch
     // cannot drift). The batch path below stays fully distributed —
@@ -568,7 +570,7 @@ object Api {
   }
 
   // ------------------------------------------------------------------
-  // Serving fast path: driver-side series math over ONE bounded job
+  // Serving fast path: driver-side series math over an index read
   // ------------------------------------------------------------------
 
   /** Driver-side mirrors of the batch path's window/aggregate
@@ -579,7 +581,8 @@ object Api {
     * delta/n, m2 += delta·(delta − delta/n)) so the sd == 0 branch is
     * taken on exactly the same inputs; `mean` is Avg's sum/count in
     * frame order; `median` is Percentile's sorted interpolation
-    * lower + (higher − lower)·frac. */
+    * (higher − pos)·lower + (pos − lower)·higher, returning the lower
+    * value itself when the two neighbours are equal. */
   private[api] object ServingMath {
     type Ser = IndexedSeq[(Long, Option[Double])]
 
@@ -605,10 +608,9 @@ object Api {
       if (s.isEmpty) None
       else {
         val pos = (s.length - 1) * 0.5
-        val lo = pos.toInt
-        val frac = pos - lo
-        Some(if (lo + 1 < s.length) s(lo) + (s(lo + 1) - s(lo)) * frac
-        else s(lo))
+        val (lo, hi) = (math.floor(pos).toInt, math.ceil(pos).toInt)
+        Some(if (lo == hi || s(lo) == s(hi)) s(lo)
+        else (hi - pos) * s(lo) + (pos - lo) * s(hi))
       }
     }
 
@@ -660,14 +662,15 @@ object Api {
       tBack: Int): TimeseriesResult = {
     val timeRange = timeRangeFrame(spark, req, avail, extractBr0, tBack)
     import ServingMath._
-    // THE one cluster job: the zonal reduce over the persisted cube —
-    // identical aggregation expressions to the batch path, so zonal
-    // values cannot drift (parity additionally pinned by
-    // ServingCacheSpec's sweep). Default route is the COALESCED plan
-    // (ServingCoalescer: concurrent requests for the same dataset
-    // share one broadcast-join micro-batch — r13 verdict item 1); the
-    // solo mask plan below is the opt-out twin the coalescer's parity
-    // is checked against (CoalescerSpec).
+    // The zonal series. Default route is the coalescer: concurrent
+    // requests are answered in chunks from the driver-side index of
+    // the persisted cube, reduced per band with ServingMath's mean /
+    // median — the batch path's null-skipping avg / percentile, so
+    // zonal values cannot drift (ServingCacheSpec's sweep pins it). The
+    // solo mask plan below — one cluster job over the persisted cube,
+    // the same aggregation expressions as the batch path — is the
+    // opt-out twin the coalescer's parity is checked against
+    // (CoalescerSpec).
     val zonal: Ser =
       if (ServeCoalesce)
         ServingCoalescer.zonal(spark, dir, req.datasetId, req.resolution,
@@ -1054,9 +1057,7 @@ object Api {
     val Name = "graft timeseries engine"
     val Environment = "dev"
     val BaseUri = "timeseries"
-    val Resolutions: Seq[String] =
-      Seq(EventCube.Daily, EventCube.Hourly, EventCube.Monthly,
-        EventCube.Yearly).map(_.name)
+    val Resolutions: Seq[String] = EventCube.Resolutions.map(_.name)
   }
 
   /** `/settings` as a 1-row frame (the queryable form). */

@@ -46,14 +46,16 @@ object HttpApi {
 
   /** HTTP worker threads — bounds concurrent in-flight extractions.
     * Handlers on the serving path mostly BLOCK on the coalescer's
-    * shared micro-batch (cheap driver-side math around one await), so
-    * the pool is sized to admit a full client burst into ONE batch
-    * rather than to ration executor slots; the batch path's heavier
+    * chunk (driver-side index reads and series math around one
+    * await), so the pool is sized to admit a full client burst into
+    * ONE chunk rather than to ration executor slots; the batch path's
     * per-request jobs still share slots via FAIR scheduling. */
   private val HttpThreads = 48
 
-  /** Serving fast path (driver-side series math over one bounded
-    * cluster job) is default-ON; only an explicit opt-out value
+  /** Serving fast path (the zonal series read from the serving
+    * coalescer's driver-side index of the cached cube, then
+    * driver-side series math — no cluster job once the index is
+    * built) is default-ON; only an explicit opt-out value
     * disables it — any enable-ish spelling ("1"/"true"/"yes"/unset)
     * keeps it on, so SPARK_GRAFT_SERVE_CACHE=true no longer silently
     * selects the slow scan path. Computed once at class init. */

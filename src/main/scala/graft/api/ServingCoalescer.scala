@@ -3,80 +3,56 @@ package graft.api
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, LongMap}
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.SparkSession
 
 import graft.cube.EventCube
+import graft.pipeline.ArtifactCache
 
-/** Micro-batching front end for the serving fast path (r13 verdict
-  * item 1): concurrent HTTP requests against the same dataset used to
-  * run one zonal plan EACH (~30 ms of per-request driver work —
-  * analysis, optimization, codegen — for a job whose data work is
-  * microseconds), capping the serving floor near 30 req/s while the
-  * batch extractor does ~1.2 ms/selection. This coalescer closes that
-  * gap with the batch extractor's own shape:
+/** Micro-batching front end for the serving fast path: concurrent
+  * HTTP requests enqueue their zonal-series need and a session pump
+  * answers them in chunks from a driver-side index of the serving
+  * cube, so a warm serving request runs no Spark job at all — the
+  * reference's shape (one in-process raster window read + NumPy series
+  * math), with the window read served from memory.
   *
-  *  - handler threads enqueue their zonal-series need (serving key +
-  *    enumerated cells + band window + statistic) into their SESSION's
-  *    lane and block on a promise;
-  *  - the lane self-pumps: whoever enqueues into an idle lane claims
-  *    it and submits a pump task, which drains the lane in
-  *    MaxBatch/cell-limit chunks and runs ONE plan per chunk — the
-  *    union of the chunk's keys' serving cubes (each a cached,
-  *    raster-geometry-bounded artifact, tagged with its chunk-local
-  *    cube id) joined to a broadcast (kid, sid, cell, lo, hi) local
-  *    relation, aggregated by (sid, band) — exactly
-  *    [[Api.extractTimeseriesBatch]]'s join-not-mask-fan discipline,
-  *    with the CUBE IDENTITY itself travelling as broadcast-side data;
-  *  - per-selection series fan back out through the promises, and each
-  *    request's transforms/smoothers/stats stay driver-side in
-  *    [[Api.ServingMath]], untouched.
+  *  - The index: one per (session, dir, variable), built once. It is
+  *    [[EventCube.servingCubes]] (every dataset at every resolution of
+  *    the variable, persisted, one events scan + one shuffle) collected
+  *    into (dataset, resolution, cell) → band-sorted values, a null
+  *    cell value kept distinct from NaN. Its size is the raster
+  *    geometry's (datasets × resolutions × cells × bands), never the
+  *    event log's. It lives in [[ArtifactCache]], so
+  *    `ArtifactCache.clear()` drops it with the cube.
+  *  - The front end: handler threads enqueue (serving key, enumerated
+  *    cells, band window, statistic) into their SESSION's lane and
+  *    block on a promise; whoever enqueues into an idle lane claims it
+  *    and submits a pump task, which drains the lane in chunks bounded
+  *    by [[MaxBatch]] requests, [[Api.BatchDriverCellLimit]] cells and
+  *    [[MaxChunkWeight]] cells × bands.
+  *  - A chunk is driver lookups: each pending's selected cells are read
+  *    from the index over its band window and reduced per band with
+  *    [[Api.ServingMath]]'s mean or median — the same null-skipping
+  *    `avg`/`percentile` semantics as the batch path, so a band whose
+  *    selected cells are all null yields a null zonal value. The
+  *    request's transforms, smoothers and stats then stay driver-side
+  *    in [[Api.extractTimeseries]], untouched.
   *
-  * Chunks batch ACROSS serving keys (r16, closing r15 verdict item 3's
-  * residual): the r15 per-key-lane shape removed the drain-cycle
-  * barrier but kept one Spark job per (key, chunk), so an 8-key
-  * workload ran ~8× the jobs of a single-key one at an eighth the
-  * batch size each — and per-job driver cost (analysis, DAG
-  * scheduling, task launch) was the measured residual (66 vs 81 req/s
-  * mixed-vs-single). With the key folded into the broadcast side, a
-  * mixed-key workload runs the SAME sequential batched job stream as a
-  * single-key one. The cube side is the session's REGISTERED UNION —
-  * every serving key seen so far, kid baked in, materialized once per
-  * key set and re-materialized only when a new key first appears — so
-  * every chunk's plan is one InMemoryRelation joined to one broadcast
-  * local relation: CONSTANT shape once the deployment's key set has
-  * been seen (re-unioning per chunk was measured as ~70 ms/chunk of
-  * re-analysis of a plan that never changes), with cells, band
-  * bounds, and cube ids all travelling as broadcast-side DATA, never
-  * literals. The union is deployment-bounded (datasets × variables —
-  * a serving artifact, never corpus-scaled), and a chunk scans it in
-  * O(ServingCubeSlices) tasks however many keys it carries.
-  *
-  * Failure semantics: a key whose cube cannot be BUILT (driver-side,
-  * before the job — e.g. an unknown variable or an unreadable dir;
-  * an unknown DATASET is rejected upstream by KnownDatasets and would
-  * merely build an empty cube here) fails only its own
-  * pendings and the chunk proceeds without it; a failure inside the
-  * shared JOB fails the whole chunk's promises — the honest shared
-  * fate of a shared plan (there are no concurrently-running sibling
-  * groups to fail spuriously: the lane runs one chunk at a time, which
-  * is what the r15 advice's cancel-vs-settle race needed). A fatal
-  * escaping the pump releases the lane and resubmits it if work
+  * Failure semantics: a chunk is grouped by (dir, variable); a group
+  * whose index cannot be built (an unknown variable, an unreadable
+  * dir) or answered fails only its own pendings, and the other groups
+  * of the chunk are served. A failed build is not memoized, so the
+  * next chunk for that group retries it. A fatal error settles every
+  * pending of the chunk, releases the lane and resubmits it if work
   * remains, so queued requests are never stranded behind a dead
   * thread.
   *
-  * Scale: a micro-batch is bounded by [[MaxBatch]] requests and
-  * [[Api.BatchDriverCellLimit]] total cells (a lane drains in chunks
-  * under both bounds), each selection is MaxCells-bounded upstream,
-  * the lane map is bounded by live SESSIONS, and no thread holds state
-  * between chunks. Sequential chunks are the natural backpressure: a
-  * slow chunk only grows the next chunk's batch, amortizing its
-  * per-job cost over more requests.
+  * Scale: a chunk's driver work is bounded by the chunk bounds above,
+  * each selection is MaxCells-bounded upstream, the lane map is
+  * bounded by live SESSIONS, and no thread holds state between chunks.
   */
 private[graft] object ServingCoalescer {
 
@@ -92,17 +68,13 @@ private[graft] object ServingCoalescer {
 
   private val MaxBatch = 256
 
-  /** Chunk cost budget in JOINED ROWS (Σ cells × bands) — the unit the
-    * shared job's data work actually scales with (r16 verdict item 3:
-    * request COUNT alone let one hourly body, ~24× a daily one's
-    * bands, ride a chunk sized for daily bodies, so mixed-weight lanes
-    * ran one oversized job while daily lanes ran balanced ones).
-    * Sized so the protocol's daily workloads still drain in one
-    * MaxBatch chunk (256 requests × ~135 weight ≈ 35k) while an
-    * hourly-heavy lane closes near the same per-chunk row cost
-    * instead of ~12× it. A chunk always takes at least one pending,
-    * so an oversized single selection still runs (MaxCells-bounded
-    * upstream). */
+  /** Chunk budget in index reads (Σ cells × bands): a bound on one
+    * chunk's DRIVER work, so an hourly selection (~24× a daily one's
+    * bands) closes its chunk near the same cost as a lane of daily
+    * ones. Sized so the protocol's daily workloads still drain in one
+    * MaxBatch chunk (256 requests × ~135 weight ≈ 35k). A chunk always
+    * takes at least one pending, so an oversized single selection
+    * still runs (MaxCells-bounded upstream). */
   private[graft] val MaxChunkWeight = 90000L
 
   private def weightOf(p: Pending): Long =
@@ -112,15 +84,14 @@ private[graft] object ServingCoalescer {
   private[graft] val batchesRun = new AtomicLong(0L)
   private[graft] val requestsServed = new AtomicLong(0L)
 
-  /** One session's pending queue + pump ownership flag + serving-key
-    * registry. `busy` is held by exactly one pump task at a time; the
-    * enqueue/exit handshake (add-then-CAS on enqueue, recheck-after-
-    * release on exit) makes a lost wakeup impossible: whichever side
-    * observes the non-empty queue with the flag free claims the pump. */
+  /** One session's pending queue + pump ownership flag. `busy` is
+    * held by exactly one pump task at a time; the enqueue/exit
+    * handshake (add-then-CAS on enqueue, recheck-after-release on exit)
+    * makes a lost wakeup impossible: whichever side observes the
+    * non-empty queue with the flag free claims the pump. */
   private final class Lane {
     val q = new ConcurrentLinkedQueue[Pending]()
     val busy = new AtomicBoolean(false)
-    val reg = new Registry
   }
 
   /** Session → lane, weak-keyed so a churned-and-dropped SparkSession's
@@ -137,10 +108,8 @@ private[graft] object ServingCoalescer {
       }
     }
 
-  /** Pump pool: one task per actively-draining session lane (the pool
-    * is shared across sessions; each chunk's job lands in the same
-    * FAIR pool the HTTP handlers use, so Spark-side fairness is
-    * unchanged). */
+  /** Pump pool: one task per actively-draining session lane, shared
+    * across sessions. */
   private val PumpPar = 4
   private lazy val pumpPool = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -152,8 +121,8 @@ private[graft] object ServingCoalescer {
   }
 
   /** Blocking request: enumerate-side inputs in, zonal series out.
-    * Called from HTTP handler threads; failures inside the shared plan
-    * surface here as this request's exception (→ the 500 envelope). */
+    * Called from HTTP handler threads; a failure of this request's
+    * group surfaces here as its exception (→ the 500 envelope). */
   def zonal(spark: SparkSession, dir: String, dataset: String,
       resolution: EventCube.Resolution, variable: String,
       cells: Seq[Long], lo: Int, hi: Int, stat: String): Ser = {
@@ -171,8 +140,7 @@ private[graft] object ServingCoalescer {
   /** Drains `lane` in MaxBatch/cell-limit chunks until it is empty,
     * then releases ownership. Runs on a pump-pool thread holding
     * lane.busy. Every Pending polled off the queue is settled by
-    * [[runChunk]] (per-key for cube-build failures, per-chunk for job
-    * failures); pendings still queued when a fatal escapes stay
+    * [[runChunk]]; pendings still queued when a fatal escapes stay
     * queued, and the catch below hands the lane to a fresh pump before
     * rethrowing. */
   private def pump(spark: SparkSession, lane: Lane): Unit = {
@@ -184,9 +152,8 @@ private[graft] object ServingCoalescer {
         var next = lane.q.peek()
         // a chunk always takes at least one pending (an oversized
         // single selection is MaxCells-bounded upstream), and closes
-        // before exceeding the batch extractor's driver-side cell
-        // budget (broadcast row bound), the cells×bands weight budget
-        // (job row bound), or MaxBatch
+        // before exceeding the driver-side cell budget, the cells×bands
+        // weight budget, or MaxBatch
         while (next != null && chunk.size < MaxBatch &&
             (chunk.isEmpty ||
               (cellsInChunk + next.cells.length <= Api.BatchDriverCellLimit &&
@@ -197,7 +164,7 @@ private[graft] object ServingCoalescer {
           weightInChunk += weightOf(next)
           next = lane.q.peek()
         }
-        if (chunk.nonEmpty) runChunk(spark, lane.reg, chunk.toSeq)
+        if (chunk.nonEmpty) runChunk(spark, chunk.toSeq)
         else {
           lane.busy.set(false)
           // exit handshake: a producer may have enqueued between the
@@ -220,137 +187,85 @@ private[graft] object ServingCoalescer {
     }
   }
 
-  private val selSchema = StructType(Seq(
-    StructField("kid", IntegerType, nullable = false),
-    StructField("sid", IntegerType, nullable = false),
-    StructField("cell", LongType, nullable = false),
-    StructField("lo", IntegerType, nullable = false),
-    StructField("hi", IntegerType, nullable = false)))
+  /** One (dataset, resolution, cell)'s band-sorted values: band
+    * `bands(i)` holds `v(i)`, or null where `isNull(i)` — a band whose
+    * events all lack the variable is present but null, not NaN. */
+  private final class CellSeries(val bands: Array[Long],
+      val v: Array[Double], val isNull: Array[Boolean])
 
-  /** Per-session serving-key registry: key → its stable chunk-crossing
-    * cube id. The REGISTERED union (all keys seen so far, kid baked
-    * in, re-coalesced) is materialized once per key-set through
-    * ArtifactCache, so a chunk's plan is one InMemoryRelation joined
-    * to one broadcast local relation — CONSTANT shape once the
-    * deployment's key set has been seen, and the same shape whether
-    * the chunk carries one key or eight. Rebuilding the fresh union
-    * per chunk was measured as the mixed-key residual after the job
-    * count equalized: ~70 ms of per-chunk ANALYSIS of an 8-relation
-    * union plan that never changes. Keys are deployment-bounded
-    * (datasets × variables), so the registry and the union stay
-    * serving-artifact sized at any corpus scale. */
-  private final class Registry {
-    val kids = scala.collection.concurrent.TrieMap.empty[Key, Int]
-    // fingerprint of the currently-cached union (pump-thread state)
-    var unionFp: String = ""
-  }
+  private type Index = Map[(String, String, Long), CellSeries]
 
-  /** The cached union of every registered cube for this session.
-    * Cached under a key-set fingerprint: registering a NEW key builds
-    * (and caches) the widened union and drops the superseded one.
-    * Only the session's single pump thread calls this, so unionFp
-    * needs no synchronization. */
-  private def unionCube(spark: SparkSession, reg: Registry): DataFrame = {
-    val entries = reg.kids.toSeq.sortBy(_._2)
-    val fp = entries.map { case (k, kid) =>
-      s"$kid=${k.dataset}/${k.resolution.getClass.getSimpleName}/${k.variable}@${k.dir}"
-    }.mkString("|")
-    if (fp != reg.unionFp) {
-      if (reg.unionFp.nonEmpty)
-        graft.pipeline.ArtifactCache.drop(s"servunion:${reg.unionFp}")
-      reg.unionFp = fp
-    }
-    graft.pipeline.ArtifactCache.cached(spark, s"servunion:$fp") {
-      entries.map { case (k, kid) =>
-        EventCube.servingCube(spark, k.dir, k.dataset, k.resolution,
-          k.variable).withColumn("kid", lit(kid))
-      }.reduce(_.union(_)).coalesce(EventCube.ServingCubeSlices)
-    }
-  }
-
-  private def runChunk(spark: SparkSession, reg: Registry,
-      all: Seq[Pending]): Unit = {
-    // key registration is driver-side and per-key: a key whose serving
-    // cube cannot be constructed (unknown dataset/variable) fails only
-    // its own pendings; the shared job proceeds over the healthy keys.
-    // Probing servingCube here also means a BROKEN key never enters
-    // the registry (a registered key's cube must build, or every later
-    // chunk's union would fail).
-    val byKey = all.groupBy(_.key).toSeq
-      .sortBy { case (k, _) => (k.dataset, k.variable,
-        k.resolution.getClass.getSimpleName, k.dir) }
-    val built = byKey.flatMap { case (k, ps) =>
-      try {
-        EventCube.servingCube(spark, k.dir, k.dataset, k.resolution,
-          k.variable)
-        Some((k, ps, reg.kids.getOrElseUpdate(k, reg.kids.size)))
-      } catch {
-        case t: Throwable =>
-          ps.foreach(_.promise.tryFailure(t))
-          t match {
-            case scala.util.control.NonFatal(_) => None
-            case fatal =>
-              // every pending of this chunk is already off the queue —
-              // settle ALL of them (not just this key's) before the
-              // lane dies, mirroring the job-phase catch; otherwise
-              // the other keys' handlers block out their full Await
-              all.foreach(_.promise.tryFailure(fatal))
-              throw fatal
-          }
-      }
-    }
-    if (built.isEmpty) return
-    val ps = built.flatMap(_._2)
-    try {
-      // same FAIR pool as the HTTP handlers this work arrives from
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft_http")
-      val rows = new java.util.ArrayList[Row]()
-      var sid = 0
-      val sidOf = built.flatMap { case (_, kps, kid) =>
-        kps.map { p =>
-          p.cells.foreach(c => rows.add(Row(kid, sid, c, p.lo, p.hi)))
-          sid += 1
-          (p, sid - 1)
-        }
-      }
-      val sel = spark.createDataFrame(rows, selSchema)
-      val cube = unionCube(spark, reg)
-      val joined = cube.join(broadcast(sel),
-        cube("kid") === sel("kid") && cube("user_id") === sel("cell") &&
-          cube("band") >= sel("lo") && cube("band") <= sel("hi"))
-      // two stable plan shapes per key set (mean-only / mean+median),
-      // each codegen-compiled once; the median aggregate is only
-      // carried when some request in the chunk needs it
-      val needMedian = ps.exists(_.stat == "median")
-      val aggs =
-        if (needMedian)
-          Seq(EventCube.statAgg("mean").as("zv_mean"),
-            EventCube.statAgg("median").as("zv_median"))
-        else Seq(EventCube.statAgg("mean").as("zv_mean"))
-      val out = joined.groupBy(sel("sid"), col("band"))
-        .agg(aggs.head, aggs.tail: _*)
+  /** The serving index of (session, dir, variable), built on first use
+    * from the persisted [[EventCube.servingCubes]] frame. */
+  private def indexOf(spark: SparkSession, dir: String,
+      variable: String): Index =
+    ArtifactCache.memo(spark, s"serveindex:$variable:$dir") {
+      EventCube.servingCubes(spark, dir, variable)
+        .select("dataset", "resolution", "user_id", "band", "v")
         .collect()
-
-      val bySid = out.groupBy(_.getInt(0))
-      sidOf.foreach { case (p, s) =>
-        val statIdx = if (p.stat == "median" && needMedian) 3 else 2
-        val ser: Ser = bySid.getOrElse(s, Array.empty[Row])
-          .map(r => (r.getLong(1),
-            if (r.isNullAt(statIdx)) None else Some(r.getDouble(statIdx))))
-          .sortBy(_._1).toIndexedSeq
-        p.promise.trySuccess(ser)
-      }
-      batchesRun.incrementAndGet()
-      requestsServed.addAndGet(ps.size.toLong)
-    } catch {
-      case t: Throwable =>
-        // the chunk is ONE job: a runtime failure is every
-        // participant's failure (shared fate of a shared plan)
-        ps.foreach(_.promise.tryFailure(t))
-        t match {
-          case scala.util.control.NonFatal(_) => ()
-          case fatal => throw fatal
+        .groupBy(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        .map { case (k, rows) =>
+          val rs = rows.sortBy(_.getLong(3))
+          k -> new CellSeries(rs.map(_.getLong(3)),
+            rs.map(r => if (r.isNullAt(4)) 0.0 else r.getDouble(4)),
+            rs.map(_.isNullAt(4)))
         }
+    }
+
+  /** One pending's zonal series: every band of [lo, hi] that some
+    * selected cell holds, with the statistic over the band's non-null
+    * values (None when all are null). */
+  private def answer(index: Index, p: Pending): Ser = {
+    val stat: Seq[Double] => Option[Double] = p.stat match {
+      case "mean" => Api.ServingMath.mean
+      case "median" => Api.ServingMath.median
+      case other => throw new IllegalArgumentException(
+        s"unsupported zonal statistic: $other (mean|median)")
+    }
+    val byBand = LongMap.empty[ArrayBuffer[Double]]
+    p.cells.foreach { cell =>
+      index.get((p.key.dataset, p.key.resolution.name, cell)).foreach { s =>
+        val at = java.util.Arrays.binarySearch(s.bands, p.lo.toLong)
+        var i = if (at >= 0) at else -at - 1
+        while (i < s.bands.length && s.bands(i) <= p.hi) {
+          val vs = byBand.getOrElseUpdate(s.bands(i), ArrayBuffer.empty)
+          if (!s.isNull(i)) vs += s.v(i)
+          i += 1
+        }
+      }
+    }
+    byBand.toIndexedSeq.sortBy(_._1).map { case (b, vs) => (b, stat(vs.toSeq)) }
+  }
+
+  private def runChunk(spark: SparkSession, all: Seq[Pending]): Unit = {
+    // an index build (a group's first chunk) runs a job: same FAIR
+    // pool as the HTTP handlers this work arrives from
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft_http")
+    var served = 0L
+    all.groupBy(p => (p.key.dir, p.key.variable)).foreach {
+      case ((dir, variable), ps) =>
+        try {
+          val index = indexOf(spark, dir, variable)
+          val answers = ps.map(answer(index, _))
+          ps.zip(answers).foreach { case (p, ser) => p.promise.trySuccess(ser) }
+          served += ps.size
+        } catch {
+          case t: Throwable =>
+            ps.foreach(_.promise.tryFailure(t))
+            t match {
+              case scala.util.control.NonFatal(_) => ()
+              case fatal =>
+                // every pending of this chunk is already off the queue —
+                // settle ALL of them before the lane dies, otherwise the
+                // other groups' handlers block out their full Await
+                all.foreach(_.promise.tryFailure(fatal))
+                throw fatal
+            }
+        }
+    }
+    if (served > 0) {
+      batchesRun.incrementAndGet()
+      requestsServed.addAndGet(served)
     }
   }
 }

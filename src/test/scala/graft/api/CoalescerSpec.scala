@@ -230,4 +230,92 @@ class CoalescerSpec extends SparkSpec {
     assert(r1.series.count() > 0)
     assert(r2.series.count() === 0)
   }
+
+  test("one cube build serves every key; warm chunks run no Spark job") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.cube.EventCube
+    import graft.pipeline.ArtifactCache
+
+    val datasets = Seq("click", "view", "purchase", "error")
+    val keys = for {
+      ds <- datasets
+      res <- Seq(EventCube.Daily, EventCube.Hourly)
+    } yield (ds, res)
+    ArtifactCache.clear()
+    val builders = keys.map { case (ds, res) =>
+      val m = EventCube.servingCube(spark, sfDir, ds, res, "value")
+        .queryExecution.withCachedData.collect { case m: InMemoryRelation => m }
+      assert(m.size === 1, s"$ds/$res must read one cached relation")
+      m.head.cacheBuilder
+    }
+    assert(builders.forall(_ eq builders.head),
+      "the 8 serving-cube views must share one InMemoryRelation")
+
+    // job starts as the listener bus delivers them; a marker job flushes
+    // the bus (events arrive in order), so every job started before the
+    // marker has been counted once the marker's start is seen
+    val Marker = "coalescer-spec-marker"
+    val jobs = new AtomicInteger(0)
+    val markers = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == Marker))
+          markers.incrementAndGet()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    def jobsSoFar(): Int = {
+      val seen = markers.get()
+      sc.setJobGroup(Marker, Marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (markers.get() == seen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markers.get() > seen, "listener bus did not deliver the marker")
+      jobs.get()
+    }
+    def request(i: Int): TimeseriesRequest = {
+      val (ds, res) = keys(i % keys.size)
+      req(i).copy(datasetId = ds, resolution = res)
+    }
+    def concurrentJobs(s: SparkSession): Int = {
+      val j0 = jobsSoFar()
+      val n = 16
+      val pool = Executors.newFixedThreadPool(n)
+      val start = new CountDownLatch(1)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val done = new CountDownLatch(n)
+      (0 until n).foreach { i =>
+        pool.execute { () =>
+          start.await()
+          try {
+            val r = request(i)
+            ResponseJson.toJson(r, extractTimeseries(s, sfDir, r, serving = true))
+          } catch { case t: Throwable => errors.add(t) }
+          done.countDown()
+        }
+      }
+      start.countDown()
+      assert(done.await(5, TimeUnit.MINUTES), "concurrent requests hung")
+      pool.shutdown()
+      assert(errors.isEmpty, errors)
+      jobsSoFar() - j0
+    }
+
+    sc.addSparkListener(listener)
+    try {
+      extractTimeseries(spark, sfDir, request(0), serving = true)
+      assert(concurrentJobs(spark) === 0)
+
+      // a second session builds its own index once; a key the first
+      // session sees for the first time must not evict it
+      val other = spark.newSession()
+      extractTimeseries(other, sfDir, request(1), serving = true)
+      extractTimeseries(spark, sfDir, req(0).copy(datasetId = "signup",
+        resolution = EventCube.Monthly, bandRange = (1, 1)), serving = true)
+      assert(concurrentJobs(other) === 0)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -98,4 +98,61 @@ class ServingCacheSpec extends SparkSpec {
     val blp = batch.series.queryExecution.optimizedPlan
     assert(blp.collect { case l: LogicalRelation => l }.nonEmpty, blp.toString)
   }
+
+  test("null cells: serving skips them like avg/percentile, point and bbox") {
+    // `k` is null wherever props has no "k": a hand-written corpus
+    // with such events, including one band (2) where every selected
+    // cell is null and one (4) where only some are
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullk")
+      .toFile.getAbsolutePath
+    val origin = graft.cube.EventCube.OriginEpochSec
+    def ev(id: Long, day: Int, hour: Int, cell: Long, dataset: String,
+        k: Option[Int]): Row =
+      Row(id, (origin + (day - 1) * 86400L + hour * 3600L) * 1000000000L,
+        cell, dataset, 10.0 + id, k.fold("{}")(v => s"""{"k": $v}"""))
+    // (day, hour, cell, k) of the click events; cells 0-2 are selected
+    val click = Seq(
+      (1, 3, 0L, Some(4)), (1, 5, 1L, Some(10)), (1, 7, 2L, None),
+      (2, 1, 0L, None), (2, 9, 1L, None), (2, 2, 2L, None),
+      (3, 4, 0L, Some(3)), (3, 6, 0L, None), (3, 8, 1L, Some(7)),
+      (3, 9, 2L, Some(8)),
+      (4, 1, 1L, None), (4, 2, 2L, Some(5)), (4, 3, 0L, Some(1)),
+      (4, 4, 0L, Some(6)),
+      (5, 0, 0L, Some(2)), (5, 1, 1L, Some(6)), (5, 2, 2L, Some(9)),
+      (5, 3, 3L, None))
+    val rows = click.zipWithIndex.map { case ((d, h, c, k), i) =>
+      ev(i.toLong, d, h, c, "click", k)
+    } ++ Seq(ev(100L, 2, 0, 1L, "view", Some(42)))
+    val schema = StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", LongType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      .write.parquet(s"$dir/events.parquet")
+    try {
+      val reqs = for {
+        area <- Seq(PointArea(1), BBoxArea(0, 2, 0, 0))
+        stat <- Seq(ZonalMean, ZonalMedian)
+      } yield TimeseriesRequest(datasetId = "click", variableId = "k",
+        selectedArea = area, zonalStatistic = stat, bandRange = (1, 6))
+      reqs.foreach { req =>
+        val b = dump(extractTimeseries(spark, dir, req))
+        val s = dump(extractTimeseries(spark, dir, req, serving = true))
+        assert(b === s, s"serving diverged from batch on $req")
+        val before = Api.ServeCoalesce
+        val solo =
+          try { Api.ServeCoalesce = false; dump(extractTimeseries(spark, dir, req, serving = true)) }
+          finally Api.ServeCoalesce = before
+        assert(b === solo, s"solo serving diverged from batch on $req")
+        // band 2 is present with a null value, never dropped or NaN
+        assert(b.head.exists(r => r(1) == 2L && r(2) == null), b.head)
+      }
+    } finally {
+      graft.pipeline.ArtifactCache.drop(s"servecube:k:$dir")
+      graft.pipeline.ArtifactCache.drop(s"serveindex:k:$dir")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
 }

@@ -50,7 +50,10 @@ class CrossJvmIndexSpec extends SparkSpec {
         "-cp", sys.props("java.class.path"),
         "graft.pipeline.CrossJvmIndexMain", mode, sfDir, work)
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val code = Process(cmd).!(ProcessLogger(
+      // the child's own index root: an inherited SPARK_GRAFT_INDEX_DIR
+      // would make it write into (and clobber) this JVM's tables
+      val env = "SPARK_GRAFT_INDEX_DIR" -> s"$work/tmp/graft_index"
+      val code = Process(cmd, None, env).!(ProcessLogger(
         l => out.synchronized(out += l), _ => ()))
       (code, out.toVector.filter(_.startsWith("XJVM ")))
     }
