@@ -1069,90 +1069,190 @@ object SkopeQueries {
          |FROM cube WHERE user_id = $PointCell""".stripMargin)
   )
 
-  /** The reference's own on-disk archive format, end-to-end: its
-    * annual_5x5x5 float32 GeoTIFF fixture (the file rasterio opens in
-    * core/services.py:150-152) ingested into the long-format cube by
-    * the pure-JVM reader (sources/GeoTiff.scala). Hash-gated against a
-    * closed-form oracle: the fixture's values are
-    * float32(100·b + 10·r + 1.1·c) with nodata at (row 3, col 4) every
-    * band and (row 2, col 4) band 3 (verified byte-exact against the
-    * file; test_datasets.py:test_annual_time_ranges asserts the same
-    * pattern through the reference API). */
-  /** Fixture location is env-overridable (SPARK_GRAFT_GEOTIFF): the
-    * default points at the reference checkout this sandbox carries;
-    * any box without it can aim the query at its own archive instead
-    * of failing the whole inventory on a hardcoded absolute path. */
-  private def geotiffFixture: String =
+  /** The reference's on-disk archive format, end-to-end: multi-band
+    * GeoTIFF cubes with the layouts and sample formats its catalog
+    * ships (the files rasterio opens in core/services.py:150-152),
+    * ingested into the long-format cube by the pure-JVM reader
+    * (sources/GeoTiff.scala) and hash-gated against closed-form
+    * oracles. The rasters are generated once per JVM into tmpdir by
+    * [[handTiff]], byte by byte from the TIFF 6 / GeoTIFF tag layout
+    * (never through [[graft.sources.GeoTiff.encodeF32]], so the parser
+    * is checked against bytes its own encoder did not produce). Every
+    * file is 5×5 cells of 1° from a ModelTiepoint at (-123, 45), with
+    * exactly the content its oracle SQL states:
+    *  - annual float32, 5 band pages: float32(100·b + 10·r + 1.1·c),
+    *    nodata at (row 3, col 4) in every band and (row 2, col 4) in
+    *    band 3 — the pattern test_datasets.py:test_annual_time_ranges
+    *    asserts through the reference API. No repository document
+    *    fixes this file's sentinel; it is -9999, the export writer's;
+    *  - monthly float32, 60 band pages: the same formula, nodata -9999
+    *    only at (row 3, col 4);
+    *  - annual uint16, 5 band pages: 100·b + 10·r + c, nodata 65535 at
+    *    the annual hole pattern;
+    *  - monthly int16: ONE IFD with SamplesPerPixel = 60 (chunky), the
+    *    same integer formula, GDAL_NODATA "65535";
+    *  - the annual float32 variable's uncertainty layer, 5 band pages:
+    *    float32(10·b + r + 0.1·c), no nodata.
+    *
+    * Each file stays env-overridable (SPARK_GRAFT_GEOTIFF,
+    * _MONTHLY, _U16, _I16, _UNC): pointing them at a reference
+    * checkout's timeseries/data files re-checks the reader against
+    * GDAL-written bytes under the same oracles. */
+  private lazy val skopeFixtureDir: String =
+    atomicFixtureDir(new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-skopefix-${ProcessHandle.current().pid()}")) { dir =>
+      def annualHole(b: Int, r: Int, c: Int) =
+        (r == 3 && c == 4) || (b == 3 && r == 2 && c == 4)
+      def f32(b: Int, r: Int, c: Int) = 100.0 * b + 10.0 * r + 1.1 * c
+      def int(b: Int, r: Int, c: Int) = (100 * b + 10 * r + c).toDouble
+      def pages(n: Int, format: Int, nodata: Option[String])(
+          v: (Int, Int, Int) => Double) =
+        (1 to n).map(b => TiffPage(1, format, nodata, (_, r, c) => v(b, r, c)))
+      handTiff(new java.io.File(dir, "annual_5x5x5_dataset_float32_variable.tif"),
+        pages(5, 3, Some("-9999"))((b, r, c) =>
+          if (annualHole(b, r, c)) -9999.0 else f32(b, r, c)))
+      handTiff(new java.io.File(dir, "monthly_5x5x60_dataset_float32_variable.tif"),
+        pages(60, 3, Some("-9999"))((b, r, c) =>
+          if (r == 3 && c == 4) -9999.0 else f32(b, r, c)))
+      handTiff(new java.io.File(dir, "annual_5x5x5_dataset_uint16_variable.tif"),
+        pages(5, 1, Some("65535"))((b, r, c) =>
+          if (annualHole(b, r, c)) 65535.0 else int(b, r, c)))
+      handTiff(new java.io.File(dir, "monthly_5x5x60_dataset_int16_variable.tif"),
+        Seq(TiffPage(60, 2, Some("65535"), (s, r, c) => int(s + 1, r, c))))
+      handTiff(new java.io.File(dir,
+          "annual_5x5x5_dataset_float32_variable_uncertainty.tif"),
+        pages(5, 3, None)((b, r, c) => 10.0 * b + 1.0 * r + 0.1 * c))
+    }
+
+  /** One IFD of a [[handTiff]] fixture: `samples` chunky-interleaved
+    * samples per pixel of SampleFormat `format`, float32 (3) or 16-bit
+    * integers (1 unsigned, 2 signed); `value(s, r, c)` is sample s
+    * (0-based) at row r, column c, nodata sentinel included. */
+  private final case class TiffPage(samples: Int, format: Int,
+      nodata: Option[String], value: (Int, Int, Int) => Double) {
+    def bits: Int = if (format == 3) 32 else 16
+  }
+
+  /** Hand-lay a little-endian classic GeoTIFF of 5×5 pages: per page
+    * its IFD, then the out-of-line tag values, then one uncompressed
+    * strip; ModelPixelScale (1, 1, 0) and ModelTiepoint
+    * (0, 0, 0) → (-123, 45, 0) on every page. */
+  private def handTiff(file: java.io.File, pages: Seq[TiffPage]): Unit = {
+    val (w, h) = (5, 5)
+    type Tag = (Int, Int, Int, java.nio.ByteBuffer => Unit) // id, type, count, value
+    def le(n: Int) =
+      java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def size(t: Tag) =
+      t._3 * (t._2 match { case 2 => 1; case 3 => 2; case 4 => 4; case 12 => 8 })
+    def shorts(n: Int, v: Int): java.nio.ByteBuffer => Unit =
+      bb => (1 to n).foreach(_ => bb.putShort(v.toShort))
+    def stripBytes(p: TiffPage) = w * h * p.samples * p.bits / 8
+    def pageTags(p: TiffPage, stripOff: Int): Seq[Tag] = Seq[Tag](
+      (256, 3, 1, shorts(1, w)), // ImageWidth
+      (257, 3, 1, shorts(1, h)), // ImageLength
+      (258, 3, p.samples, shorts(p.samples, p.bits)), // BitsPerSample
+      (259, 3, 1, shorts(1, 1)), // Compression: none
+      (262, 3, 1, shorts(1, 1)), // Photometric: BlackIsZero
+      (273, 4, 1, _.putInt(stripOff)), // StripOffsets
+      (277, 3, 1, shorts(1, p.samples)), // SamplesPerPixel
+      (278, 3, 1, shorts(1, h)), // RowsPerStrip: one strip
+      (279, 4, 1, _.putInt(stripBytes(p))), // StripByteCounts
+      (284, 3, 1, shorts(1, 1)), // PlanarConfiguration: chunky
+      (339, 3, p.samples, shorts(p.samples, p.format)), // SampleFormat
+      (33550, 12, 3, _.putDouble(1.0).putDouble(1.0).putDouble(0.0)),
+      (33922, 12, 6, _.putDouble(0.0).putDouble(0.0).putDouble(0.0)
+        .putDouble(-123.0).putDouble(45.0).putDouble(0.0))) ++
+      p.nodata.map[Tag](nd => (42113, 2, nd.length + 1, // GDAL_NODATA
+        _.put((nd + "\u0000").getBytes("US-ASCII"))))
+    // out-of-line values (> 4 bytes) sit after the IFD, word-aligned
+    def external(tags: Seq[Tag]) =
+      tags.map(size).filter(_ > 4).map(n => n + n % 2).sum
+    def headBytes(p: TiffPage) = {
+      val tags = pageTags(p, 0)
+      2 + tags.size * 12 + 4 + external(tags)
+    }
+    val out = le(8 + pages.map(p => headBytes(p) + stripBytes(p)).sum)
+    out.put('I'.toByte).put('I'.toByte).putShort(42).putInt(8)
+    pages.zipWithIndex.foreach { case (p, i) =>
+      val stripOff = out.position() + headBytes(p)
+      val tags = pageTags(p, stripOff)
+      var extOff = out.position() + 2 + tags.size * 12 + 4
+      val ext = le(external(tags))
+      out.putShort(tags.size.toShort)
+      tags.foreach { case t @ (id, typ, count, value) =>
+        out.putShort(id.toShort).putShort(typ.toShort).putInt(count)
+        val v = le(size(t)); value(v)
+        if (size(t) <= 4) out.put(java.util.Arrays.copyOf(v.array, 4))
+        else {
+          out.putInt(extOff)
+          ext.put(v.array).position(ext.position() + size(t) % 2)
+          extOff += size(t) + size(t) % 2
+        }
+      }
+      out.putInt(if (i == pages.size - 1) 0 else stripOff + stripBytes(p))
+      out.put(ext.array)
+      for (r <- 0 until h; c <- 0 until w; s <- 0 until p.samples)
+        if (p.format == 3) out.putFloat(p.value(s, r, c).toFloat)
+        else out.putShort(p.value(s, r, c).toInt.toShort)
+    }
+    require(!out.hasRemaining, s"fixture layout drift in $file")
+    java.nio.file.Files.write(file.toPath, out.array)
+  }
+
+  private[graft] def geotiffFixture: String =
     sys.env.getOrElse("SPARK_GRAFT_GEOTIFF",
-      "/root/reference/timeseries/data/annual_5x5x5_dataset_float32_variable.tif")
-
-  def geotiffIngest(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.GeoTiff.readCube(spark, geotiffFixture)
-      .select(col("band").cast("long").as("band"),
-        col("x").cast("long").as("x"),
-        col("y").cast("long").as("y"),
-        col("lon"), col("lat"),
-        Num.roundEps(col("v"), 6).as("value"))
-
-  /** The 60-band MONTHLY fixture (monthly_5x5x60_dataset_float32
-    * _variable.tif — the layout the reference's month-resolution
-    * datasets ship): same closed form as the annual fixture but 12×
-    * the band axis and a -9999 nodata sentinel at (row 3, col 4) in
-    * every band. A second hash-gated layout point for the reader. */
-  private def geotiffMonthlyFixture: String =
+      s"$skopeFixtureDir/annual_5x5x5_dataset_float32_variable.tif")
+  private[graft] def geotiffMonthlyFixture: String =
     sys.env.getOrElse("SPARK_GRAFT_GEOTIFF_MONTHLY",
-      "/root/reference/timeseries/data/monthly_5x5x60_dataset_float32_variable.tif")
+      s"$skopeFixtureDir/monthly_5x5x60_dataset_float32_variable.tif")
+  private[graft] def geotiffUint16Fixture: String =
+    sys.env.getOrElse("SPARK_GRAFT_GEOTIFF_U16",
+      s"$skopeFixtureDir/annual_5x5x5_dataset_uint16_variable.tif")
+  private[graft] def geotiffInt16Fixture: String =
+    sys.env.getOrElse("SPARK_GRAFT_GEOTIFF_I16",
+      s"$skopeFixtureDir/monthly_5x5x60_dataset_int16_variable.tif")
+  private[graft] def uncertaintyFixture: String =
+    sys.env.getOrElse("SPARK_GRAFT_GEOTIFF_UNC",
+      s"$skopeFixtureDir/annual_5x5x5_dataset_float32_variable_uncertainty.tif")
 
-  def geotiffMonthly(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.GeoTiff.readCube(spark, geotiffMonthlyFixture)
+  /** A fixture file as the geotiff queries' cube rows. */
+  private def geotiffCube(spark: SparkSession, path: String): DataFrame =
+    graft.sources.GeoTiff.readCube(spark, path)
       .select(col("band").cast("long").as("band"),
         col("x").cast("long").as("x"),
         col("y").cast("long").as("y"),
         col("lon"), col("lat"),
         Num.roundEps(col("v"), 6).as("value"))
+
+  /** The annual float32 variable: the band-per-page float32 layout. */
+  def geotiffIngest(spark: SparkSession, dir: String): DataFrame =
+    geotiffCube(spark, geotiffFixture)
+
+  /** The 60-band MONTHLY float32 variable (the layout the reference's
+    * month-resolution datasets ship): 12× the annual band axis, a
+    * second hash-gated layout point for the reader. */
+  def geotiffMonthly(spark: SparkSession, dir: String): DataFrame =
+    geotiffCube(spark, geotiffMonthlyFixture)
 
   /** The reference also serves NON-float32 variables from the same
     * catalog (metadata.yml's `uint16_variable`; rasterio widens the
-    * integer samples on read). This is the uint16 fixture
-    * (annual_5x5x5_dataset_uint16_variable.tif — values 100·b+10·r+c,
-    * nodata sentinel 65535 at the annual hole pattern) through the
-    * SAME distributed cube path as the float32 ingest, hash-gated
-    * against its closed-form integer content — pinning the reader's
+    * integer samples on read): the uint16 raster through the SAME
+    * distributed cube path as the float32 ingest, pinning the reader's
     * sample-format widening end-to-end, not just in GeoTiffSpec. */
-  private def geotiffUint16Fixture: String =
-    sys.env.getOrElse("SPARK_GRAFT_GEOTIFF_U16",
-      "/root/reference/timeseries/data/annual_5x5x5_dataset_uint16_variable.tif")
-
   def geotiffUint16(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.GeoTiff.readCube(spark, geotiffUint16Fixture)
-      .select(col("band").cast("long").as("band"),
-        col("x").cast("long").as("x"),
-        col("y").cast("long").as("y"),
-        col("lon"), col("lat"),
-        Num.roundEps(col("v"), 6).as("value"))
+    geotiffCube(spark, geotiffUint16Fixture)
 
   /** The reference catalog's remaining sample format (dev.yml's
-    * `int16_variable`): the monthly int16 fixture
-    * (monthly_5x5x60_dataset_int16_variable.tif — values 100·b+10·r+c
-    * over 60 bands). Unlike the band-per-page fixtures this file is a
+    * `int16_variable`). Unlike the band-per-page rasters this one is a
     * SINGLE IFD with SamplesPerPixel=60 (chunky interleave), so the
     * query also hash-gates the reader's one-page multi-sample band
-    * axis. Its GDAL_NODATA sentinel is "65535" — unreachable from
-    * int16 samples, so rasterio (and this reader, which compares on
-    * the WIDENED double, never a truncated short) yields a hole-free
-    * cube: the closed form has no NULL arm, and that absence is
-    * itself what the hash gates. */
-  private def geotiffInt16Fixture: String =
-    sys.env.getOrElse("SPARK_GRAFT_GEOTIFF_I16",
-      "/root/reference/timeseries/data/monthly_5x5x60_dataset_int16_variable.tif")
-
+    * axis. Its GDAL_NODATA sentinel "65535" is unreachable from int16
+    * samples, so rasterio (and this reader, which compares on the
+    * WIDENED double, never a truncated short) yields a hole-free cube:
+    * the closed form has no NULL arm, and that absence is itself what
+    * the hash gates. */
   def geotiffInt16(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.GeoTiff.readCube(spark, geotiffInt16Fixture)
-      .select(col("band").cast("long").as("band"),
-        col("x").cast("long").as("x"),
-        col("y").cast("long").as("y"),
-        col("lon"), col("lat"),
-        Num.roundEps(col("v"), 6).as("value"))
+    geotiffCube(spark, geotiffInt16Fixture)
 
   /** LZW-compressed archive variants: real rasterio archives commonly
     * ship Compression=5, often with the horizontal predictor, which the
@@ -1441,8 +1541,9 @@ object SkopeQueries {
         col("y").cast("long").as("y"),
         Num.roundEps(col("v"), 6).as("value"))
 
-  /** The COMPLETE reference request path over the reference's ACTUAL
-    * archive format in one plan: GeoTIFF cube → bbox selection →
+  /** The COMPLETE reference request path over the reference's
+    * archive format in one plan: the annual float32 raster
+    * ([[geotiffFixture]]) as a GeoTIFF cube → bbox selection →
     * per-band zonal mean → trailing smoother (services.py's
     * read → mask → reduce → smooth, but distributed end-to-end).
     * Selection = cells x∈[1,3], y∈[0,2] (away from the fixture's
@@ -1459,15 +1560,10 @@ object SkopeQueries {
   /** The reference pairs a variable with its uncertainty layer via
     * `uncertainty_template` (app/config.py:82-87,
     * `{dataset_id}_{variable_id}_uncertainty.tif` next to the value
-    * raster; fixture annual_5x5x5_dataset_float32_variable_uncertainty
-    * .tif = float32(10·b + r + 0.1·c), no nodata — aux.xml band means
-    * 12.2/22.2/…/52.2 confirm). */
-  private def uncertaintyFixture: String =
-    sys.env.getOrElse("SPARK_GRAFT_GEOTIFF_UNC",
-      "/root/reference/timeseries/data/" +
-        "annual_5x5x5_dataset_float32_variable_uncertainty.tif")
-
-  /** Paired value+uncertainty series over the full raster: per-band
+    * raster; [[uncertaintyFixture]] = float32(10·b + r + 0.1·c), no
+    * nodata).
+    *
+    * Paired value+uncertainty series over the full raster: per-band
     * zonal mean of the variable AND of its uncertainty layer, plus the
     * valid-cell count (the value raster has nodata holes the
     * uncertainty raster doesn't — `n` exposes the asymmetry).

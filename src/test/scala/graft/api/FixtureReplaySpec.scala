@@ -6,15 +6,19 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.SparkSpec
 import Api._
 
-/** End-to-end replays of the reference's remaining request fixtures
-  * (timeseries/data/requests/monthly.json and yearly_prod.json) through
-  * RequestJson → extractTimeseries → ResponseJson. The fixture FILES are
-  * read verbatim so their exact field spellings (YearMonth-object
-  * bounds, legacy top-level `transforms` array, missing
-  * requested_series_options) stay covered; only the deployment-specific
-  * values — dataset/variable ids, grid coordinates, years — are
-  * rewritten onto the synthetic catalog, exactly what pointing the
-  * reference at a different metadata.yml does. Response assertions
+/** End-to-end replays of skope-api request bodies in the shapes of the
+  * reference's request fixtures (timeseries/data/requests: monthly,
+  * yearly, yearly_prod and timeseriesv1 .json) through RequestJson →
+  * extractTimeseries → ResponseJson. The bodies are files under
+  * src/test/resources/data/requests; SPARK_GRAFT_FIXTURES points the
+  * spec at a reference checkout's own directory instead. Each file
+  * carries the field spellings under test (YearMonth-object bounds,
+  * legacy top-level `transforms` array, missing
+  * requested_series_options, the camelCase v1 body); only the
+  * deployment-specific values — dataset/variable ids, grid
+  * coordinates, years — are rewritten onto the synthetic catalog,
+  * exactly what pointing the reference at a different metadata.yml
+  * does. Response assertions
   * follow the TimeseriesResponse contract
   * (app/schemas/timeseries.py:264-276: dataset_id, variable_id, area,
   * n_cells, summary_stats, series, transform, zonal_statistic).
@@ -22,7 +26,7 @@ import Api._
 class FixtureReplaySpec extends SparkSpec {
 
   private val FixtureDir = sys.env.getOrElse("SPARK_GRAFT_FIXTURES",
-    "/root/reference/timeseries/data/requests")
+    java.nio.file.Paths.get(getClass.getResource("/data/requests").toURI).toString)
   private val mapper = new ObjectMapper()
 
   private def loadFixture(name: String): ObjectNode =

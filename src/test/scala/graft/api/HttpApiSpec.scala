@@ -10,14 +10,16 @@ import graft.SparkSpec
 import Api._
 
 /** The HTTP transport must serve the reference's four routes with the
-  * SAME bodies the in-process wire layer produces — fixtures go over
-  * a real socket and the responses are compared node-for-node against
-  * the direct RequestJson → extractTimeseries → ResponseJson path,
-  * plus the error statuses main.py's exception handlers define. */
+  * SAME bodies the in-process wire layer produces — request fixtures
+  * (src/test/resources/data/requests, or a reference checkout's
+  * timeseries/data/requests via SPARK_GRAFT_FIXTURES) go over a real
+  * socket and the responses are compared node-for-node against the
+  * direct RequestJson → extractTimeseries → ResponseJson path, plus
+  * the error statuses main.py's exception handlers define. */
 class HttpApiSpec extends SparkSpec {
 
   private val FixtureDir = sys.env.getOrElse("SPARK_GRAFT_FIXTURES",
-    "/root/reference/timeseries/data/requests")
+    java.nio.file.Paths.get(getClass.getResource("/data/requests").toURI).toString)
   private val mapper = new ObjectMapper()
   private val client = HttpClient.newHttpClient()
 

@@ -2,14 +2,22 @@ package graft.cube
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The runtime catalog loader against the REFERENCE'S OWN metadata.yml
-  * (the file app/main.py serves) — proving a skope-api operator could
-  * point the engine at their existing deployment file unchanged.
+/** The runtime catalog loader against skope-api catalogs in both of
+  * the reference's document shapes: the rich metadata.yml (the file
+  * app/main.py serves) and the compact deploy/metadata/prod.yml, held
+  * under src/test/resources in the reference's layout — proving a
+  * skope-api operator could point the engine at their existing
+  * deployment file unchanged. SPARK_GRAFT_REF_METADATA and
+  * SPARK_GRAFT_REF_METADATA_PROD point the spec at a reference
+  * checkout's own files instead.
   */
 class CatalogYamlSpec extends AnyFunSuite {
 
+  private def resource(name: String): String =
+    java.nio.file.Paths.get(getClass.getResource(name).toURI).toString
+
   private val RefYml = sys.env.getOrElse("SPARK_GRAFT_REF_METADATA",
-    "/root/reference/timeseries/metadata.yml")
+    resource("/metadata.yml"))
 
   private lazy val (entries, vars) = CatalogYaml.load(RefYml)
 
@@ -57,7 +65,7 @@ class CatalogYamlSpec extends AnyFunSuite {
 
   test("loads the prod deploy validation catalog (compact shape, config.py:52-61)") {
     val prodYml = sys.env.getOrElse("SPARK_GRAFT_REF_METADATA_PROD",
-      "/root/reference/timeseries/deploy/metadata/prod.yml")
+      resource("/deploy/metadata/prod.yml"))
     val (es, vs) = CatalogYaml.load(prodYml)
     assert(es.map(_.id) === Seq("lbda_v2", "srtm", "paleocar_v2", "paleocar_v3"))
     val l = es.find(_.id == "lbda_v2").get

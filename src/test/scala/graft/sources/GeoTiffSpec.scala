@@ -6,15 +6,17 @@ import java.nio.{ByteBuffer, ByteOrder}
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** GeoTIFF ingestion against the REFERENCE'S OWN fixtures (the .tif
-  * files under timeseries/data/) — the files its test suite reads with
-  * rasterio — plus synthetic TIFFs covering the layout variations the
+/** GeoTIFF ingestion against the skope archive rasters the inventory
+  * queries read (SkopeQueries' hand-laid fixtures, in the reference's
+  * timeseries/data file names and layouts; each SPARK_GRAFT_GEOTIFF*
+  * override points one at a reference checkout's GDAL-written file
+  * instead) plus synthetic TIFFs covering the layout variations the
   * parser claims (big-endian, multi-strip, tiled, planar, deflate,
   * multi-page).
   *
-  * Fixture ground truth (decoded independently, and asserted by the
-  * reference's tests): value(band b, row r, col c) =
-  * float32(100·b + 10·r + 1.1·c) for the float32 variables
+  * Fixture ground truth (the closed forms the oracle SQL states, and
+  * the reference's tests assert of its own files): value(band b, row r,
+  * col c) = float32(100·b + 10·r + 1.1·c) for the float32 variables
   * (100·b + 10·r + c for the integer ones), UL corner (-123, 45),
   * 1°×1° cells — EXCEPT the deliberate nodata cells: (row 3, col 4)
   * in every band plus (row 2, col 4) in band 3 for the annual
@@ -24,7 +26,8 @@ import org.apache.spark.sql.functions._
   */
 class GeoTiffSpec extends SparkSpec {
 
-  val DataDir = "/root/reference/timeseries/data"
+  import graft.cube.SkopeQueries.{geotiffFixture, geotiffInt16Fixture,
+    geotiffMonthlyFixture, geotiffUint16Fixture}
 
   /** The annual fixtures' nodata cells as (band, row, col). */
   private def annualNodata(b: Int, y: Int, x: Int): Boolean =
@@ -32,7 +35,7 @@ class GeoTiffSpec extends SparkSpec {
 
   test("annual float32 fixture: dims, geo-transform, values") {
     val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$DataDir/annual_5x5x5_dataset_float32_variable.tif"))
+      java.nio.file.Paths.get(geotiffFixture))
     val r = GeoTiff.parse(bytes)
     assert((r.width, r.height, r.bands) === (5, 5, 5))
     assert(r.hasGeo)
@@ -48,7 +51,7 @@ class GeoTiffSpec extends SparkSpec {
 
   test("point (-123,45) series reproduces test_annual_time_ranges: [i*100]") {
     val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$DataDir/annual_5x5x5_dataset_float32_variable.tif"))
+      java.nio.file.Paths.get(geotiffFixture))
     val r = GeoTiff.parse(bytes)
     val (cx, cy) = r.cellOf(-123.0, 45.0)
     assert((cx, cy) === (0, 0))
@@ -57,28 +60,27 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("integer fixtures decode with their declared sample formats") {
-    def load(name: String) = GeoTiff.parse(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$DataDir/$name")))
-    val u16 = load("annual_5x5x5_dataset_uint16_variable.tif")
+    def load(path: String) = GeoTiff.parse(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)))
+    val u16 = load(geotiffUint16Fixture)
     for (b <- 1 to 5; y <- 0 until 5; x <- 0 until 5)
       if (annualNodata(b, y, x)) // nodata "65535" -> NaN
         assert(u16.value(b, y, x).isNaN)
       else
         assert(u16.value(b, y, x) === (100 * b + 10 * y + x).toDouble)
-    val i16 = load("monthly_5x5x60_dataset_int16_variable.tif")
+    val i16 = load(geotiffInt16Fixture)
     assert(i16.bands === 60)
     assert(i16.value(60, 4, 4) === (6000 + 40 + 4).toDouble)
     // monthly float32 declares nodata -9999; cell (row 3, col 4)
     // carries it in every band
-    val f32 = load("monthly_5x5x60_dataset_float32_variable.tif")
+    val f32 = load(geotiffMonthlyFixture)
     for (b <- 1 to 60; y <- 0 until 5; x <- 0 until 5)
       assert(f32.value(b, y, x).isNaN === (y == 3 && x == 4),
         s"band $b cell ($x,$y)")
   }
 
   test("readCube: distributed ingestion matches the in-JVM parse") {
-    val df = GeoTiff.readCube(spark,
-      s"$DataDir/annual_5x5x5_dataset_float32_variable.tif")
+    val df = GeoTiff.readCube(spark, geotiffFixture)
     assert(df.count() === 125)
     // exactly the fixture's 6 nodata cells come back null
     assert(df.filter(col("v").isNull).count() === 6)
