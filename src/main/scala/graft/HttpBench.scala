@@ -56,7 +56,7 @@ object HttpBench {
       }
     val method = if (i % 2 == 0) "trailing" else "centered"
     // MIXED mode (r14 verdict item 3): 4 datasets × 2 resolutions = 8
-    // coalescer groups, the multi-dataset serving workload the
+    // serving keys, the multi-dataset serving workload the
     // single-key protocol never exercised. Single-key mode keeps the
     // r13/r14-comparable number.
     val dataset =
@@ -114,9 +114,7 @@ object HttpBench {
       val next = new AtomicInteger(0)
       val ok = new AtomicInteger(0)
       val bytes = new AtomicLong(0L)
-      // per-request wall latency (ms) — the metric the cells×bands
-      // chunk budget targets: one heavy body must not ride (and
-      // stall) a chunk sized for light ones
+      // per-request wall latency (ms)
       val lat = new Array[Double](n)
       val pool = Executors.newFixedThreadPool(conc)
       val done = new CountDownLatch(conc)
@@ -159,28 +157,17 @@ object HttpBench {
     }
 
     try {
-      val bPre = graft.api.ServingCoalescer.batchesRun.get()
       val (t1, ok1, lat1) = pass()
-      val b0 = graft.api.ServingCoalescer.batchesRun.get()
       val (t2, ok2, lat2) = pass()
-      // per-pass micro-batch counts, so the reported "batches" always
-      // describes the SAME pass as the reported time (judge-advice
-      // r16: the old single capture mixed pass-2 batches with a
-      // possibly-pass-1 best). batchesRun increments after promise
-      // settlement, so a read can still trail the pass's final chunk
-      // by 1 — amplification-factor noise, not a correctness field.
-      val batches1 = b0 - bPre
-      val batches2 = graft.api.ServingCoalescer.batchesRun.get() - b0
       require(ok1 == n && ok2 == n,
         s"non-200 responses: $ok1/$n, $ok2/$n; sample: ${failSample.get()}")
       val best = math.min(t1, t2)
-      val batches = if (t1 <= t2) batches1 else batches2
       val lat = if (t1 <= t2) lat1 else lat2
       val keyField =
         if (mixed == HttpMixedStd) ""","keys":8"""
         else if (mixed == HttpMixedDay) ""","keys":4"""
         else ""
-      println(f"""{"metric":"http_loop","value":$best%.2f,"unit":"sec","requests":$n,"concurrency":$conc,"rps":${n / best}%.1f,"batches":$batches,"p50_ms":${pct(lat, 0.50)}%.0f,"p95_ms":${pct(lat, 0.95)}%.0f$keyField}""")
+      println(f"""{"metric":"http_loop","value":$best%.2f,"unit":"sec","requests":$n,"concurrency":$conc,"rps":${n / best}%.1f,"p50_ms":${pct(lat, 0.50)}%.0f,"p95_ms":${pct(lat, 0.95)}%.0f$keyField}""")
     } finally {
       srv.stop()
       spark.stop()

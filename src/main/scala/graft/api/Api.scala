@@ -63,39 +63,69 @@ object Api {
       resolution: EventCube.Resolution = EventCube.Daily,
       maxProcessingTimeMs: Long = MaxProcessingTimeMs)
 
-  /** Response mirror: everything stays a DataFrame (lazy, distributed)
-    * until the caller materializes — the analogue of the reference's
+  /** Response mirror — the analogue of the reference's
     * series/summary_stats/n_cells/area fields
-    * (schemas/timeseries.py:264-274). `series` carries the band AND its
-    * translated band-start date; `timeRange` is the reference's
-    * per-series time_range field (get_time_range_after_transforms ∩
-    * requested range, timeseries.py:419-431 + translate_band_range,
-    * dataset.py:74-88) — computed by band-range ARITHMETIC, not from
-    * the emitted rows: a sparse series still reports the full valid
-    * range, and a series the window guard empties still gets a row
-    * (with gte > lte signalling emptiness), exactly like the
-    * reference's data-independent derivation. */
-  final case class TimeseriesResult(
-      series: DataFrame,       // (series, band, value, band_date)
-      summaryStats: DataFrame, // (series, mean, median, stdev)
-      selection: DataFrame,    // (n_cells, area)
-      timeRange: DataFrame,    // (series, time_gte, time_lte, band_gte, band_lte)
-      // response echo slots (timeseries.py:264-274 + services.py:68-77:
-      // the reference carries the request's identifying fields and its
-      // transform / zonal_statistic back to the client verbatim)
-      datasetId: String = "",
-      variableId: String = "value",
-      transform: Transform = NoTransform,
-      zonalStatistic: ZonalStatistic = ZonalMean,
-      // serving fast path only: the same surfaces as pre-collected
-      // driver rows, so ResponseJson can serialize without executing
-      // the four mini-plans above (they stay the API contract for
-      // every DataFrame consumer; LocalParitySpec pins identical JSON
-      // from both routes)
-      local: Option[LocalResult] = None)
+    * (schemas/timeseries.py:264-274), in two forms:
+    *  - four DataFrames: `series` carries the band AND its translated
+    *    band-start date; `timeRange` is the reference's per-series
+    *    time_range field (get_time_range_after_transforms ∩ requested
+    *    range, timeseries.py:419-431 + translate_band_range,
+    *    dataset.py:74-88) — computed by band-range ARITHMETIC, not from
+    *    the emitted rows: a sparse series still reports the full valid
+    *    range, and a series the window guard empties still gets a row
+    *    (with gte > lte signalling emptiness), exactly like the
+    *    reference's data-independent derivation;
+    *  - `local`: the same four surfaces as driver rows, which
+    *    [[ResponseJson]] serializes.
+    * Each form is built on first access from the other. A served
+    * result is computed as rows, so a request that is only serialized
+    * builds no DataFrame; a batch result is computed as frames (the
+    * distributed, oracle-gated plan) and collects them once when
+    * `local` is first read. The remaining fields echo the request's
+    * identifying fields and its transform / zonal_statistic
+    * (timeseries.py:264-274 + services.py:68-77). */
+  final class TimeseriesResult private[api] (
+      frames: => (DataFrame, DataFrame, DataFrame, DataFrame),
+      rows: => LocalResult,
+      val datasetId: String, val variableId: String,
+      val transform: Transform, val zonalStatistic: ZonalStatistic) {
+    private lazy val fs = frames
+    def series: DataFrame = fs._1       // (series, band, value, band_date)
+    def summaryStats: DataFrame = fs._2 // (series, mean, median, stdev)
+    def selection: DataFrame = fs._3    // (n_cells, area)
+    def timeRange: DataFrame = fs._4    // (series, time_gte, time_lte, band_gte, band_lte)
+    lazy val local: LocalResult = rows
+  }
 
-  /** Driver-side twin of the four response surfaces — row layouts
-    * match the DataFrames field-for-field. */
+  object TimeseriesResult {
+    /** A result computed as frames; `local` collects them. */
+    private[api] def fromFrames(series: DataFrame, summaryStats: DataFrame,
+        selection: DataFrame, timeRange: DataFrame, datasetId: String,
+        variableId: String, transform: Transform,
+        zonalStatistic: ZonalStatistic): TimeseriesResult =
+      new TimeseriesResult((series, summaryStats, selection, timeRange),
+        collectLocal(series, summaryStats, selection, timeRange),
+        datasetId, variableId, transform, zonalStatistic)
+
+    private def collectLocal(series: DataFrame, summaryStats: DataFrame,
+        selection: DataFrame, timeRange: DataFrame): LocalResult = {
+      def opt(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+        if (r.isNullAt(i)) None else Some(r.getDouble(i))
+      val sel = selection.collect().head
+      LocalResult(
+        series = series.collect().toSeq.map(r =>
+          (r.getString(0), r.getLong(1), opt(r, 2))),
+        summaryStats = summaryStats.collect().toSeq.map(r =>
+          (r.getString(0), opt(r, 1), opt(r, 2), opt(r, 3))),
+        nCells = sel.getLong(sel.fieldIndex("n_cells")),
+        area = sel.getDouble(sel.fieldIndex("area")),
+        timeRange = timeRange.collect().toSeq.map(r => (r.getString(0),
+          r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))))
+    }
+  }
+
+  /** The four response surfaces as driver rows — row layouts match the
+    * DataFrames field-for-field. */
   final case class LocalResult(
       series: Seq[(String, Long, Option[Double])],
       summaryStats: Seq[(String, Option[Double], Option[Double], Option[Double])],
@@ -157,15 +187,6 @@ object Api {
     * TimeseriesRequest.max_processing_time is validated to
     * 0 ≤ t ≤ this and enforced at materialization). */
   val MaxProcessingTimeMs: Long = 15000L
-
-  /** Serving-path zonal series are answered by [[ServingCoalescer]]
-    * from its driver-side index by default; only an explicit opt-out
-    * value selects the solo per-request job over the cached cube (the
-    * ServeFastPath flag discipline). A var so CoalescerSpec can pin
-    * coalesced-vs-solo parity in one JVM. */
-  private[api] var ServeCoalesce: Boolean =
-    sys.env.get("SPARK_GRAFT_SERVE_COALESCE")
-      .forall(v => !Set("0", "false", "no", "off").contains(v.trim.toLowerCase))
 
   /** The reference's chunked-read planner
     * (SkopePolygonModel._make_band_range_groups, geometry.py:111-139):
@@ -309,12 +330,12 @@ object Api {
     * validate → select area → zonal statistic → transform → smoothers →
     * clip → summary stats.
     */
-  /** `serving = true` reads the per-session PERSISTED (band, cell)
-    * cube (EventCube.servingCube) instead of re-scanning the event log
-    * per request — the HttpApi path (r12 verdict item 4). Results are
-    * row-identical (ServingCacheSpec); the batch/oracle path keeps the
-    * scan-bound plan so the driver's correctness gate exercises the
-    * pushdown shape. */
+  /** `serving = true` answers from the per-session serving index of
+    * the PERSISTED cube (ServingCoalescer over EventCube.servingCubes)
+    * instead of re-scanning the event log per request — the HttpApi
+    * path. Results are row-identical (ServingCacheSpec); the
+    * batch/oracle path keeps the scan-bound plan so the driver's
+    * correctness gate exercises the pushdown shape. */
   def extractTimeseries(spark: SparkSession, dir: String,
       req: TimeseriesRequest, serving: Boolean = false): TimeseriesResult = {
     if (!KnownDatasets(req.datasetId)) throw DatasetNotFoundError(req.datasetId)
@@ -405,22 +426,20 @@ object Api {
       case _ => extractBr0
     }
 
-    // ---- serving fast path (r12 verdict item 4) ----
-    // The per-request profile of the full DataFrame path is ~0.9 s of
-    // pure overhead: FOUR plans (series, stats, selection, time_range)
-    // each re-analyzed, re-codegen'd and re-EXECUTED per request, with
-    // stats re-running the whole window chain. The reference's own
-    // request shape is one bounded window read + NumPy series math —
-    // mirrored here: the zonal series is read from the serving
-    // coalescer's driver-side index of the cached cube (its input is
-    // MaxCells-bounded like the reference's rasterio window, its
-    // output ≤ #bands rows; no Spark job once the index is built), then
-    // transforms / smoothers / stats run driver-side over the series
-    // with EXACTLY the batch path's window semantics (ServingCacheSpec
-    // sweeps row-identity; the Welford recurrence in ServingMath is
-    // CentralMomentAgg's own update rule, so the sd == 0 → NULL branch
-    // cannot drift). The batch path below stays fully distributed —
-    // that is the corpus-scale shape the oracle gates.
+    // ---- serving path ----
+    // The reference's own request shape is one bounded window read +
+    // NumPy series math — mirrored here on the caller's thread: the
+    // zonal series is read from the serving index of the cached cube
+    // (ServingCoalescer; its input is MaxCells-bounded like the
+    // reference's rasterio window, its output ≤ #bands rows; no Spark
+    // job once the index is built), then transforms / smoothers / stats
+    // run driver-side over the series with EXACTLY the batch path's
+    // window semantics (ServingCacheSpec sweeps row-identity; the
+    // Welford recurrence in ServingMath is CentralMomentAgg's own
+    // update rule, so the sd == 0 → NULL branch cannot drift). The
+    // result is driver rows; its DataFrames are built only if read.
+    // The batch path below stays fully distributed — that is the
+    // corpus-scale shape the oracle gates.
     if (serving)
       return servingResult(spark, dir, req, polyShapes, widened,
         avail, extractBr0, tBack)
@@ -522,7 +541,7 @@ object Api {
     val seriesOut = series.select(col("series"), col("band"), col("value"),
       EventCube.bandStartString(req.resolution, col("band")).as("band_date"))
 
-    TimeseriesResult(seriesOut, stats, selection, timeRange,
+    TimeseriesResult.fromFrames(seriesOut, stats, selection, timeRange,
       datasetId = req.datasetId, variableId = req.variableId,
       transform = req.transform, zonalStatistic = req.zonalStatistic)
   }
@@ -660,43 +679,14 @@ object Api {
       req: TimeseriesRequest, polyShapes: Option[Geometry.GridFeatureCollection],
       widened: (Int, Int), avail: (Int, Int), extractBr0: (Int, Int),
       tBack: Int): TimeseriesResult = {
-    val timeRange = timeRangeFrame(spark, req, avail, extractBr0, tBack)
     import ServingMath._
-    // The zonal series. Default route is the coalescer: concurrent
-    // requests are answered in chunks from the driver-side index of
-    // the persisted cube, reduced per band with ServingMath's mean /
-    // median — the batch path's null-skipping avg / percentile, so
-    // zonal values cannot drift (ServingCacheSpec's sweep pins it). The
-    // solo mask plan below — one cluster job over the persisted cube,
-    // the same aggregation expressions as the batch path — is the
-    // opt-out twin the coalescer's parity is checked against
-    // (CoalescerSpec).
-    val zonal: Ser =
-      if (ServeCoalesce)
-        ServingCoalescer.zonal(spark, dir, req.datasetId, req.resolution,
-          req.variableId, enumerateCells(req.selectedArea),
-          widened._1, widened._2, req.zonalStatistic.name)
-      else {
-        val cube = EventCube.servingCube(spark, dir, req.datasetId,
-          req.resolution, req.variableId)
-          .filter(col("band").between(widened._1, widened._2))
-        val zonalDf = req.selectedArea match {
-          case PointArea(cell) =>
-            cube.filter(col("user_id") === cell)
-              .select(col("band"), col("v").as("zv"))
-          case BBoxArea(x0, x1, y0, y1) =>
-            cube.filter(EventCube.BBox(x0, x1, y0, y1).contains(col("x"), col("y")))
-              .groupBy(col("band"))
-              .agg(EventCube.statAgg(req.zonalStatistic.name).as("zv"))
-          case _: PolygonArea | _: FeatureCollectionArea =>
-            cube.filter(polyShapes.get.mask(col("x"), col("y")))
-              .groupBy(col("band"))
-              .agg(EventCube.statAgg(req.zonalStatistic.name).as("zv"))
-        }
-        zonalDf.collect()
-          .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-          .sortBy(_._1).toIndexedSeq
-      }
+    // the zonal series from the serving index, reduced per band with
+    // ServingMath's mean / median — the batch path's null-skipping
+    // avg / percentile, so zonal values cannot drift (ServingCacheSpec
+    // and CoalescerSpec compare them with the batch path)
+    val zonal: Ser = ServingCoalescer.zonal(spark, dir, req.datasetId,
+      req.resolution, req.variableId, enumerateCells(req.selectedArea),
+      widened._1, widened._2, req.zonalStatistic.name)
 
     val transformed: Ser = req.transform match {
       case NoTransform => zonal
@@ -750,16 +740,6 @@ object Api {
           cells.map { case (_, y) => Geometry.Geo.cellAreaM2(y.toInt) }.sum)
     }
 
-    import spark.implicits._
-    val seriesOut = seriesRows.toDF("series", "band", "value")
-      .select(col("series"), col("band"), col("value"),
-        EventCube.bandStartString(req.resolution, col("band")).as("band_date"))
-    val statsOut = statsRows.toDF("series", "mean", "median", "stdev")
-    val selection = Seq((nCells, area)).toDF("n_cells", "area")
-
-    // pre-collected twin of the four surfaces: ResponseJson serializes
-    // straight from these rows, so an HTTP request never executes the
-    // LocalRelation mini-plans above (they stay lazy — built, unrun)
     val localRows = LocalResult(
       series = seriesRows,
       summaryStats = statsRows,
@@ -771,10 +751,20 @@ object Api {
             blo.toLong, bhi.toLong)
       })
 
-    TimeseriesResult(seriesOut, statsOut, selection, timeRange,
+    // the DataFrame surfaces as LocalRelation mini-plans, built only
+    // when a DataFrame consumer asks (ResponseJson reads the rows)
+    def frames = {
+      import spark.implicits._
+      (seriesRows.toDF("series", "band", "value")
+        .select(col("series"), col("band"), col("value"),
+          EventCube.bandStartString(req.resolution, col("band")).as("band_date")),
+        statsRows.toDF("series", "mean", "median", "stdev"),
+        Seq((nCells, area)).toDF("n_cells", "area"),
+        timeRangeFrame(spark, req, avail, extractBr0, tBack))
+    }
+    new TimeseriesResult(frames, localRows,
       datasetId = req.datasetId, variableId = req.variableId,
-      transform = req.transform, zonalStatistic = req.zonalStatistic,
-      local = Some(localRows))
+      transform = req.transform, zonalStatistic = req.zonalStatistic)
   }
 
   // ------------------------------------------------------------------

@@ -30,38 +30,29 @@ import graft.api.Api._
   * carry `Access-Control-Allow-Origin: *` like the reference's
   * allow-all CORS middleware for its public API (main.py:32-39).
   *
-  * Scale note: the transport is deliberately thin — one Spark job per
-  * request through the same `extractTimeseries` plan the batch
-  * operators use, so everything the engine guarantees (pushed band
-  * clips, broadcast joins, the max-cells guard, the processing-time
-  * budget) holds per request. Requests are dispatched on a fixed
-  * thread pool (`server.setExecutor`; without one the JDK server
-  * handles requests serially on its dispatcher thread, so one slow
-  * /timeseries would block /metadata) and `start` flips the session
-  * to `spark.scheduler.mode=FAIR` so concurrent extractions share
+  * Scale note: the transport is deliberately thin — a request runs
+  * `extractTimeseries(serving = true)` on its own thread (its
+  * handler's bounded-action thread): the zonal series is a lookup in
+  * the session's driver-side serving index and the series math runs on
+  * the driver, so a warm request runs no Spark job, and the engine's
+  * guards (the max-cells guard, the processing-time budget) hold per
+  * request. Requests are dispatched on a fixed thread pool
+  * (`server.setExecutor`; without one the JDK server handles requests
+  * serially on its dispatcher thread, so one slow /timeseries would
+  * block /metadata) and `start` requires the session's
+  * `spark.scheduler.mode=FAIR` so concurrent extractions share
   * executor slots round-robin instead of queueing FIFO behind the
   * first request's stages.
   */
 object HttpApi {
 
-  /** HTTP worker threads — bounds concurrent in-flight extractions.
-    * Handlers on the serving path mostly BLOCK on the coalescer's
-    * chunk (driver-side index reads and series math around one
-    * await), so the pool is sized to admit a full client burst into
-    * ONE chunk rather than to ration executor slots; the batch path's
-    * per-request jobs still share slots via FAIR scheduling. */
+  /** HTTP worker threads — bounds concurrent in-flight requests. A
+    * served request does its index lookup and series math on its own
+    * handler thread (plus the bounded-action thread that enforces its
+    * budget), so the pool bounds concurrent driver work; a request that
+    * builds a serving index shares executor slots with the others via
+    * FAIR scheduling. */
   private val HttpThreads = 48
-
-  /** Serving fast path (the zonal series read from the serving
-    * coalescer's driver-side index of the cached cube, then
-    * driver-side series math — no cluster job once the index is
-    * built) is default-ON; only an explicit opt-out value
-    * disables it — any enable-ish spelling ("1"/"true"/"yes"/unset)
-    * keeps it on, so SPARK_GRAFT_SERVE_CACHE=true no longer silently
-    * selects the slow scan path. Computed once at class init. */
-  private[api] val ServeFastPath: Boolean =
-    sys.env.get("SPARK_GRAFT_SERVE_CACHE")
-      .forall(v => !Set("0", "false", "no", "off").contains(v.trim.toLowerCase))
 
   final case class Server(http: HttpServer,
       pool: java.util.concurrent.ExecutorService) {
@@ -117,13 +108,13 @@ object HttpApi {
             val req = RequestJson.parse(body)
             (200, materializeWithTimeout(spark, req.maxProcessingTimeMs) {
               ResponseJson.toJson(req,
-                extractTimeseries(spark, dir, req, serving = ServeFastPath))
+                extractTimeseries(spark, dir, req, serving = true))
             })
           case ("POST", "/v1/timeseries") =>
             val (req, geom) = RequestJson.parseV1(body)
             (200, materializeWithTimeout(spark, req.maxProcessingTimeMs) {
               ResponseJson.toV1Json(req, geom,
-                extractTimeseries(spark, dir, req, serving = ServeFastPath))
+                extractTimeseries(spark, dir, req, serving = true))
             })
           case _ => (404, """{"detail":"Not Found"}""")
         }

@@ -33,16 +33,15 @@ import Api._
   *    uses this wire format's `band_range` spelling, matching what
   *    [[RequestJson]] parses.
   *
-  * One deliberate divergence: collecting here is the API response
-  * boundary (the reference returns the full series in the HTTP body) —
-  * by then the zonal reduction has shrunk the frames to ~#bands rows.
+  * Serialization reads only `result.local`, the driver rows: a served
+  * result already is rows, and a batch result collects its frames into
+  * them — the API response boundary (the reference returns the full
+  * series in the HTTP body); by then the zonal reduction has shrunk
+  * the frames to ~#bands rows.
   */
 object ResponseJson {
 
   private val mapper = new ObjectMapper()
-
-  private def optDouble(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
-    if (r.isNullAt(i) || r.getDouble(i).isNaN) None else Some(r.getDouble(i))
 
   private def putOpt(n: ObjectNode, name: String, v: Option[Double]): Unit =
     v match {
@@ -101,52 +100,28 @@ object ResponseJson {
   def toJson(req: TimeseriesRequest, result: TimeseriesResult): String =
     mapper.writeValueAsString(tree(req, result))
 
-  /** Same NaN→None normalization the Row path's optDouble applies. */
+  /** NaN → None, like the reference's nan→None conversion. */
   private def noNaN(v: Option[Double]): Option[Double] = v.filterNot(_.isNaN)
 
   private[api] def tree(req: TimeseriesRequest,
       result: TimeseriesResult): ObjectNode = {
     val root = mapper.createObjectNode()
+    val l = result.local
     root.put("dataset_id", result.datasetId)
     root.put("variable_id", result.variableId)
-
-    // serving fast path: the pre-collected rows ARE the surfaces —
-    // serialize without executing the DataFrame twins (LocalParitySpec
-    // pins byte-identical JSON from both routes)
-    result.local match {
-      case Some(l) =>
-        root.put("area", l.area)
-        root.put("n_cells", l.nCells)
-      case None =>
-        val sel = result.selection.collect().head
-        root.put("area", sel.getDouble(sel.fieldIndex("area")))
-        root.put("n_cells", sel.getLong(sel.fieldIndex("n_cells")))
-    }
+    root.put("area", l.area)
+    root.put("n_cells", l.nCells)
 
     // (band → value) per series; absent and NaN both → None
     val valuesBySeries: Map[String, Map[Long, Option[Double]]] =
-      result.local match {
-        case Some(l) => l.series.groupBy(_._1).map { case (name, rs) =>
-          name -> rs.map(r => r._2 -> noNaN(r._3)).toMap
-        }
-        case None =>
-          result.series.collect().groupBy(_.getString(0)).map { case (name, rs) =>
-            name -> rs.map(r => r.getLong(1) -> optDouble(r, 2)).toMap
-          }
+      l.series.groupBy(_._1).map { case (name, rs) =>
+        name -> rs.map(r => r._2 -> noNaN(r._3)).toMap
       }
     val ranges: Map[String, (String, String, Long, Long)] =
-      result.local match {
-        case Some(l) => l.timeRange.map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
-        case None => result.timeRange.collect().map(r => r.getString(0) ->
-          (r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toMap
-      }
+      l.timeRange.map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
     val stats: Map[String, (Option[Double], Option[Double], Option[Double])] =
-      result.local match {
-        case Some(l) => l.summaryStats.map(r =>
-          r._1 -> (noNaN(r._2), noNaN(r._3), noNaN(r._4))).toMap
-        case None => result.summaryStats.collect().map(r => r.getString(0) ->
-          (optDouble(r, 1), optDouble(r, 2), optDouble(r, 3))).toMap
-      }
+      l.summaryStats.map(r =>
+        r._1 -> (noNaN(r._2), noNaN(r._3), noNaN(r._4))).toMap
 
     // summary stats in request-series order, then the reference's extra
     // "Original" row when a transform added one (timeseries.py:460-469);
@@ -199,24 +174,14 @@ object ResponseJson {
     root.set[ObjectNode]("boundaryGeometry",
       boundaryGeometry.deepCopy[com.fasterxml.jackson.databind.JsonNode]())
     val first = req.requestedSeriesOptions.head.name
-    val (gte, lte, blo, bhi) = result.local match {
-      case Some(l) => l.timeRange.find(_._1 == first)
-        .map(r => (r._2, r._3, r._4, r._5))
-        .getOrElse(throw new IllegalStateException(s"series $first missing"))
-      case None =>
-        val tr = result.timeRange.collect()
-          .find(_.getString(0) == first)
-          .getOrElse(throw new IllegalStateException(s"series $first missing"))
-        (tr.getString(1), tr.getString(2), tr.getLong(3), tr.getLong(4))
-    }
+    val l = result.local
+    val (gte, lte, blo, bhi) = l.timeRange.find(_._1 == first)
+      .map(r => (r._2, r._3, r._4, r._5))
+      .getOrElse(throw new IllegalStateException(s"series $first missing"))
     root.put("start", gte)
     root.put("end", lte)
-    val byBand = result.local match {
-      case Some(l) => l.series.filter(_._1 == first)
-        .map(r => r._2 -> noNaN(r._3)).toMap
-      case None => result.series.collect().filter(_.getString(0) == first)
-        .map(r => r.getLong(1) -> optDouble(r, 2)).toMap
-    }
+    val byBand = l.series.filter(_._1 == first)
+      .map(r => r._2 -> noNaN(r._3)).toMap
     denseValues(root.putArray("values"), byBand, blo, bhi)
     mapper.writeValueAsString(root)
   }

@@ -259,9 +259,9 @@ object EventCube {
   /** Cached-partition count for the serving cube: the artifact is
     * raster-geometry bounded (a few MB), but the aggregation that
     * builds it runs at spark.sql.shuffle.partitions — caching THAT
-    * layout would make every read of it (the index collect, the solo
-    * path's per-request job) pay one near-empty scan task per shuffle
-    * partition. Coalesce to a handful before caching. */
+    * layout would make every read of it (the serving index collect, a
+    * DataFrame read of a [[servingCube]] view) pay one near-empty scan
+    * task per shuffle partition. Coalesce to a handful before caching. */
   val ServingCubeSlices = 4
 
   /** Every band resolution the serving cube is built at. */
@@ -277,7 +277,10 @@ object EventCube {
     * (dataset, resolution) keys pays one build, not N. Its size is
     * datasets × resolutions × cells × bands — bounded by the raster
     * geometry, NOT the event count. The serving index
-    * (ServingCoalescer) is collected from this frame. */
+    * (ServingCoalescer) is collected from this frame once per (session,
+    * dir, variable), and every served request is a lookup in that
+    * index on the request's own thread; the frame stays persisted next
+    * to it. */
   def servingCubes(spark: SparkSession, dir: String,
       variable: String): DataFrame =
     graft.pipeline.ArtifactCache.cached(spark, s"servecube:$variable:$dir") {

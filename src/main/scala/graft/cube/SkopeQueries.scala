@@ -154,14 +154,19 @@ object SkopeQueries {
       val p = new java.io.File(System.getProperty("java.io.tmpdir"),
         s"graft-$name-$hash-${ProcessHandle.current().pid()}")
       fill(p.toString)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(p)
-      }))
+      deleteOnExit(p)
       p.toString
     })
+
+  /** Delete `dir` and everything under it when this JVM exits: the
+    * per-JVM (pid-named) temp and fixture directories would otherwise
+    * accumulate in tmpdir, one set per JVM that ever ran. */
+  private def deleteOnExit(dir: java.io.File): Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree)); f.delete(); ()
+  }
 
   /** The same zonal mean answered from the MATERIALIZED cube
     * (CubeWriter) instead of raw events: dataset selection is a
@@ -783,7 +788,7 @@ object SkopeQueries {
          |GROUP BY band""".stripMargin),
     "skope_variable_props" ->
       s"""WITH ${EventCube.cubeSql(DefaultDataset,
-            "CAST(regexp_extract(props, '\"k\": ([0-9]+)', 1) AS BIGINT)")}
+            "TRY_CAST(regexp_extract(props, '\"k\": ([0-9]+)', 1) AS BIGINT)")}
          |SELECT band, round((avg(v)) + 1e-9, 6) AS mean_k
          |FROM cube GROUP BY band""".stripMargin,
     "skope_monthly_zonal" ->
@@ -1277,23 +1282,26 @@ object SkopeQueries {
     * discards its staging copy and uses the winner's — a directory at
     * the final name is complete BY CONSTRUCTION, including one left by
     * a reused PID after a container restart (content is deterministic).
-    * The recoverBucketed staging discipline applied to bench fixtures. */
+    * The recoverBucketed staging discipline applied to bench fixtures.
+    * The directory is deleted when this JVM exits; a writer that throws
+    * has its staging copy deleted at once. */
   private[cube] def atomicFixtureDir(dir: java.io.File)(
       write: java.io.File => Unit): String = {
     if (!dir.isDirectory) {
       val stage = new java.io.File(dir.getParentFile,
         dir.getName + s".stage-${Thread.currentThread().getId}-${System.nanoTime()}")
       stage.mkdirs()
-      write(stage)
+      try write(stage)
+      catch { case t: Throwable => deleteTree(stage); throw t }
       if (!stage.renameTo(dir)) {
         // lost the race (or a completed dir already existed): the final
         // name is complete — drop the duplicate staging copy
         if (!dir.isDirectory)
           throw new java.io.IOException(s"fixture rename failed: $stage -> $dir")
-        stage.listFiles().foreach(_.delete())
-        stage.delete()
+        deleteTree(stage)
       }
     }
+    deleteOnExit(dir)
     dir.toString
   }
 

@@ -5,14 +5,14 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import graft.SparkSpec
 import Api._
 
-/** The serving micro-batcher (r13 verdict item 1): concurrent
-  * requests must coalesce into SHARED zonal plans without perturbing a
-  * single response row. ServingCacheSpec already sweeps sequential
-  * coalesced-vs-batch parity (serving=true routes through the
-  * coalescer by default); this spec adds the two things sequential
-  * sweeps cannot see — genuinely concurrent submissions agreeing with
-  * their solo twins, and the batching actually happening (fewer
-  * micro-batches than requests). */
+/** The serving lookup under concurrency: every request does its own
+  * index lookup on its own thread, so concurrent requests must agree
+  * with the batch path (`serving = false`, the reference the served
+  * path is checked against) on every row. ServingCacheSpec already
+  * sweeps sequential serving-vs-batch parity; this spec adds what
+  * sequential sweeps cannot see — genuinely concurrent submissions,
+  * across keys, resolutions and waves, each agreeing with its batch
+  * answer, plus one index build per session and zero jobs once warm. */
 class CoalescerSpec extends SparkSpec {
 
   private def req(i: Int): TimeseriesRequest = {
@@ -39,18 +39,15 @@ class CoalescerSpec extends SparkSpec {
     Seq(r.series, r.summaryStats, r.timeRange)
       .map(_.collect().map(_.toSeq).toSet)
 
-  test("concurrent serving requests coalesce and stay row-identical to solo") {
-    val n = 24
-    // solo references with the coalescer off — the pre-r14 serving path
-    val before = Api.ServeCoalesce
-    val solo =
-      try { Api.ServeCoalesce = false; (0 until n).map(i => dump(extractTimeseries(spark, sfDir, req(i), serving = true))) }
-      finally Api.ServeCoalesce = before
-    assert(Api.ServeCoalesce, "coalescing must be default-on in this spec run")
+  /** The batch path's answers, one per request. */
+  private def batch(reqs: Seq[TimeseriesRequest]): Seq[Seq[Set[Seq[Any]]]] =
+    reqs.map(r => dump(extractTimeseries(spark, sfDir, r)))
 
-    val b0 = ServingCoalescer.batchesRun.get()
-    val r0 = ServingCoalescer.requestsServed.get()
-    val pool = Executors.newFixedThreadPool(12)
+  /** `reqs` served concurrently on `threads` threads, released together. */
+  private def served(reqs: Seq[TimeseriesRequest],
+      threads: Int): Seq[Either[Throwable, Seq[Set[Seq[Any]]]]] = {
+    val n = reqs.size
+    val pool = Executors.newFixedThreadPool(threads)
     val start = new CountDownLatch(1)
     val results = new Array[Either[Throwable, Seq[Set[Seq[Any]]]]](n)
     val done = new CountDownLatch(n)
@@ -58,7 +55,7 @@ class CoalescerSpec extends SparkSpec {
       pool.execute { () =>
         start.await()
         results(i) =
-          try Right(dump(extractTimeseries(spark, sfDir, req(i), serving = true)))
+          try Right(dump(extractTimeseries(spark, sfDir, reqs(i), serving = true)))
           catch { case t: Throwable => Left(t) }
         done.countDown()
       }
@@ -66,156 +63,64 @@ class CoalescerSpec extends SparkSpec {
     start.countDown()
     assert(done.await(5, TimeUnit.MINUTES), "concurrent requests hung")
     pool.shutdown()
-
-    (0 until n).foreach { i =>
-      results(i) match {
-        case Left(t) => fail(s"request $i failed under concurrency", t)
-        case Right(d) => assert(d === solo(i), s"request $i diverged from solo")
-      }
-    }
-    val batches = ServingCoalescer.batchesRun.get() - b0
-    val served = ServingCoalescer.requestsServed.get() - r0
-    assert(served === n.toLong)
-    // 12 threads × gather window: if every request ran its own
-    // micro-batch the coalescer is not coalescing
-    assert(batches < served,
-      s"no coalescing happened: $batches batches for $served requests")
+    results.toSeq
   }
 
-  test("multi-dataset concurrency: groups run on the pool, rows stay solo-exact") {
-    // r15: a drain cycle with several (dataset, resolution, variable)
-    // groups executes them on the fixed group pool instead of
-    // serializing on the worker thread — this pins row-parity through
-    // that path (every earlier case was single-group)
-    val n = 16
+  private def assertBatchExact(what: String, reqs: Seq[TimeseriesRequest],
+      threads: Int): Unit = {
+    val expected = batch(reqs)
+    served(reqs, threads).zipWithIndex.foreach {
+      case (Left(t), i) => fail(s"$what request $i failed", t)
+      case (Right(d), i) =>
+        assert(d === expected(i), s"$what request $i diverged from batch")
+    }
+  }
+
+  test("concurrent serving requests stay row-identical to batch") {
+    val n = 24
+    val r0 = ServingCoalescer.requestsServed.get()
+    assertBatchExact("concurrent", (0 until n).map(req), threads = 12)
+    assert(ServingCoalescer.requestsServed.get() - r0 === n.toLong)
+  }
+
+  test("multi-dataset concurrency: rows stay batch-exact") {
+    // several (dataset, resolution, variable) keys at once, every one
+    // answered from the same per-variable index
     val datasets = Seq("click", "view", "purchase", "error")
-    def dreq(i: Int) = req(i).copy(datasetId = datasets(i % datasets.length))
-    val before = Api.ServeCoalesce
-    val solo =
-      try { Api.ServeCoalesce = false; (0 until n).map(i => dump(extractTimeseries(spark, sfDir, dreq(i), serving = true))) }
-      finally Api.ServeCoalesce = before
-
-    val pool = Executors.newFixedThreadPool(n)
-    val start = new CountDownLatch(1)
-    val results = new Array[Either[Throwable, Seq[Set[Seq[Any]]]]](n)
-    val done = new CountDownLatch(n)
-    (0 until n).foreach { i =>
-      pool.execute { () =>
-        start.await()
-        results(i) =
-          try Right(dump(extractTimeseries(spark, sfDir, dreq(i), serving = true)))
-          catch { case t: Throwable => Left(t) }
-        done.countDown()
-      }
-    }
-    start.countDown()
-    assert(done.await(5, TimeUnit.MINUTES), "multi-dataset requests hung")
-    pool.shutdown()
-    (0 until n).foreach { i =>
-      results(i) match {
-        case Left(t) => fail(s"request $i failed under multi-group concurrency", t)
-        case Right(d) => assert(d === solo(i), s"request $i diverged from solo")
-      }
-    }
+    assertBatchExact("multi-dataset",
+      (0 until 16).map(i => req(i).copy(datasetId = datasets(i % datasets.length))),
+      threads = 16)
   }
 
-  test("session lane: two waves of mixed-key churn settle every request") {
-    // r16: the session lane batches ACROSS serving keys (the cube id
-    // travels as broadcast-side data into a union-of-cubes plan), so a
-    // mixed-key workload runs the same sequential batched job stream
-    // as a single-key one — replacing both the r14 central
-    // cycle+barrier (one slow group gated the rest) and the r15
-    // per-key lanes (8× the jobs at an eighth the batch size). This
-    // pins the lane enqueue/exit handshake under churn: requests
-    // arrive WHILE the lane drains, the lane goes idle between waves
-    // and must wake again, and the serving counter accounts for every
-    // request exactly once.
+  test("two waves of mixed-key churn settle every request") {
+    // requests arrive in two concurrent waves with an idle gap between
+    // them; every request is answered exactly once and batch-exact
     val n = 12
     val datasets = Seq("click", "view", "purchase", "error")
-    def dreq(i: Int) = req(i).copy(datasetId = datasets(i % datasets.length))
-    val before = Api.ServeCoalesce
-    val solo =
-      try { Api.ServeCoalesce = false; (0 until n).map(i => dump(extractTimeseries(spark, sfDir, dreq(i), serving = true))) }
-      finally Api.ServeCoalesce = before
-
+    val reqs = (0 until n).map(i => req(i).copy(datasetId = datasets(i % datasets.length)))
+    val expected = batch(reqs)
     val r0 = ServingCoalescer.requestsServed.get()
     (1 to 2).foreach { wave =>
-      val pool = Executors.newFixedThreadPool(8)
-      val start = new CountDownLatch(1)
-      val results = new Array[Either[Throwable, Seq[Set[Seq[Any]]]]](n)
-      val done = new CountDownLatch(n)
-      (0 until n).foreach { i =>
-        pool.execute { () =>
-          start.await()
-          results(i) =
-            try Right(dump(extractTimeseries(spark, sfDir, dreq(i), serving = true)))
-            catch { case t: Throwable => Left(t) }
-          done.countDown()
-        }
+      served(reqs, threads = 8).zipWithIndex.foreach {
+        case (Left(t), i) => fail(s"wave $wave request $i failed", t)
+        case (Right(d), i) =>
+          assert(d === expected(i), s"wave $wave request $i diverged")
       }
-      start.countDown()
-      assert(done.await(5, TimeUnit.MINUTES), s"wave $wave hung")
-      pool.shutdown()
-      (0 until n).foreach { i =>
-        results(i) match {
-          case Left(t) => fail(s"wave $wave request $i failed", t)
-          case Right(d) => assert(d === solo(i), s"wave $wave request $i diverged")
-        }
-      }
-      // lanes are idle between waves — the next wave's first enqueue
-      // must re-claim each lane (the exit handshake's lost-wakeup case)
       Thread.sleep(50)
     }
     assert(ServingCoalescer.requestsServed.get() - r0 === 2L * n,
-      "every request must be served by exactly one lane chunk")
+      "every request must be served by exactly one lookup")
   }
 
-  test("mixed-weight churn: hourly bodies next to daily ones stay solo-exact") {
-    // r17 (r16 verdict item 3): chunks close on a cells×bands WEIGHT
-    // budget, not request count — an hourly selection carries ~24× a
-    // daily one's bands, and before the budget one hourly body rode a
-    // chunk sized for daily bodies. This pins row-parity through the
-    // weight-budgeted drain with both weights in one lane: heavy
-    // (hourly, wide band window) and light (daily) requests interleave
-    // concurrently and every response must equal its solo twin.
-    val n = 16
+  test("mixed-weight churn: hourly bodies next to daily ones stay batch-exact") {
+    // heavy (hourly, wide band window: ~24x a daily body's bands) and
+    // light (daily) requests interleave concurrently
     def wreq(i: Int): TimeseriesRequest =
       if (i % 2 == 0)
         req(i).copy(resolution = graft.cube.EventCube.Hourly,
           selectedArea = BBoxArea(0, 9, 0, 9), bandRange = (0, 500))
       else req(i)
-    val before = Api.ServeCoalesce
-    val solo =
-      try { Api.ServeCoalesce = false; (0 until n).map(i => dump(extractTimeseries(spark, sfDir, wreq(i), serving = true))) }
-      finally Api.ServeCoalesce = before
-
-    // the heavy half alone overflows the chunk weight budget, so the
-    // lane MUST split — the budget path is exercised, not just typed
-    val heavyWeight = 8L * 150L * 501L // 8 hourly reqs × 150 cells × 501 bands
-    assert(heavyWeight > ServingCoalescer.MaxChunkWeight)
-
-    val pool = Executors.newFixedThreadPool(n)
-    val start = new CountDownLatch(1)
-    val results = new Array[Either[Throwable, Seq[Set[Seq[Any]]]]](n)
-    val done = new CountDownLatch(n)
-    (0 until n).foreach { i =>
-      pool.execute { () =>
-        start.await()
-        results(i) =
-          try Right(dump(extractTimeseries(spark, sfDir, wreq(i), serving = true)))
-          catch { case t: Throwable => Left(t) }
-        done.countDown()
-      }
-    }
-    start.countDown()
-    assert(done.await(5, TimeUnit.MINUTES), "mixed-weight requests hung")
-    pool.shutdown()
-    (0 until n).foreach { i =>
-      results(i) match {
-        case Left(t) => fail(s"mixed-weight request $i failed", t)
-        case Right(d) => assert(d === solo(i), s"mixed-weight request $i diverged")
-      }
-    }
+    assertBatchExact("mixed-weight", (0 until 16).map(wreq), threads = 16)
   }
 
   test("a failing request fails alone - batch neighbors are unaffected") {

@@ -140,7 +140,13 @@ class HttpApiSpec extends SparkSpec {
         extractTimeseries(spark, sfDir, RequestJson.parse(req.toString))))
       // one request whose own budget is too small for any extraction —
       // it must 504 with the reference envelope WITHOUT disturbing the
-      // concurrent healthy requests (per-request budget, not global)
+      // concurrent healthy requests (per-request budget, not global).
+      // With the serving index dropped, no request can finish without
+      // the index build's Spark job, so the 1 ms budget cannot be met;
+      // the starved request goes first and may start that build, which
+      // its timeout cancels — its neighbours must still get 200 and the
+      // expected body, not the cancelled build's failure
+      graft.pipeline.ArtifactCache.drop(s"serveindex:value:$sfDir")
       val starved = fixture()
       starved.put("max_processing_time", 1)
       import java.util.concurrent.CompletableFuture
@@ -149,8 +155,8 @@ class HttpApiSpec extends SparkSpec {
             URI.create(s"http://127.0.0.1:${srv.port}$path"))
             .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
           HttpResponse.BodyHandlers.ofString())
-      val healthy = (1 to 6).map(_ => async("/timeseries", req.toString))
       val timedOut = async("/timeseries", starved.toString)
+      val healthy = (1 to 6).map(_ => async("/timeseries", req.toString))
       val meta = client.sendAsync(HttpRequest.newBuilder(
           URI.create(s"http://127.0.0.1:${srv.port}/metadata")).GET().build(),
         HttpResponse.BodyHandlers.ofString())

@@ -4,14 +4,19 @@ import graft.SparkSpec
 import graft.cube.EventCube
 import Api._
 
-/** The serving path's pre-collected response rows
-  * (TimeseriesResult.local) must serialize BYTE-identically to the
-  * DataFrame surfaces they twin — stripping `local` from the same
-  * result forces ResponseJson down the collect route, so any drift
-  * (band-date arithmetic, NaN handling, stat layout) shows up as a
+/** The serving path's response rows (TimeseriesResult.local) must
+  * serialize BYTE-identically to the DataFrame surfaces built from them
+  * — re-collecting the same result's frames into a fresh result
+  * (TimeseriesResult.fromFrames, the batch path's route) makes any
+  * drift (band-date arithmetic, NaN handling, stat layout) show up as a
   * JSON diff. Also pins the scalar bandStartStringJvm against the
   * column bandStartString across all four resolutions. */
 class LocalParitySpec extends SparkSpec {
+
+  /** The same result, its local rows collected from its frames. */
+  private def collected(r: TimeseriesResult): TimeseriesResult =
+    TimeseriesResult.fromFrames(r.series, r.summaryStats, r.selection,
+      r.timeRange, r.datasetId, r.variableId, r.transform, r.zonalStatistic)
 
   private val reqs: Seq[TimeseriesRequest] = Seq(
     TimeseriesRequest(datasetId = "click",
@@ -34,9 +39,8 @@ class LocalParitySpec extends SparkSpec {
   test("local rows and DataFrame surfaces serialize identically") {
     reqs.foreach { req =>
       val r = extractTimeseries(spark, sfDir, req, serving = true)
-      assert(r.local.isDefined, "serving result must carry local rows")
       val viaLocal = ResponseJson.toJson(req, r)
-      val viaFrames = ResponseJson.toJson(req, r.copy(local = None))
+      val viaFrames = ResponseJson.toJson(req, collected(r))
       assert(viaLocal === viaFrames, s"JSON drift for $req")
     }
     // v1 route too (Point only - the v1 contract)
@@ -46,7 +50,7 @@ class LocalParitySpec extends SparkSpec {
       .readTree("""{"type":"Point","coordinates":[3.5,2.5]}""")
     val r = extractTimeseries(spark, sfDir, v1req, serving = true)
     assert(ResponseJson.toV1Json(v1req, geom, r) ===
-      ResponseJson.toV1Json(v1req, geom, r.copy(local = None)))
+      ResponseJson.toV1Json(v1req, geom, collected(r)))
   }
 
   test("bandStartStringJvm matches the column form on every resolution") {

@@ -141,11 +141,6 @@ class ServingCacheSpec extends SparkSpec {
         val b = dump(extractTimeseries(spark, dir, req))
         val s = dump(extractTimeseries(spark, dir, req, serving = true))
         assert(b === s, s"serving diverged from batch on $req")
-        val before = Api.ServeCoalesce
-        val solo =
-          try { Api.ServeCoalesce = false; dump(extractTimeseries(spark, dir, req, serving = true)) }
-          finally Api.ServeCoalesce = before
-        assert(b === solo, s"solo serving diverged from batch on $req")
         // band 2 is present with a null value, never dropped or NaN
         assert(b.head.exists(r => r(1) == 2L && r(2) == null), b.head)
       }
