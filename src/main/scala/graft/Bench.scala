@@ -183,11 +183,13 @@ object Bench {
     "text_quality" -> 0.148, "text_tokens" -> 0.133,
     "text_vocab" -> 0.342)
 
-  /** The bench session, factored so PlanDump's "the dumped plan is
-    * the plan the bench runs" contract is one builder, not a copied
-    * config block that silently drifts (r19 ADVICE). */
+  /** The one session builder of the harnesses (Bench, Verify, Measure,
+    * HttpBench, ScaleUp and perfbench), so every number is taken under
+    * one config — a copied config block silently drifts. Cores:
+    * SPARK_GRAFT_CPUS, else every core the JVM sees. */
   private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -199,6 +201,19 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** `v` at `dp` decimals, trailing zeros stripped. Locale.ROOT pins the
+    * decimal separator: the default-locale format emits "1,2" under a
+    * comma-decimal locale, corrupting the JSON. */
+  private[graft] def fmt(v: Double, dp: Int): String = {
+    val raw = String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
+    // strip trailing zeros ONLY after a decimal point — integer
+    // output ("10", "100") has significant zeros
+    val s = if (raw.contains('.'))
+      raw.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
+    else raw
+    if (s.isEmpty) "0" else s
   }
 
   /** Per-query seconds as printed: floored at 0.1 s for a query that
@@ -285,17 +300,6 @@ object Bench {
     // zeros stripped, sf as a basename. (Round 1 failed parse on the
     // "[info] " logger prefix — hence run/outputStrategy in build.sbt;
     // round 2 on sheer length.)
-    // Locale.ROOT pins the decimal separator: the default-locale format
-    // emits "1,2" under a comma-decimal locale, corrupting the JSON
-    def fmt(v: Double, dp: Int): String = {
-      val raw = String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
-      // strip trailing zeros ONLY after a decimal point — integer
-      // output ("10", "100") has significant zeros
-      val s = if (raw.contains('.'))
-        raw.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse
-      else raw
-      if (s.isEmpty) "0" else s
-    }
     val qs = results.map { case (k, v) =>
       val s = shownSec(v)
       s"\"" + alias.getOrElse(k, k) + "\":" + fmt(s, if (s >= 10) 0 else 1)

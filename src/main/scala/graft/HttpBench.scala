@@ -5,11 +5,9 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.sql.SparkSession
-
 /** HTTP-loop throughput measurement (r11 verdict item 7): N concurrent
   * POST /timeseries requests against the real [[graft.api.HttpApi]]
-  * server — the serving-path twin of [[BatchBench]]'s one-plan batch
+  * server — the serving-path twin of `Measure batch`'s one-plan batch
   * number. The reference serves each selection as an independent
   * FastAPI request (one rasterio read + NumPy reduce per request, one
   * at a time per worker); this measures the Spark engine behind the
@@ -41,7 +39,7 @@ object HttpBench {
   private def body(i: Int, mixed: Int): String = {
     // selected_area coordinates are GRID coordinates (x in [0,10),
     // y in [0,15)) — the RequestJson wire contract, same as the
-    // BatchBench selections
+    // `Measure batch` selections
     val area =
       if (i % 3 == 2) {
         val x0 = ((i / 3) % 7).toDouble
@@ -93,16 +91,10 @@ object HttpBench {
       case Some("day") => HttpMixedDay
       case Some(_) => HttpMixedStd
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // HttpApi needs FAIR scheduling, which is fixed when the context
+    // starts: supplied as a system property, as perfbench does
+    System.setProperty("spark.scheduler.mode", "FAIR")
+    val spark = Bench.session()
 
     val srv = graft.api.HttpApi.start(spark, sfDir)
     val client = HttpClient.newHttpClient()
@@ -163,11 +155,14 @@ object HttpBench {
         s"non-200 responses: $ok1/$n, $ok2/$n; sample: ${failSample.get()}")
       val best = math.min(t1, t2)
       val lat = if (t1 <= t2) lat1 else lat2
-      val keyField =
-        if (mixed == HttpMixedStd) ""","keys":8"""
-        else if (mixed == HttpMixedDay) ""","keys":4"""
-        else ""
-      println(f"""{"metric":"http_loop","value":$best%.2f,"unit":"sec","requests":$n,"concurrency":$conc,"rps":${n / best}%.1f,"p50_ms":${pct(lat, 0.50)}%.0f,"p95_ms":${pct(lat, 0.95)}%.0f$keyField}""")
+      val keys =
+        if (mixed == HttpMixedStd) Seq("keys" -> 8)
+        else if (mixed == HttpMixedDay) Seq("keys" -> 4)
+        else Nil
+      println(Measure.json(Seq("metric" -> "http_loop", "value" -> best,
+        "unit" -> "sec", "requests" -> n, "concurrency" -> conc,
+        "rps" -> n / best, "p50_ms" -> pct(lat, 0.50),
+        "p95_ms" -> pct(lat, 0.95)) ++ keys))
     } finally {
       srv.stop()
       spark.stop()

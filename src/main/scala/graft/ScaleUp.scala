@@ -46,15 +46,7 @@ object ScaleUp {
       case _ => throw new IllegalArgumentException(
         "usage: ScaleUp <srcDir> <outDir> <factor> [skew]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     run(spark, srcDir, outDir, factorStr.toInt, skew)
     println(s"""{"scaled":"$outDir","factor":$factorStr,"skew":$skew}""")
     spark.stop()

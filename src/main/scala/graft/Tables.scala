@@ -117,15 +117,7 @@ object Tables {
     * payload operators (mm_*, docs_chunk, emb_pq — PlanAuditSpec pins
     * those to zero exchanges; shuffling payload bytes is the exact
     * anti-pattern the optimization guide's worked example removes). */
-  def fanOutScan(df: DataFrame, spark: SparkSession, dir: String): DataFrame =
-    fanOutScan(df, spark, dir, sys.env.contains("SPARK_GRAFT_NO_FANOUT"))
-
-  /** The env kill switch resolved at the call boundary so the A/B
-    * escape hatch is spec-able (FanOutScanSpec) without forking a JVM
-    * with a modified environment. */
-  private[graft] def fanOutScan(df: DataFrame, spark: SparkSession,
-      dir: String, disabled: Boolean): DataFrame = {
-    if (disabled) return df
+  def fanOutScan(df: DataFrame, spark: SparkSession, dir: String): DataFrame = {
     val p = spark.sparkContext.defaultParallelism
     if (scanParallelism(spark, dir) < p) df.repartition(p) else df
   }

@@ -46,6 +46,11 @@ import graft.api.Api._
   */
 object HttpApi {
 
+  // The JDK server leaves Nagle's algorithm on and writes a response's
+  // headers and body separately, so every reply waited out the client's
+  // ~40 ms delayed ACK. Read once, when the first HttpServer is created.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
   /** HTTP worker threads — bounds concurrent in-flight requests. A
     * served request does its index lookup and series math on its own
     * handler thread (plus the bounded-action thread that enforces its

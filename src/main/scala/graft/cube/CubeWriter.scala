@@ -35,7 +35,7 @@ object CubeWriter {
         floor(col("user_id") / lit(EventCube.GridWidth.toDouble)).cast("long"))
 
   /** Materialize: hash-cluster by dataset, band-sort within files.
-    * `options` reach the parquet writer (ZOrderBench shrinks
+    * `options` reach the parquet writer (`Measure zorder` shrinks
     * parquet.block.size with it so the synthetic cube has the many
     * row groups a 100 TB cube has naturally — row-group pruning can't
     * be observed on a corpus that fits one group). */
@@ -53,7 +53,7 @@ object CubeWriter {
     * the driver's synthetic grid is 10 wide and grows its y extent
     * with SF (1500 cells = y to 149 at the bench SF; the original 4
     * bits silently truncated y past 15, which un-clustered the y axis
-    * exactly where pruning mattered — caught by ZOrderBench's
+    * exactly where pruning mattered — caught by `Measure zorder`'s
     * row-group stats showing y spans of [0,149]). A production
     * deployment sizes this to its grid. */
   val MortonBits = 8

@@ -415,7 +415,7 @@ object Bpe {
   private[pipeline] val KernelMemoCap = 1 << 20
 
   /** Kernel apply under an explicit merge table — the bench hook for
-    * the production-merge-count point (BpeKernelBench pads the trained
+    * the production-merge-count point (`Measure bpe` pads the trained
     * table to 4096 ranks to show per-doc cost flat in merge count). */
   private[graft] def tokensBpeKernelWith(spark: SparkSession, dir: String,
       merges: Seq[(String, String)],

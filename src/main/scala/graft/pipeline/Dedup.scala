@@ -430,7 +430,7 @@ object Dedup {
     * distribution; only the delta shuffles). Written once per corpus
     * (catalog existence check), read back through the catalog so the
     * planner trusts the bucket spec. */
-  private[pipeline] def minhashIndexTable(spark: SparkSession,
+  private[graft] def minhashIndexTable(spark: SparkSession,
       dir: String, raw: Boolean = false): DataFrame = {
     val tbl = indexTableName(spark, dir, "graft_minhash_idx_")
     if (!spark.catalog.tableExists(tbl)) {

@@ -243,7 +243,7 @@ object Multimodal {
     * index ([[removeFromMmIndex]] is the takedown hook; a tombstoned
     * doc's near-dup pairs disappear immediately, and
     * [[compactMmIfPresent]] materializes the deletion physically). */
-  private[pipeline] def dhashSigs(spark: SparkSession,
+  private[graft] def dhashSigs(spark: SparkSession,
       dir: String, raw: Boolean = false): DataFrame = {
     val tbl = dhashSigName(spark, dir)
     if (!spark.catalog.tableExists(tbl)) {

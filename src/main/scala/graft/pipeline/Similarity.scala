@@ -1201,7 +1201,7 @@ object Similarity {
     * AND the per-candidate re-encode the previous in-session shape
     * paid (the r11 verdict's top item: a_ivfpqt/a_ivfpqr's 11-12 s of
     * per-session training + encode topped the sf10 bench). */
-  private[pipeline] def codeTable(spark: SparkSession, dir: String,
+  private[graft] def codeTable(spark: SparkSession, dir: String,
       kind: String, raw: Boolean = false): DataFrame = {
     val tbl = annCodeName(spark, dir, kind)
     if (!spark.catalog.tableExists(tbl)) {

@@ -10,10 +10,7 @@ package graft
   *     guarantee: a large corpus always arrives already split, so no
   *     code path ever shuffles one);
   *  3. the rows are the same multiset either way — the exchange may
-  *     reorder, never add/drop/alter;
-  *  4. the SPARK_GRAFT_NO_FANOUT kill switch is identity even on a
-  *     below-parallelism input (the A/B escape hatch the r19 evidence
-  *     depends on must not silently break — r19 ADVICE).
+  *     reorder, never add/drop/alter.
   *
   * The probe keys on the CORPUS DIR's raw documents scan, memoized per
   * (session, dir) — never on the caller's derived frame, whose .rdd
@@ -51,12 +48,5 @@ class FanOutScanSpec extends SparkSpec {
       "multi-file fixture planned under session parallelism — re-pin")
     // identity: the SAME frame comes back, so no exchange is planned
     assert(Tables.fanOutScan(docs, spark, dir) eq docs)
-  }
-
-  test("kill switch is identity on a below-parallelism input") {
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    assume(docs.rdd.getNumPartitions <
-      spark.sparkContext.defaultParallelism)
-    assert(Tables.fanOutScan(docs, spark, sfDir, disabled = true) eq docs)
   }
 }

@@ -50,7 +50,7 @@ class BatchExtractionSpec extends SparkSpec {
   }
 
   test("N=1000 selections stay one scan; window parallelism scales with selection_id") {
-    val sels = graft.BatchBench.selections(1000)
+    val sels = graft.Measure.selections(1000)
     val df = extractTimeseriesBatch(spark, sfDir, "click", sels,
       transform = ZScoreMovingInterval(6),
       smoother = MovingAverageSmoother(centered = true, 5),
@@ -94,7 +94,7 @@ class BatchExtractionSpec extends SparkSpec {
     // the physical ts column (NTZ literals — lesson 24), or a batch of
     // 1000 selections degenerates to a full-archive scan
     val df = Api.extractTimeseriesBatch(spark, sfDir, "click",
-      graft.BatchBench.selections(12),
+      graft.Measure.selections(12),
       transform = Api.NoTransform, smoother = Api.NoSmoother,
       bandRange = (5, 25))
     val plan = df.queryExecution.explainString(FormattedMode)

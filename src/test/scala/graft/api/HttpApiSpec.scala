@@ -114,6 +114,21 @@ class HttpApiSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("sequential replies on one connection do not wait out a delayed ACK") {
+    // headers and body go out as two writes; with Nagle on, the body
+    // waits for the client's ~40 ms delayed ACK of the headers
+    val srv = HttpApi.start(spark, sfDir)
+    try {
+      (1 to 5).foreach(_ => assert(get(srv.port, "/settings").statusCode === 200))
+      val ms = (1 to 21).map { _ =>
+        val t0 = System.nanoTime()
+        assert(get(srv.port, "/settings").statusCode === 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 20.0, s"median GET /settings ${ms(10)} ms; all: $ms")
+    } finally srv.stop()
+  }
+
   test("concurrent requests all complete; the 504 budget binds per-request") {
     // the serving context must be FAIR — HttpApi.start enforces it, and
     // this pin keeps the shared test session from silently regressing

@@ -180,7 +180,7 @@ class BpeSpec extends SparkSpec {
     // of table size. Timing-free pin (box noise makes wall-clock
     // flakey in CI): identical OUTPUT under 170× padding plus a
     // work-counter bound via the result shape — the wall-clock curve
-    // is recorded in BASELINE.md from BpeKernelBench.
+    // is recorded in BASELINE.md from `Measure bpe`.
     val merges = Bpe.trainMerges(spark, sfDir)
     val padded = merges ++ (0 until (4096 - merges.length)).map { i =>
       // [a-z]+ tokens that cannot occur: 'q' repeated beyond any
