@@ -2,13 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import com.fasterxml.jackson.core.io.JsonStringEncoder
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
 import org.apache.spark.sql.functions._
 
 import graft.api.Api._
+import graft.api.ResponseJson.quote
 import graft.pipeline.{ArtifactCache, Bpe, Dedup, Maintenance, Multimodal,
   Similarity, TrainingPrep}
 
@@ -112,11 +111,6 @@ object Measure {
       f(dir)
     }
 
-  /** JSON string literal (Jackson's escaping: quote, backslash and
-    * every control char). */
-  private[graft] def quote(s: String): String =
-    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
-
   /** One JSON object. Doubles print through [[Bench.fmt]] (Locale.ROOT,
     * 3 decimals, trailing zeros stripped), so a comma-decimal default
     * locale cannot corrupt the line; a nested `Seq` of pairs is a
@@ -192,7 +186,7 @@ object Measure {
       val s2 = spark.newSession()
       s"${k}_warm" -> secs(f(s2, sfDir))
     }
-    val slug = sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    val slug = graft.pipeline.IndexFamily.slug(sfDir)
     val tables = spark.catalog.listTables().collect().map(_.name)
       .filter(n => n.startsWith("graft_") && n.contains(slug))
     // keyed without the dir-slug + fingerprint tail: stable, readable

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.api.ResponseJson.quote
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,7 +23,7 @@ object Verify {
     // would otherwise make the driver's json.load fail and silently
     // zero the round's correctness
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Measure.quote(k)}: ${Measure.quote(v)}" }
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -7,6 +7,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.api.Api._
+import graft.api.ResponseJson.quote
 
 /** Thin HTTP transport over the typed API — the reference's FastAPI
   * surface (timeseries/app/main.py, routers/v1/api.py:11,
@@ -124,18 +125,9 @@ object HttpApi {
           case _ => (404, """{"detail":"Not Found"}""")
         }
       } catch {
-        case t: TimeseriesTimeoutError =>
-          (504, s"""{"detail":${quote(t.getMessage)},""" +
-            s""""processing_time":${t.ms / 1000.0}}""")
-        case t: RuntimeException if isValidation(t) =>
-          (422, s"""{"detail":[{"msg":${quote(t.getMessage)}}]}""")
-        case scala.util.control.NonFatal(t) =>
-          // FastAPI's CORSMiddleware wraps even unhandled errors, so a
-          // 500 from the reference still carries the CORS header; left
-          // to the JDK default it would not (and would kill this
-          // worker's response path). Mirror the {"detail": ...} shape.
-          (500, s"""{"detail":${quote(
-            s"${t.getClass.getSimpleName}: ${t.getMessage}")}}""")
+        // a VirtualMachineError leaves the JVM unfit to answer anything
+        case t: Throwable if !t.isInstanceOf[VirtualMachineError] =>
+          errorReply(t)
       }
     val bytes = json.getBytes(UTF_8)
     val h = ex.getResponseHeaders
@@ -146,11 +138,28 @@ object HttpApi {
     try os.write(bytes) finally os.close()
   }
 
+  /** Status and body for a failed request, mirroring main.py's
+    * exception handlers: a timeout → 504 {detail, processing_time}, a
+    * validation error → 422 {detail: [{msg}]}, anything else — an
+    * InterruptedException or other fatal throwable included — → 500
+    * {detail}. FastAPI's CORSMiddleware wraps even unhandled errors, so
+    * a 500 from the reference still carries the CORS header; left to
+    * the JDK default it would not, and the client would get no
+    * response at all. */
+  private[api] def errorReply(t: Throwable): (Int, String) = t match {
+    case t: TimeseriesTimeoutError =>
+      (504, s"""{"detail":${quote(t.getMessage)},""" +
+        s""""processing_time":${t.ms / 1000.0}}""")
+    case t: RuntimeException if isValidation(t) =>
+      (422, s"""{"detail":[{"msg":${quote(t.getMessage)}}]}""")
+    case t =>
+      (500, s"""{"detail":${quote(
+        s"${t.getClass.getSimpleName}: ${t.getMessage}")}}""")
+  }
+
   /** The reference funnels every request problem through
     * TimeseriesValidationError → 422 (main.py:58-64); these are the
-    * graft equivalents. Anything else becomes a 500 JSON envelope
-    * (handled in handleOne) so the CORS header survives failures the
-    * way it does under FastAPI's middleware stack. */
+    * graft equivalents. */
   private def isValidation(t: RuntimeException): Boolean = t match {
     case _: RequestJson.RequestParseError | _: DatasetNotFoundError |
         _: SelectedAreaOutOfBoundsError |
@@ -159,15 +168,4 @@ object HttpApi {
         _: SelectedAreaTooLargeError => true
     case _ => false
   }
-
-  private def quote(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -1,5 +1,6 @@
 package graft.api
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
@@ -42,6 +43,13 @@ import Api._
 object ResponseJson {
 
   private val mapper = new ObjectMapper()
+
+  /** JSON string literal with Jackson's escaping (quote, backslash and
+    * every control char — the spelling of every 200 body); null is the
+    * empty string. The one escaper of error bodies and the harness's
+    * JSON lines. */
+  def quote(s: String): String = "\"" + new String(JsonStringEncoder
+    .getInstance.quoteAsString(Option(s).getOrElse(""))) + "\""
 
   private def putOpt(n: ObjectNode, name: String, v: Option[Double]): Unit =
     v match {

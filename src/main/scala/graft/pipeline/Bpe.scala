@@ -59,9 +59,7 @@ object Bpe {
 
   private def bpeGenSuffix(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      Dedup.corpusFingerprint(spark, dir) +
-      Registry.basisSuffix(spark, dir, Registry.Doc)
+    IndexFamily.name(spark, dir, "", Registry.Doc, generation = true)
 
   /** This corpus's trained BPE artifacts that exist in the CURRENT
     * generation (the uncapped oracle table plus any capped-k kernel

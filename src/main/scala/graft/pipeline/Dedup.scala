@@ -385,8 +385,7 @@ object Dedup {
 
   private def indexTableName(spark: SparkSession, dir: String,
       prefix: String): String =
-    prefix + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      corpusFingerprint(spark, dir)
+    IndexFamily.name(spark, dir, prefix, Registry.Doc)
 
   /** The shingle-array table as a PERSISTED bucketed lake table —
     * the OTHER half of the stored dedup index: the incremental pass's
@@ -416,10 +415,7 @@ object Dedup {
     // view subtracts the family's deletion sidecar AND the permanent
     // registry (which outlives sidecar clears — Registry contract)
     if (raw) spark.table(tbl)
-    else Registry.minus(spark,
-      Tombstones.minus(spark, spark.table(tbl),
-        indexTableName(spark, dir, "graft_tomb_dedup_"), "doc_id"),
-      dir, Registry.Doc, "doc_id")
+    else IndexFamily.dedup.view(spark, dir, spark.table(tbl))
   }
 
   /** The minhash posting index as a PERSISTED bucketed lake table —
@@ -443,10 +439,7 @@ object Dedup {
           tbl, path, Seq("k"), IndexBuckets)
     }
     if (raw) spark.table(tbl)
-    else Registry.minus(spark,
-      Tombstones.minus(spark, spark.table(tbl),
-        indexTableName(spark, dir, "graft_tomb_dedup_"), "doc_id"),
-      dir, Registry.Doc, "doc_id")
+    else IndexFamily.dedup.view(spark, dir, spark.table(tbl))
   }
 
   /** Append a batch of documents into BOTH stored index tables — the
@@ -465,8 +458,8 @@ object Dedup {
     * shingle scan (map-only, no exchange), never a full-corpus
     * anti-join. Appends preserve the bucket layout
     * (TableIO.appendBucketed — at most one new file per bucket per
-    * batch); run [[compactIndex]] nightly to fold the accumulated
-    * files back to one per bucket. Returns the number of docs
+    * batch); `IndexFamily.dedup.compact` folds the accumulated files
+    * back to one per bucket nightly. Returns the number of docs
     * actually appended. */
   private[graft] def appendToIndex(spark: SparkSession, dir: String,
       batchDocs: DataFrame): Long = {
@@ -479,8 +472,7 @@ object Dedup {
     * computed — the streaming fold path reuses the side table's stored
     * arrays instead of re-shingling. Caller owns persistence. */
   private[graft] def appendShingles(spark: SparkSession, dir: String,
-      batchShIn: DataFrame): Long = Maintenance.IndexLocks
-      .withLock("dedup", dir) {
+      batchShIn: DataFrame): Long = IndexFamily.dedup.withLock(dir) {
     // never-reingest: a permanently removed doc in a replayed or
     // malicious ingest batch must not re-enter (Registry contract;
     // identity when nothing was ever permanently removed)
@@ -529,105 +521,42 @@ object Dedup {
     math.max(freshMh.length, freshSh.length).toLong
   }
 
-  /** Nightly compaction of the stored index tables: fold the files
-    * accumulated by [[appendToIndex]] back to one per bucket
-    * (TableIO.compactBucketed — bucket spec re-registered, planner
-    * trust preserved; IndexAppendSpec pins results and the
-    * zero-index-side-Exchange property across the rewrite). */
-  private[graft] def compactIndex(spark: SparkSession, dir: String): Unit =
-      Maintenance.IndexLocks.withLock("dedup", dir) {
-    val tomb = indexTableName(spark, dir, "graft_tomb_dedup_")
-    val f: DataFrame => DataFrame =
-      df => Registry.minus(spark,
-        Tombstones.minus(spark, df, tomb, "doc_id"),
-        dir, Registry.Doc, "doc_id")
-    graft.sources.TableIO.compactBucketed(spark,
-      indexTableName(spark, dir, "graft_minhash_idx_"),
-      Seq("k"), IndexBuckets, transform = f)
-    graft.sources.TableIO.compactBucketed(spark,
-      indexTableName(spark, dir, "graft_shingles_"),
-      Seq("doc_id"), IndexBuckets, transform = f)
-    // both tables rewritten without the tombstoned docs — the deletion
-    // is physical now; forget the sidecar (a crash before this line
-    // only re-filters rows that are already gone)
-    Tombstones.clear(spark, tomb)
-  }
-
-  /** Takedown / right-to-be-forgotten for the minhash+shingle family
-    * (r16 verdict item 2): record `docIds` in the family's deletion
-    * sidecar (Tombstones — the equality-delete design); every read
-    * path (probe joins, incremental dedup, the streaming twins)
-    * subtracts it immediately, and the next [[compactIndex]] pass
-    * materializes it physically. Idempotent; nothing corpus-scale
-    * moves at delete time. Returns how many ids were newly recorded. */
-  private[graft] def removeFromIndex(spark: SparkSession, dir: String,
-      docIds: Seq[Long], permanent: Boolean = false): Long =
-      Maintenance.IndexLocks.withLock("dedup", dir) {
-    if (permanent) Registry.addPermanent(spark, dir, Registry.Doc, docIds)
-    Tombstones.add(spark,
-      indexTableName(spark, dir, "graft_tomb_dedup_"), docIds)
-  }
-
-  /** [[removeFromIndex]] for the simhash family. */
-  private[graft] def removeSimhashFromIndex(spark: SparkSession,
-      dir: String, docIds: Seq[Long], permanent: Boolean = false): Long =
-      Maintenance.IndexLocks.withLock("simhash", dir) {
-    if (permanent) Registry.addPermanent(spark, dir, Registry.Doc, docIds)
-    Tombstones.add(spark,
-      indexTableName(spark, dir, "graft_tomb_simhash_"), docIds)
-  }
-
-  /** [[removeFromIndex]] for the span family — the one deletion that
-    * must run the fold path in REVERSE: the span index stores DERIVED
-    * duplicated-start markers, and deleting a doc can turn another
-    * doc's marked span back into a singleton (the inverse of the
-    * append's promotion). For each span hash the dropped docs carry,
-    * the surviving occurrence count is probed bucket-pruned against
-    * the (h,h2)-bucketed posting table; hashes left with exactly ONE
-    * surviving occurrence demote that survivor's (h, h2, doc_id, i)
-    * into the sidecar [[validSpanDemotions]] re-validates at read
-    * time (carrying the hash is what lets a later re-duplicating
-    * append invalidate the demotion without rewriting the sidecar).
-    * Demotions land BEFORE the doc ids are recorded, so a crash
-    * between the writes replays the whole computation (duplicate
-    * demote rows distinct away). Returns how many ids were newly
-    * recorded. */
-  private[graft] def removeSpanFromIndex(spark: SparkSession, dir: String,
-      docIds: Seq[Long], permanent: Boolean = false): Long =
-      Maintenance.IndexLocks.withLock("span", dir) {
-    import spark.implicits._
-    if (permanent) Registry.addPermanent(spark, dir, Registry.Doc, docIds)
-    val tomb = indexTableName(spark, dir, "graft_tomb_span_")
-    val demoteTbl = indexTableName(spark, dir, "graft_tombsp_span_")
-    val recorded: Set[Long] =
-      if (spark.catalog.tableExists(tomb))
-        spark.table(tomb).as[Long].collect().toSet
-      else Set.empty
-    val fresh = docIds.distinct.filterNot(recorded)
-    if (fresh.isEmpty) 0L
-    else {
-      // first touch builds both tables — the demotion probe needs the
-      // posting counts
-      spanIndexTable(spark, dir, raw = true)
-      val stored = spanPostTable(spark, dir, raw = true)
-      // the POSTING table is the authoritative record of what the
-      // index holds for a doc (a streamed doc's text lives in no
-      // corpus parquet) — one map-only scan with the id list pushed
-      // down to the parquet filters, batch-bounded output
-      val touched = stored.filter(col("doc_id").isin(fresh: _*))
-        .select(col("h"), col("h2")).distinct()
-      val allDropped = (recorded ++ fresh).toSeq
-      val surv = stored.join(broadcast(touched), Seq("h", "h2"))
-        .filter(!col("doc_id").isin(allDropped: _*))
-      val demote = surv.groupBy(col("h"), col("h2"))
-        .agg(sum(col("c")).as("stot"),
-          any_value(struct(col("doc_id"), col("i"))).as("owner"))
-        .filter(col("stot") === 1)
-        .select(col("h"), col("h2"),
-          col("owner.doc_id").as("doc_id"), col("owner.i").as("i"))
-      Tombstones.addRows(spark, demoteTbl, demote)
-      Tombstones.add(spark, tomb, fresh)
-    }
+  /** The span family's reverse promotion, run by
+    * `IndexFamily.span.remove` BEFORE it records `fresh` in the doc
+    * sidecar (`dropped` = every recorded id, `fresh` included). The
+    * span index stores DERIVED duplicated-start markers, and deleting
+    * a doc can turn another doc's marked span back into a singleton
+    * (the inverse of the append's promotion). For each span hash the
+    * dropped docs carry, the surviving occurrence count is probed
+    * bucket-pruned against the (h,h2)-bucketed posting table; hashes
+    * left with exactly ONE surviving occurrence demote that survivor's
+    * (h, h2, doc_id, i) into the sidecar [[validSpanDemotions]]
+    * re-validates at read time (carrying the hash is what lets a later
+    * re-duplicating append invalidate the demotion without rewriting
+    * the sidecar). Demotions land BEFORE the doc ids are recorded, so a
+    * crash between the writes replays the whole computation (duplicate
+    * demote rows distinct away). */
+  private[pipeline] def demoteSpans(spark: SparkSession, dir: String,
+      dropped: Seq[Long], fresh: Seq[Long]): Unit = {
+    // first touch builds both tables — the demotion probe needs the
+    // posting counts
+    spanIndexTable(spark, dir, raw = true)
+    val stored = spanPostTable(spark, dir, raw = true)
+    // the POSTING table is the authoritative record of what the
+    // index holds for a doc (a streamed doc's text lives in no
+    // corpus parquet) — one map-only scan with the id list pushed
+    // down to the parquet filters, batch-bounded output
+    val touched = stored.filter(col("doc_id").isin(fresh: _*))
+      .select(col("h"), col("h2")).distinct()
+    val surv = stored.join(broadcast(touched), Seq("h", "h2"))
+      .filter(!col("doc_id").isin(dropped: _*))
+    val demote = surv.groupBy(col("h"), col("h2"))
+      .agg(sum(col("c")).as("stot"),
+        any_value(struct(col("doc_id"), col("i"))).as("owner"))
+      .filter(col("stot") === 1)
+      .select(col("h"), col("h2"),
+        col("owner.doc_id").as("doc_id"), col("owner.i").as("i"))
+    Tombstones.addRows(spark, IndexFamily.span.demotions(spark, dir), demote)
   }
 
   /** [[appendToIndex]]'s simhash twin: fold a batch's triple-key
@@ -638,8 +567,7 @@ object Dedup {
     * the fold path reuses them instead of re-hashing text. Returns the
     * number of docs actually appended. */
   private[graft] def appendSimhashToIndex(spark: SparkSession, dir: String,
-      batchPostIn: DataFrame): Long = Maintenance.IndexLocks
-      .withLock("simhash", dir) {
+      batchPostIn: DataFrame): Long = IndexFamily.simhash.withLock(dir) {
     // never-reingest filter (Registry contract; identity when empty)
     val batchPost = Registry.minus(spark, batchPostIn, dir,
       Registry.Doc, "doc_id")
@@ -660,73 +588,6 @@ object Dedup {
         .select(col("k"), col("doc_id"), col("sim"), col("t")),
       tbl, Seq("k"), IndexBuckets)
     n
-  }
-
-  /** Compaction for the simhash index (the [[compactIndex]] shape). */
-  private[graft] def compactSimhashIndex(spark: SparkSession,
-      dir: String): Unit = Maintenance.IndexLocks.withLock("simhash", dir) {
-    val tomb = indexTableName(spark, dir, "graft_tomb_simhash_")
-    graft.sources.TableIO.compactBucketed(spark,
-      indexTableName(spark, dir, "graft_simhash_idx_"),
-      Seq("k"), IndexBuckets,
-      transform = df => Registry.minus(spark,
-        Tombstones.minus(spark, df, tomb, "doc_id"),
-        dir, Registry.Doc, "doc_id"))
-    Tombstones.clear(spark, tomb)
-  }
-
-  /** Compact whichever of this corpus's dedup lake tables exist —
-    * the existence-guarded entry [[Maintenance.compactAll]] sweeps
-    * (an index family a deployment never built has nothing to
-    * compact). Returns the number of tables rewritten. */
-  private[graft] def compactDedupIfPresent(spark: SparkSession,
-      dir: String): Int = {
-    // each table compacts under ITS family's maintenance lock so a
-    // concurrent fold of that family serializes against the rewrite
-    // while the other families keep folding
-    val dedupTomb = indexTableName(spark, dir, "graft_tomb_dedup_")
-    val simhashTomb = indexTableName(spark, dir, "graft_tomb_simhash_")
-    val spanTomb = indexTableName(spark, dir, "graft_tomb_span_")
-    val spanDemote = indexTableName(spark, dir, "graft_tombsp_span_")
-    def docMinus(tomb: String): DataFrame => DataFrame =
-      df => Registry.minus(spark,
-        Tombstones.minus(spark, df, tomb, "doc_id"),
-        dir, Registry.Doc, "doc_id")
-    val specs = Seq(
-      ("graft_minhash_idx_", Seq("k"), "dedup", docMinus(dedupTomb)),
-      ("graft_shingles_", Seq("doc_id"), "dedup", docMinus(dedupTomb)),
-      ("graft_simhash_idx_", Seq("k"), "simhash", docMinus(simhashTomb)),
-      ("graft_spanidx_", Seq("doc_id"), "span",
-        (df: DataFrame) => minusDemotions(docMinus(spanTomb)(df),
-          validSpanDemotions(spark, dir))),
-      ("graft_spanpost_", Seq("h", "h2"), "span", docMinus(spanTomb)))
-    val compacted = specs.map { case (prefix, cols, family, f) =>
-      Maintenance.IndexLocks.withLock(family, dir) {
-        val tbl = indexTableName(spark, dir, prefix)
-        val present = spark.catalog.tableExists(tbl)
-        if (present)
-          graft.sources.TableIO.compactBucketed(spark, tbl, cols,
-            IndexBuckets, transform = f)
-        (family, present)
-      }
-    }
-    // a family's sidecars clear only when EVERY table of that family
-    // was present and rewritten — a tombstone recorded before the
-    // index was ever built must survive until a build+compact
-    // materializes it
-    def familyDone(family: String): Boolean = {
-      val fs = compacted.filter(_._1 == family)
-      fs.nonEmpty && fs.forall(_._2)
-    }
-    if (familyDone("dedup")) Maintenance.IndexLocks
-      .withLock("dedup", dir)(Tombstones.clear(spark, dedupTomb))
-    if (familyDone("simhash")) Maintenance.IndexLocks
-      .withLock("simhash", dir)(Tombstones.clear(spark, simhashTomb))
-    if (familyDone("span")) Maintenance.IndexLocks.withLock("span", dir) {
-      Tombstones.clear(spark, spanTomb)
-      Tombstones.clear(spark, spanDemote)
-    }
-    compacted.count(_._2)
   }
 
   /** Incremental (delta-vs-corpus) fuzzy dedup — how a 100 TB lake
@@ -896,10 +757,7 @@ object Dedup {
           tbl, path, Seq("k"), IndexBuckets)
     }
     if (raw) spark.table(tbl)
-    else Registry.minus(spark,
-      Tombstones.minus(spark, spark.table(tbl),
-        indexTableName(spark, dir, "graft_tomb_simhash_"), "doc_id"),
-      dir, Registry.Doc, "doc_id")
+    else IndexFamily.simhash.view(spark, dir, spark.table(tbl))
   }
 
   /** Triple-key posting rows for an arbitrary (doc_id, sim) signature
@@ -1036,11 +894,8 @@ object Dedup {
     * sidecar-filtered (the span-family lesson, applied as
     * name-versioning instead of demotion sidecars). */
   private def clustersTableName(spark: SparkSession, dir: String): String = {
-    val tombTbl = indexTableName(spark, dir, "graft_tomb_dedup_")
-    val tombIds: Seq[Long] =
-      if (spark.catalog.tableExists(tombTbl))
-        spark.table(tombTbl).collect().map(_.getLong(0)).toSeq
-      else Nil
+    val tombIds =
+      Tombstones.recorded(spark, IndexFamily.dedup.sidecar(spark, dir)).toSeq
     val del = (tombIds ++ Registry.ids(spark, dir, Registry.Doc))
       .distinct.sorted
     val dfp = if (del.isEmpty) "" else {
@@ -1059,7 +914,7 @@ object Dedup {
     // cleared second pass) pays one small bucketless table read.
     val tbl = clustersTableName(spark, dir)
     if (!spark.catalog.tableExists(tbl))
-      Maintenance.IndexLocks.withLock("dedup", dir) {
+      IndexFamily.dedup.withLock(dir) {
         if (!spark.catalog.tableExists(tbl)) {
           // pair generation reads the persisted posting/shingle index
           // (the dedup_incremental discipline) instead of re-shingling
@@ -1479,14 +1334,10 @@ object Dedup {
     // deletion view: the doc sidecar drops the deleted docs' own rows;
     // the demotion sidecar drops SURVIVING docs' rows whose span
     // stopped being duplicated when its only other occurrence was
-    // deleted ([[removeSpanFromIndex]]'s reverse of the append's
-    // singleton promotion) — validity-filtered, see
-    // [[validSpanDemotions]]
+    // deleted ([[demoteSpans]]' reverse of the append's singleton
+    // promotion) — validity-filtered, see [[validSpanDemotions]]
     if (raw) spark.table(tbl)
-    else Registry.minus(spark, minusDemotions(
-      Tombstones.minus(spark, spark.table(tbl),
-        indexTableName(spark, dir, "graft_tomb_span_"), "doc_id"),
-      validSpanDemotions(spark, dir)), dir, Registry.Doc, "doc_id")
+    else IndexFamily.span.view(spark, dir, spark.table(tbl), demoted = true)
   }
 
   /** The demote sidecar's CURRENTLY VALID (doc_id, i) pairs — None
@@ -1506,7 +1357,7 @@ object Dedup {
     * table read. */
   private[graft] def validSpanDemotions(spark: SparkSession,
       dir: String): Option[DataFrame] = {
-    val demoteTbl = indexTableName(spark, dir, "graft_tombsp_span_")
+    val demoteTbl = IndexFamily.span.demotions(spark, dir)
     if (!spark.catalog.tableExists(demoteTbl)) None
     else {
       val side = spark.table(demoteTbl).distinct()
@@ -1524,7 +1375,7 @@ object Dedup {
 
   /** `df` minus the valid demotion pairs on (doc_id, i) — identity
     * when no demotion is recorded. */
-  private def minusDemotions(df: DataFrame,
+  private[pipeline] def minusDemotions(df: DataFrame,
       demotions: Option[DataFrame]): DataFrame = demotions match {
     case Some(p) =>
       df.join(broadcast(p), Seq("doc_id", "i"), "left_anti")
@@ -1559,10 +1410,7 @@ object Dedup {
           tbl, path, Seq("h", "h2"), IndexBuckets)
     }
     if (raw) spark.table(tbl)
-    else Registry.minus(spark,
-      Tombstones.minus(spark, spark.table(tbl),
-        indexTableName(spark, dir, "graft_tomb_span_"), "doc_id"),
-      dir, Registry.Doc, "doc_id")
+    else IndexFamily.span.view(spark, dir, spark.table(tbl))
   }
 
   /** Fold a batch of documents into the stored span index — the
@@ -1590,8 +1438,7 @@ object Dedup {
     *    drop-set discipline).
     * Returns the number of docs actually folded. */
   private[graft] def appendSpanToIndex(spark: SparkSession, dir: String,
-      batchDocsIn: DataFrame): Long = Maintenance.IndexLocks
-      .withLock("span", dir) {
+      batchDocsIn: DataFrame): Long = IndexFamily.span.withLock(dir) {
     import spark.implicits._
     // never-reingest filter (Registry contract; identity when empty)
     val batchDocs = Registry.minus(spark, batchDocsIn, dir,
@@ -1675,40 +1522,6 @@ object Dedup {
     .filter(length(col("text")) >= SpanLen)
     .select(col("doc_id"),
       (length(col("text")) - (SpanLen - 1)).cast("long").as("n_spans"))
-
-  /** Whether this corpus's span tables exist yet — SpanStream's
-    * restart-compaction guard (a first-ever start has nothing to
-    * compact; the first fold builds the snapshot). */
-  private[graft] def spanTablesExist(spark: SparkSession,
-      dir: String): Boolean =
-    spark.catalog.tableExists(indexTableName(spark, dir, "graft_spanidx_"))
-
-  /** Compaction for the span tables (the [[compactIndex]] shape);
-    * materializes BOTH deletion sidecars — the doc tombstones and the
-    * (doc_id, i) demotions — then forgets them. */
-  private[graft] def compactSpanIndex(spark: SparkSession,
-      dir: String): Unit = Maintenance.IndexLocks.withLock("span", dir) {
-    val tomb = indexTableName(spark, dir, "graft_tomb_span_")
-    val demoteTbl = indexTableName(spark, dir, "graft_tombsp_span_")
-    // validity-filtered demotions (a re-duplicated survivor's marker
-    // is KEPT physically — see [[validSpanDemotions]]); computed off
-    // the posting table, which compacts after spanidx
-    val demotions = validSpanDemotions(spark, dir)
-    graft.sources.TableIO.compactBucketed(spark,
-      indexTableName(spark, dir, "graft_spanidx_"),
-      Seq("doc_id"), IndexBuckets,
-      transform = df => Registry.minus(spark, minusDemotions(
-        Tombstones.minus(spark, df, tomb, "doc_id"), demotions),
-        dir, Registry.Doc, "doc_id"))
-    graft.sources.TableIO.compactBucketed(spark,
-      indexTableName(spark, dir, "graft_spanpost_"),
-      Seq("h", "h2"), IndexBuckets,
-      transform = df => Registry.minus(spark,
-        Tombstones.minus(spark, df, tomb, "doc_id"),
-        dir, Registry.Doc, "doc_id"))
-    Tombstones.clear(spark, tomb)
-    Tombstones.clear(spark, demoteTbl)
-  }
 
   def despan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -1,0 +1,252 @@
+package graft.pipeline
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.sources.TableIO
+
+/** One persisted table of an index family.
+  *  - `prefix`: the table name up to the corpus slug;
+  *  - `keys`: bucket columns, or partition columns when `partitioned`;
+  *  - `base`: corpus-derived (first-touch built from the corpus); an
+  *    extension table (`base = false`) holds fold-only rows;
+  *  - `generation`: the name carries the trained-artifact generation
+  *    ([[Registry.basisSuffix]]);
+  *  - `demoted`: span's duplicated-start markers, whose view also
+  *    subtracts the valid demotions ([[Dedup.validSpanDemotions]]). */
+private[graft] final case class IndexTable(prefix: String, keys: Seq[String],
+    base: Boolean = true, generation: Boolean = false,
+    partitioned: Boolean = false, demoted: Boolean = false)
+
+/** The lifecycle of one persisted index family, defined once: its
+  * maintenance lock, its read view, its takedown and its compaction.
+  * A family has a lock key (also its key in [[Maintenance.takedown]]'s
+  * and [[Maintenance.compactAll]]'s maps), an id domain and id column,
+  * one deletion sidecar ([[Tombstones]]) and its tables.
+  *
+  * The accessors of every family build their tables on first touch and
+  * read them through [[view]]; the folds append to the PHYSICAL tables
+  * under [[withLock]]. [[remove]] records a takedown in the sidecar,
+  * and [[compact]] rewrites every present table through [[view]] and
+  * then forgets the sidecar. */
+private[graft] class IndexFamily(val key: String, val domain: String,
+    sidecarPrefix: String, ownTables: Seq[IndexTable]) {
+
+  val idCol: String = if (domain == Registry.Doc) "doc_id" else "vec_id"
+
+  /** Run `f` under this family's maintenance lock for corpus `dir`. */
+  def withLock[T](dir: String)(f: => T): T =
+    IndexFamily.IndexLocks.withLock(key, dir)(f)
+
+  /** The deletion sidecar's table name. Not generation-named: pending
+    * deletes keep filtering across a model refresh. */
+  def sidecar(spark: SparkSession, dir: String): String =
+    IndexFamily.name(spark, dir, sidecarPrefix, domain)
+
+  /** Every sidecar [[compact]] clears. */
+  protected def sidecars(spark: SparkSession, dir: String): Seq[String] =
+    Seq(sidecar(spark, dir))
+
+  /** The family's tables, base tables first, in compaction order. */
+  protected def tables(spark: SparkSession, dir: String): Seq[IndexTable] =
+    ownTables
+
+  private def tableName(spark: SparkSession, dir: String, t: IndexTable): String =
+    IndexFamily.name(spark, dir, t.prefix, domain, t.generation)
+
+  /** `df` minus the sidecar's ids only — a first-touch build's filter. */
+  def unrecorded(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
+    Tombstones.minus(spark, df, sidecar(spark, dir), idCol)
+
+  /** The default read view of a family table and every compaction's
+    * transform: `df` minus the sidecar, minus (span's start markers
+    * only) the valid demotions, minus the permanent registry. */
+  def view(spark: SparkSession, dir: String, df: DataFrame,
+      demoted: Boolean = false): DataFrame = {
+    val live = unrecorded(spark, dir, df)
+    Registry.minus(spark,
+      if (demoted) Dedup.minusDemotions(live, Dedup.validSpanDemotions(spark, dir))
+      else live,
+      dir, domain, idCol)
+  }
+
+  /** [[view]] of the family's table `tbl`, memoized per session (one
+    * cached view per family and corpus). The lookup runs under the lock
+    * (plan construction only), and [[remove]], [[compact]] and every
+    * registry change drop it in every session ([[dropView]]), so a
+    * deletion is visible everywhere at once. */
+  def cachedView(spark: SparkSession, dir: String, tbl: String): DataFrame =
+    withLock(dir) {
+      ArtifactCache.cached(spark, s"view:$key:$dir")(
+        view(spark, dir, spark.table(tbl)))
+    }
+
+  private[pipeline] def dropView(dir: String): Unit =
+    ArtifactCache.drop(s"view:$key:$dir")
+
+  /** Derived state a takedown invalidates in OTHER ids' rows, written
+    * before the sidecar records `fresh` (span's demotions). `dropped`
+    * is every recorded id, `fresh` included. */
+  protected def beforeRecord(spark: SparkSession, dir: String,
+      dropped: Seq[Long], fresh: Seq[Long]): Unit = ()
+
+  /** Takedown: record `ids` in the sidecar (and, when `permanent`, in
+    * the never-reingest registry). Every [[view]] subtracts them at
+    * once; the next [[compact]] removes the rows physically. Nothing
+    * corpus-scale is rewritten. Idempotent; returns how many ids were
+    * newly recorded. */
+  def remove(spark: SparkSession, dir: String, ids: Seq[Long],
+      permanent: Boolean = false): Long = withLock(dir) {
+    if (permanent) Registry.addPermanent(spark, dir, domain, ids)
+    val tomb = sidecar(spark, dir)
+    val recorded = Tombstones.recorded(spark, tomb)
+    val fresh = ids.distinct.filterNot(recorded)
+    if (fresh.nonEmpty) {
+      // a crash between the two writes replays the whole step
+      beforeRecord(spark, dir, (recorded ++ fresh).toSeq, fresh)
+      Tombstones.append(spark, tomb, fresh)
+    }
+    dropView(dir)
+    fresh.size.toLong
+  }
+
+  /** Nightly compaction: under ONE hold of the lock, rewrite every
+    * present table back to one file per bucket (or per partition) with
+    * [[view]] as the transform, then clear the sidecars — only when
+    * every base table was present (a sidecar recorded before the index
+    * was built must survive until a build and a compaction materialize
+    * it) and no table appeared during the sweep (a query may build an
+    * ann kind table without the lock). A corpus dir without this
+    * family's corpus has nothing to compact. Returns the number of
+    * tables rewritten. */
+  def compact(spark: SparkSession, dir: String): Int =
+    if (!IndexFamily.hasCorpus(spark, dir, domain)) 0
+    else withLock(dir) {
+      val ts = tables(spark, dir)
+      val present = ts.filter(t =>
+        spark.catalog.tableExists(tableName(spark, dir, t)))
+      present.foreach { t =>
+        val tbl = tableName(spark, dir, t)
+        val f = (df: DataFrame) => view(spark, dir, df, t.demoted)
+        if (t.partitioned)
+          TableIO.compactPartitioned(spark, tbl, t.keys,
+            Similarity.IvfCentroids, f)
+        else
+          TableIO.compactBucketed(spark, tbl, t.keys, Dedup.IndexBuckets,
+            transform = f)
+      }
+      val bases = ts.filter(_.base)
+      if (bases.nonEmpty && bases.forall(present.contains) &&
+          tables(spark, dir).forall(ts.contains))
+        sidecars(spark, dir).foreach(Tombstones.clear(spark, _))
+      dropView(dir)
+      present.size
+    }
+}
+
+private[graft] object IndexFamily {
+
+  /** Per-(family, corpus) maintenance mutex: a compaction stages a
+    * table out, DROPS it, and rewrites — an append landing inside that
+    * window is silently lost with the overwrite, and a fold's probe
+    * read inside the drop window throws. Every fold (stream
+    * processBatch / batch append), takedown and compaction takes its
+    * family's lock for the corpus dir it touches, so fold-vs-compact
+    * and compact-vs-restart-compact serialize per family while
+    * DIFFERENT families (and different corpora) stay fully concurrent.
+    * Intrinsic monitors are reentrant, so a locked fold calling its
+    * (locked) append helper is fine. Driver-side JVM state: all lake
+    * mutations are driver-coordinated (a lake table has ONE owner
+    * process); cross-process writers are out of contract.
+    * Reader-vs-compact (a concurrent QUERY scanning a table mid-
+    * rewrite) remains the documented nightly-window caveat. The
+    * registry takes its own `registry-<domain>` key. */
+  private[pipeline] object IndexLocks {
+    private val locks =
+      new java.util.concurrent.ConcurrentHashMap[String, Object]()
+    def withLock[T](key: String, dir: String)(f: => T): T =
+      locks.computeIfAbsent(s"$key:$dir", _ => new Object).synchronized(f)
+  }
+
+  /** The alphanumeric fold of a corpus dir every table name carries. */
+  private[graft] def slug(dir: String): String =
+    dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** The one table-naming rule: `prefix`, the corpus slug, the
+    * content fingerprint of the domain's corpus (a regenerated corpus
+    * misses the catalog and rebuilds instead of reading stale rows),
+    * and for a trained artifact the generation suffix. */
+  def name(spark: SparkSession, dir: String, prefix: String,
+      domain: String, generation: Boolean = false): String = {
+    val fp =
+      if (domain == Registry.Doc) Dedup.corpusFingerprint(spark, dir)
+      else Similarity.embFingerprint(spark, dir)
+    prefix + slug(dir) + "_" + fp +
+      (if (generation) Registry.basisSuffix(spark, dir, domain) else "")
+  }
+
+  private def hasCorpus(spark: SparkSession, dir: String,
+      domain: String): Boolean = {
+    val table = if (domain == Registry.Doc) "documents" else "embeddings"
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** MinHash postings and shingle arrays. */
+  val dedup = new IndexFamily("dedup", Registry.Doc, "graft_tomb_dedup_",
+    Seq(IndexTable("graft_minhash_idx_", Seq("k")),
+      IndexTable("graft_shingles_", Seq("doc_id"))))
+
+  /** Simhash triple-key postings. */
+  val simhash = new IndexFamily("simhash", Registry.Doc,
+    "graft_tomb_simhash_", Seq(IndexTable("graft_simhash_idx_", Seq("k"))))
+
+  /** Duplicated span starts and span-hash postings. The one family with
+    * cross-doc derived state: a takedown can turn another doc's marked
+    * span back into a singleton, so [[remove]] first records those
+    * demotions ([[Dedup.demoteSpans]]) in a second sidecar. */
+  object span extends IndexFamily("span", Registry.Doc, "graft_tomb_span_",
+      Seq(IndexTable("graft_spanidx_", Seq("doc_id"), demoted = true),
+        IndexTable("graft_spanpost_", Seq("h", "h2")))) {
+    /** The (h, h2, doc_id, i) demotion sidecar. */
+    def demotions(spark: SparkSession, dir: String): String =
+      name(spark, dir, "graft_tombsp_span_", Registry.Doc)
+    override protected def sidecars(spark: SparkSession,
+        dir: String): Seq[String] =
+      super.sidecars(spark, dir) :+ demotions(spark, dir)
+    override protected def beforeRecord(spark: SparkSession, dir: String,
+        dropped: Seq[Long], fresh: Seq[Long]): Unit =
+      Dedup.demoteSpans(spark, dir, dropped, fresh)
+  }
+
+  /** LM scores, plus the raw rows of streamed docs. A takedown removes
+    * the doc's row (content removal); the LM the scores were computed
+    * under is re-fit only by a model refresh. */
+  val lmscore = new IndexFamily("lmscore", Registry.Doc,
+    "graft_tomb_lmscore_",
+    Seq(IndexTable("graft_lmscore_", Seq("doc_id"), generation = true),
+      IndexTable("graft_lmdocs_", Seq("doc_id"), base = false)))
+
+  /** Image dHash signatures. */
+  val mm = new IndexFamily("mm", Registry.Doc, "graft_tomb_mm_",
+    Seq(IndexTable("graft_dhashsigs_", Seq("doc_id"))))
+
+  /** IVF-PQ code tables (one per present code kind), plus the raw
+    * refine vectors of folded batches. */
+  object ann extends IndexFamily("ann", Registry.Vec, "graft_tomb_ann_",
+      Seq(IndexTable("graft_annvecs_", Seq("vec_id"), base = false))) {
+    override protected def tables(spark: SparkSession,
+        dir: String): Seq[IndexTable] =
+      Similarity.annCodeKindsPresent(spark, dir).map(k =>
+        IndexTable(s"graft_anncodes_${k}_", Seq("cent_id"),
+          generation = true, partitioned = true)) ++
+        super.tables(spark, dir)
+  }
+
+  /** Semantic-dedup cluster postings, plus streamed vectors. */
+  val sem = new IndexFamily("sem", Registry.Vec, "graft_tomb_sem_",
+    Seq(IndexTable("graft_sempost_", Seq("cent_id"), generation = true),
+      IndexTable("graft_semvecs_", Seq("vec_id"), base = false)))
+
+  /** Every family, in takedown order. */
+  val all: Seq[IndexFamily] = Seq(dedup, simhash, span, lmscore, mm, ann, sem)
+}

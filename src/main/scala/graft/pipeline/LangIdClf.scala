@@ -163,9 +163,8 @@ object LangIdClf {
   // ------------------------------------------------------ training --
 
   private def liclfName(spark: SparkSession, dir: String): String =
-    "graft_liclf_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Dedup.corpusFingerprint(spark, dir) +
-      Registry.basisSuffix(spark, dir, Registry.Doc)
+    IndexFamily.name(spark, dir, "graft_liclf_", Registry.Doc,
+      generation = true)
 
   /** The trained-weights artifact iff it exists in the CURRENT
     * generation, paired with its deterministic rebuild — the

@@ -2,166 +2,70 @@ package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
 
-/** The nightly lake-maintenance job, as one entry point: every index
-  * family in this engine persists fingerprint-named tables whose
-  * append paths (Dedup.appendToIndex / appendSimhashToIndex /
+/** The nightly lake-maintenance job and the compliance takedown, as
+  * one entry point each over every [[IndexFamily]]: each family
+  * persists fingerprint-named tables whose append paths
+  * (Dedup.appendToIndex / appendSimhashToIndex /
   * Similarity.appendSemToIndex / appendAnnToIndex, and the streams'
   * restart folds) each add ≤1 file per bucket or inverted list — and
   * at 100 TB the scan bottleneck is FILE COUNT (TableIO.compact's
-  * thesis). `compactAll` sweeps a corpus dir's tables and rewrites
-  * whichever exist back to one file per bucket/list, preserving every
-  * bucket spec and partition layout (each family's own compactor does
-  * the rewrite; result identity is pinned per family in
-  * IndexAppendSpec / AnnAppendSpec / AnnStreamSpec).
+  * thesis). `compactAll` runs every family's [[IndexFamily.compact]],
+  * which rewrites whichever of its tables exist back to one file per
+  * bucket/list, preserving every bucket spec and partition layout
+  * (result identity is pinned per family in IndexAppendSpec /
+  * AnnAppendSpec / AnnStreamSpec).
   *
   * Existence-guarded throughout: a deployment that only ever ran
   * minhash dedup compacts one family and skips the rest — no table is
   * created as a side effect of maintaining it. */
 object Maintenance {
 
-  /** Per-(family, corpus) maintenance mutex (r15 verdict item 6): a
-    * compaction stages a table out, DROPS it, and rewrites — an append
-    * landing inside that window is silently lost with the overwrite,
-    * and a fold's probe read inside the drop window throws. Every
-    * fold (stream processBatch / batch append) and every compactor
-    * takes its family's lock for the corpus dir it touches, so
-    * fold-vs-compact and compact-vs-restart-compact serialize per
-    * family while DIFFERENT families (and different corpora) stay
-    * fully concurrent — the contention unit is one index family of
-    * one corpus, never the session. Intrinsic monitors are reentrant,
-    * so a locked fold calling its (locked) append helper is fine.
-    * Driver-side JVM state: all lake mutations are driver-coordinated
-    * (a lake table has ONE owner process — the standard no-transaction-
-    * log discipline); cross-process writers are out of contract.
-    * Reader-vs-compact (a concurrent QUERY scanning a table mid-
-    * rewrite) remains the documented nightly-window caveat — snapshot
-    * isolation is a table-format feature this engine does not owe. */
-  private[graft] object IndexLocks {
-    private val locks =
-      new java.util.concurrent.ConcurrentHashMap[String, Object]()
-    def withLock[T](family: String, dir: String)(f: => T): T =
-      locks.computeIfAbsent(s"$family:$dir", _ => new Object)
-        .synchronized(f)
-  }
-
   /** Unified takedown / right-to-be-forgotten orchestrator (r18
     * verdict item 2): ONE entry point fanning a legal-removal batch to
-    * EVERY persisted family of the corpus plus the permanent registry,
-    * so compliance callers no longer need to know the six per-family
-    * `removeFrom*` hooks and the two id domains — a missed family
-    * silently keeps serving the doc otherwise. Doc-domain families:
-    * minhash+shingle, simhash, span (with its reverse-promotion
-    * demotions), LM score sidecar, image dHash signatures. Vec-domain
-    * families: ANN (all code kinds + refine vecs), semantic-dedup
-    * postings.
+    * EVERY persisted family of the corpus ([[IndexFamily.all]]) plus
+    * the permanent registry, so compliance callers need not know the
+    * families or the two id domains — a missed family silently keeps
+    * serving the doc otherwise. Doc-domain families: minhash+shingle,
+    * simhash, span (with its reverse-promotion demotions), LM score
+    * sidecar, image dHash signatures. Vec-domain families: ANN (all
+    * code kinds + refine vecs), semantic-dedup postings.
     *
-    * Each family hook takes its own `IndexLocks` lock internally and
-    * the calls run SEQUENTIALLY — no nested cross-family locking, so
-    * the per-family/registry lock order is exactly the one the
-    * individual hooks already establish (family lock, then the
-    * registry's own lock inside `Registry.addPermanent`). Everything
-    * downstream is the hooks' existing contract: sidecar-filtered
-    * reads take effect immediately (streaming twins included — they
-    * read the same filtered views), replays of tombstoned ids append
-    * nothing, the nightly [[compactAll]] materializes physically, and
-    * `permanent = true` records the ids in the never-reingest registry
-    * once per domain. Cost note: every hook is sidecar-only (nothing
-    * corpus-scale moves at delete time) EXCEPT the span family's
-    * first-ever takedown on a corpus with no span index yet — its
-    * demotion probe first-touch-builds the posting table, which is
-    * corpus-linear; that build is load-bearing (a later build from a
-    * corpus still physically containing a non-permanently-removed doc
-    * would mark survivors' spans against it) and is the same build
-    * the family's first query pays. Idempotent; returns family → ids
-    * newly recorded
-    * (families with nothing new, including the empty-id-list domains,
-    * report 0). TakedownSpec pins post-takedown identity with a
-    * rebuild-minus-docs across all families in one call. */
+    * `permanent = true` records each domain's ids in the never-reingest
+    * registry once, under the registry's own lock; then each family's
+    * [[IndexFamily.remove]] runs under its own lock, SEQUENTIALLY — no
+    * nested cross-family locking. Everything downstream is the family
+    * contract: sidecar-filtered reads take effect immediately
+    * (streaming twins included — they read the same filtered views),
+    * replays of tombstoned ids append nothing, and the nightly
+    * [[compactAll]] materializes physically. Cost note: every remove
+    * is sidecar-only (nothing corpus-scale moves at delete time)
+    * EXCEPT the span family's first-ever takedown on a corpus with no
+    * span index yet — its demotion probe first-touch-builds the
+    * posting table, which is corpus-linear; that build is load-bearing
+    * (a later build from a corpus still physically containing a
+    * non-permanently-removed doc would mark survivors' spans against
+    * it) and is the same build the family's first query pays.
+    * Idempotent; returns family → ids newly recorded (families with
+    * nothing new report 0; a domain with no ids is absent).
+    * TakedownSpec pins post-takedown identity with a rebuild-minus-docs
+    * across all families in one call. */
   def takedown(spark: SparkSession, dir: String,
       docIds: Seq[Long] = Nil, vecIds: Seq[Long] = Nil,
       permanent: Boolean = false): Map[String, Long] = {
-    // `permanent` is passed to every hook: Registry.addPermanent is
-    // idempotent (Tombstones.add), so the first hook of a domain
-    // records the ids and the rest see 0 new — one registry append
-    // per domain, exactly as if the caller had used a single hook
-    val doc =
-      if (docIds.isEmpty) Nil
-      else Seq(
-        "dedup" -> Dedup.removeFromIndex(spark, dir, docIds, permanent),
-        "simhash" -> Dedup.removeSimhashFromIndex(spark, dir, docIds,
-          permanent),
-        "span" -> Dedup.removeSpanFromIndex(spark, dir, docIds,
-          permanent),
-        "lmscore" -> TrainingPrep.removeFromScoredTable(spark, dir,
-          docIds, permanent),
-        "mm" -> Multimodal.removeFromMmIndex(spark, dir, docIds,
-          permanent))
-    val vec =
-      if (vecIds.isEmpty) Nil
-      else Seq(
-        "ann" -> Similarity.removeFromAnnIndex(spark, dir, vecIds,
-          permanent),
-        "sem" -> Similarity.removeFromSemIndex(spark, dir, vecIds,
-          permanent))
-    (doc ++ vec).toMap
+    def idsOf(domain: String) = if (domain == Registry.Doc) docIds else vecIds
+    if (permanent)
+      Seq(Registry.Doc, Registry.Vec).filter(idsOf(_).nonEmpty)
+        .foreach(d => Registry.addPermanent(spark, dir, d, idsOf(d)))
+    IndexFamily.all.filter(f => idsOf(f.domain).nonEmpty)
+      .map(f => f.key -> f.remove(spark, dir, idsOf(f.domain))).toMap
   }
 
-  /** Compact every persisted index table for `dir`; returns
-    * family → tables rewritten (families with nothing on disk absent). */
-  def compactAll(spark: SparkSession, dir: String,
-      annKinds: Seq[String] = Seq("md5", "trained", "residual", "opq"))
-      : Map[String, Int] = {
-    // a corpus dir may carry only one of the two id domains (a
-    // doc-only lake has no embeddings to fingerprint and vice versa)
-    // — sweep each domain's families only when its corpus exists
-    val hasDocs = corpusExists(spark, dir, "documents")
-    val hasVecs = corpusExists(spark, dir, "embeddings")
-    // sweep every ann kind table that PHYSICALLY exists, not just the
-    // caller's list — the deletion sidecar may only clear once every
-    // kind materialized it (Similarity.removeFromAnnIndex's contract)
-    val presentKinds =
-      if (hasVecs) Similarity.annCodeKindsPresent(spark, dir) else Nil
-    val sweepKinds = (annKinds ++ presentKinds).distinct
-    val counts = Seq(
-      "dedup" -> (if (hasDocs) Dedup.compactDedupIfPresent(spark, dir)
-                  else 0),
-      "semantic" -> (if (hasVecs) Similarity.compactSemIfPresent(spark, dir)
-                     else 0),
-      "ann_codes" -> (if (hasVecs) sweepKinds.map(k =>
-        Similarity.compactAnnIndexIfPresent(spark, dir, k) min 1).sum
-        else 0),
-      "ann_vecs" -> (if (hasVecs)
-        Similarity.compactAnnVecsIfPresent(spark, dir).min(1) else 0),
-      "lmscore" -> (if (hasDocs)
-        TrainingPrep.compactScoredIfPresent(spark, dir) else 0),
-      "mm" -> (if (hasDocs) Multimodal.compactMmIfPresent(spark, dir)
-               else 0))
-    // every existing ann table (all kinds + the refine vecs) has now
-    // rewritten without the tombstoned vecs — forget the sidecar. A
-    // sidecar recorded before ANY ann table was built survives (the
-    // future first-touch build re-derives from the corpus, which
-    // still contains the vec). Re-list AFTER the sweep: a kind table
-    // first-touch-built mid-sweep was not rewritten — but since r17
-    // first-touch builds apply the sidecar at build time (codeTable),
-    // such a table carries no tombstoned rows and the clear cannot
-    // resurrect anything; the subset check stays as defense in depth,
-    // and re-list + clear run as ONE critical section under the ann
-    // lock (reentrant) so no build racing the gap invalidates the
-    // decision the gap was based on (r17 ADVICE TOCTOU item).
-    if (hasVecs) IndexLocks.withLock("ann", dir) {
-      val presentAfter = Similarity.annCodeKindsPresent(spark, dir)
-      if (presentKinds.nonEmpty &&
-          presentAfter.toSet.subsetOf(sweepKinds.toSet))
-        Similarity.clearAnnTombstones(spark, dir)
-    }
-    (counts.filter(_._2 > 0) ++ refreshModels(spark, dir)).toMap
-  }
-
-  private def corpusExists(spark: SparkSession, dir: String,
-      table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** Compact every persisted index table for `dir`; returns family →
+    * tables rewritten (families with nothing on disk absent), plus the
+    * [[refreshModels]] counts. */
+  def compactAll(spark: SparkSession, dir: String): Map[String, Int] =
+    (IndexFamily.all.map(f => f.key -> f.compact(spark, dir))
+      .filter(_._2 > 0) ++ refreshModels(spark, dir)).toMap
 
   /** Fraction of a trained artifact's training population that must
     * be permanently removed before [[refreshModels]] retrains it —

@@ -221,14 +221,6 @@ object Multimodal {
     }).toDF("doc_id", "b0", "b1", "b2", "b3")
   }
 
-  private def dhashSigName(spark: SparkSession, dir: String): String =
-    "graft_dhashsigs_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      Dedup.corpusFingerprint(spark, dir)
-
-  private def mmTombName(spark: SparkSession, dir: String): String =
-    "graft_tomb_mm_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      Dedup.corpusFingerprint(spark, dir)
-
   /** The dHash signature table as a PERSISTED bucketed lake table —
     * the minhash/shingle/simhash write-time discipline applied to the
     * image family (r19 verdict item 8): the encode+decode over every
@@ -240,12 +232,12 @@ object Multimodal {
     * Bucketed by doc_id; fingerprint-named (a regenerated corpus
     * misses the catalog check and rebuilds); Registry-filtered at
     * build time and sidecar-filtered at read time like every stored
-    * index ([[removeFromMmIndex]] is the takedown hook; a tombstoned
+    * index (`IndexFamily.mm.remove` is the takedown; a tombstoned
     * doc's near-dup pairs disappear immediately, and
-    * [[compactMmIfPresent]] materializes the deletion physically). */
+    * `IndexFamily.mm.compact` materializes the deletion physically). */
   private[graft] def dhashSigs(spark: SparkSession,
       dir: String, raw: Boolean = false): DataFrame = {
-    val tbl = dhashSigName(spark, dir)
+    val tbl = IndexFamily.name(spark, dir, "graft_dhashsigs_", Registry.Doc)
     if (!spark.catalog.tableExists(tbl)) {
       val path = graft.sources.TableIO.indexPath(tbl)
       if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
@@ -259,54 +251,8 @@ object Multimodal {
     // session-cache the FILTERED view: one pair query consults it three
     // times (bucketPairs' hot probe + both join sides), and uncached each
     // consumption re-pays the bucketed scan + both anti-joins (measured
-    // +0.8 s warm vs the r19 session cache). Keyed by the
-    // fingerprint-named table, looked up under the family lock (plan
-    // construction only — materialization runs outside it), and dropped
-    // in every session by the takedown and compaction hooks, so a
-    // deletion is visible immediately everywhere.
-    else Maintenance.IndexLocks.withLock("mm", dir) {
-      ArtifactCache.cached(spark, sigViewKey(tbl))(
-        Registry.minus(spark,
-          Tombstones.minus(spark, spark.table(tbl),
-            mmTombName(spark, dir), "doc_id"),
-          dir, Registry.Doc, "doc_id"))
-    }
-  }
-
-  private def sigViewKey(tbl: String): String = s"dhsigs:$tbl"
-
-  /** Takedown hook for the image family (the [[Maintenance.takedown]]
-    * fan-out): records doc ids in the mm deletion sidecar (and the
-    * permanent registry when asked) — the signature view and every
-    * pair query stop serving them immediately. */
-  private[graft] def removeFromMmIndex(spark: SparkSession, dir: String,
-      docIds: Seq[Long], permanent: Boolean = false): Long =
-    Maintenance.IndexLocks.withLock("mm", dir) {
-      if (permanent) Registry.addPermanent(spark, dir, Registry.Doc, docIds)
-      val n = Tombstones.add(spark, mmTombName(spark, dir), docIds)
-      ArtifactCache.drop(sigViewKey(dhashSigName(spark, dir)))
-      n
-    }
-
-  /** Nightly compaction of the signature table: rewrite minus the
-    * sidecar + registry, then clear the sidecar (the dedup-family
-    * contract — a tombstone recorded before the table was ever built
-    * survives until a build+compact materializes it). */
-  private[graft] def compactMmIfPresent(spark: SparkSession,
-      dir: String): Int = Maintenance.IndexLocks.withLock("mm", dir) {
-    val tbl = dhashSigName(spark, dir)
-    if (!spark.catalog.tableExists(tbl)) 0
-    else {
-      val tomb = mmTombName(spark, dir)
-      graft.sources.TableIO.compactBucketed(spark, tbl, Seq("doc_id"),
-        Dedup.IndexBuckets, transform = df =>
-          Registry.minus(spark,
-            Tombstones.minus(spark, df, tomb, "doc_id"),
-            dir, Registry.Doc, "doc_id"))
-      Tombstones.clear(spark, tomb)
-      ArtifactCache.drop(sigViewKey(tbl))
-      1
-    }
+    // +0.8 s warm vs the r19 session cache)
+    else IndexFamily.mm.cachedView(spark, dir, tbl)
   }
 
   /** Banded hamming join over an arbitrary signature frame — the

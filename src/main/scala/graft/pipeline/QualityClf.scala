@@ -182,9 +182,8 @@ object QualityClf {
     }
 
   private def qclfName(spark: SparkSession, dir: String): String =
-    "graft_qclf_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Dedup.corpusFingerprint(spark, dir) +
-      Registry.basisSuffix(spark, dir, Registry.Doc)
+    IndexFamily.name(spark, dir, "graft_qclf_", Registry.Doc,
+      generation = true)
 
   /** The trained-weights artifact iff it exists in the CURRENT
     * generation, paired with its deterministic rebuild — the

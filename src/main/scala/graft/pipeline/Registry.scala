@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * artifacts (r17 verdict items 1–2):
   *
   *  - the REGISTRY (`graft_removed_<domain>_<dir>`) is a never-
-  *    reingest list: `removeFrom*(permanent = true)` records ids here
+  *    reingest list: a permanent takedown (`Maintenance.takedown` or
+  *    `IndexFamily.remove` with `permanent = true`) records ids here
   *    IN ADDITION to the family sidecar. Unlike a sidecar it is never
   *    cleared by compaction, every append path subtracts it from the
   *    incoming batch, every non-raw index view subtracts it, and
@@ -50,21 +51,22 @@ private[graft] object Registry {
   val Vec = "vec"
 
   /** Collision-proof corpus-dir slug. The readable part is the same
-    * alphanumeric fold every index-table name uses, but the registry
-    * is the one table where two corpus dirs differing only in
-    * punctuation (`/a/b` vs `/a_b`) sharing a name is a COMPLIANCE
-    * bug, not a cache miss (r18 verdict nit) — a doc permanently
-    * removed from one corpus must never be silently barred from (or,
-    * worse, leak back into) another. So the slug carries an md5 of
+    * alphanumeric fold every index-table name uses
+    * ([[IndexFamily.slug]]), but the registry is the one table where
+    * two corpus dirs differing only in punctuation (`/a/b` vs `/a_b`)
+    * sharing a name is a COMPLIANCE bug, not a cache miss (r18
+    * verdict nit) — a doc permanently removed from one corpus must
+    * never be silently barred from (or, worse, leak back into)
+    * another. So the slug carries an md5 of
     * the raw path: distinct dirs → distinct registries, always.
     * Migration: registries written before r19 lack the `_h<md5>`
-    * suffix; re-record their ids via `removeFrom*(permanent = true)`
+    * suffix; re-record their ids via a permanent takedown
     * (idempotent) or rename `graft_removed_*`/`graft_modelbasis_*`
     * tables to the suffixed name — there is no silent fallback read
     * of the old name, by design (a fallback would reintroduce the
     * ambiguity this fixes). */
   private def slug(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_") + "_h" +
+    IndexFamily.slug(dir) + "_h" +
       java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4)
         .map(b => f"${b & 0xff}%02x").mkString
@@ -78,12 +80,17 @@ private[graft] object Registry {
     * returns how many were newly recorded. Owns its OWN lock: the
     * registry is shared across families, so two families' permanent
     * removes (each under a different family lock) must not race the
-    * table's first creation. */
+    * table's first creation. Every family view subtracts the
+    * registry, so the domain's cached views are dropped in every
+    * session. */
   def addPermanent(spark: SparkSession, dir: String, domain: String,
-      ids: Seq[Long]): Long =
-    Maintenance.IndexLocks.withLock(s"registry-$domain", dir) {
+      ids: Seq[Long]): Long = {
+    val n = IndexFamily.IndexLocks.withLock(s"registry-$domain", dir) {
       Tombstones.add(spark, regName(dir, domain), ids)
     }
+    IndexFamily.all.filter(_.domain == domain).foreach(_.dropView(dir))
+    n
+  }
 
   /** `df` minus the registry on `idCol` — identity (zero plan change)
     * when nothing was ever permanently removed. */

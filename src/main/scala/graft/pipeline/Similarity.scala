@@ -664,10 +664,8 @@ object Similarity {
   private def persistedBook(spark: SparkSession, dir: String, kind: String)
       (build: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] =
     ArtifactCache.memo(spark, s"cb:$kind:$dir") {
-      val tbl = "graft_anncb_" + kind + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        embFingerprint(spark, dir) +
-        Registry.basisSuffix(spark, dir, Registry.Vec)
+      val tbl = IndexFamily.name(spark, dir, s"graft_anncb_${kind}_",
+        Registry.Vec, generation = true)
       if (spark.catalog.tableExists(tbl)) {
         val rows = spark.table(tbl).collect()
           .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
@@ -1211,13 +1209,14 @@ object Similarity {
       // list → one file per partition directory. The build applies the
       // deletion sidecar itself: a kind table first-touch-built while
       // a tombstone is pending must not carry the removed vec
-      // PHYSICALLY, or compactAll's sidecar clear (which can race a
-      // lock-free query-path build) would resurrect it (r17 ADVICE).
+      // PHYSICALLY, or the ann compaction's sidecar clear (which can
+      // race a lock-free query-path build) would resurrect it (r17
+      // ADVICE).
       if (!graft.sources.TableIO.recoverPartitioned(spark, tbl, path,
           Seq("cent_id"), IvfCentroids))
         graft.sources.TableIO.writePartitionedTable(
-          Tombstones.minus(spark, buildCodeTable(spark, dir, kind),
-            semTableName(spark, dir, "graft_tomb_ann_"), "vec_id"),
+          IndexFamily.ann.unrecorded(spark, dir,
+            buildCodeTable(spark, dir, kind)),
           tbl, path, Seq("cent_id"), IvfCentroids)
     }
     // default view subtracts the ann deletion sidecar (a removed vec
@@ -1226,20 +1225,15 @@ object Similarity {
     // TRAINED artifacts (codebooks, centroids) are never retrained by
     // a delete — only the vec's code rows go.
     if (raw) spark.table(tbl)
-    else Registry.minus(spark,
-      Tombstones.minus(spark, spark.table(tbl),
-        semTableName(spark, dir, "graft_tomb_ann_"), "vec_id"),
-      dir, Registry.Vec, "vec_id")
+    else IndexFamily.ann.view(spark, dir, spark.table(tbl))
   }
 
   private def annCodeName(spark: SparkSession, dir: String,
       kind: String): String =
     // generation-named like the books it encodes under: a model
     // refresh retrains the books, which invalidates every code
-    "graft_anncodes_" + kind + "_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      embFingerprint(spark, dir) +
-      Registry.basisSuffix(spark, dir, Registry.Vec)
+    IndexFamily.name(spark, dir, s"graft_anncodes_${kind}_", Registry.Vec,
+      generation = true)
 
   /** Raw vectors folded into this corpus's ANN index — the refine /
     * exact-re-rank side of [[appendAnnToIndex]]: ADC searches serve an
@@ -1253,21 +1247,14 @@ object Similarity {
       dir: String): Option[DataFrame] = {
     val tbl = semTableName(spark, dir, "graft_annvecs_")
     if (spark.catalog.tableExists(tbl))
-      Some(Registry.minus(spark,
-        Tombstones.minus(spark, spark.table(tbl),
-          semTableName(spark, dir, "graft_tomb_ann_"), "vec_id"),
-        dir, Registry.Vec, "vec_id"))
+      Some(IndexFamily.ann.view(spark, dir, spark.table(tbl)))
     else None
   }
 
   private[graft] def annStreamVecsTable(spark: SparkSession,
       dir: String, raw: Boolean = false): DataFrame = {
     val t = vecsExtensionTable(spark, dir, "graft_annvecs_")
-    if (raw) t
-    else Registry.minus(spark,
-      Tombstones.minus(spark, t,
-        semTableName(spark, dir, "graft_tomb_ann_"), "vec_id"),
-      dir, Registry.Vec, "vec_id")
+    if (raw) t else IndexFamily.ann.view(spark, dir, t)
   }
 
   /** Fold a batch of NEW vectors into the persisted ANN index for
@@ -1336,8 +1323,8 @@ object Similarity {
       .filter(col("cent_id").isin(touched: _*))
 
   private[graft] def appendAnnToIndex(spark: SparkSession, dir: String,
-      batchVecsIn: DataFrame, kind: String): Long = Maintenance.IndexLocks
-      .withLock("ann", dir) {
+      batchVecsIn: DataFrame, kind: String): Long =
+      IndexFamily.ann.withLock(dir) {
     import spark.implicits._
     // never-reingest filter (Registry contract; identity when empty)
     val batchVecs = Registry.minus(spark, batchVecsIn, dir,
@@ -1405,82 +1392,17 @@ object Similarity {
     freshIdSeq.length.toLong
   }
 
-  /** Rewrite the `kind` code table back to ONE file per inverted list —
-    * the nightly maintenance pass after N [[appendAnnToIndex]] folds
-    * (each fold adds ≤1 file per touched list; file count is the scan
-    * bottleneck at 100 TB). Stages rows out first (Spark refuses to
-    * overwrite a table it is reading), then rewrites through the same
-    * one-task-per-list clustering as the original build. Returns the
-    * post-compaction data-file count. */
-  /** [[compactAnnIndex]] iff the `kind` table exists — the
-    * (re)start-maintenance guard of streaming.AnnStream: a first-ever
-    * start has nothing to compact (the base build lands one file per
-    * list already). */
-  private[graft] def compactAnnIndexIfPresent(spark: SparkSession,
-      dir: String, kind: String): Int =
-    if (spark.catalog.tableExists(annCodeName(spark, dir, kind)))
-      compactAnnIndex(spark, dir, kind)
-    else 0
-
-  /** Compact the raw-vector extension table iff any fold ever created
-    * it — the annvecs half of AnnStream's restart maintenance (each
-    * fold appends ≤1 file per bucket there too). */
-  private[graft] def compactAnnVecsIfPresent(spark: SparkSession,
-      dir: String): Int = Maintenance.IndexLocks.withLock("ann", dir) {
-    val tbl = semTableName(spark, dir, "graft_annvecs_")
-    if (spark.catalog.tableExists(tbl))
-      graft.sources.TableIO.compactBucketed(spark, tbl,
-        Seq("vec_id"), Dedup.IndexBuckets,
-        transform = df => Registry.minus(spark,
-          Tombstones.minus(spark, df,
-            semTableName(spark, dir, "graft_tomb_ann_"), "vec_id"),
-          dir, Registry.Vec, "vec_id"))
-    else 0
-  }
-
-  /** Takedown / right-to-be-forgotten for the ANN family (r16 verdict
-    * item 2) — FAISS `remove_ids` semantics on the lake layout: record
-    * `vecIds` in the family's deletion sidecar; every code-table and
-    * refine-vector read subtracts it immediately (a removed vec can
-    * never be short-listed or re-ranked), and the nightly compaction
-    * sweep materializes it across ALL kind tables before the sidecar
-    * clears ([[Maintenance.compactAll]] owns the clear — one kind's
-    * compaction must not forget ids another kind still carries).
-    * Trained artifacts (codebooks, centroids, OPQ permutations) are
-    * never retrained by a delete, exactly like FAISS. Idempotent;
-    * returns how many ids were newly recorded. */
-  private[graft] def removeFromAnnIndex(spark: SparkSession, dir: String,
-      vecIds: Seq[Long], permanent: Boolean = false): Long =
-      Maintenance.IndexLocks.withLock("ann", dir) {
-    if (permanent) Registry.addPermanent(spark, dir, Registry.Vec, vecIds)
-    Tombstones.add(spark,
-      semTableName(spark, dir, "graft_tomb_ann_"), vecIds)
-  }
-
-  /** [[removeFromAnnIndex]] for the semantic-dedup family. Cluster
-    * assignments are per-vec rows (no cross-vec derived state — the
-    * pair emission happens at query time), so the doc-family sidecar
-    * discipline applies unchanged; [[compactSemIfPresent]]
-    * materializes and clears. */
-  private[graft] def removeFromSemIndex(spark: SparkSession, dir: String,
-      vecIds: Seq[Long], permanent: Boolean = false): Long =
-      Maintenance.IndexLocks.withLock("sem", dir) {
-    if (permanent) Registry.addPermanent(spark, dir, Registry.Vec, vecIds)
-    Tombstones.add(spark,
-      semTableName(spark, dir, "graft_tomb_sem_"), vecIds)
-  }
-
   /** The ann code-table kinds with a PHYSICAL table for this corpus —
-    * [[Maintenance.compactAll]]'s sweep list, so a deletion sidecar
-    * only clears after every kind that exists has materialized it. */
+    * the ann family's base tables (`IndexFamily.ann.tables`), so its
+    * deletion sidecar only clears after every kind that exists has
+    * materialized it. */
   private[graft] def annCodeKindsPresent(spark: SparkSession,
       dir: String): Seq[String] = {
     val prefix = "graft_anncodes_"
     // CURRENT generation only (basis-suffixed): stale generations are
     // orphaned names a refresh drops, never sweep targets
-    val suffix = "_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      embFingerprint(spark, dir) +
-      Registry.basisSuffix(spark, dir, Registry.Vec)
+    val suffix = IndexFamily.name(spark, dir, "_", Registry.Vec,
+      generation = true)
     spark.catalog.listTables().collect().map(_.name)
       .filter(n => n.startsWith(prefix) && n.endsWith(suffix))
       .map(n => n.stripPrefix(prefix).stripSuffix(suffix)).toSeq
@@ -1497,9 +1419,8 @@ object Similarity {
   private[pipeline] def vecGenArtifacts(spark: SparkSession,
       dir: String): Seq[(String, () => Unit)] = {
     import spark.implicits._
-    val slugFp = "_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      embFingerprint(spark, dir) +
-      Registry.basisSuffix(spark, dir, Registry.Vec)
+    val slugFp = IndexFamily.name(spark, dir, "_", Registry.Vec,
+      generation = true)
     val names = spark.catalog.listTables().collect().map(_.name)
     val bookSpecs: Seq[(String, () => Unit)] = names.toSeq
       .filter(n => n.startsWith("graft_anncb_") && n.endsWith(slugFp))
@@ -1542,63 +1463,6 @@ object Similarity {
       }))
     }
     bookSpecs ++ codeSpecs ++ semSpec
-  }
-
-  /** Forget the ann deletion sidecar — called by compactAll AFTER the
-    * full kind + vecs sweep materialized it everywhere. */
-  private[graft] def clearAnnTombstones(spark: SparkSession,
-      dir: String): Unit = Maintenance.IndexLocks.withLock("ann", dir) {
-    Tombstones.clear(spark, semTableName(spark, dir, "graft_tomb_ann_"))
-  }
-
-  /** Compact whichever semantic-dedup lake tables exist — the
-    * assignment table and the streamed-vector extension both take ≤1
-    * new file per bucket on every [[appendSemToIndex]] fold (each
-    * SemanticStream restart is one), and nothing folded those files
-    * back until now. Returns the number of tables rewritten. */
-  private[graft] def compactSemIfPresent(spark: SparkSession,
-      dir: String): Int = Maintenance.IndexLocks.withLock("sem", dir) {
-    val tomb = semTableName(spark, dir, "graft_tomb_sem_")
-    val specs = Seq(
-      (semPostName(spark, dir), Seq("cent_id")),
-      (semTableName(spark, dir, "graft_semvecs_"), Seq("vec_id")))
-    val n = specs.count { case (tbl, cols) =>
-      val present = spark.catalog.tableExists(tbl)
-      if (present)
-        graft.sources.TableIO.compactBucketed(spark, tbl, cols,
-          Dedup.IndexBuckets,
-          transform = df => Registry.minus(spark,
-            Tombstones.minus(spark, df, tomb, "vec_id"),
-            dir, Registry.Vec, "vec_id"))
-      present
-    }
-    // the base posting table is the corpus-derived artifact: a sidecar
-    // recorded before it was ever built must survive until a
-    // build+compact materializes it (the compactDedupIfPresent rule)
-    if (spark.catalog.tableExists(semPostName(spark, dir)))
-      Tombstones.clear(spark, tomb)
-    n
-  }
-
-  /** Rewrite the `kind` code table back to ONE file per inverted list —
-    * the nightly maintenance pass after N [[appendAnnToIndex]] folds
-    * (each fold adds ≤1 file per touched list; file count is the scan
-    * bottleneck at 100 TB). TableIO.compactPartitioned owns the
-    * stage-out/rewrite/delete protocol, and recoverPartitioned in
-    * [[codeTable]] heals its crash window. Returns the ACTUAL
-    * post-compaction data-file count — one per NON-EMPTY list, so a
-    * corpus populating 11 of 16 lists compacts to 11 files. */
-  private[graft] def compactAnnIndex(spark: SparkSession, dir: String,
-      kind: String): Int = Maintenance.IndexLocks.withLock("ann", dir) {
-    // materializes the deletion sidecar for THIS kind's rows; the
-    // sidecar itself clears only in compactAll's full-family sweep
-    // (another kind's table may still carry the tombstoned vecs)
-    graft.sources.TableIO.compactPartitioned(spark,
-      annCodeName(spark, dir, kind), Seq("cent_id"), IvfCentroids,
-      transform = df => Registry.minus(spark,
-        Tombstones.minus(spark, df,
-          semTableName(spark, dir, "graft_tomb_ann_"), "vec_id"),
-        dir, Registry.Vec, "vec_id"))
   }
 
   /** ADC-scored (probe_id, vec_id, adist) candidate stream — the shared
@@ -1788,7 +1652,8 @@ object Similarity {
     * per-row xxhash64 over id+vector), one narrow corpus-linear agg,
     * memoized per session — the Dedup.corpusFingerprint discipline
     * applied to the vector table. */
-  private def embFingerprint(spark: SparkSession, dir: String): String =
+  private[pipeline] def embFingerprint(spark: SparkSession,
+      dir: String): String =
     ArtifactCache.memo(spark, s"embfp:$dir") {
       val r = Tables.embeddings(spark, dir)
         .agg(count(lit(1)).as("n"),
@@ -1821,10 +1686,7 @@ object Similarity {
           Seq("cent_id"), Dedup.IndexBuckets)
     }
     if (raw) spark.table(tbl)
-    else Registry.minus(spark,
-      Tombstones.minus(spark, spark.table(tbl),
-        semTableName(spark, dir, "graft_tomb_sem_"), "vec_id"),
-      dir, Registry.Vec, "vec_id")
+    else IndexFamily.sem.view(spark, dir, spark.table(tbl))
   }
 
   /** Lake extension table for STREAMED vectors — the semantic family's
@@ -1836,15 +1698,14 @@ object Similarity {
     * path is uniform. */
   private def semTableName(spark: SparkSession, dir: String,
       prefix: String): String =
-    prefix + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      embFingerprint(spark, dir)
+    IndexFamily.name(spark, dir, prefix, Registry.Vec)
 
   /** The semantic posting table's name — GENERATION-named (its
     * centroid hierarchy is a trained artifact), unlike the raw-vector
     * extension and tombstone sidecars, which span generations. */
   private def semPostName(spark: SparkSession, dir: String): String =
-    semTableName(spark, dir, "graft_sempost_") +
-      Registry.basisSuffix(spark, dir, Registry.Vec)
+    IndexFamily.name(spark, dir, "graft_sempost_", Registry.Vec,
+      generation = true)
 
   /** The streamed-vector table IF any stream ever folded into this
     * corpus — None otherwise, so the common no-stream case adds
@@ -1853,21 +1714,14 @@ object Similarity {
       dir: String): Option[DataFrame] = {
     val tbl = semTableName(spark, dir, "graft_semvecs_")
     if (spark.catalog.tableExists(tbl))
-      Some(Registry.minus(spark,
-        Tombstones.minus(spark, spark.table(tbl),
-          semTableName(spark, dir, "graft_tomb_sem_"), "vec_id"),
-        dir, Registry.Vec, "vec_id"))
+      Some(IndexFamily.sem.view(spark, dir, spark.table(tbl)))
     else None
   }
 
   private[graft] def semStreamVecsTable(spark: SparkSession,
       dir: String, raw: Boolean = false): DataFrame = {
     val t = vecsExtensionTable(spark, dir, "graft_semvecs_")
-    if (raw) t
-    else Registry.minus(spark,
-      Tombstones.minus(spark, t,
-        semTableName(spark, dir, "graft_tomb_sem_"), "vec_id"),
-      dir, Registry.Vec, "vec_id")
+    if (raw) t else IndexFamily.sem.view(spark, dir, t)
   }
 
   /** Shared creator for the (vec_id, v, nrm) extension tables — the
@@ -1908,8 +1762,8 @@ object Similarity {
     * the lakehouse semantics of ingesting into the index. Returns the
     * number of vectors actually appended. */
   private[graft] def appendSemToIndex(spark: SparkSession, dir: String,
-      batchPostIn: DataFrame, batchVecsIn: DataFrame): Long = Maintenance
-      .IndexLocks.withLock("sem", dir) {
+      batchPostIn: DataFrame, batchVecsIn: DataFrame): Long =
+      IndexFamily.sem.withLock(dir) {
     // never-reingest filter (Registry contract; identity when empty)
     val batchPost = Registry.minus(spark, batchPostIn, dir,
       Registry.Vec, "vec_id")

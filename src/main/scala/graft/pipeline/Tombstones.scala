@@ -9,21 +9,21 @@ import org.apache.spark.sql.functions._
   * files, Delta deletion vectors) rather than by in-place bucket
   * surgery:
   *
-  *  - a DELETE records the dropped ids in a tiny per-family sidecar
-  *    table (append-only, idempotent, fingerprint-named like the index
-  *    it shadows). Nothing corpus-scale is rewritten at delete time —
+  *  - a DELETE ([[IndexFamily.remove]]) records the dropped ids in a
+  *    tiny per-family sidecar table (append-only, idempotent,
+  *    fingerprint-named like the index it shadows). Nothing corpus-scale is rewritten at delete time —
   *    at 100 TB a takedown batch is thousands of ids against billions
   *    of rows, and rewriting posting buckets keyed by BAND (where one
   *    doc's keys scatter across every bucket) would be a near-full
   *    rewrite per takedown.
   *  - every index READ subtracts the sidecar via a broadcast anti-join
-  *    (the family accessors own this, so batch queries, delta probes
+  *    ([[IndexFamily.view]] owns this, so batch queries, delta probes
   *    and the streaming twins all see the post-delete view through one
   *    seam). When no deletion was ever recorded the accessor returns
   *    the bare table — zero plan change on the common path.
-  *  - the nightly COMPACTION materializes the deletion physically
-  *    (the bucket rewrite it was already paying) and then clears the
-  *    sidecar. Crash windows are safe in both directions: a crash
+  *  - the nightly COMPACTION ([[IndexFamily.compact]]) materializes
+  *    the deletion physically (the bucket rewrite it was already
+  *    paying) and then clears the sidecar. Crash windows are safe in both directions: a crash
   *    before the clear re-filters ids whose rows are already gone (a
   *    no-op), a crash in the rewrite's drop window recovers the
   *    UNFILTERED staging snapshot with the sidecar still in place.
@@ -36,33 +36,33 @@ import org.apache.spark.sql.functions._
   *    resurrect-by-reingest semantics).
   *
   * Drop sets are driver-bounded (takedown-batch scale, the same bound
-  * as a fold's fresh-id list) — [[add]] pins them on the driver for
-  * the idempotency diff exactly like the append paths pin fresh ids.
+  * as a fold's fresh-id list) — [[recorded]] pins them on the driver
+  * for the idempotency diff exactly like the append paths pin fresh ids.
   */
 private[graft] object Tombstones {
 
-  /** Record `ids` in the sidecar table (creating it on first use).
-    * Append-only — duplicates are filtered driver-side against the
-    * current table, and a torn write can only lose the NEW file, never
-    * corrupt prior tombstones. Returns how many ids were newly
-    * recorded. */
-  def add(spark: SparkSession, tbl: String, ids: Seq[Long]): Long = {
+  /** The ids recorded in sidecar `tbl` (empty before the first
+    * deletion) — one driver collect, takedown-bounded. */
+  def recorded(spark: SparkSession, tbl: String): Set[Long] = {
     import spark.implicits._
-    val existing: Set[Long] =
-      if (spark.catalog.tableExists(tbl))
-        spark.table(tbl).as[Long].collect().toSet
-      else Set.empty
-    val fresh = ids.distinct.filterNot(existing)
+    if (spark.catalog.tableExists(tbl)) spark.table(tbl).as[Long].collect().toSet
+    else Set.empty
+  }
+
+  /** Append `fresh` ids, already diffed against [[recorded]], to the
+    * sidecar (creating it on first use). Append-only: a torn write can
+    * only lose the NEW file, never corrupt prior tombstones. */
+  def append(spark: SparkSession, tbl: String, fresh: Seq[Long]): Unit =
     if (fresh.nonEmpty) {
-      val df = fresh.toDF("id")
-      if (spark.catalog.tableExists(tbl))
-        df.write.mode(SaveMode.Append).format("parquet").saveAsTable(tbl)
-      else {
-        val path = graft.sources.TableIO.indexPath(tbl)
-        df.write.mode(SaveMode.Overwrite).format("parquet")
-          .option("path", path).saveAsTable(tbl)
-      }
+      import spark.implicits._
+      addRows(spark, tbl, fresh.toDF("id"))
     }
+
+  /** Record `ids` in the sidecar table; returns how many were newly
+    * recorded (duplicates are filtered against the current table). */
+  def add(spark: SparkSession, tbl: String, ids: Seq[Long]): Long = {
+    val fresh = ids.distinct.filterNot(recorded(spark, tbl))
+    append(spark, tbl, fresh)
     fresh.size.toLong
   }
 

@@ -397,21 +397,16 @@ object TrainingPrep {
           Dedup.IndexBuckets)
     }
     if (raw) spark.table(tbl)
-    else Registry.minus(spark,
-      Tombstones.minus(spark, spark.table(tbl),
-        lmScoreName(spark, dir, tomb = true), "doc_id"),
-      dir, Registry.Doc, "doc_id")
+    else IndexFamily.lmscore.view(spark, dir, spark.table(tbl))
   }
 
   private def lmTypesName(spark: SparkSession, dir: String): String =
-    "graft_lmtypes_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Dedup.corpusFingerprint(spark, dir) +
-      Registry.basisSuffix(spark, dir, Registry.Doc)
+    IndexFamily.name(spark, dir, "graft_lmtypes_", Registry.Doc,
+      generation = true)
 
   private def lmUniName(spark: SparkSession, dir: String): String =
-    "graft_lmuni_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Dedup.corpusFingerprint(spark, dir) +
-      Registry.basisSuffix(spark, dir, Registry.Doc)
+    IndexFamily.name(spark, dir, "graft_lmuni_", Registry.Doc,
+      generation = true)
 
   /** This corpus's trained doc-LM artifacts that exist in the CURRENT
     * generation, each paired with its deterministic rebuild — the
@@ -437,26 +432,17 @@ object TrainingPrep {
       (lmUniName(spark, dir), () => { lmUniTable(spark, dir); () }))
       .filter(s => spark.catalog.tableExists(s._1))
 
-  private def lmScoreName(spark: SparkSession, dir: String,
-      tomb: Boolean = false): String =
-    // the artifact is GENERATION-named (basis suffix: its LM is a
-    // trained model, retrained when Maintenance.refreshModels advances
-    // the basis); the tomb sidecar is NOT — pending non-permanent
-    // deletes must keep filtering across a generation change
-    (if (tomb) "graft_tomb_lmscore_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        Dedup.corpusFingerprint(spark, dir)
-     else "graft_lmscore_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        Dedup.corpusFingerprint(spark, dir) +
-        Registry.basisSuffix(spark, dir, Registry.Doc))
+  private def lmScoreName(spark: SparkSession, dir: String): String =
+    // GENERATION-named (its LM is a trained model, retrained when
+    // Maintenance.refreshModels advances the basis)
+    IndexFamily.name(spark, dir, "graft_lmscore_", Registry.Doc,
+      generation = true)
 
   private def lmDocsName(spark: SparkSession, dir: String): String =
     // corpus-fingerprint-named, NOT generation-named: raw rows must
     // survive a model-refresh generation change (the graft_annvecs_
     // rule) — it is exactly the table the refresh re-folds from
-    "graft_lmdocs_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      Dedup.corpusFingerprint(spark, dir)
+    IndexFamily.name(spark, dir, "graft_lmdocs_", Registry.Doc)
 
   /** Raw (doc_id, text) rows of STREAMED docs folded into the scored
     * artifact — the doc-domain twin of the vec side's graft_annvecs_
@@ -494,53 +480,7 @@ object TrainingPrep {
       dir: String): Option[DataFrame] = {
     val tbl = lmDocsName(spark, dir)
     if (!spark.catalog.tableExists(tbl)) None
-    else Some(Registry.minus(spark,
-      Tombstones.minus(spark, spark.table(tbl),
-        lmScoreName(spark, dir, tomb = true), "doc_id"),
-      dir, Registry.Doc, "doc_id"))
-  }
-
-  /** Takedown for the scored artifact — CONTENT-removal semantics
-    * (the BPE-merge rule applied to scores): the doc's row leaves the
-    * artifact, but the LM the scores were computed under is a trained
-    * corpus-level model and is not re-fit per takedown — exactly how
-    * production LM-filter sidecars behave (the fingerprint-named
-    * artifact rebuilds in full when the corpus content changes).
-    * Returns how many ids were newly recorded. */
-  private[graft] def removeFromScoredTable(spark: SparkSession,
-      dir: String, docIds: Seq[Long], permanent: Boolean = false): Long =
-      Maintenance.IndexLocks.withLock("lmscore", dir) {
-    if (permanent) Registry.addPermanent(spark, dir, Registry.Doc, docIds)
-    Tombstones.add(spark, lmScoreName(spark, dir, tomb = true), docIds)
-  }
-
-  /** Materialize + forget the scored artifact's deletions — the
-    * compactAll hook (the artifact is write-once otherwise, so this
-    * is its only rewrite path). */
-  private[graft] def compactScoredIfPresent(spark: SparkSession,
-      dir: String): Int = Maintenance.IndexLocks.withLock("lmscore", dir) {
-    val tbl = lmScoreName(spark, dir)
-    if (!spark.catalog.tableExists(tbl)) 0
-    else {
-      val tomb = lmScoreName(spark, dir, tomb = true)
-      graft.sources.TableIO.compactBucketed(spark, tbl,
-        Seq("doc_id"), Dedup.IndexBuckets,
-        transform = df => Registry.minus(spark,
-          Tombstones.minus(spark, df, tomb, "doc_id"),
-          dir, Registry.Doc, "doc_id"))
-      // the raw-doc extension table (streamed text) materializes the
-      // same deletions BEFORE the sidecar clears — a content-removed
-      // doc's text must not survive physically (the annvecs rule)
-      val ext = lmDocsName(spark, dir)
-      if (spark.catalog.tableExists(ext))
-        graft.sources.TableIO.compactBucketed(spark, ext,
-          Seq("doc_id"), Dedup.IndexBuckets,
-          transform = df => Registry.minus(spark,
-            Tombstones.minus(spark, df, tomb, "doc_id"),
-            dir, Registry.Doc, "doc_id"))
-      Tombstones.clear(spark, tomb)
-      1
-    }
+    else Some(IndexFamily.lmscore.view(spark, dir, spark.table(tbl)))
   }
 
   /** The corpus-scale scoring pass behind [[bigramScoredTable]] — runs
@@ -695,8 +635,7 @@ object TrainingPrep {
     * appendSpanToIndex spannable rule). Returns docs actually
     * folded. */
   private[graft] def appendScored(spark: SparkSession, dir: String,
-      batchDocsIn: DataFrame): Long = Maintenance.IndexLocks
-      .withLock("lmscore", dir) {
+      batchDocsIn: DataFrame): Long = IndexFamily.lmscore.withLock(dir) {
     import spark.implicits._
     // never-reingest filter (Registry contract; identity when empty)
     val batchDocs = Registry.minus(spark, batchDocsIn, dir,

@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * byte-identical index state — effectively-exactly-once directly on
   * the stored table. The cost profile moves instead: every batch adds
   * ≤1 file per touched inverted list, so restart maintenance is
-  * COMPACTION (`compactOnStart`), not folding.
+  * COMPACTION (`IndexFamily.ann.compact`), not folding.
   *
   * Lookup semantics: a vector's neighbors are drawn from the corpus
   * plus everything ingested up to and including its own batch,
@@ -36,7 +36,7 @@ object AnnStream {
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, sinkPath: String, batchId: Long,
       kinds: Seq[String]): Unit =
-      graft.pipeline.Maintenance.IndexLocks.withLock("ann", dir) {
+      graft.pipeline.IndexFamily.ann.withLock(dir) {
     val batchVecs = graft.pipeline.Similarity.normedOfBatch(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -55,19 +55,17 @@ object AnnStream {
   /** Start the continuous ingest+lookup over a stream of embedding
     * rows (vec_id, embedding). `sinkPath` receives batch_id-partitioned
     * parquet (probe_id, rank, vec_id, adist, batch_id). On every
-    * (re)start the accumulated per-batch append files compact back
-    * toward one per inverted list (`compactOnStart`) — the maintenance
-    * pass a long-running ingest owes the scan path. */
+    * (re)start the ann family compacts (`IndexFamily.ann.compact`):
+    * the accumulated per-batch append files of every present code kind
+    * and of the refine vectors fold back toward one per inverted list
+    * or bucket — the maintenance pass a long-running ingest owes the
+    * scan path — and pending takedowns materialize and leave the
+    * sidecar, the same end state [[graft.pipeline.Maintenance.compactAll]]
+    * reaches. */
   def start(spark: SparkSession, dir: String, vecs: DataFrame,
       sinkPath: String, checkpoint: String,
-      kinds: Seq[String] = Seq("trained"),
-      compactOnStart: Boolean = true): StreamingQuery = {
-    if (compactOnStart) {
-      kinds.foreach { k =>
-        graft.pipeline.Similarity.compactAnnIndexIfPresent(spark, dir, k)
-      }
-      graft.pipeline.Similarity.compactAnnVecsIfPresent(spark, dir)
-    }
+      kinds: Seq[String] = Seq("trained")): StreamingQuery = {
+    graft.pipeline.IndexFamily.ann.compact(spark, dir)
     vecs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

@@ -65,7 +65,7 @@ object DedupStream {
     * tables, batch rows, batchId). */
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, sinkPath: String, batchId: Long): Unit =
-      graft.pipeline.Maintenance.IndexLocks.withLock("dedup", dir) {
+      graft.pipeline.IndexFamily.dedup.withLock(dir) {
     val postPath = sinkPath + "_idx_postings"
     val shPath = sinkPath + "_idx_shingles"
     val priorPost = sideRead(spark, postPath, PostingsSchema, batchId)
@@ -114,7 +114,7 @@ object DedupStream {
     * content. */
   def foldSideIndex(spark: SparkSession, dir: String,
       sinkPath: String): Long =
-      graft.pipeline.Maintenance.IndexLocks.withLock("dedup", dir) {
+      graft.pipeline.IndexFamily.dedup.withLock(dir) {
     val shPath = sinkPath + "_idx_shingles"
     val postPath = sinkPath + "_idx_postings"
     if (!SideTables.exists(spark, shPath)) 0L

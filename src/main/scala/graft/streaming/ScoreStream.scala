@@ -46,14 +46,15 @@ object ScoreStream {
   }
 
   /** Start the continuous score fold over a stream of document rows
-    * (doc_id, text). On every (re)start the score table compacts back
-    * toward one file per bucket (each fold appends ≤1 file per
-    * bucket — the AnnStream maintenance shape). */
+    * (doc_id, text). On every (re)start the lmscore family compacts
+    * (`IndexFamily.lmscore.compact`): the score table and the streamed
+    * raw-doc table fold back toward one file per bucket (each fold
+    * appends ≤1 file per bucket — the AnnStream maintenance shape), and
+    * pending takedowns materialize and leave the sidecar, the same end
+    * state [[graft.pipeline.Maintenance.compactAll]] reaches. */
   def start(spark: SparkSession, dir: String, docs: DataFrame,
-      sinkPath: String, checkpoint: String,
-      compactOnStart: Boolean = true): StreamingQuery = {
-    if (compactOnStart)
-      graft.pipeline.TrainingPrep.compactScoredIfPresent(spark, dir)
+      sinkPath: String, checkpoint: String): StreamingQuery = {
+    graft.pipeline.IndexFamily.lmscore.compact(spark, dir)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

@@ -43,7 +43,7 @@ object SemanticStream {
     * batch rows, batchId). `batch` carries (vec_id, embedding). */
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, sinkPath: String, batchId: Long): Unit =
-      graft.pipeline.Maintenance.IndexLocks.withLock("sem", dir) {
+      graft.pipeline.IndexFamily.sem.withLock(dir) {
     val postPath = sinkPath + "_idx_postings"
     val vecPath = sinkPath + "_idx_vectors"
     val priorPost = sideRead(spark, postPath, PostSchema, batchId)
@@ -93,7 +93,7 @@ object SemanticStream {
     * corpus. */
   def foldSideIndex(spark: SparkSession, dir: String,
       sinkPath: String): Long =
-      graft.pipeline.Maintenance.IndexLocks.withLock("sem", dir) {
+      graft.pipeline.IndexFamily.sem.withLock(dir) {
     val postPath = sinkPath + "_idx_postings"
     val vecPath = sinkPath + "_idx_vectors"
     if (!SideTables.exists(spark, vecPath)) 0L

@@ -48,7 +48,7 @@ object SimhashStream {
     * batch rows, batchId); factored out for replay-idempotency specs. */
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, sinkPath: String, batchId: Long): Unit =
-      graft.pipeline.Maintenance.IndexLocks.withLock("simhash", dir) {
+      graft.pipeline.IndexFamily.simhash.withLock(dir) {
     val postPath = sinkPath + "_idx_postings"
     val priorPost = sideRead(spark, postPath, batchId)
     val batchPost = graft.pipeline.Dedup.simhashPostingsOfDocs(
@@ -86,7 +86,7 @@ object SimhashStream {
     * index instead of the side read — identical pair emission. */
   def foldSideIndex(spark: SparkSession, dir: String,
       sinkPath: String): Long =
-      graft.pipeline.Maintenance.IndexLocks.withLock("simhash", dir) {
+      graft.pipeline.IndexFamily.simhash.withLock(dir) {
     val postPath = sinkPath + "_idx_postings"
     if (!SideTables.exists(spark, postPath)) 0L
     else {

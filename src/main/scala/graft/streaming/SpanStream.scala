@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * stored position through the bucketed posting probe), so each
   * micro-batch folds STRAIGHT into the lake tables and later batches
   * see earlier ones through the store alone. No per-query streaming
-  * state, no restart maintenance pass.
+  * state and no side chain to fold on restart.
   *
   * Delivery: effectively exactly-once on the index (a checkpoint
   * replay folds 0 — the docs are already known — and the spanidx rows
@@ -42,7 +42,7 @@ object SpanStream {
     * replay-idempotency spec. */
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, sinkPath: String, batchId: Long): Unit =
-      graft.pipeline.Maintenance.IndexLocks.withLock("span", dir) {
+      graft.pipeline.IndexFamily.span.withLock(dir) {
     graft.pipeline.Dedup.appendSpanToIndex(spark, dir, batch)
     overwritePartition(
       graft.pipeline.Dedup.spanCountsOfDocs(batch), batchId, sinkPath)
@@ -52,17 +52,16 @@ object SpanStream {
     * rows (doc_id, text). `dir` locates the corpus whose stored
     * spanidx/spanpost tables receive the folds; `sinkPath` receives
     * batch_id-partitioned per-doc span accounting. On every (re)start
-    * the span tables compact back toward one file per bucket
-    * (`compactOnStart`, the AnnStream maintenance shape) — each fold
-    * appends ≤1 file per touched bucket to BOTH tables, and file
-    * count is the bucketed scan's bottleneck over a long-lived
-    * stream. */
+    * the span family compacts (`IndexFamily.span.compact`, the
+    * AnnStream maintenance shape): each fold appends ≤1 file per
+    * touched bucket to BOTH tables, and file count is the bucketed
+    * scan's bottleneck over a long-lived stream. Pending takedowns
+    * materialize and both span sidecars clear, the same end state
+    * [[graft.pipeline.Maintenance.compactAll]] reaches. A first-ever
+    * start has no tables and compacts nothing. */
   def start(spark: SparkSession, dir: String, docs: DataFrame,
-      sinkPath: String, checkpoint: String,
-      compactOnStart: Boolean = true): StreamingQuery = {
-    if (compactOnStart &&
-        graft.pipeline.Dedup.spanTablesExist(spark, dir))
-      graft.pipeline.Dedup.compactSpanIndex(spark, dir)
+      sinkPath: String, checkpoint: String): StreamingQuery = {
+    graft.pipeline.IndexFamily.span.compact(spark, dir)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

@@ -114,6 +114,17 @@ class HttpApiSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("a fatal throwable still maps to the 500 envelope") {
+    // an InterruptedException rethrown by materializeWithTimeout is not
+    // NonFatal; it must still produce a status and a JSON body
+    val (status, body) =
+      HttpApi.errorReply(new InterruptedException("cut \"short\"\n"))
+    assert(status === 500)
+    assert(body === """{"detail":"InterruptedException: cut \"short\"\n"}""")
+    assert(mapper.readTree(body).get("detail").asText ===
+      "InterruptedException: cut \"short\"\n")
+  }
+
   test("sequential replies on one connection do not wait out a delayed ACK") {
     // headers and body go out as two writes; with Nagle on, the body
     // waits for the client's ~40 ms delayed ACK of the headers

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    are byte-identical name-for-name across appends;
   *  - appends are idempotent at vec_id granularity, per kind for codes
   *    and across kinds for the shared vector extension;
-  *  - `compactAnnIndex` folds appended files back toward one per
+  *  - `IndexFamily.ann.compact` folds appended files back toward one per
   *    inverted list without changing results.
   *
   * Runs against an ISOLATED copy of the corpus (own fingerprint, own
@@ -218,7 +218,7 @@ class AnnAppendSpec extends SparkSpec {
       .map(_.toSeq).toSet === expected)
   }
 
-  test("compactAnnIndex folds appended files back, results intact") {
+  test("ann compaction folds appended files back, results intact") {
     Similarity.appendAnnToIndex(spark, cDir, batch, "trained") // ensure folded
     // a SECOND batch guarantees fresh append files even after the
     // recovery test restored the table in compacted form
@@ -230,7 +230,7 @@ class AnnAppendSpec extends SparkSpec {
     val expected = Similarity.annIvfPqTrained(spark, cDir).collect()
       .map(_.toSeq).toSet
     val before = codeFiles("trained").length
-    Similarity.compactAnnIndex(spark, cDir, "trained")
+    IndexFamily.ann.compact(spark, cDir)
     val after = codeFiles("trained").length
     assert(after < before,
       s"appends left $before files; compaction must shrink that (got $after)")
@@ -280,7 +280,7 @@ class AnnAppendSpec extends SparkSpec {
     val b = batch
     Similarity.appendAnnToIndex(spark, cDir, b, "trained") // ensure folded
     val ids = Seq(Off, Off + 1)
-    assert(Similarity.removeFromAnnIndex(spark, cDir, ids,
+    assert(IndexFamily.ann.remove(spark, cDir, ids,
       permanent = true) === ids.size.toLong)
     assert(Similarity.codeTable(spark, cDir, "trained")
       .filter(col("vec_id").isin(ids: _*)).count() === 0L)

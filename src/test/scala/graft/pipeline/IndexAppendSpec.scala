@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *    only AFTER day-1 was appended, and the result equals the old
   *    layered-extraIndex path exactly (the gold standard);
   *  - appends are idempotent at doc granularity (replay = no-op);
-  *  - `Dedup.compactIndex` folds the appended files back to one per
+  *  - `IndexFamily.dedup.compact` folds the appended files back to one per
   *    bucket without changing results, and the rewritten table still
   *    satisfies the probe join with zero index-side Exchange.
   *
@@ -147,7 +147,7 @@ class IndexAppendSpec extends SparkSpec {
       === expected)
   }
 
-  test("compactIndex folds appended files to one per bucket, results intact") {
+  test("compaction folds appended files to one per bucket, results intact") {
     val day1 = dayBatch(Day1Off)
     val day2 = dayBatch(Day2Off)
     Dedup.appendToIndex(spark, cDir, day1)
@@ -156,7 +156,7 @@ class IndexAppendSpec extends SparkSpec {
     assert(indexFiles("graft_minhash_idx_").length > Dedup.IndexBuckets,
       "appends should have accumulated extra per-bucket files")
 
-    Dedup.compactIndex(spark, cDir)
+    IndexFamily.dedup.compact(spark, cDir)
     assert(indexFiles("graft_minhash_idx_").length === Dedup.IndexBuckets)
     // shingle rows are doc-linear (few hundred at this SF) — a bucket
     // can legitimately be empty, so pin "no more than one file per
@@ -191,14 +191,14 @@ class IndexAppendSpec extends SparkSpec {
     assert(Dedup.appendToIndex(spark, cDir, batch) > 0L)
     val ids = batch.select("doc_id").collect().map(_.getLong(0))
       .sorted.take(3).toSeq
-    assert(Dedup.removeFromIndex(spark, cDir, ids, permanent = true)
+    assert(IndexFamily.dedup.remove(spark, cDir, ids, permanent = true)
       === ids.size.toLong)
     assert(Dedup.minhashIndexTable(spark, cDir)
       .filter(col("doc_id").isin(ids: _*)).count() === 0L)
     // compaction materializes the deletion and CLEARS the family
     // sidecar — the window where a non-permanent delete becomes
     // re-ingestable
-    Dedup.compactIndex(spark, cDir)
+    IndexFamily.dedup.compact(spark, cDir)
     assert(Dedup.minhashIndexTable(spark, cDir, raw = true)
       .filter(col("doc_id").isin(ids: _*)).count() === 0L)
     // replayed ingest containing the removed docs: appends nothing
@@ -207,7 +207,7 @@ class IndexAppendSpec extends SparkSpec {
     assert(Dedup.minhashIndexTable(spark, cDir, raw = true)
       .filter(col("doc_id").isin(ids: _*)).count() === 0L)
     // a second compact + full-batch fold cycle stays clean too
-    Dedup.compactIndex(spark, cDir)
+    IndexFamily.dedup.compact(spark, cDir)
     assert(Dedup.appendToIndex(spark, cDir, batch) === 0L)
     assert(Dedup.minhashIndexTable(spark, cDir)
       .filter(col("doc_id").isin(ids: _*)).count() === 0L)

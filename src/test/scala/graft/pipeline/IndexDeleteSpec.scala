@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The deletion path for the persisted index families (r16 verdict
-  * item 2 — takedown / right-to-be-forgotten): `removeFrom*Index`
+  * item 2 — takedown / right-to-be-forgotten): `IndexFamily.remove`
   * records ids in an equality-delete sidecar, every read subtracts it
   * immediately, and compaction materializes it physically. Proofs per
   * family:
@@ -66,8 +66,8 @@ class IndexDeleteSpec extends SparkSpec {
     val remaining = all.filter(!col("doc_id").isin(dropIds: _*))
     // build both tables, then delete
     Dedup.minhashIndexTable(spark, cDir).count()
-    assert(Dedup.removeFromIndex(spark, cDir, dropIds) === dropIds.size.toLong)
-    assert(Dedup.removeFromIndex(spark, cDir, dropIds) === 0L) // idempotent
+    assert(IndexFamily.dedup.remove(spark, cDir, dropIds) === dropIds.size.toLong)
+    assert(IndexFamily.dedup.remove(spark, cDir, dropIds) === 0L) // idempotent
 
     // fresh-build-minus identity: per-doc state only, so the filtered
     // view must equal postings/shingles computed from the survivors
@@ -100,7 +100,7 @@ class IndexDeleteSpec extends SparkSpec {
 
     // physical materialization: raw rows gone, sidecar gone, view same
     val rawBefore = Dedup.minhashIndexTable(spark, cDir, raw = true).count()
-    Dedup.compactIndex(spark, cDir)
+    IndexFamily.dedup.compact(spark, cDir)
     assert(Dedup.minhashIndexTable(spark, cDir, raw = true).count()
       < rawBefore)
     assert(spark.catalog.listTables().collect().map(_.name)
@@ -113,12 +113,12 @@ class IndexDeleteSpec extends SparkSpec {
     val remaining = graft.Tables.documents(spark, cDir)
       .filter(!col("doc_id").isin(dropIds: _*))
     Dedup.simhashIndexTable(spark, cDir).count()
-    assert(Dedup.removeSimhashFromIndex(spark, cDir, dropIds)
+    assert(IndexFamily.simhash.remove(spark, cDir, dropIds)
       === dropIds.size.toLong)
     val fresh = rowSet(
       Dedup.simhashPostingsOfDocs(Dedup.simhashSigsOfDocs(remaining)))
     assert(rowSet(Dedup.simhashIndexTable(spark, cDir)) === fresh)
-    Dedup.compactSimhashIndex(spark, cDir)
+    IndexFamily.simhash.compact(spark, cDir)
     assert(rowSet(Dedup.simhashIndexTable(spark, cDir)) === fresh)
     assert(rowSet(Dedup.simhashIndexTable(spark, cDir, raw = true))
       === fresh)
@@ -126,9 +126,9 @@ class IndexDeleteSpec extends SparkSpec {
 
   test("span delete demotes singletons: index equals a literal rebuild minus the docs") {
     Dedup.spanIndexTable(spark, cDir).count()
-    assert(Dedup.removeSpanFromIndex(spark, cDir, dropIds)
+    assert(IndexFamily.span.remove(spark, cDir, dropIds)
       === dropIds.size.toLong)
-    assert(Dedup.removeSpanFromIndex(spark, cDir, dropIds) === 0L)
+    assert(IndexFamily.span.remove(spark, cDir, dropIds) === 0L)
     // THE demotion proof: the filtered view must equal the span index
     // a fresh build over corpus-minus-dropped produces — including
     // spans of SURVIVING docs that stopped being duplicated when their
@@ -140,7 +140,7 @@ class IndexDeleteSpec extends SparkSpec {
       .filter(!col("doc_id").isin(dropIds: _*)))
     assert(survivors === rowSet(Dedup.despan(spark, cDir2)))
     // physical materialization keeps both identities
-    Dedup.compactSpanIndex(spark, cDir)
+    IndexFamily.span.compact(spark, cDir)
     assert(rowSet(Dedup.spanIndexTable(spark, cDir)) === rebuilt)
     assert(rowSet(Dedup.spanIndexTable(spark, cDir, raw = true)) === rebuilt)
   }
@@ -164,7 +164,7 @@ class IndexDeleteSpec extends SparkSpec {
     val drop = graft.Tables.documents(spark, d)
       .filter(col("doc_id") >= CopyOff).select("doc_id")
       .collect().map(_.getLong(0)).sorted.toSeq
-    assert(Dedup.removeSpanFromIndex(spark, d, drop) === drop.size.toLong)
+    assert(IndexFamily.span.remove(spark, d, drop) === drop.size.toLong)
     // the batch: a fresh copy of every original, new ids
     val batch = originals.withColumn("doc_id", col("doc_id") + 2 * CopyOff)
     assert(Dedup.appendSpanToIndex(spark, d, batch) > 0L)
@@ -176,7 +176,7 @@ class IndexDeleteSpec extends SparkSpec {
     assert(rowSet(Dedup.spanIndexTable(spark, d)) === rebuilt)
     // compaction must KEEP the re-promoted markers (the invalidated
     // demotion), not materialize the stale demotion physically
-    Dedup.compactSpanIndex(spark, d)
+    IndexFamily.span.compact(spark, d)
     assert(rowSet(Dedup.spanIndexTable(spark, d)) === rebuilt)
     assert(rowSet(Dedup.spanIndexTable(spark, d, raw = true)) === rebuilt)
     // and despan agrees with the rebuilt corpus doc-for-doc over the
@@ -189,7 +189,7 @@ class IndexDeleteSpec extends SparkSpec {
     val vecDrop = Similarity.semPostingTable(spark, cDir,
         Dedup.BroadcastVerifyBytes, raw = true)
       .select("vec_id").limit(2).collect().map(_.getLong(0)).toSeq
-    assert(Similarity.removeFromSemIndex(spark, cDir, vecDrop)
+    assert(IndexFamily.sem.remove(spark, cDir, vecDrop)
       === vecDrop.size.toLong)
     val expected = rowSet(Similarity.semPostingTable(spark, cDir,
         Dedup.BroadcastVerifyBytes, raw = true)
@@ -201,7 +201,7 @@ class IndexDeleteSpec extends SparkSpec {
       .unionByName(pairs.select(col("v2").as("v1")))
       .collect().map(_.getLong(0)).toSet
     assert(vecDrop.forall(v => !ids(v)))
-    Similarity.compactSemIfPresent(spark, cDir)
+    IndexFamily.sem.compact(spark, cDir)
     assert(rowSet(Similarity.semPostingTable(spark, cDir,
       Dedup.BroadcastVerifyBytes, raw = true)) === expected)
   }
@@ -210,7 +210,7 @@ class IndexDeleteSpec extends SparkSpec {
     val codes = Similarity.codeTable(spark, cDir, "md5", raw = true)
     val vecDrop = codes.select("vec_id").limit(2).collect()
       .map(_.getLong(0)).toSeq
-    assert(Similarity.removeFromAnnIndex(spark, cDir, vecDrop)
+    assert(IndexFamily.ann.remove(spark, cDir, vecDrop)
       === vecDrop.size.toLong)
     val expected = rowSet(Similarity.codeTable(spark, cDir, "md5",
       raw = true).filter(!col("vec_id").isin(vecDrop: _*)))
@@ -227,21 +227,21 @@ class IndexDeleteSpec extends SparkSpec {
         n.contains(cDir.replaceAll("[^A-Za-z0-9]", "_"))) === 0)
     // REBUILT plan post-compaction (a pre-compaction lazy frame holds
     // the dropped sidecar in its plan — the documented
-    // reader-vs-nightly-window caveat, Maintenance.IndexLocks doc)
+    // reader-vs-nightly-window caveat, IndexFamily.IndexLocks doc)
     assert(Similarity.annIvfPq(spark, cDir)
       .filter(col("vec_id").isin(vecDrop: _*)).count() === 0L)
   }
 
-  test("lmscore delete removes the doc's row; compactScored materializes") {
+  test("lmscore delete removes the doc's row; compaction materializes") {
     TrainingPrep.bigramScoredTable(spark, cDir).count()
-    assert(TrainingPrep.removeFromScoredTable(spark, cDir, dropIds)
+    assert(IndexFamily.lmscore.remove(spark, cDir, dropIds)
       === dropIds.size.toLong)
     val scored = TrainingPrep.bigramLogprob(spark, cDir)
     assert(scored.filter(col("doc_id").isin(dropIds: _*)).count() === 0L)
     val expected = rowSet(scored)
     val rawBefore = TrainingPrep.bigramScoredTable(spark, cDir,
       raw = true).count()
-    assert(TrainingPrep.compactScoredIfPresent(spark, cDir) === 1)
+    assert(IndexFamily.lmscore.compact(spark, cDir) === 1)
     assert(TrainingPrep.bigramScoredTable(spark, cDir, raw = true).count()
       < rawBefore)
     assert(rowSet(TrainingPrep.bigramLogprob(spark, cDir)) === expected)

@@ -40,9 +40,8 @@ class MaintenanceSpec extends SparkSpec {
 
     val swept = Maintenance.compactAll(spark, cDir)
     // minhash + shingles exist (simhash was never built): dedup = 2;
-    // one ANN kind's code table + the vector extension; no semantic
-    assert(swept === Map("dedup" -> 2, "ann_codes" -> 1, "ann_vecs" -> 1),
-      swept.toString)
+    // ann = one kind's code table + the vector extension; no semantic
+    assert(swept === Map("dedup" -> 2, "ann" -> 2), swept.toString)
 
     assert(Dedup.deltaPairs(spark, cDir, day1).collect()
       .map(_.toSeq).toSet === pairsBefore)

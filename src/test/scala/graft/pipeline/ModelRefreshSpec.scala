@@ -54,7 +54,7 @@ class ModelRefreshSpec extends SparkSpec {
       .filter(col("doc_id") >= 300 && col("doc_id") < 310)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(removed.size >= 5)
-    assert(TrainingPrep.removeFromScoredTable(spark, d, removed,
+    assert(IndexFamily.lmscore.remove(spark, d, removed,
       permanent = true) === removed.size.toLong)
 
     val counts = Maintenance.compactAll(spark, d)
@@ -111,7 +111,7 @@ class ModelRefreshSpec extends SparkSpec {
       .filter(col("doc_id") === 311).select("doc_id")
       .collect().map(_.getLong(0)).toSeq
     assert(one.size === 1)
-    TrainingPrep.removeFromScoredTable(spark, d, one, permanent = true)
+    IndexFamily.lmscore.remove(spark, d, one, permanent = true)
     val counts2 = Maintenance.compactAll(spark, d)
     assert(!counts2.contains("models_doc"), s"no-op expected, got $counts2")
     assert((tablesFor(d, "graft_lmscore_") ++ tablesFor(d, "graft_qclf_") ++
@@ -155,7 +155,7 @@ class ModelRefreshSpec extends SparkSpec {
     // 2% of the vectors permanently removed, above the codebook /
     // centroid seed ranges (ids < 256 seed the trainers)
     val removed = (300L until 310L).toSeq
-    assert(Similarity.removeFromAnnIndex(spark, d, removed,
+    assert(IndexFamily.ann.remove(spark, d, removed,
       permanent = true) === removed.size.toLong)
     val counts = Maintenance.compactAll(spark, d)
     assert(counts.getOrElse("models_vec", 0) >= 3,
@@ -179,7 +179,7 @@ class ModelRefreshSpec extends SparkSpec {
       === rowSet(Similarity.codeTable(spark, m, "trained")))
 
     // below-threshold no-op pin
-    assert(Similarity.removeFromAnnIndex(spark, d, Seq(311L),
+    assert(IndexFamily.ann.remove(spark, d, Seq(311L),
       permanent = true) === 1L)
     val counts2 = Maintenance.compactAll(spark, d)
     assert(!counts2.contains("models_vec"), s"no-op expected, got $counts2")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * `Maintenance.takedown(spark, dir, docIds, vecIds, permanent)` is
   * the ONE compliance entry point — a single call must make every
   * persisted family of both id domains forget the ids, with the same
-  * per-family guarantees the individual `removeFrom*` hooks pin in
+  * per-family guarantees the individual `IndexFamily.remove` calls pin in
   * IndexDeleteSpec (rebuild-minus identity, sticky replay, compaction
   * preserving). The streaming twins read the same sidecar-filtered
   * views these assertions scan (their per-family specs pin that), so
@@ -158,11 +158,68 @@ class TakedownSpec extends SparkSpec {
   }
 
   test("a takedown reaches the signature view another session already read") {
-    // own corpus: no mm sidecar exists when session B first reads, so
-    // B's view was built with Tombstones.minus as the identity
+    // own corpus (docs + full-text copies, so duplicated spans exist,
+    // and vectors): no sidecar exists when session B first reads, so
+    // every view B built had Tombstones.minus as the identity
     val d = java.nio.file.Files.createTempDirectory("graft_takedown_x")
       .toString
-    graft.Tables.documents(spark, sfDir).limit(60)
+    val docs = graft.Tables.documents(spark, sfDir).limit(60)
+    docs.unionByName(docs.limit(6).withColumn("doc_id", col("doc_id") + CopyOff))
+      .write.parquet(d + "/documents.parquet")
+    graft.Tables.embeddings(spark, sfDir).limit(60)
+      .write.parquet(d + "/embeddings.parquet")
+    // every family's tables: (family, id column, frame)
+    def views(s: org.apache.spark.sql.SparkSession,
+        raw: Boolean): Seq[(String, String, DataFrame)] = Seq(
+      ("dedup", "doc_id", Dedup.minhashIndexTable(s, d, raw)),
+      ("dedup", "doc_id", Dedup.shingleIndexTable(s, d, raw)),
+      ("simhash", "doc_id", Dedup.simhashIndexTable(s, d, raw)),
+      ("span", "doc_id", Dedup.spanIndexTable(s, d, raw)),
+      ("span", "doc_id", Dedup.spanPostTable(s, d, raw)),
+      ("lmscore", "doc_id", TrainingPrep.bigramScoredTable(s, d, raw)),
+      ("mm", "doc_id", Multimodal.dhashSigs(s, d, raw)),
+      ("ann", "vec_id", Similarity.codeTable(s, d, "md5", raw)),
+      ("sem", "vec_id", Similarity.semPostingTable(s, d,
+        Dedup.BroadcastVerifyBytes, raw)))
+    def ids(df: DataFrame, c: String): Set[Long] =
+      df.select(c).collect().map(_.getLong(0)).toSet
+    val b = spark.newSession()
+    val before = views(b, raw = false).map { case (_, c, df) => (c, ids(df, c)) }
+    // one doc and one vec every table of its domain holds
+    def common(c: String): Long =
+      before.filter(_._1 == c).map(_._2).reduce(_ intersect _).min
+    val gone = Map("doc_id" -> common("doc_id"), "vec_id" -> common("vec_id"))
+    val sigsBefore = ids(Multimodal.dhashSigs(b, d), "doc_id")
+
+    assert(Maintenance.takedown(spark, d, Seq(gone("doc_id")),
+      Seq(gone("vec_id"))) === IndexFamily.all.map(_.key -> 1L).toMap)
+    // the signature view session B cached, and every default view in B,
+    // in this session and in a session opened after the takedown
+    assert(ids(Multimodal.dhashSigs(b, d), "doc_id") === sigsBefore - gone("doc_id"))
+    assert(ids(Multimodal.dhashSigs(spark, d), "doc_id")
+      === sigsBefore - gone("doc_id"))
+    Seq(b, spark, spark.newSession()).foreach { s =>
+      views(s, raw = false).foreach { case (f, c, df) =>
+        assert(!ids(df, c).contains(gone(c)), s"$f view still serves ${gone(c)}")
+      }
+    }
+    // the physical tables keep the ids until the nightly sweep
+    views(spark.newSession(), raw = true).foreach { case (f, c, df) =>
+      assert(ids(df, c).contains(gone(c)), s"$f raw table lost ${gone(c)} early")
+    }
+    Maintenance.compactAll(spark, d)
+    views(spark.newSession(), raw = true).foreach { case (f, c, df) =>
+      assert(!ids(df, c).contains(gone(c)), s"$f compaction kept ${gone(c)}")
+    }
+  }
+
+  test("a scoped permanent remove reaches a view another session cached") {
+    // the registry is shared by every family of the domain: a permanent
+    // remove through dedup alone must still drop the mm signature view
+    // session B cached before it
+    val d = java.nio.file.Files.createTempDirectory("graft_takedown_r")
+      .toString
+    graft.Tables.documents(spark, sfDir).limit(40)
       .write.parquet(d + "/documents.parquet")
     val b = spark.newSession()
     def sigIds(s: org.apache.spark.sql.SparkSession): Set[Long] =
@@ -170,9 +227,9 @@ class TakedownSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSet
     val before = sigIds(b)
     val gone = before.min
-    assert(Maintenance.takedown(spark, d, Seq(gone))("mm") === 1L)
+    assert(IndexFamily.dedup.remove(spark, d, Seq(gone), permanent = true)
+      === 1L)
     assert(sigIds(b) === before - gone)
-    assert(sigIds(spark) === before - gone)
   }
 
   test("permanent takedown records both id domains in the registry once") {

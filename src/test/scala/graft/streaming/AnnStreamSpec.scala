@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    annSearch per batch against a second identical corpus) row for
   *    row — stream and batch maintenance are definitionally the same;
   *  - a restart compacts the per-batch append files
-  *    (`compactOnStart`) and the restarted stream keeps serving.
+  *    (`IndexFamily.ann.compact`) and the restarted stream keeps serving.
   *
   * Isolated corpus copies throughout — streaming appends into the
   * shared sfDir index would poison every other suite's ANN state.
@@ -122,7 +122,7 @@ class AnnStreamSpec extends SparkSpec {
       input.toDF().toDF("vec_id", "embedding"), sink, ckpt2)
     try {
       assert(files() < before,
-        "compactOnStart must fold the per-batch append files")
+        "the restart compaction must fold the per-batch append files")
       input.addData((Off3 + 2, probeVec(2)))
       q.processAllAvailable()
     } finally q.stop()

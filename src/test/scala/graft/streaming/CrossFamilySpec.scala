@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * several streaming twins folding into the SAME session catalog
   * concurrently, with Maintenance.compactAll racing the folds and the
   * families' own restart-maintenance passes — the collision a
-  * long-lived deployment actually hits. Every fold and compactor now
-  * serializes per (family, corpus) through Maintenance.IndexLocks
+  * long-lived deployment actually hits. Every fold and compaction
+  * serializes per (family, corpus) through its IndexFamily's lock
   * (an un-serialized compaction stages a table out, DROPS it, and
   * rewrites — an append in that window is silently LOST, and a fold's
   * probe read inside the drop window throws), while different
@@ -71,8 +71,7 @@ class CrossFamilySpec extends SparkSpec {
   private def runSpan(dir: String, sink: String): Unit = {
     val (b1, b2) = spanBatches(dir)
     SpanStream.processBatch(spark, dir, b1, sink, 0L)
-    if (graft.pipeline.Dedup.spanTablesExist(spark, dir))
-      graft.pipeline.Dedup.compactSpanIndex(spark, dir)
+    graft.pipeline.IndexFamily.span.compact(spark, dir)
     SpanStream.processBatch(spark, dir, b2, sink, 1L)
   }
 
@@ -86,8 +85,7 @@ class CrossFamilySpec extends SparkSpec {
   private def runAnn(dir: String, sink: String): Unit = {
     val (b1, b2) = annBatches(dir)
     AnnStream.processBatch(spark, dir, b1, sink, 0L, Seq("md5"))
-    graft.pipeline.Similarity.compactAnnIndexIfPresent(spark, dir, "md5")
-    graft.pipeline.Similarity.compactAnnVecsIfPresent(spark, dir)
+    graft.pipeline.IndexFamily.ann.compact(spark, dir)
     AnnStream.processBatch(spark, dir, b2, sink, 1L, Seq("md5"))
   }
 
@@ -121,7 +119,7 @@ class CrossFamilySpec extends SparkSpec {
     val dS = freshCorpus("xf_serial")
     val (spS, ddS, anS) = sinks()
     runSpan(dS, spS); runDedup(dS, ddS); runAnn(dS, anS)
-    Maintenance.compactAll(spark, dS, annKinds = Seq("md5"))
+    Maintenance.compactAll(spark, dS)
     val (spanRef, dedupRef, annRef) =
       (spanResult(dS), dedupResult(ddS), annResult(anS))
     assert(spanRef.nonEmpty && dedupRef.nonEmpty && annRef.nonEmpty,
@@ -147,7 +145,7 @@ class CrossFamilySpec extends SparkSpec {
     thread("xf-ann") { runAnn(dC, anC) }
     thread("xf-maint") {
       (1 to 3).foreach { _ =>
-        Maintenance.compactAll(spark, dC, annKinds = Seq("md5"))
+        Maintenance.compactAll(spark, dC)
         Thread.sleep(20)
       }
     }
@@ -158,7 +156,7 @@ class CrossFamilySpec extends SparkSpec {
 
     // one final sweep so the concurrent dir ends compacted like the
     // serial one, then per-family identity
-    Maintenance.compactAll(spark, dC, annKinds = Seq("md5"))
+    Maintenance.compactAll(spark, dC)
     assert(spanResult(dC) === spanRef, "span family drifted under concurrency")
     assert(dedupResult(ddC) === dedupRef, "dedup family drifted under concurrency")
     assert(annResult(anC) === annRef, "ann family drifted under concurrency")

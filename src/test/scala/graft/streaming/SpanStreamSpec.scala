@@ -132,7 +132,7 @@ class SpanStreamSpec extends SparkSpec {
       walk(root)
     }
     val filesBefore = dataFiles("graft_spanidx_")
-    // restart: compactOnStart (default) runs before the stream begins
+    // restart: the span family compacts before the stream begins
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, String)]
     val ckpt = java.nio.file.Files.createTempDirectory("spst_c_ckpt").toString
