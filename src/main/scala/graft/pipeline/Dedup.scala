@@ -443,20 +443,17 @@ object Dedup {
   }
 
   /** Append a batch of documents into BOTH stored index tables — the
-    * lake-maintenance write the r11 verdict asked for: without it the
-    * stored index is write-once and a long-running ingest's probe cost
-    * grows with the `extraIndex` union chain ([[deltaPairs]] layers
-    * per-batch side tables); with it, day-1 batches fold into the
-    * bucketed tables and a day-2 delta finds day-1 pairs through the
-    * STORED index alone (extraIndex = None — IndexAppendSpec's proof).
+    * lake-maintenance write the r11 verdict asked for: day-1 batches
+    * fold into the bucketed tables and a day-2 delta finds day-1 pairs
+    * through the STORED index alone (IndexAppendSpec's proof).
     *
     * IDEMPOTENT at doc granularity: docs already present (by doc_id)
     * are skipped, so a replayed append is a no-op — the property that
-    * lets the streaming pass fold its side index on restart without a
-    * transaction log. The presence probe is the DedupStream idiom: a
-    * broadcast semi-join of the tiny batch id list over the bucketed
-    * shingle scan (map-only, no exchange), never a full-corpus
-    * anti-join. Appends preserve the bucket layout
+    * lets DedupStream fold every micro-batch straight into the stored
+    * tables without a transaction log. The presence probe is
+    * [[IndexFamily.freshIds]]: a broadcast semi-join of the tiny batch
+    * id list over the bucketed scan (map-only, no exchange), never a
+    * full-corpus anti-join. Appends preserve the bucket layout
     * (TableIO.appendBucketed — at most one new file per bucket per
     * batch); `IndexFamily.dedup.compact` folds the accumulated files
     * back to one per bucket nightly. Returns the number of docs
@@ -469,8 +466,8 @@ object Dedup {
   }
 
   /** [[appendToIndex]] with the batch's shingle arrays already
-    * computed — the streaming fold path reuses the side table's stored
-    * arrays instead of re-shingling. Caller owns persistence. */
+    * computed — DedupStream reuses its micro-batch's arrays for the
+    * fold and the pair probe. Caller owns persistence. */
   private[graft] def appendShingles(spark: SparkSession, dir: String,
       batchShIn: DataFrame): Long = IndexFamily.dedup.withLock(dir) {
     // never-reingest: a permanently removed doc in a replayed or
@@ -485,11 +482,8 @@ object Dedup {
     // PHYSICAL tables (raw): a tombstoned doc must stay "known" here,
     // or every replay of a batch containing it would re-append its
     // rows (Tombstones' sticky-until-compaction contract)
-    val storedShIds = shingleIndexTable(spark, dir, raw = true)
-      .select(col("doc_id"))
-    val storedMhIds = minhashIndexTable(spark, dir, raw = true)
-      .select(col("doc_id"))
-    val batchIds = broadcast(batchSh.select(col("doc_id")))
+    val storedSh = shingleIndexTable(spark, dir, raw = true)
+    val storedMh = minhashIndexTable(spark, dir, raw = true)
     // EACH table's fresh list is keyed on that table's OWN ids, and
     // both are pinned on the DRIVER (bounded: batch scale) before any
     // append lands. Two invariants ride on this: (a) a lazy/persisted
@@ -500,19 +494,14 @@ object Dedup {
     // the landed table would skip the missing one forever, keyed on
     // the missing table it would duplicate the landed one.
     import spark.implicits._
-    def freshOf(stored: DataFrame): Seq[Long] =
-      batchSh.select(col("doc_id"))
-        .join(broadcast(stored.join(batchIds, "doc_id").distinct()),
-          Seq("doc_id"), "left_anti")
-        .as[Long].collect().toSeq
-    val freshMh = freshOf(storedMhIds)
-    val freshSh = freshOf(storedShIds)
+    val freshMh = IndexFamily.dedup.freshIdSeq(batchSh, storedMh)
+    val freshSh = IndexFamily.dedup.freshIdSeq(batchSh, storedSh)
     if (freshMh.nonEmpty)
-      graft.sources.TableIO.appendBucketed(
+      graft.sources.TableIO.appendBucketed(spark,
         postingsOf(batchSh.join(broadcast(freshMh.toDF("doc_id")), "doc_id")),
         minhashTbl, Seq("k"), IndexBuckets)
     if (freshSh.nonEmpty)
-      graft.sources.TableIO.appendBucketed(
+      graft.sources.TableIO.appendBucketed(spark,
         batchSh.join(broadcast(freshSh.toDF("doc_id")), "doc_id")
           .select(col("doc_id"), col("hs")),
         shingleTbl, Seq("doc_id"), IndexBuckets)
@@ -561,10 +550,9 @@ object Dedup {
 
   /** [[appendToIndex]]'s simhash twin: fold a batch's triple-key
     * postings into the STORED simhash index (idempotent by doc_id,
-    * bucket layout preserved) — the restart-time maintenance write
-    * SimhashStream uses to keep its probe free of side-table layers.
-    * Takes the batch's posting rows (the side table's stored shape) so
-    * the fold path reuses them instead of re-hashing text. Returns the
+    * bucket layout preserved) — SimhashStream's per-micro-batch fold.
+    * Takes the batch's posting rows so the stream reuses them for the
+    * fold and the pair probe instead of re-hashing text. Returns the
     * number of docs actually appended. */
   private[graft] def appendSimhashToIndex(spark: SparkSession, dir: String,
       batchPostIn: DataFrame): Long = IndexFamily.simhash.withLock(dir) {
@@ -572,18 +560,13 @@ object Dedup {
     val batchPost = Registry.minus(spark, batchPostIn, dir,
       Registry.Doc, "doc_id")
     val tbl = indexTableName(spark, dir, "graft_simhash_idx_")
-    val storedIds = simhashIndexTable(spark, dir, raw = true)
-      .select(col("doc_id"))
-    val batchIds = broadcast(batchPost.select(col("doc_id")).distinct())
-    val known = storedIds.join(batchIds, "doc_id").distinct()
     // driver-pinned fresh id list (the appendShingles discipline):
     // single-table append here, but the same determinism rule applies
     import spark.implicits._
-    val freshIdSeq = batchPost.select(col("doc_id")).distinct()
-      .join(broadcast(known), Seq("doc_id"), "left_anti")
-      .as[Long].collect().toSeq
+    val freshIdSeq = IndexFamily.simhash.freshIdSeq(batchPost,
+      simhashIndexTable(spark, dir, raw = true))
     val n = freshIdSeq.length.toLong
-    if (n > 0) graft.sources.TableIO.appendBucketed(
+    if (n > 0) graft.sources.TableIO.appendBucketed(spark,
       batchPost.join(broadcast(freshIdSeq.toDF("doc_id")), "doc_id")
         .select(col("k"), col("doc_id"), col("sim"), col("t")),
       tbl, Seq("k"), IndexBuckets)
@@ -636,36 +619,28 @@ object Dedup {
     * table with the batch's freshly-computed shingle arrays spliced in
     * (batch rows win over stored rows for the same doc_id via a
     * broadcast anti-join — identical arrays when the doc is already
-    * ingested, so the batch-incremental case is unchanged).
-    * `extraIndex` lets a caller layer PRIOR deltas on top of the
-    * immutable corpus index (streaming.DedupStream passes its
-    * batch_id-partitioned side tables), which is how a pair whose two
-    * NEW members arrive in different micro-batches is still found. */
+    * ingested, so the batch-incremental case is unchanged — and a
+    * delta already folded into the index by [[appendShingles]] is the
+    * same base case, which is how DedupStream finds a pair whose two
+    * NEW members arrive in different micro-batches). */
   private[graft] def deltaPairs(spark: SparkSession, dir: String,
       deltaDocs: DataFrame,
-      broadcastBound: Long = BroadcastVerifyBytes,
-      extraIndex: Option[(DataFrame, DataFrame)] = None): DataFrame =
+      broadcastBound: Long = BroadcastVerifyBytes): DataFrame =
     deltaPairsFromShingles(spark, dir,
       // persisted: the batch arrays feed the posting build, the id
       // list AND the verification base — without the cache the delta
       // docs would be re-scanned and re-shingled three times
       shinglesOfDocs(deltaDocs).persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      broadcastBound, extraIndex)
+      broadcastBound)
 
   /** [[deltaPairs]] with the batch's shingle arrays already computed —
     * the caller owns `deltaSh`'s persistence lifecycle (the streaming
     * pass unpersists per micro-batch). */
   private[graft] def deltaPairsFromShingles(spark: SparkSession,
       dir: String, deltaSh: DataFrame,
-      broadcastBound: Long = BroadcastVerifyBytes,
-      extraIndex: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val index = extraIndex match {
-      case Some((post, _)) =>
-        minhashIndexTable(spark, dir).unionByName(
-          post.select(col("k"), col("doc_id")))
-      case None => minhashIndexTable(spark, dir)
-    }
+      broadcastBound: Long = BroadcastVerifyBytes): DataFrame = {
+    val index = minhashIndexTable(spark, dir)
     val delta = postingsOf(deltaSh)
       .select(col("k"), col("doc_id").as("dd"))
     // runtime size probe (the verifiedJaccard discipline): the delta's
@@ -695,14 +670,8 @@ object Dedup {
     // anti-join is a BROADCAST of the batch ids over the bucketed
     // scan, so it adds no exchange
     val deltaIds = deltaSh.select(col("doc_id"))
-    val stored = extraIndex match {
-      case Some((_, sh)) =>
-        shingleIndexTable(spark, dir).unionByName(
-          sh.select(col("doc_id"), col("hs")))
-      case None => shingleIndexTable(spark, dir)
-    }
-    val base = deltaSh.unionByName(
-      stored.join(broadcast(deltaIds), Seq("doc_id"), "left_anti"))
+    val base = deltaSh.unionByName(shingleIndexTable(spark, dir)
+      .join(broadcast(deltaIds), Seq("doc_id"), "left_anti"))
     verifiedJaccard(spark, dir, cand, base)
   }
 
@@ -783,8 +752,9 @@ object Dedup {
     docs.select(col("doc_id"), simhash60(split(col("text"), " ")).as("sim"))
   }
 
-  /** Simhash pairs of one batch against the STORED triple index (+
-    * optional prior-delta layers) — the streaming twin's kernel, the
+  /** Simhash pairs of one batch against the STORED triple index — the
+    * streaming twin's kernel (a batch SimhashStream already folded in
+    * is the same base case: its rows only repeat the self-join), the
     * [[deltaPairs]] shape applied to the simhash family: candidates =
     * stored-index probe on the triple key UNION a batch-postings
     * self-join (batch-internal pairs among genuinely new docs), each
@@ -795,13 +765,9 @@ object Dedup {
     * side broadcasts (a micro-batch is small by construction — the
     * probe stays map-only over the bucketed index scan). */
   private[graft] def simhashDeltaPairs(spark: SparkSession, dir: String,
-      deltaPost: DataFrame,
-      extraPost: Option[DataFrame] = None): DataFrame = {
+      deltaPost: DataFrame): DataFrame = {
     import graft.functions.HashFunctions.simhash_canonical_triple
-    val index = extraPost match {
-      case Some(p) => simhashIndexTable(spark, dir).unionByName(p)
-      case None => simhashIndexTable(spark, dir)
-    }
+    val index = simhashIndexTable(spark, dir)
     def emit(pre: DataFrame): DataFrame = pre
       .withColumn("x", expr("sim_1 ^ sim_2"))
       .filter(simhash_canonical_triple(col("x"), col("t_1")))
@@ -1460,12 +1426,7 @@ object Dedup {
     // fold forever, breaking replay-folds-0 idempotency. They have no
     // index footprint by definition, so exclude them up front.
     val spannable = batchDocs.filter(length(col("text")) >= SpanLen)
-    val batchIds = broadcast(spannable.select(col("doc_id")).distinct())
-    val known = storedProbe.select(col("doc_id")).join(batchIds, "doc_id")
-      .distinct()
-    val freshSeq = spannable.select(col("doc_id")).distinct()
-      .join(broadcast(known), Seq("doc_id"), "left_anti")
-      .as[Long].collect().toSeq
+    val freshSeq = IndexFamily.span.freshIdSeq(spannable, storedProbe)
     // no `return`: a non-local return from inside the lock's by-name
     // block would unwind through the monitor via control-flow throw
     if (freshSeq.isEmpty) 0L
@@ -1494,20 +1455,12 @@ object Dedup {
       // stored singletons the batch just duplicated: promote the owner
       val promoted = relevant.filter(col("tot") === 1)
         .select(col("owner.doc_id").as("doc_id"), col("owner.i").as("i"))
-      graft.sources.TableIO.appendBucketed(
+      graft.sources.TableIO.appendBucketed(spark,
         batchDup.unionAll(promoted), idxTbl, Seq("doc_id"), IndexBuckets)
-      graft.sources.TableIO.appendBucketed(
+      graft.sources.TableIO.appendBucketed(spark,
         spans.groupBy(col("h"), col("h2"), col("doc_id"))
           .agg(min(col("i")).as("i"), count(lit(1)).as("c")),
         postTbl, Seq("h", "h2"), IndexBuckets)
-      // the appends ride batchDocs' OWN session — under foreachBatch
-      // that is the micro-batch CLONE, whose saveAsTable invalidates
-      // only the clone's relation cache. Refresh through the caller's
-      // handle so this session (and clones forked from it later) see
-      // the appended files instead of a stale cached listing (the
-      // appendAnnToIndex discipline, Similarity.scala).
-      spark.catalog.refreshTable(idxTbl)
-      spark.catalog.refreshTable(postTbl)
       freshSeq.length.toLong
     } finally { spans.unpersist(); () }
     }

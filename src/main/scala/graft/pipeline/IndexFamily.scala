@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 
 import graft.sources.TableIO
 
@@ -52,6 +53,26 @@ private[graft] class IndexFamily(val key: String, val domain: String,
 
   private def tableName(spark: SparkSession, dir: String, t: IndexTable): String =
     IndexFamily.name(spark, dir, t.prefix, domain, t.generation)
+
+  /** The ids of `batch` not yet in `stored` (both carry [[idCol]]) —
+    * every fold's "already indexed" probe: a broadcast SEMI probe of
+    * the stored table (one map-side pass over the corpus-scale side, no
+    * shuffle), then the anti-join against that batch-bounded set. A
+    * bare left_anti would put the stored table on the join's build
+    * side and reshuffle the whole index on every fold. */
+  def freshIds(batch: DataFrame, stored: DataFrame): DataFrame = {
+    val batchIds = batch.select(col(idCol)).distinct()
+    val known = stored.select(col(idCol)).join(broadcast(batchIds), idCol)
+      .distinct()
+    batchIds.join(broadcast(known), Seq(idCol), "left_anti")
+  }
+
+  /** [[freshIds]] pinned on the driver (bounded: batch scale). A fold
+    * pins each target table's list before any append lands, so a lazy
+    * probe can never re-evaluate against a table the same fold already
+    * grew. */
+  def freshIdSeq(batch: DataFrame, stored: DataFrame): Seq[Long] =
+    freshIds(batch, stored).collect().map(_.getLong(0)).toSeq
 
   /** `df` minus the sidecar's ids only — a first-touch build's filter. */
   def unrecorded(spark: SparkSession, dir: String, df: DataFrame): DataFrame =

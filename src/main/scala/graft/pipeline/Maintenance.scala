@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * one entry point each over every [[IndexFamily]]: each family
   * persists fingerprint-named tables whose append paths
   * (Dedup.appendToIndex / appendSimhashToIndex /
-  * Similarity.appendSemToIndex / appendAnnToIndex, and the streams'
-  * restart folds) each add ≤1 file per bucket or inverted list — and
+  * Similarity.appendSemToIndex / appendAnnToIndex, which the streams
+  * run per micro-batch) each add ≤1 file per bucket or inverted list — and
   * at 100 TB the scan bottleneck is FILE COUNT (TableIO.compact's
   * thesis). `compactAll` runs every family's [[IndexFamily.compact]],
   * which rewrites whichever of its tables exist back to one file per

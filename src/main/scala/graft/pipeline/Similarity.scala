@@ -1257,36 +1257,6 @@ object Similarity {
     if (raw) t else IndexFamily.ann.view(spark, dir, t)
   }
 
-  /** Fold a batch of NEW vectors into the persisted ANN index for
-    * `kind` — ENCODE-ONLY maintenance, the production ingest of an IVF
-    * index: codebooks/routing centroids train once at build time; new
-    * data is assigned + PQ-encoded under the STORED artifacts (read
-    * back through [[pqKind]]'s sidecars — never retrained) and appended
-    * into the partitioned code table, preserving the
-    * one-directory-per-inverted-list layout, so the very next ADC
-    * search serves the fold through its existing partition pruning.
-    * Raw vectors land in [[annStreamVecsTable]] for the refine re-rank
-    * (idempotent by vec_id across kinds — a second kind's fold of the
-    * same batch adds codes only). Batch ids are pinned on the DRIVER
-    * before any write (micro-batch scale; the eager-anti-join lesson of
-    * appendSemToIndex). Returns code rows actually appended. */
-  /** Batch ids NOT yet in the stored code table — "already indexed"
-    * via a broadcast SEMI probe of the stored table (one map-side pass
-    * over the corpus-scale codes, no shuffle), then the anti against
-    * that batch-bounded set — the appendSemToIndex discipline; a bare
-    * left_anti would put the stored table on the join's build side and
-    * reshuffle the whole index every micro-batch. Factored out so
-    * AnnAppendSpec can pin the plan shape (broadcast joins only, zero
-    * Exchange on the index side). */
-  private[graft] def annFreshIds(spark: SparkSession,
-      batchVecs: DataFrame, stored: DataFrame): DataFrame = {
-    val batchIds = broadcast(batchVecs.select(col("vec_id")).distinct())
-    val known = stored.select(col("vec_id")).join(batchIds, "vec_id")
-      .distinct()
-    batchVecs.select(col("vec_id")).distinct()
-      .join(broadcast(known), Seq("vec_id"), "left_anti")
-  }
-
   /** Encode a batch under `kind`'s STORED artifacts (no retrain) and
     * pin its touched routing centroids on the driver — the fold's
     * first step, factored out so AnnAppendSpec can pin the pruned
@@ -1322,6 +1292,19 @@ object Similarity {
     else codeTable(spark, dir, kind, raw)
       .filter(col("cent_id").isin(touched: _*))
 
+  /** Fold a batch of NEW vectors into the persisted ANN index for
+    * `kind` — ENCODE-ONLY maintenance, the production ingest of an IVF
+    * index: codebooks/routing centroids train once at build time; new
+    * data is assigned + PQ-encoded under the STORED artifacts (read
+    * back through [[pqKind]]'s sidecars — never retrained) and appended
+    * into the partitioned code table, preserving the
+    * one-directory-per-inverted-list layout, so the very next ADC
+    * search serves the fold through its existing partition pruning.
+    * Raw vectors land in [[annStreamVecsTable]] for the refine re-rank
+    * (idempotent by vec_id across kinds — a second kind's fold of the
+    * same batch adds codes only). Batch ids are pinned on the DRIVER
+    * before any write (micro-batch scale; the eager-anti-join lesson of
+    * appendSemToIndex). Returns code rows actually appended. */
   private[graft] def appendAnnToIndex(spark: SparkSession, dir: String,
       batchVecsIn: DataFrame, kind: String): Long =
       IndexFamily.ann.withLock(dir) {
@@ -1339,9 +1322,8 @@ object Similarity {
     // after such a crash and silently shrink every refine shortlist.
     // PHYSICAL probes (raw): a tombstoned vec stays "known" so replays
     // of a batch containing it stay no-ops (the Tombstones contract)
-    val freshIdSeq = annFreshIds(spark, batchVecs,
-        prunedCodeProbe(spark, dir, kind, touched, raw = true))
-      .as[Long].collect().toSeq
+    val freshIdSeq = IndexFamily.ann.freshIdSeq(batchVecs,
+      prunedCodeProbe(spark, dir, kind, touched, raw = true))
     val vt = annStreamVecsTable(spark, dir, raw = true)
     // vector freshness: keyed on the vecs table's own ids (torn-fold
     // healing) MINUS corpus-resident ids — a batch vec_id that already
@@ -1355,8 +1337,7 @@ object Similarity {
     // that ambiguous set is batch-bounded and empty on the common
     // all-new-ids fold — only then is the corpus id column read at
     // all, and with the id list pushed down to parquet.
-    val vtFresh = annFreshIds(spark, batchVecs, vt)
-      .as[Long].collect().toSet
+    val vtFresh = IndexFamily.ann.freshIdSeq(batchVecs, vt).toSet
     val ambiguous = vtFresh -- freshIdSeq
     val corpusKnown: Set[Long] =
       if (ambiguous.isEmpty) Set.empty
@@ -1381,14 +1362,12 @@ object Similarity {
       // pre-fold file listing and silently miss every appended vector
       spark.catalog.refreshTable(annCodeName(spark, dir, kind))
     }
-    if (freshVecIds.nonEmpty) {
-      graft.sources.TableIO.appendBucketed(
+    if (freshVecIds.nonEmpty)
+      graft.sources.TableIO.appendBucketed(spark,
         batchVecs.join(broadcast(freshVecIds.toDF("vec_id")), "vec_id")
           .select(col("vec_id"), col("v"), col("nrm")),
         semTableName(spark, dir, "graft_annvecs_"),
         Seq("vec_id"), Dedup.IndexBuckets)
-      spark.catalog.refreshTable(semTableName(spark, dir, "graft_annvecs_"))
-    }
     freshIdSeq.length.toLong
   }
 
@@ -1771,11 +1750,9 @@ object Similarity {
       Registry.Vec, "vec_id")
     // PHYSICAL probes (raw): a tombstoned vec stays "known" so replays
     // of a batch containing it stay no-ops (the Tombstones contract)
-    val storedPostIds = semPostingTable(spark, dir,
-      Dedup.BroadcastVerifyBytes, raw = true).select(col("vec_id"))
-    val storedVecIds = semStreamVecsTable(spark, dir, raw = true)
-      .select(col("vec_id"))
-    val batchIds = broadcast(batchVecs.select(col("vec_id")).distinct())
+    val storedPost = semPostingTable(spark, dir,
+      Dedup.BroadcastVerifyBytes, raw = true)
+    val storedVecs = semStreamVecsTable(spark, dir, raw = true)
     // EACH table's fresh list is keyed on that table's OWN ids, both
     // pinned on the DRIVER (bounded: micro-batch scale) before any
     // append lands — (a) a lazy anti-join would RE-EVALUATE against
@@ -1786,12 +1763,7 @@ object Similarity {
     // as known forever, permanently dropping its pairs from the
     // verification join.
     import spark.implicits._
-    def freshOf(stored: DataFrame): Seq[Long] =
-      batchVecs.select(col("vec_id")).distinct()
-        .join(broadcast(stored.join(batchIds, "vec_id").distinct()),
-          Seq("vec_id"), "left_anti")
-        .as[Long].collect().toSeq
-    val freshPost = freshOf(storedPostIds)
+    val freshPost = IndexFamily.sem.freshIdSeq(batchVecs, storedPost)
     // like appendAnnToIndex's vector half: a corpus-resident vec_id is
     // already in the base postings (first-touch build assigns the whole
     // corpus), so the posting append skips it — but a semvecs-only key
@@ -1800,15 +1772,16 @@ object Similarity {
     // TWICE. The corpus is immutable across folds; per-table healing
     // keying is unaffected.
     val corpusIds = normedVecs(spark, dir).select(col("vec_id"))
-    val freshVecs = freshOf(storedVecIds.unionByName(corpusIds))
+    val freshVecs = IndexFamily.sem.freshIdSeq(batchVecs,
+      storedVecs.select(col("vec_id")).unionByName(corpusIds))
     if (freshPost.nonEmpty)
-      graft.sources.TableIO.appendBucketed(
+      graft.sources.TableIO.appendBucketed(spark,
         batchPost.join(broadcast(freshPost.toDF("vec_id")), "vec_id")
           .select(col("vec_id"), col("cent_id")),
         semPostName(spark, dir),
         Seq("cent_id"), Dedup.IndexBuckets)
     if (freshVecs.nonEmpty)
-      graft.sources.TableIO.appendBucketed(
+      graft.sources.TableIO.appendBucketed(spark,
         batchVecs.join(broadcast(freshVecs.toDF("vec_id")), "vec_id")
           .select(col("vec_id"), col("v"), col("nrm")),
         semTableName(spark, dir, "graft_semvecs_"),
@@ -2158,7 +2131,7 @@ object Similarity {
     * so the candidate stream never shuffles array payload; above it,
     * shuffle_hash probes the fat candidate stream through without
     * sorting it. Factored out of [[semVerifiedPairs]] so the streaming
-    * delta pass verifies over a SPLICED base (corpus + side + batch). */
+    * delta pass verifies over a SPLICED base (corpus + folded + batch). */
   private def semVerify(cand: DataFrame, base: DataFrame,
       est: Long): DataFrame = {
     val estBytes = est * (Dim * 8L + 48L)
@@ -2178,41 +2151,19 @@ object Similarity {
 
   /** Semantic near-dup pairs of one BATCH of vectors against the
     * stored assignment table — the streaming twin's kernel
-    * (Dedup.deltaPairs applied to the SemDeDup family): the batch is
-    * routed through [[semAssignOver]] (identical assignment to the
-    * batch pass, by corpus-derived centroids), candidates are the
-    * stored-posting probe on the fine-cluster key UNION a
-    * batch-posting self-join, `extra` layers prior micro-batches'
-    * (postings, vectors) side tables, and verification runs over the
-    * spliced vector base (batch rows win; for an already-ingested
-    * batch they equal the corpus rows, so the batch-incremental case
-    * is unchanged). The historical corpus never re-pairs with itself
-    * and its array payloads never shuffle (batch side broadcast). */
-  private[graft] def semDeltaPairs(spark: SparkSession, dir: String,
-      batchVecs: DataFrame,
-      extra: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    import spark.implicits._
-    // semAssignOver localCheckpoints its result — already materialized,
-    // so the three references below re-read blocks, not the kernel
-    val batchPost = semAssignOver(spark, dir,
-      batchVecs.select(col("vec_id"), col("v"), col("nrm"))
-        .as[(Long, Array[Double], Double)],
-      Dedup.BroadcastVerifyBytes)
-    semDeltaPairsFromPost(spark, dir, batchPost, batchVecs, extra)
-  }
-
-  /** [[semDeltaPairs]] with the batch's assignment already computed —
-    * the streaming pass assigns once per micro-batch and reuses the
-    * posting for both the pair join and the side-index append. */
+    * (Dedup.deltaPairs applied to the SemDeDup family). `batchPost` is
+    * the batch's [[semAssignOver]] routing (identical assignment to the
+    * batch pass, by corpus-derived centroids; SemanticStream assigns
+    * once per micro-batch and reuses it for the fold). Candidates are
+    * the stored-posting probe on the fine-cluster key UNION a
+    * batch-posting self-join, and verification runs over the spliced
+    * vector base (batch rows win; for an already-ingested or
+    * already-folded batch they equal the stored rows, so that case is
+    * unchanged). The historical corpus never re-pairs with itself and
+    * its array payloads never shuffle (batch side broadcast). */
   private[graft] def semDeltaPairsFromPost(spark: SparkSession, dir: String,
-      batchPost: DataFrame, batchVecs: DataFrame,
-      extra: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val stored = semPostingTable(spark, dir, Dedup.BroadcastVerifyBytes)
-    val index = extra match {
-      case Some((p, _)) => stored.unionByName(
-        p.select(col("vec_id"), col("cent_id")))
-      case None => stored
-    }
+      batchPost: DataFrame, batchVecs: DataFrame): DataFrame = {
+    val index = semPostingTable(spark, dir, Dedup.BroadcastVerifyBytes)
     val probe = index.select(col("vec_id").as("va"), col("cent_id"))
       .join(broadcast(batchPost.select(col("vec_id").as("vb"), col("cent_id"))),
         "cent_id")
@@ -2230,16 +2181,10 @@ object Similarity {
     val batchIds = broadcast(batchVecs.select(col("vec_id")))
     val corpus = normedVecs(spark, dir)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val prior = extra match {
-      case Some((_, xv)) => xv.select(col("vec_id"), col("v"), col("nrm"))
-        .join(batchIds, Seq("vec_id"), "left_anti")
-      case None => corpus.limit(0)
-    }
     val folded = semStreamVecsIfAny(spark, dir)
       .map(_.join(batchIds, Seq("vec_id"), "left_anti"))
       .getOrElse(corpus.limit(0))
     val base = batchVecs.select(col("vec_id"), col("v"), col("nrm"))
-      .unionByName(prior)
       .unionByName(folded)
       .unionByName(corpus.join(batchIds, Seq("vec_id"), "left_anti"))
     semVerify(cand, base, corpusCount(spark, dir))

@@ -642,12 +642,7 @@ object TrainingPrep {
       Registry.Doc, "doc_id")
     val stored = bigramScoredTable(spark, dir, raw = true) // builds on first touch
     val scorable = batchDocs.filter(size(split(col("text"), " ")) >= 2)
-    val batchIds = broadcast(scorable.select(col("doc_id")).distinct())
-    val known = stored.select(col("doc_id")).join(batchIds, "doc_id")
-      .distinct()
-    val freshSeq = scorable.select(col("doc_id")).distinct()
-      .join(broadcast(known), Seq("doc_id"), "left_anti")
-      .as[Long].collect().toSeq
+    val freshSeq = IndexFamily.lmscore.freshIdSeq(scorable, stored)
     if (freshSeq.isEmpty) 0L
     else {
       val fresh = scorable.join(broadcast(freshSeq.toDF("doc_id")), "doc_id")
@@ -663,16 +658,12 @@ object TrainingPrep {
       // stream-only by construction — no corpus-linear membership
       // scan per fold (the flat-per-batch curation cost depends on
       // that), and the extension table stays fold-bounded.
-      val ext = lmDocsTable(spark, dir)
-      val rawKnown = ext.select(col("doc_id")).join(batchIds, "doc_id")
-        .distinct()
-      val rawFreshIds = fresh.select(col("doc_id")).distinct()
-        .join(broadcast(rawKnown), Seq("doc_id"), "left_anti")
-      graft.sources.TableIO.appendBucketed(
-        fresh.join(broadcast(rawFreshIds), "doc_id")
+      val rawFreshIds = IndexFamily.lmscore.freshIdSeq(fresh,
+        lmDocsTable(spark, dir))
+      if (rawFreshIds.nonEmpty) graft.sources.TableIO.appendBucketed(spark,
+        fresh.join(broadcast(rawFreshIds.toDF("doc_id")), "doc_id")
           .select(col("doc_id"), col("text")),
         lmDocsName(spark, dir), Seq("doc_id"), Dedup.IndexBuckets)
-      spark.catalog.refreshTable(lmDocsName(spark, dir))
       val bi = bigramStream(fresh)
       val lm = lmTypeTable(spark, dir)
       val uni = lmUniTable(spark, dir)
@@ -689,9 +680,8 @@ object TrainingPrep {
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_bigrams"),
           Num.roundEps(avg(col("lp")), 6).as("avg_logprob"))
-      graft.sources.TableIO.appendBucketed(scoredBatch,
+      graft.sources.TableIO.appendBucketed(spark, scoredBatch,
         lmScoreName(spark, dir), Seq("doc_id"), Dedup.IndexBuckets)
-      spark.catalog.refreshTable(lmScoreName(spark, dir))
       freshSeq.length.toLong
     }
   }

@@ -114,8 +114,15 @@ object TableIO {
     * file per bucket; the scan stays bucket-aware (joins on the bucket
     * key still need no index-side Exchange), only the in-bucket SORT
     * guarantee is lost once a bucket holds >1 file — callers that need
-    * it back run [[compactBucketed]], the nightly maintenance pass. */
-  def appendBucketed(df: DataFrame, table: String,
+    * it back run [[compactBucketed]], the nightly maintenance pass.
+    *
+    * The write runs in `df`'s own session — under foreachBatch that is
+    * the micro-batch CLONE, whose saveAsTable invalidates only the
+    * clone's relation cache — so the table is refreshed through
+    * `spark`, the caller's handle: this session (and clones forked
+    * from it later) see the appended files instead of a stale cached
+    * listing. */
+  def appendBucketed(spark: SparkSession, df: DataFrame, table: String,
       bucketCols: Seq[String], numBuckets: Int): Unit = {
     require(bucketCols.nonEmpty, "bucketBy needs at least one column")
     val clustered = df.repartition(numBuckets,
@@ -123,6 +130,7 @@ object TableIO {
     clustered.write.mode(SaveMode.Append).format("parquet")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(table)
+    spark.catalog.refreshTable(table)
   }
 
   private def stagingOf(path: String): String =

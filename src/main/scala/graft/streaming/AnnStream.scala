@@ -1,13 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous ANN-index ingest — the streaming twin of
-  * `Similarity.appendAnnToIndex`, completing the pattern DedupStream /
-  * SimhashStream / SemanticStream set for the other persisted index
-  * families: each micro-batch of newly-embedded vectors
+  * `Similarity.appendAnnToIndex`, the [[IndexStream]] shape every
+  * persisted index family shares: each micro-batch of newly-embedded
+  * vectors
   * (vec_id, embedding) is encoded under the STORED codebooks (never
   * retrained) and appended straight into the partitioned code
   * table(s), then looked up against the grown index
@@ -15,13 +14,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * pipeline: "index this vector; who were its neighbors?" — with the
   * ranked results landing in a batch_id-partitioned parquet sink.
   *
-  * UNLIKE the dedup streams this needs NO side-table chain: the lake
-  * append itself is idempotent at vec_id granularity, so a replayed
-  * micro-batch re-appends nothing and then runs its lookup against
-  * byte-identical index state — effectively-exactly-once directly on
-  * the stored table. The cost profile moves instead: every batch adds
-  * ≤1 file per touched inverted list, so restart maintenance is
-  * COMPACTION (`IndexFamily.ann.compact`), not folding.
+  * The lake append itself is idempotent at vec_id granularity, so a
+  * replayed micro-batch re-appends nothing and then runs its lookup
+  * against byte-identical index state — effectively-exactly-once
+  * directly on the stored table. Every batch adds ≤1 file per touched
+  * inverted list, so restart maintenance is COMPACTION
+  * (`IndexFamily.ann.compact`).
   *
   * Lookup semantics: a vector's neighbors are drawn from the corpus
   * plus everything ingested up to and including its own batch,
@@ -43,35 +41,24 @@ object AnnStream {
       kinds.foreach { k =>
         graft.pipeline.Similarity.appendAnnToIndex(spark, dir, batchVecs, k)
       }
-      graft.pipeline.Similarity.annSearchNormed(spark, dir, batchVecs, kinds.head)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(sinkPath)
+      IndexStream.overwritePartition(
+        graft.pipeline.Similarity.annSearchNormed(spark, dir, batchVecs,
+          kinds.head), batchId, sinkPath)
     } finally batchVecs.unpersist()
   }
 
   /** Start the continuous ingest+lookup over a stream of embedding
     * rows (vec_id, embedding). `sinkPath` receives batch_id-partitioned
-    * parquet (probe_id, rank, vec_id, adist, batch_id). On every
-    * (re)start the ann family compacts (`IndexFamily.ann.compact`):
-    * the accumulated per-batch append files of every present code kind
-    * and of the refine vectors fold back toward one per inverted list
-    * or bucket — the maintenance pass a long-running ingest owes the
-    * scan path — and pending takedowns materialize and leave the
-    * sidecar, the same end state [[graft.pipeline.Maintenance.compactAll]]
-    * reaches. */
+    * parquet (probe_id, rank, vec_id, adist, batch_id). Every
+    * (re)start compacts the ann family first ([[IndexStream.start]]):
+    * the per-batch append files of every present code kind and of the
+    * refine vectors fold back toward one per inverted list or bucket. */
   def start(spark: SparkSession, dir: String, vecs: DataFrame,
       sinkPath: String, checkpoint: String,
-      kinds: Seq[String] = Seq("trained")): StreamingQuery = {
-    graft.pipeline.IndexFamily.ann.compact(spark, dir)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      kinds: Seq[String] = Seq("trained")): StreamingQuery =
+    IndexStream.start(spark, graft.pipeline.IndexFamily.ann, dir, vecs,
+        checkpoint) {
+      (batch, batchId) =>
         processBatch(spark, dir, batch, sinkPath, batchId, kinds)
-      }
-      .start()
-  }
+    }
 }

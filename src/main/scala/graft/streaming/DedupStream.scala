@@ -1,18 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
+
+import graft.pipeline.{Dedup, IndexFamily}
 
 /** Continuous near-duplicate dedup: the streaming analogue of the
   * batch `dedup_incremental` pass. Each micro-batch of newly-ingested
-  * documents is minhash-banded and probed against the PERSISTED
-  * posting index (pipeline.Dedup.minhashIndexTable — the same bucketed
-  * lake table the batch pipeline writes and reads) PLUS the stream's
-  * own side index of previously-ingested batches, then exact-verified
-  * with the family's Jaccard join, and the qualifying pairs land in a
-  * batch_id-partitioned parquet sink.
+  * documents folds straight into the PERSISTED posting and shingle
+  * tables (Dedup.appendShingles — the same bucketed lake tables the
+  * batch pipeline writes and reads), then is minhash-banded and probed
+  * against the grown index, exact-verified with the family's Jaccard
+  * join, and the qualifying pairs land in a batch_id-partitioned
+  * parquet sink.
   *
   * Why foreachBatch and not a stateful streaming operator: the
   * candidate join probes a LAKE TABLE, and the exact verification is
@@ -22,130 +22,52 @@ import org.apache.spark.sql.types._
   * with its checkpoint) would be the wrong home for it. This is the
   * standard lakehouse shape for stream-vs-corpus joins.
   *
-  * NEW documents (judge-advice fix): the batch members need not exist
-  * in the stored corpus. Batch-internal pairs come from the delta
-  * posting self-join inside Dedup.deltaPairs; pairs against the corpus
-  * come from the immutable corpus index; and pairs whose two NEW
-  * members arrive in DIFFERENT micro-batches come from the stream's
-  * side tables (`<sink>_idx_postings` / `<sink>_idx_shingles`,
-  * parquet partitioned by batch_id): after emitting its pairs, each
-  * batch appends the postings + shingle arrays of its
-  * not-already-indexed docs, and later batches read every partition
-  * with `batch_id < current` as an extra index layer. The corpus
-  * tables stay immutable — the batch pipeline never sees stream state.
+  * NEW documents: the batch members need not exist in the stored
+  * corpus. Batch-internal pairs come from the delta posting self-join
+  * inside Dedup.deltaPairsFromShingles, pairs against the corpus and
+  * against every earlier micro-batch come from the stored index the
+  * earlier folds grew. The probe reads the family's view, so a
+  * takedown is visible to the very next micro-batch.
   *
   * Scale: each micro-batch pays exactly the batch incremental cost —
   * the batch's own postings broadcast (or shuffle_hash past the byte
-  * bound, still exchange-free on the bucketed corpus-index side); the
-  * historical corpus never re-pairs with itself, and the side tables
-  * hold only streamed docs.
+  * bound, still exchange-free on the bucketed index side); the
+  * historical corpus never re-pairs with itself.
   *
   * Delivery: EFFECTIVELY EXACTLY-ONCE. foreachBatch re-runs a batch on
-  * failure recovery with the SAME batch_id, and all three writes are
-  * dynamic partition overwrites keyed by batch_id — a replay replaces
-  * its own partition with identical deterministic content instead of
-  * appending a duplicate (the side-table reads filter
-  * `batch_id < current`, so a replay also re-reads exactly the
-  * pre-batch index state). DedupStreamSpec asserts ROW-level (not
-  * DISTINCT-set) equality after a forced re-run.
+  * failure recovery with the SAME batch_id; the fold appends nothing
+  * twice, deltaPairs treats an already-indexed delta as its base case,
+  * and the sink write is a dynamic partition overwrite keyed by
+  * batch_id — a replay replaces its own partition with identical
+  * content. DedupStreamSpec asserts ROW-level equality after a forced
+  * re-run.
   */
 object DedupStream {
 
-  private val PostingsSchema = StructType(Seq(
-    StructField("k", LongType), StructField("doc_id", LongType)))
-  private val ShingleSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("hs", ArrayType(LongType))))
-
-  import SideTables.{overwritePartition, sideRead}
-
-  /** One micro-batch of the continuous pass — factored out so the
-    * replay-idempotency spec can re-run a batch_id directly and assert
-    * row-level equality. Deterministic given (corpus, prior side
-    * tables, batch rows, batchId). */
+  /** One micro-batch: fold, then pair against the grown index — factored
+    * out so the replay-idempotency spec can re-run a batch_id directly.
+    * Deterministic given (stored index state, batch rows, batchId). */
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, sinkPath: String, batchId: Long): Unit =
-      graft.pipeline.IndexFamily.dedup.withLock(dir) {
-    val postPath = sinkPath + "_idx_postings"
-    val shPath = sinkPath + "_idx_shingles"
-    val priorPost = sideRead(spark, postPath, PostingsSchema, batchId)
-    val priorSh = sideRead(spark, shPath, ShingleSchema, batchId)
-    val deltaSh = graft.pipeline.Dedup.shinglesOfDocs(batch)
+      IndexFamily.dedup.withLock(dir) {
+    val deltaSh = Dedup.shinglesOfDocs(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val pairs = graft.pipeline.Dedup.deltaPairsFromShingles(
-        spark, dir, deltaSh, extraIndex = Some((priorPost, priorSh)))
-      overwritePartition(pairs, batchId, sinkPath)
-      // append THIS batch's not-yet-indexed docs to the side index so
-      // later batches can pair against them. "Not yet indexed" =
-      // absent from both the corpus shingle table and the prior side
-      // table; the corpus probe is a broadcast semi-join of the tiny
-      // batch id list over the bucketed scan (map-only, no exchange)
-      val deltaIds = broadcast(deltaSh.select(col("doc_id")))
-      val known = graft.pipeline.Dedup.shingleIndexTable(spark, dir)
-        .select(col("doc_id")).join(deltaIds, "doc_id")
-        .unionByName(
-          priorSh.select(col("doc_id")).join(deltaIds, "doc_id"))
-        .distinct()
-      val fresh = deltaSh
-        .join(broadcast(known), Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        overwritePartition(
-          graft.pipeline.Dedup.postingsOf(fresh), batchId, postPath)
-        overwritePartition(fresh, batchId, shPath)
-      } finally fresh.unpersist()
+      Dedup.appendShingles(spark, dir, deltaSh)
+      IndexStream.overwritePartition(
+        Dedup.deltaPairsFromShingles(spark, dir, deltaSh), batchId, sinkPath)
     } finally deltaSh.unpersist()
-  }
-
-  /** Fold the stream's side index into the STORED lake tables and
-    * delete the side partitions — the restart-time maintenance pass
-    * that keeps the probe O(1) in layers (r11 verdict item 2): without
-    * it, every micro-batch re-reads a side-table union chain that
-    * grows for the stream's whole life; with it, a restarted stream
-    * begins with an EMPTY side chain and probes all previously
-    * streamed docs through the bucketed stored index (zero index-side
-    * Exchange). Safe under the checkpoint-replay contract:
-    * Dedup.appendShingles is idempotent at doc granularity, and a
-    * replayed in-flight batch sees the folded docs through the stored
-    * index instead of the side read — deltaPairs emits the identical
-    * pair set either way (already-ingested deltas are its base case),
-    * so the batch_id-keyed dynamic overwrite still rewrites identical
-    * content. */
-  def foldSideIndex(spark: SparkSession, dir: String,
-      sinkPath: String): Long =
-      graft.pipeline.IndexFamily.dedup.withLock(dir) {
-    val shPath = sinkPath + "_idx_shingles"
-    val postPath = sinkPath + "_idx_postings"
-    if (!SideTables.exists(spark, shPath)) 0L
-    else {
-      val sideSh = SideTables.readAll(spark, shPath, ShingleSchema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = graft.pipeline.Dedup.appendShingles(spark, dir, sideSh)
-        Seq(shPath, postPath).foreach(SideTables.delete(spark, _))
-        n
-      } finally sideSh.unpersist()
-    }
   }
 
   /** Start the continuous dedup over a stream of document rows
     * (doc_id, text, ...). `dir` locates the corpus whose stored index
-    * and shingle artifact verify the batches; `sinkPath` receives
-    * batch_id-partitioned parquet (d1, d2, jac, batch_id). On every
-    * (re)start the accumulated side index folds into the stored lake
-    * tables first ([[foldSideIndex]]), so a long-lived stream's probe
-    * cost is bounded by the CURRENT run's batches, not its lifetime. */
+    * and shingle artifact receive the folds and verify the batches;
+    * `sinkPath` receives batch_id-partitioned parquet (d1, d2, jac,
+    * batch_id). Every (re)start compacts the dedup family first
+    * ([[IndexStream.start]]). */
   def start(spark: SparkSession, dir: String, docs: DataFrame,
-      sinkPath: String, checkpoint: String,
-      foldOnStart: Boolean = true): StreamingQuery = {
-    if (foldOnStart) foldSideIndex(spark, dir, sinkPath)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(spark, dir, batch, sinkPath, batchId)
-      }
-      .start()
-  }
+      sinkPath: String, checkpoint: String): StreamingQuery =
+    IndexStream.start(spark, IndexFamily.dedup, dir, docs, checkpoint) {
+      (batch, batchId) => processBatch(spark, dir, batch, sinkPath, batchId)
+    }
 }

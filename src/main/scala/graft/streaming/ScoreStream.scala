@@ -1,15 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous ingest for the LM score artifact — the streaming twin of
-  * `TrainingPrep.appendScored` (r17), completing the family rule that
-  * every persisted artifact with a batch fold has one (DedupStream /
-  * SimhashStream / SemanticStream / AnnStream / SpanStream).
-  *
-  * Like SpanStream, no side chain is needed: the stored score table is
+  * `TrainingPrep.appendScored` (r17), in the [[IndexStream]] shape
+  * every persisted index family shares: the stored score table is
   * itself the incremental target, `appendScored` is idempotent at doc
   * granularity (keyed on the table's own doc set), and the LM is
   * FROZEN (the first fold builds the type/unigram artifacts from the
@@ -28,8 +25,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * exchange; the corpus never rescans after the one-time LM build. */
 object ScoreStream {
 
-  import SideTables.overwritePartition
-
   /** Replay-stable per-doc accounting: scorable docs and their bigram
     * counts, straight off the text. */
   private[graft] def bigramCountsOfDocs(docs: DataFrame): DataFrame = docs
@@ -42,25 +37,17 @@ object ScoreStream {
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, sinkPath: String, batchId: Long): Unit = {
     graft.pipeline.TrainingPrep.appendScored(spark, dir, batch)
-    overwritePartition(bigramCountsOfDocs(batch), batchId, sinkPath)
+    IndexStream.overwritePartition(bigramCountsOfDocs(batch), batchId, sinkPath)
   }
 
   /** Start the continuous score fold over a stream of document rows
-    * (doc_id, text). On every (re)start the lmscore family compacts
-    * (`IndexFamily.lmscore.compact`): the score table and the streamed
-    * raw-doc table fold back toward one file per bucket (each fold
-    * appends ≤1 file per bucket — the AnnStream maintenance shape), and
-    * pending takedowns materialize and leave the sidecar, the same end
-    * state [[graft.pipeline.Maintenance.compactAll]] reaches. */
+    * (doc_id, text). Every (re)start compacts the lmscore family first
+    * ([[IndexStream.start]]): the score table and the streamed raw-doc
+    * table fold back toward one file per bucket. */
   def start(spark: SparkSession, dir: String, docs: DataFrame,
-      sinkPath: String, checkpoint: String): StreamingQuery = {
-    graft.pipeline.IndexFamily.lmscore.compact(spark, dir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(spark, dir, batch, sinkPath, batchId)
-      }
-      .start()
-  }
+      sinkPath: String, checkpoint: String): StreamingQuery =
+    IndexStream.start(spark, graft.pipeline.IndexFamily.lmscore, dir, docs,
+        checkpoint) {
+      (batch, batchId) => processBatch(spark, dir, batch, sinkPath, batchId)
+    }
 }

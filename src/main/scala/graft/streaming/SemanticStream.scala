@@ -1,137 +1,58 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
+
+import graft.pipeline.{Dedup, IndexFamily, Similarity}
 
 /** Continuous SemDeDup — the streaming twin of `dedup_semantic` (r11
   * verdict item 5), structured like [[DedupStream]]: each micro-batch
   * of newly-embedded vectors (vec_id, embedding) is routed through the
   * SAME corpus-derived centroid hierarchy as the batch pass
   * (pipeline.Similarity.semAssignOver — so a streamed vector lands in
-  * exactly the fine cluster the batch pass would give it), probed
-  * against the PERSISTED assignment table
-  * (Similarity.semPostingTable) PLUS the stream's own side index of
-  * previously-ingested batches, cosine-verified over the spliced
-  * vector base, and the qualifying (v1, v2, cos) pairs land in a
-  * batch_id-partitioned parquet sink.
+  * exactly the fine cluster the batch pass would give it), folded
+  * straight into BOTH stored tables (Similarity.appendSemToIndex: the
+  * bucketed assignment table and the streamed-vector extension table,
+  * whose vectors the exact cosine verification of a later batch
+  * needs), probed against the grown assignment table, cosine-verified
+  * over the spliced vector base, and the qualifying (v1, v2, cos)
+  * pairs land in a batch_id-partitioned parquet sink. After a fold the
+  * batch query sees the grown corpus too.
   *
-  * TWO side tables (the family needs vectors, not just keys):
-  * `<sink>_idx_postings` (vec_id, cent_id) feeds later batches'
-  * candidate joins; `<sink>_idx_vectors` (vec_id, v, nrm) feeds their
-  * exact verification — a pair whose two NEW members arrive in
-  * different micro-batches needs the earlier member's vector, which
-  * the immutable corpus table does not hold.
-  *
-  * Delivery: effectively exactly-once, the [[DedupStream]] contract
-  * (dynamic partition overwrites keyed by batch_id; replays read
-  * exactly the pre-batch side state and rewrite identical content).
+  * Delivery: effectively exactly-once, the [[DedupStream]] contract.
   */
 object SemanticStream {
 
-  private val PostSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("cent_id", LongType)))
-  private val VecSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("v", ArrayType(DoubleType)),
-    StructField("nrm", DoubleType)))
-
-  import SideTables.{overwritePartition, sideRead}
-
-  /** One micro-batch — deterministic given (corpus, prior side tables,
-    * batch rows, batchId). `batch` carries (vec_id, embedding). */
+  /** One micro-batch — deterministic given (stored index state, batch
+    * rows, batchId). `batch` carries (vec_id, embedding). */
   private[graft] def processBatch(spark: SparkSession, dir: String,
       batch: DataFrame, sinkPath: String, batchId: Long): Unit =
-      graft.pipeline.IndexFamily.sem.withLock(dir) {
-    val postPath = sinkPath + "_idx_postings"
-    val vecPath = sinkPath + "_idx_vectors"
-    val priorPost = sideRead(spark, postPath, PostSchema, batchId)
-    val priorVec = sideRead(spark, vecPath, VecSchema, batchId)
-    val batchVecs = graft.pipeline.Similarity.normedOfBatch(batch)
+      IndexFamily.sem.withLock(dir) {
+    val batchVecs = Similarity.normedOfBatch(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       import spark.implicits._
       // assigned ONCE per micro-batch (localCheckpointed inside), then
-      // reused for the pair join AND the side-index append
-      val batchPost = graft.pipeline.Similarity.semAssignOver(spark, dir,
+      // reused for the fold AND the pair join
+      val batchPost = Similarity.semAssignOver(spark, dir,
         batchVecs.select(col("vec_id"), col("v"), col("nrm"))
           .as[(Long, Array[Double], Double)],
-        graft.pipeline.Dedup.BroadcastVerifyBytes)
-      val pairs = graft.pipeline.Similarity.semDeltaPairsFromPost(
-        spark, dir, batchPost, batchVecs, Some((priorPost, priorVec)))
-      overwritePartition(pairs, batchId, sinkPath)
-      // append this batch's not-yet-indexed vectors ("not yet indexed"
-      // = absent from both the stored assignment table and the prior
-      // side table — broadcast semi-joins of the tiny batch id list)
-      val batchIds = broadcast(batchVecs.select(col("vec_id")))
-      val known = graft.pipeline.Similarity
-        .semPostingTable(spark, dir, graft.pipeline.Dedup.BroadcastVerifyBytes)
-        .select(col("vec_id")).join(batchIds, "vec_id")
-        .unionByName(
-          priorPost.select(col("vec_id")).join(batchIds, "vec_id"))
-        .distinct()
-      val fresh = batchVecs
-        .join(broadcast(known), Seq("vec_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val freshPost = batchPost.join(
-          broadcast(fresh.select(col("vec_id"))), "vec_id")
-        overwritePartition(freshPost, batchId, postPath)
-        overwritePartition(fresh.select(col("vec_id"), col("v"), col("nrm")),
-          batchId, vecPath)
-      } finally fresh.unpersist()
+        Dedup.BroadcastVerifyBytes)
+      Similarity.appendSemToIndex(spark, dir, batchPost, batchVecs)
+      IndexStream.overwritePartition(
+        Similarity.semDeltaPairsFromPost(spark, dir, batchPost, batchVecs),
+        batchId, sinkPath)
     } finally batchVecs.unpersist()
-  }
-
-  /** Fold the stream's side tables into the STORED lake tables —
-    * postings into the bucketed assignment table, vectors into the
-    * streamed-vector extension table (Similarity.appendSemToIndex,
-    * idempotent by vec_id) — and delete the side partitions. The
-    * DedupStream restart-maintenance shape: a restarted stream begins
-    * with an empty side chain, and the batch query now sees the grown
-    * corpus. */
-  def foldSideIndex(spark: SparkSession, dir: String,
-      sinkPath: String): Long =
-      graft.pipeline.IndexFamily.sem.withLock(dir) {
-    val postPath = sinkPath + "_idx_postings"
-    val vecPath = sinkPath + "_idx_vectors"
-    if (!SideTables.exists(spark, vecPath)) 0L
-    else {
-    val sideVecs = SideTables.readAll(spark, vecPath, VecSchema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = graft.pipeline.Similarity.appendSemToIndex(spark, dir,
-        SideTables.readAll(spark, postPath, PostSchema), sideVecs)
-      // vecPath is the existence-guard key ABOVE, so it must go first:
-      // a crash between the two deletes then leaves the guard absent
-      // and the next start short-circuits cleanly (the orphaned
-      // postings partitions are already folded — appendSemToIndex is
-      // idempotent by vec_id, so a later fold re-reading them appends
-      // nothing). The old postPath-first order left vecPath present /
-      // postPath missing, and every restart threw reading the gone
-      // postings path.
-      Seq(vecPath, postPath).foreach(SideTables.delete(spark, _))
-      n
-    } finally sideVecs.unpersist()
-    }
   }
 
   /** Start the continuous semantic dedup over a stream of embedding
     * rows (vec_id, embedding). `sinkPath` receives batch_id-partitioned
-    * parquet (v1, v2, cos, batch_id). On every (re)start the
-    * accumulated side index folds into the stored lake tables
-    * ([[foldSideIndex]]). */
+    * parquet (v1, v2, cos, batch_id). Every (re)start compacts the sem
+    * family first ([[IndexStream.start]]). */
   def start(spark: SparkSession, dir: String, vecs: DataFrame,
-      sinkPath: String, checkpoint: String,
-      foldOnStart: Boolean = true): StreamingQuery = {
-    if (foldOnStart) foldSideIndex(spark, dir, sinkPath)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(spark, dir, batch, sinkPath, batchId)
-      }
-      .start()
-  }
+      sinkPath: String, checkpoint: String): StreamingQuery =
+    IndexStream.start(spark, IndexFamily.sem, dir, vecs, checkpoint) {
+      (batch, batchId) => processBatch(spark, dir, batch, sinkPath, batchId)
+    }
 }

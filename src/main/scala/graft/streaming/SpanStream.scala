@@ -1,23 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous ingest for the span-dedup index — the streaming twin of
-  * `Dedup.appendSpanToIndex` (r14 verdict item 6), completing the
-  * family: every other persisted dedup artifact already has one
-  * (DedupStream / SimhashStream / SemanticStream / AnnStream).
-  *
-  * Unlike those twins, SpanStream needs NO side chain: the stored
-  * spanidx/spanpost tables are themselves the incremental target —
+  * `Dedup.appendSpanToIndex` (r14 verdict item 6), in the
+  * [[IndexStream]] shape every persisted index family shares: the
+  * stored spanidx/spanpost tables are themselves the incremental
+  * target —
   * `appendSpanToIndex` is idempotent at doc granularity (keyed on the
   * posting table's own doc set) and cross-batch by construction (a
   * batch-2 span duplicating a batch-1 singleton promotes batch 1's
   * stored position through the bucketed posting probe), so each
   * micro-batch folds STRAIGHT into the lake tables and later batches
   * see earlier ones through the store alone. No per-query streaming
-  * state and no side chain to fold on restart.
+  * state.
   *
   * Delivery: effectively exactly-once on the index (a checkpoint
   * replay folds 0 — the docs are already known — and the spanidx rows
@@ -35,8 +32,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object SpanStream {
 
-  import SideTables.overwritePartition
-
   /** One micro-batch: fold into the stored span index, land the
     * replay-stable accounting partition. Factored out for the
     * replay-idempotency spec. */
@@ -44,30 +39,22 @@ object SpanStream {
       batch: DataFrame, sinkPath: String, batchId: Long): Unit =
       graft.pipeline.IndexFamily.span.withLock(dir) {
     graft.pipeline.Dedup.appendSpanToIndex(spark, dir, batch)
-    overwritePartition(
+    IndexStream.overwritePartition(
       graft.pipeline.Dedup.spanCountsOfDocs(batch), batchId, sinkPath)
   }
 
   /** Start the continuous span-index fold over a stream of document
     * rows (doc_id, text). `dir` locates the corpus whose stored
     * spanidx/spanpost tables receive the folds; `sinkPath` receives
-    * batch_id-partitioned per-doc span accounting. On every (re)start
-    * the span family compacts (`IndexFamily.span.compact`, the
-    * AnnStream maintenance shape): each fold appends ≤1 file per
-    * touched bucket to BOTH tables, and file count is the bucketed
-    * scan's bottleneck over a long-lived stream. Pending takedowns
-    * materialize and both span sidecars clear, the same end state
-    * [[graft.pipeline.Maintenance.compactAll]] reaches. A first-ever
-    * start has no tables and compacts nothing. */
+    * batch_id-partitioned per-doc span accounting. Every (re)start
+    * compacts the span family first ([[IndexStream.start]]): each fold
+    * appends ≤1 file per touched bucket to BOTH tables, and both span
+    * sidecars clear. A first-ever start has no tables and compacts
+    * nothing. */
   def start(spark: SparkSession, dir: String, docs: DataFrame,
-      sinkPath: String, checkpoint: String): StreamingQuery = {
-    graft.pipeline.IndexFamily.span.compact(spark, dir)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(spark, dir, batch, sinkPath, batchId)
-      }
-      .start()
-  }
+      sinkPath: String, checkpoint: String): StreamingQuery =
+    IndexStream.start(spark, graft.pipeline.IndexFamily.span, dir, docs,
+        checkpoint) {
+      (batch, batchId) => processBatch(spark, dir, batch, sinkPath, batchId)
+    }
 }

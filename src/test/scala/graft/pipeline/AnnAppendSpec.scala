@@ -145,7 +145,7 @@ class AnnAppendSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val plan = Similarity.annFreshIds(spark, batch, stored)
+      val plan = IndexFamily.ann.freshIds(batch, stored)
         .queryExecution.executedPlan.toString()
       assert(plan.contains("BroadcastHashJoin"), plan)
       assert(!plan.contains("SortMergeJoin") &&
@@ -161,7 +161,7 @@ class AnnAppendSpec extends SparkSpec {
     val (_, touched) = Similarity.encodeBatch(spark, cDir, batch, "trained")
     assert(touched.nonEmpty && touched.size <= Similarity.NumProbes,
       s"a ${Similarity.NumProbes}-vector batch touches at most that many lists")
-    val probe = Similarity.annFreshIds(spark, batch,
+    val probe = IndexFamily.ann.freshIds(batch,
       Similarity.prunedCodeProbe(spark, cDir, "trained", touched))
     val plan = probe.queryExecution.executedPlan.toString()
     val pf = plan.linesIterator.filter(_.contains("PartitionFilters"))

@@ -7,11 +7,11 @@ import org.apache.spark.sql.functions._
 /** The append/compaction half of the stored dedup index (r11 verdict
   * item 2): `Dedup.appendToIndex` folds a new batch into the PERSISTED
   * bucketed posting + shingle tables, so a later delta finds the
-  * earlier batch's pairs through the STORED index alone — no
-  * `extraIndex` union chain. Proofs:
-  *  - a day-2 delta probed with extraIndex = None finds day-1 pairs
-  *    only AFTER day-1 was appended, and the result equals the old
-  *    layered-extraIndex path exactly (the gold standard);
+  * earlier batch's pairs through the STORED index alone. Proofs:
+  *  - a day-2 delta finds day-1 pairs only AFTER day-1 was appended,
+  *    and the result equals the full minhash pass over a combined
+  *    corpus copy restricted to day-2-touching pairs (the gold
+  *    standard);
   *  - appends are idempotent at doc granularity (replay = no-op);
   *  - `IndexFamily.dedup.compact` folds the appended files back to one per
   *    bucket without changing results, and the rewritten table still
@@ -65,10 +65,15 @@ class IndexAppendSpec extends SparkSpec {
     assert(!before.exists(p => day1Ids(p._1) || day1Ids(p._2)),
       "day-1 pairs must not appear before day-1 is appended")
 
-    // gold standard: the old layered-extraIndex path over the same state
-    val day1Sh = Dedup.shinglesOfDocs(day1)
-    val gold = pairs(Dedup.deltaPairs(spark, cDir, day2,
-      extraIndex = Some((Dedup.postingsOf(day1Sh), day1Sh))))
+    // gold standard: the full pass over a combined copy (corpus ∪
+    // day-1 ∪ day-2), restricted to pairs that touch day 2
+    val comb = java.nio.file.Files.createTempDirectory("graft_append_comb")
+      .toString
+    graft.Tables.documents(spark, cDir).unionByName(day1).unionByName(day2)
+      .write.parquet(comb + "/documents.parquet")
+    val day2Ids = day2.select("doc_id").collect().map(_.getLong(0)).toSet
+    val gold = pairs(Dedup.minhashLsh(spark, comb))
+      .filter(p => day2Ids(p._1) || day2Ids(p._2))
     assert(gold.exists(p => day1Ids(p._1) || day1Ids(p._2)),
       "fixture must contain day-1-touching pairs")
 

@@ -78,7 +78,7 @@ class CrossFamilySpec extends SparkSpec {
   private def runDedup(dir: String, sink: String): Unit = {
     val (b1, b2) = dedupBatches(dir)
     DedupStream.processBatch(spark, dir, b1, sink, 0L)
-    DedupStream.foldSideIndex(spark, dir, sink)
+    graft.pipeline.IndexFamily.dedup.compact(spark, dir)
     DedupStream.processBatch(spark, dir, b2, sink, 1L)
   }
 

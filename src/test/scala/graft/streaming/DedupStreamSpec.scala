@@ -1,8 +1,11 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.pipeline.{Dedup, Maintenance}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+
+import IndexStreamFixtures._
 
 /** Batch-parity proof for the continuous near-dup pass: streaming the
   * dedup_incremental delta through DedupStream (split across several
@@ -10,8 +13,19 @@ import org.apache.spark.sql.functions._
   * incremental pass computes on the same delta — the stored index is
   * shared state, so a pair whose members arrive in different batches
   * is still found (each member probes the index, which holds the
-  * other). */
+  * other). Every case that streams NEW documents runs on a private
+  * corpus copy: each micro-batch folds into the corpus index. */
 class DedupStreamSpec extends SparkSpec {
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.select("d1", "d2", "jac").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** (text of the first corpus doc, max corpus doc_id). */
+  private def seed(dir: String): (String, Long) = (
+    graft.Tables.documents(spark, dir).orderBy("doc_id")
+      .select("text").head().getString(0),
+    graft.Tables.documents(spark, dir).agg(max("doc_id")).head().getLong(0))
 
   test("streamed delta equals batch dedup_incremental on the same delta") {
     val s = spark
@@ -60,35 +74,27 @@ class DedupStreamSpec extends SparkSpec {
     * seen. Two copies of one corpus document arrive in two different
     * micro-batches — each must pair with the corpus original (index
     * probe), with every near-dup partner of the original, and with
-    * EACH OTHER (cross-batch new-new, via the stream's side index);
-    * the old shape emitted nothing for all of these. */
+    * EACH OTHER (cross-batch new-new: batch 0 folded its copy into the
+    * stored index before batch 1 probed it). */
   test("genuinely new documents pair with the corpus AND across batches") {
     val s = spark
     import s.implicits._
-    val full = graft.pipeline.Dedup.minhashLsh(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val cDir = freshCorpus(spark, sfDir, "documents", "dedup_new_corpus")
+    val full = pairs(Dedup.minhashLsh(spark, cDir))
     // a corpus doc that has at least one near-dup partner, so the
     // "partners of the original" leg is non-trivial
     val srcId = full.head._1
-    val srcText = graft.Tables.documents(spark, sfDir)
+    val srcText = graft.Tables.documents(spark, cDir)
       .filter(col("doc_id") === srcId).select("text").head().getString(0)
-    val maxId = graft.Tables.documents(spark, sfDir)
-      .agg(max("doc_id")).head().getLong(0)
+    val maxId = seed(cDir)._2
     val n1 = maxId + 1
     val n2 = maxId + 2
 
-    implicit val sqlCtx = s.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val sink = java.nio.file.Files.createTempDirectory("dedup_new_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("dedup_new_ckpt").toString
-    val q = DedupStream.start(spark, sfDir,
-      input.toDF().toDF("doc_id", "text"), sink, ckpt)
-    try {
-      input.addData(Seq((n1, srcText)))
-      q.processAllAvailable()
-      input.addData(Seq((n2, srcText)))
-      q.processAllAvailable()
-    } finally q.stop()
+    val sink = tmp("dedup_new_sink")
+    streamBatches(spark, Seq("doc_id", "text"),
+        Seq((n1, srcText)), Seq((n2, srcText))) {
+      (in, ckpt) => DedupStream.start(spark, cDir, in, sink, ckpt)
+    }()
 
     val partners = full.collect {
       case (a, b, j) if a == srcId => (b, j)
@@ -97,100 +103,101 @@ class DedupStreamSpec extends SparkSpec {
     val expected =
       (for { n <- Seq(n1, n2); (p, j) <- partners + ((srcId, 1.0)) }
         yield (math.min(n, p), math.max(n, p), j)).toSet + ((n1, n2, 1.0))
-    val streamed = spark.read.parquet(sink)
-      .select("d1", "d2", "jac").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val streamed = pairs(spark.read.parquet(sink))
     assert(streamed === expected)
-    // the cross-batch new-new pair is present — the side-index path
+    // the cross-batch new-new pair is present — through the stored index
     assert(streamed.contains((n1, n2, 1.0)))
   }
 
   /** Failure recovery re-runs a batch with the SAME batch_id; the
-    * dynamic-partition-overwrite sink must make that replay replace —
-    * ROW-level equality, not just DISTINCT-set equality. */
+    * idempotent fold and the dynamic-partition-overwrite sink must make
+    * that replay replace — ROW-level equality, not just DISTINCT-set
+    * equality, of the sink AND the stored tables. */
   test("replaying a batch_id is idempotent (row-level, all sinks)") {
     val s = spark
     import s.implicits._
-    val srcText = graft.Tables.documents(spark, sfDir)
-      .select("text").head().getString(0)
-    val maxId = graft.Tables.documents(spark, sfDir)
-      .agg(max("doc_id")).head().getLong(0)
-    val sink = java.nio.file.Files.createTempDirectory("dedup_replay").toString
+    val cDir = freshCorpus(spark, sfDir, "documents", "dedup_replay_corpus")
+    val (srcText, maxId) = seed(cDir)
+    val sink = tmp("dedup_replay")
     def batchDf(id: Long) = Seq((id, srcText)).toDF("doc_id", "text")
-    DedupStream.processBatch(spark, sfDir, batchDf(maxId + 11), sink, 0L)
-    DedupStream.processBatch(spark, sfDir, batchDf(maxId + 12), sink, 1L)
-    def snapshot(path: String): Seq[String] =
-      spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
-    val before =
-      (snapshot(sink), snapshot(sink + "_idx_postings"),
-        snapshot(sink + "_idx_shingles"))
+    DedupStream.processBatch(spark, cDir, batchDf(maxId + 11), sink, 0L)
+    DedupStream.processBatch(spark, cDir, batchDf(maxId + 12), sink, 1L)
+    def snapshot(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def state() = (snapshot(spark.read.parquet(sink)),
+      snapshot(Dedup.minhashIndexTable(spark, cDir, raw = true)),
+      snapshot(Dedup.shingleIndexTable(spark, cDir, raw = true)))
+    val before = state()
     // the replay: batch 1 runs again, identical input, same batch_id
-    DedupStream.processBatch(spark, sfDir, batchDf(maxId + 12), sink, 1L)
-    val after =
-      (snapshot(sink), snapshot(sink + "_idx_postings"),
-        snapshot(sink + "_idx_shingles"))
-    assert(after === before)
+    DedupStream.processBatch(spark, cDir, batchDf(maxId + 12), sink, 1L)
+    assert(state() === before)
     // and nothing duplicated: every (d1, d2) appears exactly once
     val dup = spark.read.parquet(sink).groupBy("d1", "d2")
       .count().filter(col("count") > 1).count()
     assert(dup === 0L)
   }
 
-  /** Restart maintenance (r11 verdict item 2): a restarted stream
-    * folds its side index into the STORED lake tables, so batches of
-    * the new run pair with the previous run's docs through the stored
-    * index alone — the side-table union chain resets to zero instead
-    * of growing for the stream's lifetime. Uses an isolated corpus
-    * copy: the fold appends streamed docs into the corpus-fingerprint
-    * tables, which must never happen to the shared sfDir fixtures. */
-  test("restart folds the side index into the stored lake tables") {
+  /** Restart maintenance: a run's folds land in the STORED lake tables,
+    * a restart compacts them back to one file per bucket, and the new
+    * run's batches still pair with the previous run's docs through the
+    * stored index. */
+  test("restart compacts the stored tables and keeps the cross-run pair") {
     val s = spark
     import s.implicits._
-    val cDir = java.nio.file.Files
-      .createTempDirectory("dedup_fold_corpus").toString
-    graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
-      .write.parquet(cDir + "/documents.parquet")
-    val srcText = graft.Tables.documents(spark, cDir)
-      .select("text").head().getString(0)
-    val maxId = graft.Tables.documents(spark, cDir)
-      .agg(max("doc_id")).head().getLong(0)
-    val sink = java.nio.file.Files.createTempDirectory("dedup_fold").toString
-    val ckpt1 = java.nio.file.Files.createTempDirectory("dedup_fold_c1").toString
-    val ckpt2 = java.nio.file.Files.createTempDirectory("dedup_fold_c2").toString
+    val cDir = freshCorpus(spark, sfDir, "documents", "dedup_restart_corpus")
+    val (srcText, maxId) = seed(cDir)
+    val sink = tmp("dedup_restart")
+    val start = (in: org.apache.spark.sql.DataFrame, ckpt: String) =>
+      DedupStream.start(spark, cDir, in, sink, ckpt)
 
-    // run 1: one NEW doc lands in the side index
-    implicit val sqlCtx = s.sqlContext
-    val in1 = MemoryStream[(Long, String)]
-    val q1 = DedupStream.start(spark, cDir,
-      in1.toDF().toDF("doc_id", "text"), sink, ckpt1)
-    try {
-      in1.addData((maxId + 1, srcText))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(new java.io.File(sink + "_idx_shingles").exists(),
-      "run 1 should have written the side index")
-
-    // run 2 (restart): the side index folds into the stored tables
-    // BEFORE the first batch, so the cross-run pair must come through
-    // the stored index — the side chain is empty
-    val in2 = MemoryStream[(Long, String)]
-    val q2 = DedupStream.start(spark, cDir,
-      in2.toDF().toDF("doc_id", "text"), sink, ckpt2)
-    assert(!new java.io.File(sink + "_idx_shingles").exists(),
-      "restart should have folded and deleted the side index")
-    try {
-      in2.addData((maxId + 2, srcText))
-      q2.processAllAvailable()
-    } finally q2.stop()
-
-    val streamed = spark.read.parquet(sink)
-      .select("d1", "d2", "jac").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(streamed.contains((maxId + 1, maxId + 2, 1.0)),
-      s"cross-run pair missing from $streamed")
-    // and the folded doc really lives in the stored lake table now
-    val storedIds = graft.pipeline.Dedup.shingleIndexTable(spark, cDir)
+    // run 1: one NEW doc folds into the stored tables
+    streamBatches(spark, Seq("doc_id", "text"), Seq((maxId + 1, srcText)))(
+      start)()
+    val storedIds = Dedup.shingleIndexTable(spark, cDir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(storedIds(maxId + 1))
+    assert(storedIds(maxId + 1), "run 1 should have folded its doc")
+
+    // run 2 (restart): compaction runs before the first batch
+    streamBatches(spark, Seq("doc_id", "text"), Seq((maxId + 2, srcText)))(
+      start) { _ =>
+      Seq("graft_minhash_idx_", "graft_shingles_").foreach { t =>
+        assert(filesPerBucket(spark, t, cDir).values.forall(_ <= 1),
+          s"restart should have compacted $t to one file per bucket")
+      }
+    }
+    assert(pairs(spark.read.parquet(sink)).contains((maxId + 1, maxId + 2, 1.0)),
+      "cross-run pair missing")
+  }
+
+  /** A takedown is visible to the very next micro-batch: batch 0 folds
+    * a new doc n1, n1 is taken down, and batch 1's copy n2 of the same
+    * text must not pair with it (it still pairs with the corpus
+    * original). `permanent` removes n1 before batch 0 instead — the
+    * fold's never-reingest filter keeps it out of the index. */
+  private def takedownReachesNextBatch(permanent: Boolean): Unit = {
+    val s = spark
+    import s.implicits._
+    val cDir = freshCorpus(spark, sfDir, "documents", "dedup_td_corpus")
+    val (srcText, maxId) = seed(cDir)
+    val (n1, n2) = (maxId + 1, maxId + 2)
+    val sink = tmp("dedup_td")
+    def takedown() = Maintenance.takedown(spark, cDir, docIds = Seq(n1),
+      permanent = permanent)
+    if (permanent) takedown()
+    streamBatches(spark, Seq("doc_id", "text"),
+        Seq((n1, srcText)), Seq((n2, srcText))) {
+      (in, ckpt) => DedupStream.start(spark, cDir, in, sink, ckpt)
+    } { i => if (i == 1 && !permanent) takedown() }
+    val (naming, all) = batchRows(spark, sink, 1L, ("d1", "d2"), n1)
+    assert(all > 0, "batch 1 should still pair with the corpus original")
+    assert(naming === 0L, s"batch 1 paired the taken-down doc $n1")
+  }
+
+  test("a takedown reaches the next micro-batch") {
+    takedownReachesNextBatch(permanent = false)
+  }
+
+  test("a permanently removed doc never pairs in a later micro-batch") {
+    takedownReachesNextBatch(permanent = true)
   }
 }

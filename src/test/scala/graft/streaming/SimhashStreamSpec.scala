@@ -1,8 +1,11 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.pipeline.{Dedup, Maintenance}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+
+import IndexStreamFixtures._
 
 /** Batch-parity proof for the continuous simhash pass (r11 verdict
   * item 5): streaming a delta through SimhashStream (split across
@@ -10,8 +13,16 @@ import org.apache.spark.sql.functions._
   * `dedup_simhash` operator restricted to delta-touching pairs — same
   * signature kernel, same triple keys, same canonical-emission +
   * hamming arithmetic, so the only degree of freedom is the candidate
-  * restriction, which must be lossless for pairs with a delta member. */
+  * restriction, which must be lossless for pairs with a delta member.
+  * Every case that streams NEW documents runs on a private corpus
+  * copy: each micro-batch folds into the corpus index. */
 class SimhashStreamSpec extends SparkSpec {
+
+  /** (text of the first corpus doc, max corpus doc_id). */
+  private def seed(dir: String): (String, Long) = (
+    graft.Tables.documents(spark, dir).orderBy("doc_id")
+      .select("text").head().getString(0),
+    graft.Tables.documents(spark, dir).agg(max("doc_id")).head().getLong(0))
 
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1),
@@ -53,89 +64,112 @@ class SimhashStreamSpec extends SparkSpec {
   }
 
   test("new documents pair with the corpus AND across micro-batches") {
-    val s = spark
-    import s.implicits._
-    val srcText = graft.Tables.documents(spark, sfDir)
-      .select("text").head().getString(0)
-    val maxId = graft.Tables.documents(spark, sfDir)
-      .agg(max("doc_id")).head().getLong(0)
+    val cDir = freshCorpus(spark, sfDir, "documents", "sh_new_corpus")
+    val (srcText, maxId) = seed(cDir)
     val n1 = maxId + 21
     val n2 = maxId + 22
 
-    implicit val sqlCtx = s.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val sink = java.nio.file.Files.createTempDirectory("sh_new_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sh_new_ckpt").toString
-    val q = SimhashStream.start(spark, sfDir,
-      input.toDF().toDF("doc_id", "text"), sink, ckpt)
-    try {
-      input.addData((n1, srcText))
-      q.processAllAvailable()
-      input.addData((n2, srcText))
-      q.processAllAvailable()
-    } finally q.stop()
+    val sink = tmp("sh_new_sink")
+    val s = spark
+    import s.implicits._
+    streamBatches(spark, Seq("doc_id", "text"),
+        Seq((n1, srcText)), Seq((n2, srcText))) {
+      (in, ckpt) => SimhashStream.start(spark, cDir, in, sink, ckpt)
+    }()
 
     val streamed = pairs(spark.read.parquet(sink)
       .select("d1", "d2", "hamming"))
     // identical text => identical signature => hamming 0, found via the
-    // SIDE index (n1 was never in the corpus posting table)
+    // STORED index (batch 0 folded n1 into it before batch 1 probed)
     assert(streamed.contains((n1, n2, 0L)),
       s"cross-batch new-new pair missing from $streamed")
     // and each copy paired with the corpus original through the stored
     // index (hamming 0 against the source doc)
-    val srcId = graft.Tables.documents(spark, sfDir)
+    val srcId = graft.Tables.documents(spark, cDir)
       .filter(col("text") === srcText)
       .agg(min("doc_id")).head().getLong(0)
     assert(streamed.contains((srcId, n1, 0L)) || streamed.contains((srcId, n2, 0L)),
       s"corpus pair missing from $streamed")
   }
 
-  /** Restart maintenance: the side posting chain folds into the STORED
-    * triple index, so the new run's batches pair with the previous
-    * run's docs through the lake table alone. Isolated corpus copy —
-    * the fold grows the corpus index, which must never happen to the
-    * shared sfDir fixtures. */
-  test("restart folds the side index into the stored lake table") {
+  /** Failure recovery re-runs a batch with the SAME batch_id: the fold
+    * appends nothing twice and the sink partition is rewritten with
+    * identical rows — the sink AND the stored table, row for row. */
+  test("replaying a batch_id rewrites identical sink and stored rows") {
     val s = spark
     import s.implicits._
-    val cDir = java.nio.file.Files
-      .createTempDirectory("sh_fold_corpus").toString
-    graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
-      .write.parquet(cDir + "/documents.parquet")
-    val srcText = graft.Tables.documents(spark, cDir)
-      .select("text").head().getString(0)
-    val maxId = graft.Tables.documents(spark, cDir)
-      .agg(max("doc_id")).head().getLong(0)
-    val sink = java.nio.file.Files.createTempDirectory("sh_fold").toString
-    val c1 = java.nio.file.Files.createTempDirectory("sh_fold_c1").toString
-    val c2 = java.nio.file.Files.createTempDirectory("sh_fold_c2").toString
+    val cDir = freshCorpus(spark, sfDir, "documents", "sh_replay_corpus")
+    val (srcText, maxId) = seed(cDir)
+    val sink = tmp("sh_replay")
+    def batchDf(id: Long) = Seq((id, srcText)).toDF("doc_id", "text")
+    SimhashStream.processBatch(spark, cDir, batchDf(maxId + 11), sink, 0L)
+    SimhashStream.processBatch(spark, cDir, batchDf(maxId + 12), sink, 1L)
+    def snapshot(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def state() = (snapshot(spark.read.parquet(sink)),
+      snapshot(Dedup.simhashIndexTable(spark, cDir, raw = true)))
+    val before = state()
+    SimhashStream.processBatch(spark, cDir, batchDf(maxId + 12), sink, 1L)
+    assert(state() === before)
+  }
 
-    implicit val sqlCtx = s.sqlContext
-    val in1 = MemoryStream[(Long, String)]
-    val q1 = SimhashStream.start(spark, cDir,
-      in1.toDF().toDF("doc_id", "text"), sink, c1)
-    try {
-      in1.addData((maxId + 1, srcText))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(new java.io.File(sink + "_idx_postings").exists())
+  /** Restart maintenance: a run's folds land in the STORED triple
+    * index, a restart compacts it back to one file per bucket, and the
+    * new run's batches still pair with the previous run's docs. */
+  test("restart compacts the stored table and keeps the cross-run pair") {
+    val cDir = freshCorpus(spark, sfDir, "documents", "sh_restart_corpus")
+    val (srcText, maxId) = seed(cDir)
+    val sink = tmp("sh_restart")
+    val s = spark
+    import s.implicits._
+    val start = (in: org.apache.spark.sql.DataFrame, ckpt: String) =>
+      SimhashStream.start(spark, cDir, in, sink, ckpt)
 
-    val in2 = MemoryStream[(Long, String)]
-    val q2 = SimhashStream.start(spark, cDir,
-      in2.toDF().toDF("doc_id", "text"), sink, c2)
-    assert(!new java.io.File(sink + "_idx_postings").exists(),
-      "restart should have folded and deleted the side index")
-    try {
-      in2.addData((maxId + 2, srcText))
-      q2.processAllAvailable()
-    } finally q2.stop()
+    streamBatches(spark, Seq("doc_id", "text"), Seq((maxId + 1, srcText)))(
+      start)()
+    val storedIds = Dedup.simhashIndexTable(spark, cDir)
+      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    assert(storedIds(maxId + 1), "run 1 should have folded its doc")
 
+    streamBatches(spark, Seq("doc_id", "text"), Seq((maxId + 2, srcText)))(
+      start) { _ =>
+      assert(filesPerBucket(spark, "graft_simhash_idx_", cDir)
+        .values.forall(_ <= 1),
+        "restart should have compacted the index to one file per bucket")
+    }
     val streamed = pairs(spark.read.parquet(sink)
       .select("d1", "d2", "hamming"))
     assert(streamed.contains((maxId + 1, maxId + 2, 0L)),
       s"cross-run pair missing from $streamed")
-    val storedIds = graft.pipeline.Dedup.simhashIndexTable(spark, cDir)
-      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(storedIds(maxId + 1))
+  }
+
+  /** A takedown is visible to the very next micro-batch (the
+    * DedupStreamSpec case): the taken-down new doc n1 never pairs with
+    * batch 1's copy n2. */
+  private def takedownReachesNextBatch(permanent: Boolean): Unit = {
+    val s = spark
+    import s.implicits._
+    val cDir = freshCorpus(spark, sfDir, "documents", "sh_td_corpus")
+    val (srcText, maxId) = seed(cDir)
+    val (n1, n2) = (maxId + 1, maxId + 2)
+    val sink = tmp("sh_td")
+    def takedown() = Maintenance.takedown(spark, cDir, docIds = Seq(n1),
+      permanent = permanent)
+    if (permanent) takedown()
+    streamBatches(spark, Seq("doc_id", "text"),
+        Seq((n1, srcText)), Seq((n2, srcText))) {
+      (in, ckpt) => SimhashStream.start(spark, cDir, in, sink, ckpt)
+    } { i => if (i == 1 && !permanent) takedown() }
+    val (naming, all) = batchRows(spark, sink, 1L, ("d1", "d2"), n1)
+    assert(all > 0, "batch 1 should still pair with the corpus original")
+    assert(naming === 0L, s"batch 1 paired the taken-down doc $n1")
+  }
+
+  test("a takedown reaches the next micro-batch") {
+    takedownReachesNextBatch(permanent = false)
+  }
+
+  test("a permanently removed doc never pairs in a later micro-batch") {
+    takedownReachesNextBatch(permanent = true)
   }
 }
