@@ -24,7 +24,13 @@ object Api {
     * cell mask of a simple exterior ring minus any interior rings
     * (holes). */
   final case class PolygonArea(ring: Seq[(Double, Double)],
-      holes: Seq[Seq[(Double, Double)]] = Nil) extends SelectedArea
+      holes: Seq[Seq[(Double, Double)]] = Nil) extends SelectedArea {
+    private[api] def grid: Geometry.GridPolygon = {
+      def pts(r: Seq[(Double, Double)]) =
+        r.map { case (px, py) => Geometry.Pt(px, py) }
+      Geometry.GridPolygon(pts(ring), holes.map(pts))
+    }
+  }
   /** GeoJSON Feature / FeatureCollection (geometry.py:216-225): union
     * mask of several polygon shapes — each a full Polygon WITH its
     * interior rings (a Feature's holes subtract exactly as they do for
@@ -349,55 +355,14 @@ object Api {
     if (req.bandRange._2 < avail._1 || req.bandRange._1 > avail._2)
       throw TimeRangeContainmentError(
         s"band range ${req.bandRange} outside available $avail")
-    // polygon shapes: validity (geometry.py:160-164) → bounds
-    // ('T********', geometry.py:165-172) → mask-window cell budget
-    // (geometry.py:118-122 guards on the raster window = the bbox)
-    def toPoly(ring: Seq[(Double, Double)],
-        holes: Seq[Seq[(Double, Double)]] = Nil): Geometry.GridPolygon =
-      Geometry.GridPolygon(ring.map { case (px, py) => Geometry.Pt(px, py) },
-        holes.map(_.map { case (px, py) => Geometry.Pt(px, py) }))
-    def validatedShapes(shapes: Seq[Geometry.GridPolygon]): Geometry.GridFeatureCollection = {
-      shapes.foreach { p =>
-        try p.validate()
-        catch { case e: Geometry.PolygonIsNotValid =>
-          throw SelectedAreaPolygonIsNotValidError(e.getMessage)
-        }
-        if (!p.interiorIntersectsGrid())
-          throw SelectedAreaOutOfBoundsError(
-            "no interior point of the selected area intersects an interior point of the dataset region")
-        val bw = math.floor(p.vertices.map(_.x).max).toLong -
-          math.floor(p.vertices.map(_.x).min).toLong + 1
-        val bh = math.floor(p.vertices.map(_.y).max).toLong -
-          math.floor(p.vertices.map(_.y).min).toLong + 1
-        if (bw * bh > MaxCells) throw SelectedAreaTooLargeError(bw * bh, MaxCells)
+    validateArea(req.selectedArea)
+    val polyShapes: Option[Geometry.GridFeatureCollection] =
+      req.selectedArea match {
+        case p: PolygonArea => Some(Geometry.GridFeatureCollection(Seq(p.grid)))
+        case FeatureCollectionArea(fs) =>
+          Some(Geometry.GridFeatureCollection(fs.map(_.grid)))
+        case _ => None
       }
-      Geometry.GridFeatureCollection(shapes)
-    }
-
-    val polyShapes: Option[Geometry.GridFeatureCollection] = req.selectedArea match {
-      case PolygonArea(ring, holes) =>
-        Some(validatedShapes(Seq(toPoly(ring, holes))))
-      case FeatureCollectionArea(fs) =>
-        Some(validatedShapes(fs.map(p => toPoly(p.ring, p.holes))))
-      case BBoxArea(x0, x1, y0, y1)
-          if x1 < 0 || y1 < 0 || x0 >= EventCube.GridWidth ||
-            y0 >= Geometry.GridHeight =>
-        throw SelectedAreaOutOfBoundsError(
-          "no interior point of the selected area intersects the dataset region")
-      case BBoxArea(x0, x1, y0, y1)
-          if (x1 - x0 + 1).toLong * (y1 - y0 + 1).toLong > MaxCells =>
-        throw SelectedAreaTooLargeError(
-          (x1 - x0 + 1).toLong * (y1 - y0 + 1).toLong, MaxCells)
-      // a point is a 1-cell mask; out-of-grid cells (including the
-      // wrapped cells a negative x would alias to) are a bounds error
-      // like the reference's rasterio index check (geometry.py:81-103)
-      case PointArea(cell)
-          if cell < 0 ||
-            cell >= EventCube.GridWidth.toLong * Geometry.GridHeight =>
-        throw SelectedAreaOutOfBoundsError(
-          s"point cell $cell is outside the dataset region")
-      case _ => None
-    }
 
     // get_desired_band_range_adjustment (timeseries.py:402-431): the
     // extraction range = requested range widened by the transform's and
@@ -544,6 +509,50 @@ object Api {
     TimeseriesResult.fromFrames(seriesOut, stats, selection, timeRange,
       datasetId = req.datasetId, variableId = req.variableId,
       transform = req.transform, zonalStatistic = req.zonalStatistic)
+  }
+
+  /** The reference's selected-area guards, shared by the per-request
+    * and the batch path. A polygon shape: validity (geometry.py:160-164)
+    * → bounds ('T********', geometry.py:165-172) → mask-window cell
+    * budget (geometry.py:118-122 guards on the raster window = the
+    * bbox), each shape of a collection in turn. A bbox: bounds →
+    * budget. A point is a 1-cell mask; out-of-grid cells (including
+    * the wrapped cells a negative x would alias to) are a bounds error
+    * like the reference's rasterio index check (geometry.py:81-103).
+    * O(1) per point or bbox and O(ring) per polygon, never O(cells).
+    * Returns the area's cell-count upper bound (the bbox product). */
+  private[api] def validateArea(a: SelectedArea): Long = a match {
+    case PointArea(cell) =>
+      if (cell < 0 || cell >= EventCube.GridWidth.toLong * Geometry.GridHeight)
+        throw SelectedAreaOutOfBoundsError(
+          s"point cell $cell is outside the dataset region")
+      1L
+    case BBoxArea(x0, x1, y0, y1) =>
+      if (x1 < 0 || y1 < 0 || x0 >= EventCube.GridWidth ||
+          y0 >= Geometry.GridHeight)
+        throw SelectedAreaOutOfBoundsError(
+          "no interior point of the selected area intersects the dataset region")
+      val cells = (x1 - x0 + 1).toLong * (y1 - y0 + 1).toLong
+      if (cells > MaxCells) throw SelectedAreaTooLargeError(cells, MaxCells)
+      cells
+    case p: PolygonArea => validatePolygon(p.grid)
+    case FeatureCollectionArea(fs) => fs.map(p => validatePolygon(p.grid)).sum
+  }
+
+  private def validatePolygon(p: Geometry.GridPolygon): Long = {
+    try p.validate()
+    catch { case e: Geometry.PolygonIsNotValid =>
+      throw SelectedAreaPolygonIsNotValidError(e.getMessage)
+    }
+    if (!p.interiorIntersectsGrid())
+      throw SelectedAreaOutOfBoundsError(
+        "no interior point of the selected area intersects an interior point of the dataset region")
+    val bw = math.floor(p.vertices.map(_.x).max).toLong -
+      math.floor(p.vertices.map(_.x).min).toLong + 1
+    val bh = math.floor(p.vertices.map(_.y).max).toLong -
+      math.floor(p.vertices.map(_.y).min).toLong + 1
+    if (bw * bh > MaxCells) throw SelectedAreaTooLargeError(bw * bh, MaxCells)
+    bw * bh
   }
 
   private def smootherAdj(s: Smoother): (Int, Int) = s match {
@@ -795,17 +804,11 @@ object Api {
         y <- math.max(y0, 0).toLong to y1.toLong
         x <- math.max(x0, 0).toLong to math.min(x1, EventCube.GridWidth - 1).toLong
       } yield y * EventCube.GridWidth + x
-    case PolygonArea(ring, holes) =>
-      Geometry.GridPolygon(
-        ring.map { case (px, py) => Geometry.Pt(px, py) },
-        holes.map(_.map { case (px, py) => Geometry.Pt(px, py) }))
-        .coveredCells(height = Int.MaxValue)
+    case p: PolygonArea =>
+      p.grid.coveredCells(height = Int.MaxValue)
         .map { case (x, y) => y * EventCube.GridWidth + x }
     case FeatureCollectionArea(fs) =>
-      Geometry.GridFeatureCollection(fs.map(p =>
-        Geometry.GridPolygon(
-          p.ring.map { case (px, py) => Geometry.Pt(px, py) },
-          p.holes.map(_.map { case (px, py) => Geometry.Pt(px, py) }))))
+      Geometry.GridFeatureCollection(fs.map(_.grid))
         .coveredCells(height = Int.MaxValue)
         .map { case (x, y) => y * EventCube.GridWidth + x }
   }
@@ -833,69 +836,7 @@ object Api {
     require(selections.nonEmpty, "batch needs at least one selection")
     val part = Seq("selection_id")
 
-    // the same per-shape validation as the single-request path
-    // (validity → typed error, bounds, cell budget): a batch selection
-    // must not bypass the reference's guards (geometry.py:111-172)
-    def validatedPoly(ring: Seq[(Double, Double)],
-        holes: Seq[Seq[(Double, Double)]]): Geometry.GridPolygon = {
-      val p = Geometry.GridPolygon(
-        ring.map { case (px, py) => Geometry.Pt(px, py) },
-        holes.map(_.map { case (px, py) => Geometry.Pt(px, py) }))
-      try p.validate()
-      catch { case e: Geometry.PolygonIsNotValid =>
-        throw SelectedAreaPolygonIsNotValidError(e.getMessage)
-      }
-      if (!p.interiorIntersectsGrid())
-        throw SelectedAreaOutOfBoundsError(
-          "no interior point of the selected area intersects an interior point of the dataset region")
-      val bw = math.floor(p.vertices.map(_.x).max).toLong -
-        math.floor(p.vertices.map(_.x).min).toLong + 1
-      val bh = math.floor(p.vertices.map(_.y).max).toLong -
-        math.floor(p.vertices.map(_.y).min).toLong + 1
-      if (bw * bh > MaxCells) throw SelectedAreaTooLargeError(bw * bh, MaxCells)
-      p
-    }
-
-    // Per-selection validation (identical guards to the per-request
-    // path per shape) SPLIT from cell enumeration: validation is O(1)
-    // per point/bbox and O(ring) per polygon — never O(cells) — and
-    // always runs on the driver so the typed error surface is
-    // preserved; returns the selection's cell-count upper bound (bbox
-    // product, MaxCells-checked) so the aggregate decides WHERE the
-    // enumeration itself runs (see selCells below).
-    def polyBBoxCells(p: Geometry.GridPolygon): Long = {
-      val bw = math.floor(p.vertices.map(_.x).max).toLong -
-        math.floor(p.vertices.map(_.x).min).toLong + 1
-      val bh = math.floor(p.vertices.map(_.y).max).toLong -
-        math.floor(p.vertices.map(_.y).min).toLong + 1
-      bw * bh
-    }
-    def validateArea(a: SelectedArea): Long = a match {
-      case PointArea(cell) =>
-        if (cell < 0 || cell >= EventCube.GridWidth.toLong * Geometry.GridHeight)
-          throw SelectedAreaOutOfBoundsError(
-            s"point cell $cell is outside the dataset region")
-        1L
-      case BBoxArea(x0, x1, y0, y1) =>
-        if (x1 < 0 || y1 < 0 || x0 >= EventCube.GridWidth ||
-            y0 >= Geometry.GridHeight)
-          throw SelectedAreaOutOfBoundsError(
-            "no interior point of the selected area intersects the dataset region")
-        if ((x1 - x0 + 1).toLong * (y1 - y0 + 1).toLong > MaxCells)
-          throw SelectedAreaTooLargeError(
-            (x1 - x0 + 1).toLong * (y1 - y0 + 1).toLong, MaxCells)
-        (x1 - x0 + 1).toLong * (y1 - y0 + 1).toLong
-      case PolygonArea(ring, holes) =>
-        polyBBoxCells(validatedPoly(ring, holes))
-      case FeatureCollectionArea(fs) =>
-        fs.map(p => polyBBoxCells(validatedPoly(p.ring, p.holes))).sum
-    }
-
-    val (back, fwd) = smoother match {
-      case NoSmoother => (0, 0)
-      case MovingAverageSmoother(true, w) => (w / 2, w / 2)
-      case MovingAverageSmoother(false, w) => (w, 0)
-    }
+    val (back, fwd) = smootherAdj(smoother)
     val tBack = transform match {
       case ZScoreMovingInterval(w) => w
       case _ => 0
@@ -926,6 +867,9 @@ object Api {
     //    runtime shuffle sizes.
     // A cell can belong to many selections; the join fans each cube
     // row out to exactly those.
+    // validateArea: the single-request path's guards, on the driver so
+    // the typed error surface is preserved; the sum of the per-selection
+    // cell bounds decides where the enumeration runs
     val totalCellBound = selections.iterator.map(s => validateArea(s.area)).sum
     val selCells = {
       import spark.implicits._

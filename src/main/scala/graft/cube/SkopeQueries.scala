@@ -1282,7 +1282,7 @@ object SkopeQueries {
     * discards its staging copy and uses the winner's — a directory at
     * the final name is complete BY CONSTRUCTION, including one left by
     * a reused PID after a container restart (content is deterministic).
-    * The recoverBucketed staging discipline applied to bench fixtures.
+    * The staging discipline of `TableIO.materialize` applied to bench fixtures.
     * The directory is deleted when this JVM exits; a writer that throws
     * has its staging copy deleted at once. */
   private[cube] def atomicFixtureDir(dir: java.io.File)(

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.concurrent.TrieMap
@@ -83,6 +83,28 @@ private[graft] object ArtifactCache {
     try slot.get.asInstanceOf[T]
     catch { case t: Throwable => m.remove(key, slot); throw t }
   }
+
+  /** A trained driver value (weights, codebooks, merges) that
+    * outlives the session as a small one-file catalog table: the memo
+    * first; else `decode` of the table a previous session left; else
+    * `build` trains it and `encode` writes its rows. `table` is named
+    * by the caller (fingerprint- and generation-named) and resolved
+    * only on a memo miss. Doubles and strings round-trip parquet
+    * exactly, so a reloaded value IS the trained value. */
+  def persisted[T](spark: SparkSession, key: String, table: => String)(
+      decode: DataFrame => T)(build: => T)(encode: T => DataFrame): T =
+    memo(spark, key) {
+      val tbl = table
+      if (spark.catalog.tableExists(tbl)) decode(spark.table(tbl))
+      else {
+        val v = build
+        encode(v).coalesce(1).write.mode(SaveMode.Overwrite)
+          .format("parquet")
+          .option("path", graft.sources.TableIO.indexPath(tbl))
+          .saveAsTable(tbl)
+        v
+      }
+    }
 
   /** [[memo]] for frames: the stored frame is persisted. */
   def cached(spark: SparkSession, key: String)

@@ -105,7 +105,7 @@ object Bpe {
   /** Train the merge sequence on `dir`'s documents — or read it back
     * from the fingerprint-named sidecar a previous session left: the
     * trained tokenizer is a write-time artifact exactly like the PQ
-    * codebooks (persistedBook discipline), so a serving session never
+    * codebooks ([[ArtifactCache.persisted]]), so a serving session never
     * re-pays the corpus word count. The in-memory memo sits on top for
     * repeat calls inside one session; training itself is one
     * distributed word-count shuffle + a driver merge loop over the
@@ -114,27 +114,20 @@ object Bpe {
     * exact. */
   private[graft] def trainMerges(spark: SparkSession,
       dir: String): Seq[(String, String)] =
-    ArtifactCache.memo(spark, s"bpe:$dir") {
-      val tbl = "graft_bpe_" + bpeGenSuffix(spark, dir)
-      if (spark.catalog.tableExists(tbl))
-        spark.table(tbl).collect()
-          .sortBy(_.getInt(0))
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-      else {
-        val merges = trainFresh(spark, dir)
-        import spark.implicits._
-        val path = graft.sources.TableIO.indexPath(tbl)
-        merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
-          .toDF("rank", "l", "r").coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").option("path", path).saveAsTable(tbl)
-        merges
-      }
-    }
+    persistedMerges(spark, s"bpe:$dir", "graft_bpe_" + bpeGenSuffix(spark, dir))(
+      trainLoop(spark, dir, Merges, failOnDry = true))
 
-  private def trainFresh(spark: SparkSession,
-      dir: String): Seq[(String, String)] =
-    trainLoop(spark, dir, Merges, failOnDry = true)
+  /** A merge sequence persisted as (rank, l, r) rows
+    * ([[ArtifactCache.persisted]]). */
+  private def persistedMerges(spark: SparkSession, key: String,
+      table: => String)(train: => Seq[(String, String)]): Seq[(String, String)] =
+    ArtifactCache.persisted(spark, key, table)(
+      _.collect().sortBy(_.getInt(0))
+        .map(r => (r.getString(1), r.getString(2))).toSeq)(train) { merges =>
+      import spark.implicits._
+      merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
+        .toDF("rank", "l", "r")
+    }
 
   /** The shared training loop. `failOnDry` guards the ORACLE table:
     * its SQL replay is a fixed-length CTE chain that would silently
@@ -198,23 +191,9 @@ object Bpe {
     * the trainMerges discipline. */
   private[graft] def trainMergesK(spark: SparkSession, dir: String,
       k: Int): Seq[(String, String)] =
-    ArtifactCache.memo(spark, s"bpe:$dir:k$k") {
-      val tbl = s"graft_bpek${k}_" + bpeGenSuffix(spark, dir)
-      if (spark.catalog.tableExists(tbl))
-        spark.table(tbl).collect()
-          .sortBy(_.getInt(0))
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-      else {
-        val merges = trainLoop(spark, dir, k, failOnDry = false)
-        import spark.implicits._
-        val path = graft.sources.TableIO.indexPath(tbl)
-        merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
-          .toDF("rank", "l", "r").coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").option("path", path).saveAsTable(tbl)
-        merges
-      }
-    }
+    persistedMerges(spark, s"bpe:$dir:k$k",
+      s"graft_bpek${k}_" + bpeGenSuffix(spark, dir))(
+      trainLoop(spark, dir, k, failOnDry = false))
 
   /** The `|tok||tok|` representation of a document's words after all
     * trained merges — a chain of codegen'd `replace` calls (StringReplace,

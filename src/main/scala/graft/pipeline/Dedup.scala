@@ -383,10 +383,6 @@ object Dedup {
       java.lang.Long.toHexString(r.getLong(0) * 31L + r.getLong(1))
     }
 
-  private def indexTableName(spark: SparkSession, dir: String,
-      prefix: String): String =
-    IndexFamily.name(spark, dir, prefix, Registry.Doc)
-
   /** The shingle-array table as a PERSISTED bucketed lake table —
     * the OTHER half of the stored dedup index: the incremental pass's
     * exact verification needs per-doc shingle sets for both pair
@@ -396,27 +392,13 @@ object Dedup {
     * builds hash tables straight off the scan. Written once per
     * corpus alongside [[minhashIndexTable]]. */
   private[graft] def shingleIndexTable(spark: SparkSession,
-      dir: String, raw: Boolean = false): DataFrame = {
-    val tbl = indexTableName(spark, dir, "graft_shingles_")
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      // recoverBucketed first: a compaction that crashed in its drop
-      // window left a staging snapshot holding corpus + folds, which a
-      // fresh corpus rebuild would silently lose
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("doc_id"), IndexBuckets))
-        graft.sources.TableIO.writeBucketed(
-          Registry.minus(spark, shingleArrays(spark, dir), dir,
-            Registry.Doc, "doc_id"),
-          tbl, path, Seq("doc_id"), IndexBuckets)
-    }
-    // raw = the PHYSICAL table (append-path freshness probes, so a
-    // tombstoned doc stays "known" and replays stay no-ops); default
-    // view subtracts the family's deletion sidecar AND the permanent
-    // registry (which outlives sidecar clears — Registry contract)
-    if (raw) spark.table(tbl)
-    else IndexFamily.dedup.view(spark, dir, spark.table(tbl))
-  }
+      dir: String, raw: Boolean = false): DataFrame =
+    // the default view subtracts the family's deletion sidecar AND the
+    // permanent registry (which outlives sidecar clears — Registry
+    // contract)
+    IndexFamily.dedup.shingles.read(spark, dir, raw)(
+      Registry.minus(spark, shingleArrays(spark, dir), dir,
+        Registry.Doc, "doc_id"))
 
   /** The minhash posting index as a PERSISTED bucketed lake table —
     * the write-time artifact SURVEY §2 describes: it survives the
@@ -427,20 +409,10 @@ object Dedup {
     * (catalog existence check), read back through the catalog so the
     * planner trusts the bucket spec. */
   private[graft] def minhashIndexTable(spark: SparkSession,
-      dir: String, raw: Boolean = false): DataFrame = {
-    val tbl = indexTableName(spark, dir, "graft_minhash_idx_")
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("k"), IndexBuckets))
-        graft.sources.TableIO.writeBucketed(
-          Registry.minus(spark, minhashPostings(spark, dir), dir,
-            Registry.Doc, "doc_id"),
-          tbl, path, Seq("k"), IndexBuckets)
-    }
-    if (raw) spark.table(tbl)
-    else IndexFamily.dedup.view(spark, dir, spark.table(tbl))
-  }
+      dir: String, raw: Boolean = false): DataFrame =
+    IndexFamily.dedup.minhash.read(spark, dir, raw)(
+      Registry.minus(spark, minhashPostings(spark, dir), dir,
+        Registry.Doc, "doc_id"))
 
   /** Append a batch of documents into BOTH stored index tables — the
     * lake-maintenance write the r11 verdict asked for: day-1 batches
@@ -454,7 +426,7 @@ object Dedup {
     * [[IndexFamily.freshIds]]: a broadcast semi-join of the tiny batch
     * id list over the bucketed scan (map-only, no exchange), never a
     * full-corpus anti-join. Appends preserve the bucket layout
-    * (TableIO.appendBucketed — at most one new file per bucket per
+    * ([[IndexTable.append]] — at most one new file per bucket per
     * batch); `IndexFamily.dedup.compact` folds the accumulated files
     * back to one per bucket nightly. Returns the number of docs
     * actually appended. */
@@ -475,8 +447,6 @@ object Dedup {
     // identity when nothing was ever permanently removed)
     val batchSh = Registry.minus(spark, batchShIn, dir,
       Registry.Doc, "doc_id")
-    val shingleTbl = indexTableName(spark, dir, "graft_shingles_")
-    val minhashTbl = indexTableName(spark, dir, "graft_minhash_idx_")
     // ensure both tables exist before appending (first ingest into a
     // fresh corpus creates them from the corpus itself)
     // PHYSICAL tables (raw): a tombstoned doc must stay "known" here,
@@ -497,14 +467,12 @@ object Dedup {
     val freshMh = IndexFamily.dedup.freshIdSeq(batchSh, storedMh)
     val freshSh = IndexFamily.dedup.freshIdSeq(batchSh, storedSh)
     if (freshMh.nonEmpty)
-      graft.sources.TableIO.appendBucketed(spark,
-        postingsOf(batchSh.join(broadcast(freshMh.toDF("doc_id")), "doc_id")),
-        minhashTbl, Seq("k"), IndexBuckets)
+      IndexFamily.dedup.minhash.append(spark, dir,
+        postingsOf(batchSh.join(broadcast(freshMh.toDF("doc_id")), "doc_id")))
     if (freshSh.nonEmpty)
-      graft.sources.TableIO.appendBucketed(spark,
+      IndexFamily.dedup.shingles.append(spark, dir,
         batchSh.join(broadcast(freshSh.toDF("doc_id")), "doc_id")
-          .select(col("doc_id"), col("hs")),
-        shingleTbl, Seq("doc_id"), IndexBuckets)
+          .select(col("doc_id"), col("hs")))
     // docs brought fully up to date by THIS call (max: a healing
     // replay that only backfills one table still did that table's work)
     math.max(freshMh.length, freshSh.length).toLong
@@ -559,17 +527,15 @@ object Dedup {
     // never-reingest filter (Registry contract; identity when empty)
     val batchPost = Registry.minus(spark, batchPostIn, dir,
       Registry.Doc, "doc_id")
-    val tbl = indexTableName(spark, dir, "graft_simhash_idx_")
     // driver-pinned fresh id list (the appendShingles discipline):
     // single-table append here, but the same determinism rule applies
     import spark.implicits._
     val freshIdSeq = IndexFamily.simhash.freshIdSeq(batchPost,
       simhashIndexTable(spark, dir, raw = true))
     val n = freshIdSeq.length.toLong
-    if (n > 0) graft.sources.TableIO.appendBucketed(spark,
+    if (n > 0) IndexFamily.simhash.postings.append(spark, dir,
       batchPost.join(broadcast(freshIdSeq.toDF("doc_id")), "doc_id")
-        .select(col("k"), col("doc_id"), col("sim"), col("t")),
-      tbl, Seq("k"), IndexBuckets)
+        .select(col("k"), col("doc_id"), col("sim"), col("t")))
     n
   }
 
@@ -713,21 +679,11 @@ object Dedup {
     * payload for the hamming filter), t (triple id, payload for the
     * canonical-emission filter). */
   private[graft] def simhashIndexTable(spark: SparkSession,
-      dir: String, raw: Boolean = false): DataFrame = {
-    val tbl = indexTableName(spark, dir, "graft_simhash_idx_")
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("k"), IndexBuckets))
-        graft.sources.TableIO.writeBucketed(
-          Registry.minus(spark,
-            simhashPostingsOfDocs(simhashSigs(spark, dir)), dir,
-            Registry.Doc, "doc_id"),
-          tbl, path, Seq("k"), IndexBuckets)
-    }
-    if (raw) spark.table(tbl)
-    else IndexFamily.simhash.view(spark, dir, spark.table(tbl))
-  }
+      dir: String, raw: Boolean = false): DataFrame =
+    IndexFamily.simhash.postings.read(spark, dir, raw)(
+      Registry.minus(spark,
+        simhashPostingsOfDocs(simhashSigs(spark, dir)), dir,
+        Registry.Doc, "doc_id"))
 
   /** Triple-key posting rows for an arbitrary (doc_id, sim) signature
     * frame — the per-batch half of the streaming simhash pass (the
@@ -869,7 +825,7 @@ object Dedup {
       del.foreach(id => h = h * 1000003L + id)
       "_d" + java.lang.Long.toHexString(h)
     }
-    indexTableName(spark, dir, "graft_clusters_") + dfp
+    IndexFamily.name(spark, dir, "graft_clusters_", Registry.Doc) + dfp
   }
 
   private def clustersBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -1286,24 +1242,19 @@ object Dedup {
     * (r13 verdict item 3) instead of re-paying the discovery pass. */
   private[graft] def spanIndexTable(spark: SparkSession,
       dir: String, raw: Boolean = false): DataFrame = {
-    val tbl = indexTableName(spark, dir, "graft_spanidx_")
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("doc_id"), IndexBuckets)) {
-        val (starts, release) = dupSpanStarts(spark, dir)
-        try graft.sources.TableIO.writeBucketed(
-          starts, tbl, path, Seq("doc_id"), IndexBuckets)
-        finally release()
-      }
-    }
     // deletion view: the doc sidecar drops the deleted docs' own rows;
     // the demotion sidecar drops SURVIVING docs' rows whose span
     // stopped being duplicated when its only other occurrence was
     // deleted ([[demoteSpans]]' reverse of the append's singleton
-    // promotion) — validity-filtered, see [[validSpanDemotions]]
-    if (raw) spark.table(tbl)
-    else IndexFamily.span.view(spark, dir, spark.table(tbl), demoted = true)
+    // promotion) — validity-filtered, see [[validSpanDemotions]].
+    // The discovery pass's persisted slices are released once the
+    // build has been written.
+    var release: () => Unit = () => ()
+    try IndexFamily.span.starts.read(spark, dir, raw) {
+      val (starts, r) = dupSpanStarts(spark, dir)
+      release = r
+      starts
+    } finally release()
   }
 
   /** The demote sidecar's CURRENTLY VALID (doc_id, i) pairs — None
@@ -1361,23 +1312,13 @@ object Dedup {
     * Corpus-linear like the minhash posting table — the price of
     * incrementality, amortized over every later fold. */
   private[graft] def spanPostTable(spark: SparkSession,
-      dir: String, raw: Boolean = false): DataFrame = {
-    val tbl = indexTableName(spark, dir, "graft_spanpost_")
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("h", "h2"), IndexBuckets))
-        graft.sources.TableIO.writeBucketed(
-          spansOf(Tables.fanOutScan(Registry.minus(spark,
-              Tables.documents(spark, dir), dir, Registry.Doc, "doc_id")
-            .select(col("doc_id"), col("text")), spark, dir))
-            .groupBy(col("h"), col("h2"), col("doc_id"))
-            .agg(min(col("i")).as("i"), count(lit(1)).as("c")),
-          tbl, path, Seq("h", "h2"), IndexBuckets)
-    }
-    if (raw) spark.table(tbl)
-    else IndexFamily.span.view(spark, dir, spark.table(tbl))
-  }
+      dir: String, raw: Boolean = false): DataFrame =
+    IndexFamily.span.postings.read(spark, dir, raw)(
+      spansOf(Tables.fanOutScan(Registry.minus(spark,
+          Tables.documents(spark, dir), dir, Registry.Doc, "doc_id")
+        .select(col("doc_id"), col("text")), spark, dir))
+        .groupBy(col("h"), col("h2"), col("doc_id"))
+        .agg(min(col("i")).as("i"), count(lit(1)).as("c")))
 
   /** Fold a batch of documents into the stored span index — the
     * incremental path that was missing from the despan family (every
@@ -1409,8 +1350,6 @@ object Dedup {
     // never-reingest filter (Registry contract; identity when empty)
     val batchDocs = Registry.minus(spark, batchDocsIn, dir,
       Registry.Doc, "doc_id")
-    val idxTbl = indexTableName(spark, dir, "graft_spanidx_")
-    val postTbl = indexTableName(spark, dir, "graft_spanpost_")
     spanIndexTable(spark, dir, raw = true) // ensure both exist
     // freshness probes against the PHYSICAL table (tombstoned docs
     // stay "known", replays stay no-ops)...
@@ -1455,12 +1394,10 @@ object Dedup {
       // stored singletons the batch just duplicated: promote the owner
       val promoted = relevant.filter(col("tot") === 1)
         .select(col("owner.doc_id").as("doc_id"), col("owner.i").as("i"))
-      graft.sources.TableIO.appendBucketed(spark,
-        batchDup.unionAll(promoted), idxTbl, Seq("doc_id"), IndexBuckets)
-      graft.sources.TableIO.appendBucketed(spark,
+      IndexFamily.span.starts.append(spark, dir, batchDup.unionAll(promoted))
+      IndexFamily.span.postings.append(spark, dir,
         spans.groupBy(col("h"), col("h2"), col("doc_id"))
-          .agg(min(col("i")).as("i"), count(lit(1)).as("c")),
-        postTbl, Seq("h", "h2"), IndexBuckets)
+          .agg(min(col("i")).as("i"), count(lit(1)).as("c")))
       freshSeq.length.toLong
     } finally { spans.unpersist(); () }
     }

@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
 import graft.sources.TableIO
 
-/** One persisted table of an index family.
+/** One persisted table of an index family `family`.
   *  - `prefix`: the table name up to the corpus slug;
   *  - `keys`: bucket columns, or partition columns when `partitioned`;
   *  - `base`: corpus-derived (first-touch built from the corpus); an
@@ -13,10 +13,74 @@ import graft.sources.TableIO
   *  - `generation`: the name carries the trained-artifact generation
   *    ([[Registry.basisSuffix]]);
   *  - `demoted`: span's duplicated-start markers, whose view also
-  *    subtracts the valid demotions ([[Dedup.validSpanDemotions]]). */
-private[graft] final case class IndexTable(prefix: String, keys: Seq[String],
-    base: Boolean = true, generation: Boolean = false,
-    partitioned: Boolean = false, demoted: Boolean = false)
+  *    subtracts the valid demotions ([[Dedup.validSpanDemotions]]);
+  *  - `cached`: the default read is the session-memoized
+  *    [[IndexFamily.cachedView]] (mm's signature table).
+  * The table's layout is spelled here only: [[read]]'s first-touch
+  * build, [[append]] and [[IndexFamily.compact]] all write `keys`. */
+private[graft] final case class IndexTable(family: IndexFamily,
+    prefix: String, keys: Seq[String], base: Boolean = true,
+    generation: Boolean = false, partitioned: Boolean = false,
+    demoted: Boolean = false, cached: Boolean = false) {
+
+  def name(spark: SparkSession, dir: String): String =
+    IndexFamily.name(spark, dir, prefix, family.domain, generation)
+
+  /** The table for corpus `dir`: the physical table when `raw` (a
+    * fold's freshness probe, where a tombstoned id must stay "known"),
+    * else the family's read view. On first touch, under the family's
+    * [[IndexFamily.withLock]], the table is materialized
+    * ([[TableIO.materialize]]): a crashed compaction's staging is
+    * restored, else `build` is written in this table's layout. So two
+    * first touches in one JVM build once, and no table can appear
+    * while [[IndexFamily.compact]] sweeps. Every build reads the corpus
+    * and its own family's tables only, so it takes no second family's
+    * lock. `build` carries the family's safety filter (registry or
+    * sidecar) itself. */
+  def read(spark: SparkSession, dir: String, raw: Boolean = false)(
+      build: => DataFrame): DataFrame = {
+    val tbl = name(spark, dir)
+    if (!spark.catalog.tableExists(tbl))
+      family.withLock(dir) {
+        TableIO.materialize(spark, tbl, keys, buckets, partitioned)(build)
+      }
+    if (raw) spark.table(tbl)
+    else if (cached) family.cachedView(spark, dir, tbl)
+    else family.view(spark, dir, spark.table(tbl), demoted)
+  }
+
+  /** The view of the table if it exists — no first touch (an extension
+    * table nothing has folded into adds nothing to a query's plan). */
+  def ifPresent(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val tbl = name(spark, dir)
+    if (spark.catalog.tableExists(tbl))
+      Some(family.view(spark, dir, spark.table(tbl), demoted))
+    else None
+  }
+
+  /** Append `rows` to the existing table in its own layout: a
+    * bucketed append ([[TableIO.appendBucketed]], at most one new file
+    * per bucket), or for a partitioned table one shuffle into the
+    * partition routing (at most one new file per touched partition)
+    * and a positional insert in the table's column order. Either way
+    * the table is refreshed through `spark`, the caller's session: a
+    * foreachBatch clone's write invalidates only the clone's cache.
+    * Callers hold the family lock. */
+  def append(spark: SparkSession, dir: String, rows: DataFrame): Unit = {
+    val tbl = name(spark, dir)
+    if (partitioned) {
+      rows.repartition(keys.map(col): _*)
+        .select(spark.table(tbl).columns.map(col): _*)
+        .write.mode(SaveMode.Append).insertInto(tbl)
+      spark.catalog.refreshTable(tbl)
+    } else TableIO.appendBucketed(spark, rows, tbl, keys, buckets)
+  }
+
+  /** Buckets, or for a partitioned table its write tasks (one per
+    * inverted list). */
+  private[pipeline] def buckets: Int =
+    if (partitioned) Similarity.IvfCentroids else Dedup.IndexBuckets
+}
 
 /** The lifecycle of one persisted index family, defined once: its
   * maintenance lock, its read view, its takedown and its compaction.
@@ -24,13 +88,16 @@ private[graft] final case class IndexTable(prefix: String, keys: Seq[String],
   * and [[Maintenance.compactAll]]'s maps), an id domain and id column,
   * one deletion sidecar ([[Tombstones]]) and its tables.
   *
-  * The accessors of every family build their tables on first touch and
-  * read them through [[view]]; the folds append to the PHYSICAL tables
-  * under [[withLock]]. [[remove]] records a takedown in the sidecar,
-  * and [[compact]] rewrites every present table through [[view]] and
-  * then forgets the sidecar. */
-private[graft] class IndexFamily(val key: String, val domain: String,
-    sidecarPrefix: String, ownTables: Seq[IndexTable]) {
+  * Each of its tables ([[IndexTable]]) is built on first touch under
+  * [[withLock]] and read through [[view]] by [[IndexTable.read]]; the
+  * folds append to the PHYSICAL tables under [[withLock]] through
+  * [[IndexTable.append]]. What a build computes (its rows and its
+  * registry or sidecar filter) stays in the family's own file.
+  * [[remove]] records a takedown in the sidecar, and [[compact]]
+  * rewrites every present table through [[view]] and then forgets the
+  * sidecar. */
+private[graft] abstract class IndexFamily(val key: String,
+    val domain: String, sidecarPrefix: String) {
 
   val idCol: String = if (domain == Registry.Doc) "doc_id" else "vec_id"
 
@@ -47,12 +114,18 @@ private[graft] class IndexFamily(val key: String, val domain: String,
   protected def sidecars(spark: SparkSession, dir: String): Seq[String] =
     Seq(sidecar(spark, dir))
 
+  /** The family's fixed tables, base tables first. */
+  protected def ownTables: Seq[IndexTable]
+
   /** The family's tables, base tables first, in compaction order. */
-  protected def tables(spark: SparkSession, dir: String): Seq[IndexTable] =
+  def tables(spark: SparkSession, dir: String): Seq[IndexTable] =
     ownTables
 
-  private def tableName(spark: SparkSession, dir: String, t: IndexTable): String =
-    IndexFamily.name(spark, dir, t.prefix, domain, t.generation)
+  protected def table(prefix: String, keys: Seq[String],
+      base: Boolean = true, generation: Boolean = false,
+      demoted: Boolean = false, cached: Boolean = false): IndexTable =
+    IndexTable(this, prefix, keys, base, generation, demoted = demoted,
+      cached = cached)
 
   /** The ids of `batch` not yet in `stored` (both carry [[idCol]]) —
     * every fold's "already indexed" probe: a broadcast SEMI probe of
@@ -135,29 +208,27 @@ private[graft] class IndexFamily(val key: String, val domain: String,
     * [[view]] as the transform, then clear the sidecars — only when
     * every base table was present (a sidecar recorded before the index
     * was built must survive until a build and a compaction materialize
-    * it) and no table appeared during the sweep (a query may build an
-    * ann kind table without the lock). A corpus dir without this
-    * family's corpus has nothing to compact. Returns the number of
-    * tables rewritten. */
+    * it). No table can appear during the sweep: every first touch
+    * builds under the same lock ([[IndexTable.read]]). A corpus dir
+    * without this family's corpus has nothing to compact. Returns the
+    * number of tables rewritten. */
   def compact(spark: SparkSession, dir: String): Int =
     if (!IndexFamily.hasCorpus(spark, dir, domain)) 0
     else withLock(dir) {
       val ts = tables(spark, dir)
       val present = ts.filter(t =>
-        spark.catalog.tableExists(tableName(spark, dir, t)))
+        spark.catalog.tableExists(t.name(spark, dir)))
       present.foreach { t =>
-        val tbl = tableName(spark, dir, t)
+        val tbl = t.name(spark, dir)
         val f = (df: DataFrame) => view(spark, dir, df, t.demoted)
         if (t.partitioned)
-          TableIO.compactPartitioned(spark, tbl, t.keys,
-            Similarity.IvfCentroids, f)
+          TableIO.compactPartitioned(spark, tbl, t.keys, t.buckets, f)
         else
-          TableIO.compactBucketed(spark, tbl, t.keys, Dedup.IndexBuckets,
+          TableIO.compactBucketed(spark, tbl, t.keys, t.buckets,
             transform = f)
       }
       val bases = ts.filter(_.base)
-      if (bases.nonEmpty && bases.forall(present.contains) &&
-          tables(spark, dir).forall(ts.contains))
+      if (bases.nonEmpty && bases.forall(present.contains))
         sidecars(spark, dir).foreach(Tombstones.clear(spark, _))
       dropView(dir)
       present.size
@@ -213,21 +284,27 @@ private[graft] object IndexFamily {
   }
 
   /** MinHash postings and shingle arrays. */
-  val dedup = new IndexFamily("dedup", Registry.Doc, "graft_tomb_dedup_",
-    Seq(IndexTable("graft_minhash_idx_", Seq("k")),
-      IndexTable("graft_shingles_", Seq("doc_id"))))
+  object dedup extends IndexFamily("dedup", Registry.Doc, "graft_tomb_dedup_") {
+    val minhash = table("graft_minhash_idx_", Seq("k"))
+    val shingles = table("graft_shingles_", Seq("doc_id"))
+    protected def ownTables = Seq(minhash, shingles)
+  }
 
   /** Simhash triple-key postings. */
-  val simhash = new IndexFamily("simhash", Registry.Doc,
-    "graft_tomb_simhash_", Seq(IndexTable("graft_simhash_idx_", Seq("k"))))
+  object simhash extends IndexFamily("simhash", Registry.Doc,
+      "graft_tomb_simhash_") {
+    val postings = table("graft_simhash_idx_", Seq("k"))
+    protected def ownTables = Seq(postings)
+  }
 
   /** Duplicated span starts and span-hash postings. The one family with
     * cross-doc derived state: a takedown can turn another doc's marked
     * span back into a singleton, so [[remove]] first records those
     * demotions ([[Dedup.demoteSpans]]) in a second sidecar. */
-  object span extends IndexFamily("span", Registry.Doc, "graft_tomb_span_",
-      Seq(IndexTable("graft_spanidx_", Seq("doc_id"), demoted = true),
-        IndexTable("graft_spanpost_", Seq("h", "h2")))) {
+  object span extends IndexFamily("span", Registry.Doc, "graft_tomb_span_") {
+    val starts = table("graft_spanidx_", Seq("doc_id"), demoted = true)
+    val postings = table("graft_spanpost_", Seq("h", "h2"))
+    protected def ownTables = Seq(starts, postings)
     /** The (h, h2, doc_id, i) demotion sidecar. */
     def demotions(spark: SparkSession, dir: String): String =
       name(spark, dir, "graft_tombsp_span_", Registry.Doc)
@@ -241,32 +318,41 @@ private[graft] object IndexFamily {
 
   /** LM scores, plus the raw rows of streamed docs. A takedown removes
     * the doc's row (content removal); the LM the scores were computed
-    * under is re-fit only by a model refresh. */
-  val lmscore = new IndexFamily("lmscore", Registry.Doc,
-    "graft_tomb_lmscore_",
-    Seq(IndexTable("graft_lmscore_", Seq("doc_id"), generation = true),
-      IndexTable("graft_lmdocs_", Seq("doc_id"), base = false)))
+    * under is re-fit only by a model refresh. The raw rows are not
+    * generation-named: a model refresh re-folds exactly them. */
+  object lmscore extends IndexFamily("lmscore", Registry.Doc,
+      "graft_tomb_lmscore_") {
+    val scores = table("graft_lmscore_", Seq("doc_id"), generation = true)
+    val docs = table("graft_lmdocs_", Seq("doc_id"), base = false)
+    protected def ownTables = Seq(scores, docs)
+  }
 
   /** Image dHash signatures. */
-  val mm = new IndexFamily("mm", Registry.Doc, "graft_tomb_mm_",
-    Seq(IndexTable("graft_dhashsigs_", Seq("doc_id"))))
+  object mm extends IndexFamily("mm", Registry.Doc, "graft_tomb_mm_") {
+    val sigs = table("graft_dhashsigs_", Seq("doc_id"), cached = true)
+    protected def ownTables = Seq(sigs)
+  }
 
-  /** IVF-PQ code tables (one per present code kind), plus the raw
-    * refine vectors of folded batches. */
-  object ann extends IndexFamily("ann", Registry.Vec, "graft_tomb_ann_",
-      Seq(IndexTable("graft_annvecs_", Seq("vec_id"), base = false))) {
-    override protected def tables(spark: SparkSession,
-        dir: String): Seq[IndexTable] =
-      Similarity.annCodeKindsPresent(spark, dir).map(k =>
-        IndexTable(s"graft_anncodes_${k}_", Seq("cent_id"),
-          generation = true, partitioned = true)) ++
+  /** IVF-PQ code tables (one per code kind, generation-named like the
+    * books they encode under), plus the raw refine vectors of folded
+    * batches. */
+  object ann extends IndexFamily("ann", Registry.Vec, "graft_tomb_ann_") {
+    def codes(kind: String): IndexTable =
+      IndexTable(this, s"graft_anncodes_${kind}_", Seq("cent_id"),
+        generation = true, partitioned = true)
+    val vecs = table("graft_annvecs_", Seq("vec_id"), base = false)
+    protected def ownTables = Seq(vecs)
+    override def tables(spark: SparkSession, dir: String): Seq[IndexTable] =
+      Similarity.annCodeKindsPresent(spark, dir).map(codes) ++
         super.tables(spark, dir)
   }
 
   /** Semantic-dedup cluster postings, plus streamed vectors. */
-  val sem = new IndexFamily("sem", Registry.Vec, "graft_tomb_sem_",
-    Seq(IndexTable("graft_sempost_", Seq("cent_id"), generation = true),
-      IndexTable("graft_semvecs_", Seq("vec_id"), base = false)))
+  object sem extends IndexFamily("sem", Registry.Vec, "graft_tomb_sem_") {
+    val postings = table("graft_sempost_", Seq("cent_id"), generation = true)
+    val vecs = table("graft_semvecs_", Seq("vec_id"), base = false)
+    protected def ownTables = Seq(postings, vecs)
+  }
 
   /** Every family, in takedown order. */
   val all: Seq[IndexFamily] = Seq(dedup, simhash, span, lmscore, mm, ann, sem)

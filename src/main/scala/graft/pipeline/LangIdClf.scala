@@ -184,20 +184,12 @@ object LangIdClf {
     * Memoized per (session, corpus). */
   private[pipeline] def trainedWeights(spark: SparkSession,
       dir: String): Seq[(Int, Long, Double)] =
-    ArtifactCache.memo(spark, s"liclf_w:$dir") {
-      val tbl = liclfName(spark, dir)
+    locally {
       import spark.implicits._
-      if (spark.catalog.tableExists(tbl)) {
-        spark.table(tbl).as[(Int, Long, Double)].collect().toSeq
-          .sortBy(r => (r._1, r._2))
-      } else {
-        val w = train(spark, dir)
-        val path = graft.sources.TableIO.indexPath(tbl)
-        w.toDF("c", "b", "w").coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").option("path", path).saveAsTable(tbl)
-        w
-      }
+      ArtifactCache.persisted(spark, s"liclf_w:$dir", liclfName(spark, dir))(
+        _.as[(Int, Long, Double)].collect().toSeq
+          .sortBy(r => (r._1, r._2)))(train(spark, dir))(
+        _.toDF("c", "b", "w"))
     }
 
   /** z₀..z₄ pivot columns from a (doc_id, b[, …]) frame joined against

@@ -236,24 +236,14 @@ object Multimodal {
     * doc's near-dup pairs disappear immediately, and
     * `IndexFamily.mm.compact` materializes the deletion physically). */
   private[graft] def dhashSigs(spark: SparkSession,
-      dir: String, raw: Boolean = false): DataFrame = {
-    val tbl = IndexFamily.name(spark, dir, "graft_dhashsigs_", Registry.Doc)
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("doc_id"), Dedup.IndexBuckets))
-        graft.sources.TableIO.writeBucketed(
-          Registry.minus(spark, dhashSigsBuild(spark, dir), dir,
-            Registry.Doc, "doc_id"),
-          tbl, path, Seq("doc_id"), Dedup.IndexBuckets)
-    }
-    if (raw) spark.table(tbl)
-    // session-cache the FILTERED view: one pair query consults it three
-    // times (bucketPairs' hot probe + both join sides), and uncached each
-    // consumption re-pays the bucketed scan + both anti-joins (measured
-    // +0.8 s warm vs the r19 session cache)
-    else IndexFamily.mm.cachedView(spark, dir, tbl)
-  }
+      dir: String, raw: Boolean = false): DataFrame =
+    // the default read is the session-cached FILTERED view: one pair
+    // query consults it three times (bucketPairs' hot probe + both join
+    // sides), and uncached each consumption re-pays the bucketed scan +
+    // both anti-joins (measured +0.8 s warm vs the r19 session cache)
+    IndexFamily.mm.sigs.read(spark, dir, raw)(
+      Registry.minus(spark, dhashSigsBuild(spark, dir), dir,
+        Registry.Doc, "doc_id"))
 
   /** Banded hamming join over an arbitrary signature frame — the
     * test seam (the shinglesOfDocs rule: perturbed-fixture specs

@@ -158,27 +158,14 @@ object QualityClf {
     * (session, corpus): score + apply reuse the trained vector. */
   private[pipeline] def trainedWeights(spark: SparkSession,
       dir: String): Array[Double] =
-    ArtifactCache.memo(spark, s"qclf_w:$dir") {
-      // persisted like the PQ codebooks (persistedBook discipline):
-      // the trained weights are a write-time artifact — a fresh
-      // session reloads them instead of re-paying the TrainRounds
-      // aggregation passes, and doubles round-trip parquet
-      // bit-exactly so the reloaded model IS the trained model
-      val tbl = qclfName(spark, dir)
-      if (spark.catalog.tableExists(tbl)) {
-        spark.table(tbl).collect()
-          .map(r => (r.getInt(0), r.getDouble(1)))
-          .sortBy(_._1).map(_._2)
-      } else {
-        val w = train(spark, dir)
-        import spark.implicits._
-        val path = graft.sources.TableIO.indexPath(tbl)
-        w.zipWithIndex.map { case (v, j) => (j, v) }.toSeq
-          .toDF("j", "w").coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").option("path", path).saveAsTable(tbl)
-        w
-      }
+    // persisted: the trained weights are a write-time artifact — a
+    // fresh session reloads them instead of re-paying the TrainRounds
+    // aggregation passes
+    ArtifactCache.persisted(spark, s"qclf_w:$dir", qclfName(spark, dir))(
+      _.collect().map(r => (r.getInt(0), r.getDouble(1)))
+        .sortBy(_._1).map(_._2))(train(spark, dir)) { w =>
+      import spark.implicits._
+      w.zipWithIndex.map { case (v, j) => (j, v) }.toSeq.toDF("j", "w")
     }
 
   private def qclfName(spark: SparkSession, dir: String): String =

@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import graft.{Num, Tables}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Similarity search over the `embeddings` table (Array[Float] vectors).
   *
@@ -663,25 +664,16 @@ object Similarity {
     * session skip even the read. */
   private def persistedBook(spark: SparkSession, dir: String, kind: String)
       (build: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] =
-    ArtifactCache.memo(spark, s"cb:$kind:$dir") {
-      val tbl = IndexFamily.name(spark, dir, s"graft_anncb_${kind}_",
-        Registry.Vec, generation = true)
-      if (spark.catalog.tableExists(tbl)) {
-        val rows = spark.table(tbl).collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-        val byM = rows.groupBy(_._1).toArray.sortBy(_._1)
-        byM.map(_._2.sortBy(_._2).map(_._3))
-      } else {
-        val cb = build
-        import spark.implicits._
-        val rows = for { m <- cb.indices; k <- cb(m).indices }
-          yield (m, k, cb(m)(k).toSeq)
-        val path = graft.sources.TableIO.indexPath(tbl)
-        rows.toDF("m", "k", "vals").coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").option("path", path).saveAsTable(tbl)
-        cb
-      }
+    ArtifactCache.persisted(spark, s"cb:$kind:$dir",
+        IndexFamily.name(spark, dir, s"graft_anncb_${kind}_", Registry.Vec,
+          generation = true))(
+      _.collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+        .groupBy(_._1).toArray.sortBy(_._1)
+        .map(_._2.sortBy(_._2).map(_._3)))(build) { cb =>
+      import spark.implicits._
+      (for { m <- cb.indices; k <- cb(m).indices }
+        yield (m, k, cb(m)(k).toSeq)).toDF("m", "k", "vals")
     }
 
   /** K-means-trained PQ codebook — what a production index owner runs
@@ -1200,40 +1192,18 @@ object Similarity {
     * paid (the r11 verdict's top item: a_ivfpqt/a_ivfpqr's 11-12 s of
     * per-session training + encode topped the sf10 bench). */
   private[graft] def codeTable(spark: SparkSession, dir: String,
-      kind: String, raw: Boolean = false): DataFrame = {
-    val tbl = annCodeName(spark, dir, kind)
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      // recover from a crashed compaction's staging first (the snapshot
-      // holds corpus codes + folds); else build — one task per inverted
-      // list → one file per partition directory. The build applies the
-      // deletion sidecar itself: a kind table first-touch-built while
-      // a tombstone is pending must not carry the removed vec
-      // PHYSICALLY, or the ann compaction's sidecar clear (which can
-      // race a lock-free query-path build) would resurrect it (r17
-      // ADVICE).
-      if (!graft.sources.TableIO.recoverPartitioned(spark, tbl, path,
-          Seq("cent_id"), IvfCentroids))
-        graft.sources.TableIO.writePartitionedTable(
-          IndexFamily.ann.unrecorded(spark, dir,
-            buildCodeTable(spark, dir, kind)),
-          tbl, path, Seq("cent_id"), IvfCentroids)
-    }
-    // default view subtracts the ann deletion sidecar (a removed vec
-    // can never be short-listed); raw = the physical table, for the
-    // fold path's freshness probes. FAISS remove_ids semantics: the
-    // TRAINED artifacts (codebooks, centroids) are never retrained by
-    // a delete — only the vec's code rows go.
-    if (raw) spark.table(tbl)
-    else IndexFamily.ann.view(spark, dir, spark.table(tbl))
-  }
-
-  private def annCodeName(spark: SparkSession, dir: String,
-      kind: String): String =
-    // generation-named like the books it encodes under: a model
-    // refresh retrains the books, which invalidates every code
-    IndexFamily.name(spark, dir, s"graft_anncodes_${kind}_", Registry.Vec,
-      generation = true)
+      kind: String, raw: Boolean = false): DataFrame =
+    // one task per inverted list → one file per partition directory.
+    // The build applies the deletion sidecar itself: a kind table
+    // first-touch-built while a tombstone is pending must not carry
+    // the removed vec PHYSICALLY, or the ann compaction's sidecar clear
+    // would resurrect it (r17 ADVICE). The default view subtracts the
+    // sidecar (a removed vec can never be short-listed). FAISS
+    // remove_ids semantics: the TRAINED artifacts (codebooks,
+    // centroids) are never retrained by a delete — only the vec's code
+    // rows go.
+    IndexFamily.ann.codes(kind).read(spark, dir, raw)(
+      IndexFamily.ann.unrecorded(spark, dir, buildCodeTable(spark, dir, kind)))
 
   /** Raw vectors folded into this corpus's ANN index — the refine /
     * exact-re-rank side of [[appendAnnToIndex]]: ADC searches serve an
@@ -1243,19 +1213,9 @@ object Similarity {
     * self-contained, an ANN ingest must not grow the SemDeDup corpus.
     * Bucketed by vec_id (the refine join key); created empty on first
     * touch so the fold path is uniform. */
-  private def annStreamVecsIfAny(spark: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val tbl = semTableName(spark, dir, "graft_annvecs_")
-    if (spark.catalog.tableExists(tbl))
-      Some(IndexFamily.ann.view(spark, dir, spark.table(tbl)))
-    else None
-  }
-
   private[graft] def annStreamVecsTable(spark: SparkSession,
-      dir: String, raw: Boolean = false): DataFrame = {
-    val t = vecsExtensionTable(spark, dir, "graft_annvecs_")
-    if (raw) t else IndexFamily.ann.view(spark, dir, t)
-  }
+      dir: String, raw: Boolean = false): DataFrame =
+    IndexFamily.ann.vecs.read(spark, dir, raw)(emptyVecs(spark))
 
   /** Encode a batch under `kind`'s STORED artifacts (no retrain) and
     * pin its touched routing centroids on the driver — the fold's
@@ -1347,27 +1307,14 @@ object Similarity {
     val freshVecIds = (vtFresh -- corpusKnown).toSeq
     if (freshIdSeq.nonEmpty) {
       val freshIds = broadcast(freshIdSeq.toDF("vec_id"))
-      // one shuffle into the partition routing → ≤1 new file per
-      // touched inverted list; insertInto appends by POSITION with the
-      // partition column last, exactly this select's order
-      batchEnc.join(freshIds, "vec_id")
-        .repartition(col("cent_id"))
-        .select(col("vec_id"), col("codes"), col("cent_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .insertInto(annCodeName(spark, dir, kind))
-      // refresh THIS session's relation cache explicitly: when the
-      // batch frame belongs to a foreachBatch CLONE session (AnnStream),
-      // the insert executes under the clone and only invalidates the
-      // clone's cache — the caller's session would keep serving the
-      // pre-fold file listing and silently miss every appended vector
-      spark.catalog.refreshTable(annCodeName(spark, dir, kind))
+      // ≤1 new file per touched inverted list
+      IndexFamily.ann.codes(kind).append(spark, dir,
+        batchEnc.join(freshIds, "vec_id"))
     }
     if (freshVecIds.nonEmpty)
-      graft.sources.TableIO.appendBucketed(spark,
+      IndexFamily.ann.vecs.append(spark, dir,
         batchVecs.join(broadcast(freshVecIds.toDF("vec_id")), "vec_id")
-          .select(col("vec_id"), col("v"), col("nrm")),
-        semTableName(spark, dir, "graft_annvecs_"),
-        Seq("vec_id"), Dedup.IndexBuckets)
+          .select(col("vec_id"), col("v"), col("nrm")))
     freshIdSeq.length.toLong
   }
 
@@ -1419,19 +1366,19 @@ object Similarity {
       }
     val codeSpecs: Seq[(String, () => Unit)] =
       annCodeKindsPresent(spark, dir).map { k =>
-        (annCodeName(spark, dir, k), () => {
+        (IndexFamily.ann.codes(k).name(spark, dir), () => {
           codeTable(spark, dir, k, raw = true)
-          annStreamVecsIfAny(spark, dir).foreach(sv =>
+          IndexFamily.ann.vecs.ifPresent(spark, dir).foreach(sv =>
             appendAnnToIndex(spark, dir, sv, k))
           ()
         })
       }
     val semSpec: Seq[(String, () => Unit)] = {
-      val t = semPostName(spark, dir)
+      val t = IndexFamily.sem.postings.name(spark, dir)
       if (!spark.catalog.tableExists(t)) Nil
       else Seq((t, () => {
         semPostingTable(spark, dir, Dedup.BroadcastVerifyBytes, raw = true)
-        semStreamVecsIfAny(spark, dir).foreach { sv =>
+        IndexFamily.sem.vecs.ifPresent(spark, dir).foreach { sv =>
           val posts = semAssignOver(spark, dir,
             sv.select(col("vec_id"), col("v"), col("nrm"))
               .as[(Long, Array[Double], Double)],
@@ -1572,7 +1519,7 @@ object Similarity {
     // their codes are already in the scanned table, and dropping them
     // at the exact-cosine join would silently shrink the shortlist.
     // None when no fold ever landed — the common case adds nothing.
-    val all = annStreamVecsIfAny(spark, dir)
+    val all = IndexFamily.ann.vecs.ifPresent(spark, dir)
       .map(corpus.unionByName(_)).getOrElse(corpus)
     val probes = corpus.filter(col("vec_id") < NumProbes)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
@@ -1652,21 +1599,12 @@ object Similarity {
     * off the bucket layout with zero Exchange (pinned in
     * SemanticDedupSpec). */
   private[graft] def semPostingTable(spark: SparkSession, dir: String,
-      broadcastBound: Long, raw: Boolean = false): DataFrame = {
-    val tbl = semPostName(spark, dir)
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      // recoverBucketed first: a compaction crash in the drop window
-      // left a staging snapshot holding corpus assignments + folds
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("cent_id"), Dedup.IndexBuckets))
-        graft.sources.TableIO.writeBucketed(
-          buildSemPosting(spark, dir, broadcastBound), tbl, path,
-          Seq("cent_id"), Dedup.IndexBuckets)
-    }
-    if (raw) spark.table(tbl)
-    else IndexFamily.sem.view(spark, dir, spark.table(tbl))
-  }
+      broadcastBound: Long, raw: Boolean = false): DataFrame =
+    // GENERATION-named (its centroid hierarchy is a trained artifact),
+    // unlike the raw-vector extension and tombstone sidecars, which
+    // span generations
+    IndexFamily.sem.postings.read(spark, dir, raw)(
+      buildSemPosting(spark, dir, broadcastBound))
 
   /** Lake extension table for STREAMED vectors — the semantic family's
     * analogue of the shingle table: the corpus parquet is immutable,
@@ -1674,64 +1612,19 @@ object Similarity {
     * vector, not just the cluster key), so
     * [[appendSemToIndex]] lands them here. Bucketed by vec_id (the
     * verification join key); created empty on first touch so the fold
-    * path is uniform. */
-  private def semTableName(spark: SparkSession, dir: String,
-      prefix: String): String =
-    IndexFamily.name(spark, dir, prefix, Registry.Vec)
-
-  /** The semantic posting table's name — GENERATION-named (its
-    * centroid hierarchy is a trained artifact), unlike the raw-vector
-    * extension and tombstone sidecars, which span generations. */
-  private def semPostName(spark: SparkSession, dir: String): String =
-    IndexFamily.name(spark, dir, "graft_sempost_", Registry.Vec,
-      generation = true)
-
-  /** The streamed-vector table IF any stream ever folded into this
-    * corpus — None otherwise, so the common no-stream case adds
-    * nothing to a batch query's plan (and no catalog write). */
-  private def semStreamVecsIfAny(spark: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val tbl = semTableName(spark, dir, "graft_semvecs_")
-    if (spark.catalog.tableExists(tbl))
-      Some(IndexFamily.sem.view(spark, dir, spark.table(tbl)))
-    else None
-  }
-
+    * path is uniform. A batch query reads it only if a stream ever
+    * folded into this corpus (`IndexFamily.sem.vecs.ifPresent`), so
+    * the common no-stream case adds nothing to its plan. */
   private[graft] def semStreamVecsTable(spark: SparkSession,
-      dir: String, raw: Boolean = false): DataFrame = {
-    val t = vecsExtensionTable(spark, dir, "graft_semvecs_")
-    if (raw) t else IndexFamily.sem.view(spark, dir, t)
-  }
+      dir: String, raw: Boolean = false): DataFrame =
+    IndexFamily.sem.vecs.read(spark, dir, raw)(emptyVecs(spark))
 
-  /** Shared creator for the (vec_id, v, nrm) extension tables — the
-    * semantic fold's streamed vectors and the ANN fold's refine-side
-    * vectors share one schema and one bucketing (vec_id, the
-    * verification/refine join key); created empty on first touch so
-    * the fold paths are uniform, staging-recovered first like every
-    * other index table. */
-  private def vecsExtensionTable(spark: SparkSession, dir: String,
-      prefix: String): DataFrame = {
-    val tbl = semTableName(spark, dir, prefix)
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("vec_id"), Dedup.IndexBuckets)) {
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("vec_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("v",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType)),
-            org.apache.spark.sql.types.StructField("nrm",
-              org.apache.spark.sql.types.DoubleType))))
-        graft.sources.TableIO.writeBucketed(
-          empty, tbl, path, Seq("vec_id"), Dedup.IndexBuckets)
-      }
-    }
-    spark.table(tbl)
-  }
+  /** The empty first-touch build of both (vec_id, v, nrm) extension
+    * tables, the semantic fold's streamed vectors and the ANN fold's
+    * refine-side vectors. */
+  private def emptyVecs(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType.fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE"))
 
   /** Fold a streamed batch into BOTH semantic lake tables — postings
     * into the bucketed assignment table, vectors into
@@ -1775,17 +1668,13 @@ object Similarity {
     val freshVecs = IndexFamily.sem.freshIdSeq(batchVecs,
       storedVecs.select(col("vec_id")).unionByName(corpusIds))
     if (freshPost.nonEmpty)
-      graft.sources.TableIO.appendBucketed(spark,
+      IndexFamily.sem.postings.append(spark, dir,
         batchPost.join(broadcast(freshPost.toDF("vec_id")), "vec_id")
-          .select(col("vec_id"), col("cent_id")),
-        semPostName(spark, dir),
-        Seq("cent_id"), Dedup.IndexBuckets)
+          .select(col("vec_id"), col("cent_id")))
     if (freshVecs.nonEmpty)
-      graft.sources.TableIO.appendBucketed(spark,
+      IndexFamily.sem.vecs.append(spark, dir,
         batchVecs.join(broadcast(freshVecs.toDF("vec_id")), "vec_id")
-          .select(col("vec_id"), col("v"), col("nrm")),
-        semTableName(spark, dir, "graft_semvecs_"),
-        Seq("vec_id"), Dedup.IndexBuckets)
+          .select(col("vec_id"), col("v"), col("nrm")))
     math.max(freshPost.length, freshVecs.length).toLong
   }
 
@@ -1867,7 +1756,7 @@ object Similarity {
     // folded streamed vectors (if any stream ever appended into this
     // corpus' index) join the verification base, so every posting row
     // stays verifiable — the grown-corpus semantics of a fold
-    val all = semStreamVecsIfAny(spark, dir) match {
+    val all = IndexFamily.sem.vecs.ifPresent(spark, dir) match {
       case Some(sv) => normedVecs(spark, dir)
         .select(col("vec_id"), col("v"), col("nrm")).unionByName(sv)
       case None => normedVecs(spark, dir)
@@ -2181,7 +2070,7 @@ object Similarity {
     val batchIds = broadcast(batchVecs.select(col("vec_id")))
     val corpus = normedVecs(spark, dir)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val folded = semStreamVecsIfAny(spark, dir)
+    val folded = IndexFamily.sem.vecs.ifPresent(spark, dir)
       .map(_.join(batchIds, Seq("vec_id"), "left_anti"))
       .getOrElse(corpus.limit(0))
     val base = batchVecs.select(col("vec_id"), col("v"), col("nrm"))

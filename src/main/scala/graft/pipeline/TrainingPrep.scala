@@ -2,9 +2,10 @@ package graft.pipeline
 
 import graft.{Num, Tables}
 import graft.functions.Portable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Training-set preparation operators: the passes that turn a curated
   * corpus into model-ready training data — deterministic splits,
@@ -386,19 +387,10 @@ object TrainingPrep {
     * aggregation-order difference between two materializations can
     * flip a 6-dp rounding and drop a doc. */
   private[graft] def bigramScoredTable(spark: SparkSession,
-      dir: String, raw: Boolean = false): DataFrame = {
-    val tbl = lmScoreName(spark, dir)
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("doc_id"), Dedup.IndexBuckets))
-        graft.sources.TableIO.writeBucketed(
-          bigramScore(spark, dir), tbl, path, Seq("doc_id"),
-          Dedup.IndexBuckets)
-    }
-    if (raw) spark.table(tbl)
-    else IndexFamily.lmscore.view(spark, dir, spark.table(tbl))
-  }
+      dir: String, raw: Boolean = false): DataFrame =
+    // GENERATION-named: its LM is a trained model, retrained when
+    // Maintenance.refreshModels advances the basis
+    IndexFamily.lmscore.scores.read(spark, dir, raw)(bigramScore(spark, dir))
 
   private def lmTypesName(spark: SparkSession, dir: String): String =
     IndexFamily.name(spark, dir, "graft_lmtypes_", Registry.Doc,
@@ -416,7 +408,7 @@ object TrainingPrep {
   private[pipeline] def docGenArtifacts(spark: SparkSession,
       dir: String): Seq[(String, () => Unit)] =
     Seq[(String, () => Unit)](
-      (lmScoreName(spark, dir),
+      (IndexFamily.lmscore.scores.name(spark, dir),
         () => {
           // corpus rebuild under the new basis, then re-fold the
           // persisted raw rows of every STREAMED doc (scored under
@@ -424,25 +416,13 @@ object TrainingPrep {
           // domain's annvecs re-fold; without it a refresh silently
           // dropped fold-only scores (r18 ADVICE medium item)
           bigramScoredTable(spark, dir, raw = true)
-          lmStreamDocsIfAny(spark, dir).foreach(sd =>
+          IndexFamily.lmscore.docs.ifPresent(spark, dir).foreach(sd =>
             appendScored(spark, dir, sd))
           ()
         }),
       (lmTypesName(spark, dir), () => { lmTypeTable(spark, dir); () }),
       (lmUniName(spark, dir), () => { lmUniTable(spark, dir); () }))
       .filter(s => spark.catalog.tableExists(s._1))
-
-  private def lmScoreName(spark: SparkSession, dir: String): String =
-    // GENERATION-named (its LM is a trained model, retrained when
-    // Maintenance.refreshModels advances the basis)
-    IndexFamily.name(spark, dir, "graft_lmscore_", Registry.Doc,
-      generation = true)
-
-  private def lmDocsName(spark: SparkSession, dir: String): String =
-    // corpus-fingerprint-named, NOT generation-named: raw rows must
-    // survive a model-refresh generation change (the graft_annvecs_
-    // rule) — it is exactly the table the refresh re-folds from
-    IndexFamily.name(spark, dir, "graft_lmdocs_", Registry.Doc)
 
   /** Raw (doc_id, text) rows of STREAMED docs folded into the scored
     * artifact — the doc-domain twin of the vec side's graft_annvecs_
@@ -451,37 +431,14 @@ object TrainingPrep {
     * refresh that drops and rebuilds the generation-named scored
     * artifact would silently lose every folded score until the
     * source replays. Created empty on first touch so the fold path
-    * is uniform; bucketed by doc_id like the scored table itself. */
-  private def lmDocsTable(spark: SparkSession, dir: String): DataFrame = {
-    val tbl = lmDocsName(spark, dir)
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("doc_id"), Dedup.IndexBuckets)) {
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))))
-        graft.sources.TableIO.writeBucketed(
-          empty, tbl, path, Seq("doc_id"), Dedup.IndexBuckets)
-      }
-    }
-    spark.table(tbl)
-  }
-
-  /** The streamed-doc extension rows, deletion-filtered — what a
-    * model refresh re-folds on top of the corpus rebuild (None when
-    * no fold ever landed). The lmscore tomb sidecar applies too: a
-    * content-removed doc must not re-enter the rebuilt artifact. */
-  private[pipeline] def lmStreamDocsIfAny(spark: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val tbl = lmDocsName(spark, dir)
-    if (!spark.catalog.tableExists(tbl)) None
-    else Some(IndexFamily.lmscore.view(spark, dir, spark.table(tbl)))
-  }
+    * is uniform; bucketed by doc_id like the scored table itself. A
+    * refresh re-folds its deletion-filtered view
+    * (`IndexFamily.lmscore.docs.ifPresent`): a content-removed doc must
+    * not re-enter the rebuilt artifact. */
+  private[pipeline] def lmDocsTable(spark: SparkSession, dir: String): DataFrame =
+    IndexFamily.lmscore.docs.read(spark, dir, raw = true)(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType.fromDDL("doc_id BIGINT, text STRING")))
 
   /** The corpus-scale scoring pass behind [[bigramScoredTable]] — runs
     * once per corpus content, at artifact-build time. private[pipeline]
@@ -583,33 +540,24 @@ object TrainingPrep {
     * type misses. Both build lazily on the FIRST fold (the
     * spanPostTable discipline: the snapshot path deliberately does
     * not pay the write; re-running the codegen'd chain beat
-    * materializing it for one-shot scoring). */
+    * materializing it for one-shot scoring). They belong to no index
+    * family, so they are materialized by [[graft.sources.TableIO]]
+    * alone and read raw, with no view. */
   private[graft] def lmTypeTable(spark: SparkSession,
       dir: String): DataFrame = {
     val tbl = lmTypesName(spark, dir)
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("kb", "kb2"), Dedup.IndexBuckets))
-        graft.sources.TableIO.writeBucketed(
-          lmTypeLp(spark, dir, bigramStream(trainDocs(spark, dir))),
-          tbl, path, Seq("kb", "kb2"), Dedup.IndexBuckets)
-    }
+    graft.sources.TableIO.materialize(spark, tbl, Seq("kb", "kb2"),
+      Dedup.IndexBuckets)(lmTypeLp(spark, dir, bigramStream(trainDocs(spark, dir))))
     spark.table(tbl)
   }
 
   private[graft] def lmUniTable(spark: SparkSession,
       dir: String): DataFrame = {
     val tbl = lmUniName(spark, dir)
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = graft.sources.TableIO.indexPath(tbl)
-      if (!graft.sources.TableIO.recoverBucketed(spark, tbl, path,
-          Seq("k2", "k2b"), Dedup.IndexBuckets)) {
-        val uni = lmUnigrams(trainDocs(spark, dir))
-        graft.sources.TableIO.writeBucketed(
-          uni.crossJoin(broadcast(uni.agg(sum(col("cu")).as("tot")))),
-          tbl, path, Seq("k2", "k2b"), Dedup.IndexBuckets)
-      }
+    graft.sources.TableIO.materialize(spark, tbl, Seq("k2", "k2b"),
+        Dedup.IndexBuckets) {
+      val uni = lmUnigrams(trainDocs(spark, dir))
+      uni.crossJoin(broadcast(uni.agg(sum(col("cu")).as("tot"))))
     }
     spark.table(tbl)
   }
@@ -660,10 +608,9 @@ object TrainingPrep {
       // that), and the extension table stays fold-bounded.
       val rawFreshIds = IndexFamily.lmscore.freshIdSeq(fresh,
         lmDocsTable(spark, dir))
-      if (rawFreshIds.nonEmpty) graft.sources.TableIO.appendBucketed(spark,
+      if (rawFreshIds.nonEmpty) IndexFamily.lmscore.docs.append(spark, dir,
         fresh.join(broadcast(rawFreshIds.toDF("doc_id")), "doc_id")
-          .select(col("doc_id"), col("text")),
-        lmDocsName(spark, dir), Seq("doc_id"), Dedup.IndexBuckets)
+          .select(col("doc_id"), col("text")))
       val bi = bigramStream(fresh)
       val lm = lmTypeTable(spark, dir)
       val uni = lmUniTable(spark, dir)
@@ -680,8 +627,7 @@ object TrainingPrep {
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_bigrams"),
           Num.roundEps(avg(col("lp")), 6).as("avg_logprob"))
-      graft.sources.TableIO.appendBucketed(spark, scoredBatch,
-        lmScoreName(spark, dir), Seq("doc_id"), Dedup.IndexBuckets)
+      IndexFamily.lmscore.scores.append(spark, dir, scoredBatch)
       freshSeq.length.toLong
     }
   }

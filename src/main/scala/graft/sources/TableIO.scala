@@ -136,47 +136,33 @@ object TableIO {
   private def stagingOf(path: String): String =
     path.stripSuffix("/") + "_compact_staging"
 
-  /** Crash-recovery guard for first-touch table creation: a
-    * compaction that died in its drop window (the rewrite's
-    * SaveMode.Overwrite drops the table before the new files commit)
-    * leaves the table ABSENT but its staging directory COMPLETE — and
-    * the staging holds the corpus-built rows PLUS every appended fold,
-    * which a fresh corpus rebuild would silently lose. Callers probe
-    * this before regenerating: returns true iff the table was restored
-    * from staging (staging is only ever deleted AFTER a rewrite
-    * commits, so an existing staging with a missing table is always a
-    * complete pre-compaction snapshot). */
-  def recoverBucketed(spark: SparkSession, table: String, path: String,
-      bucketCols: Seq[String], numBuckets: Int,
-      sortCols: Seq[String] = Nil): Boolean = {
-    val sPath = new org.apache.hadoop.fs.Path(stagingOf(path))
-    val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sPath)) false
-    else {
-      writeBucketed(spark.read.parquet(stagingOf(path)), table, path,
-        bucketCols, numBuckets, sortCols)
-      fs.delete(sPath, true)
-      true
+  /** First-touch creation of a persisted bucketed catalog table — or,
+    * when `partitioned`, a partitioned one with `n` write tasks — in
+    * the layout its compaction keeps. No-op when the table exists.
+    * Crash recovery comes first: a compaction that died in its drop
+    * window (the rewrite's SaveMode.Overwrite drops the table before
+    * the new files commit) leaves the table ABSENT but its staging
+    * directory COMPLETE, holding the corpus-built rows PLUS every
+    * appended fold, which a fresh `build` would silently lose. Staging
+    * is only ever deleted AFTER a rewrite commits, so an existing
+    * staging with a missing table is always a complete pre-compaction
+    * snapshot: it is restored instead, and `build` is not evaluated.
+    * Callers serialize the first touches of one table. */
+  def materialize(spark: SparkSession, table: String, keys: Seq[String],
+      n: Int, partitioned: Boolean = false)(build: => DataFrame): Unit =
+    if (!spark.catalog.tableExists(table)) {
+      val path = indexPath(table)
+      val sPath = new org.apache.hadoop.fs.Path(stagingOf(path))
+      val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val recovered = fs.exists(sPath)
+      val rows = if (recovered) spark.read.parquet(stagingOf(path)) else build
+      if (partitioned) writePartitionedTable(rows, table, path, keys, n)
+      else writeBucketed(rows, table, path, keys, n)
+      if (recovered) fs.delete(sPath, true)
     }
-  }
-
-  /** [[recoverBucketed]] for a PARTITIONED table (the ANN code-table
-    * layout). */
-  def recoverPartitioned(spark: SparkSession, table: String, path: String,
-      partCols: Seq[String], numTasks: Int): Boolean = {
-    val sPath = new org.apache.hadoop.fs.Path(stagingOf(path))
-    val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sPath)) false
-    else {
-      writePartitionedTable(spark.read.parquet(stagingOf(path)), table,
-        path, partCols, numTasks)
-      fs.delete(sPath, true)
-      true
-    }
-  }
 
   /** The partitioned-table write discipline shared by the ANN code
-    * table's build, recovery, and compaction: hash-cluster on the
+    * table's [[materialize]] and compaction: hash-cluster on the
     * partition columns so each value lands in ONE task = one file per
     * partition directory. */
   def writePartitionedTable(df: DataFrame, table: String, path: String,
