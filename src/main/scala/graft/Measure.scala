@@ -10,6 +10,7 @@ import graft.api.Api._
 import graft.api.ResponseJson.quote
 import graft.pipeline.{ArtifactCache, Bpe, Dedup, Maintenance, Multimodal,
   Similarity, TrainingPrep}
+import graft.sources.TableIO
 
 /** The measurement harness: one main on the bench session
   * ([[Bench.session]]), one JSON line per measurement, so every number
@@ -160,13 +161,6 @@ object Measure {
 
   private val DefaultFamilies: Seq[String] = Seq("minhash", "span", "lmscore", "ann_trained")
 
-  private def dataFiles(tbl: String): Int = {
-    def walk(f: java.io.File): Int =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0)
-      else if (f.getName.endsWith(".parquet")) 1 else 0
-    walk(new java.io.File(graft.sources.TableIO.indexPath(tbl)))
-  }
-
   private def heapMb(): Long = {
     System.gc()
     val r = Runtime.getRuntime
@@ -192,7 +186,8 @@ object Measure {
     // keyed without the dir-slug + fingerprint tail: stable, readable
     def files(): Seq[(String, Any)] = tables.toSeq.map { t =>
       val i = t.indexOf("_" + slug)
-      (if (i > 0) t.take(i) else t) -> dataFiles(t)
+      (if (i > 0) t.take(i) else t) ->
+        TableIO.dataFiles(spark, TableIO.indexPath(t)).size
     }.sortBy(_._1)
     val filesBefore = files()
     val heapAfterBuild = heapMb()

@@ -18,6 +18,22 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** The one corpus identity: a hash of the qualified path, length and
+    * modification time of every data file of table `name` of corpus
+    * `dir` ([[graft.sources.TableIO.dataFiles]]). Read on the driver
+    * from the file listing alone, with no Spark job and none of the
+    * data. Any rewrite or append changes it; a touch with unchanged
+    * content does too, which costs a spurious rebuild, never a stale
+    * read. A path is part of the hash, so two dirs that fold to one
+    * table-name slug never share a table. */
+  def fingerprint(spark: SparkSession, dir: String, name: String): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    graft.sources.TableIO.dataFiles(spark, s"$dir/$name.parquet")
+      .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+      .sorted.foreach(s => md.update(s.getBytes("UTF-8")))
+    java.util.HexFormat.of().formatHex(md.digest(), 0, 8)
+  }
+
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer")

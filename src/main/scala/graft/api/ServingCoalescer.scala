@@ -15,7 +15,10 @@ import graft.pipeline.ArtifactCache
   * raster window read + NumPy series math), with the window read
   * served from memory.
   *
-  *  - The index: one per (session, dir, variable), built once. It is
+  *  - The index: one per (session, dir, variable) and events
+  *    fingerprint ([[graft.Tables.fingerprint]], read on every lookup:
+  *    a rewritten or appended events file is served on the next
+  *    request, from a rebuilt index). It is
   *    [[EventCube.servingCubes]] (every dataset at every resolution of
   *    the variable, persisted, one events scan + one shuffle) collected
   *    into (dataset, resolution, cell) → band-sorted values, a null
@@ -54,11 +57,13 @@ private[graft] object ServingCoalescer {
 
   private type Index = Map[(String, String, Long), CellSeries]
 
-  /** The serving index of (session, dir, variable), built on first use
-    * from the persisted [[EventCube.servingCubes]] frame. */
+  /** The serving index of (session, dir, variable) for the events
+    * files as they are now, built on first use from the persisted
+    * [[EventCube.servingCubes]] frame. */
   private def indexOf(spark: SparkSession, dir: String,
       variable: String): Index =
-    ArtifactCache.memo(spark, s"serveindex:$variable:$dir") {
+    ArtifactCache.memo(spark, s"serveindex:$variable:$dir",
+        graft.Tables.fingerprint(spark, dir, "events")) {
       EventCube.servingCubes(spark, dir, variable)
         .select("dataset", "resolution", "user_id", "band", "v")
         .collect()
@@ -93,9 +98,9 @@ private[graft] object ServingCoalescer {
   }
 
   /** The zonal series of `cells` over bands [lo, hi], on the caller's
-    * thread. The first lookup of a (session, dir, variable) builds the
-    * index, which runs Spark jobs in the caller's job group; a failure
-    * surfaces here as this request's exception (→ the 500 envelope). */
+    * thread. The first lookup of a (session, dir, variable) and events
+    * fingerprint builds the index, running Spark jobs in the caller's
+    * job group; a failure is this request's exception (→ 500). */
   def zonal(spark: SparkSession, dir: String, dataset: String,
       resolution: EventCube.Resolution, variable: String,
       cells: Seq[Long], lo: Int, hi: Int, stat: String): Ser = {

@@ -269,7 +269,10 @@ object EventCube {
 
   /** The serving-layer artifact: every (dataset, resolution, band,
     * cell) value of one variable, PERSISTED once per (session, dir,
-    * variable) — (dataset, resolution, band, user_id, v) with v = avg
+    * variable) and events fingerprint ([[Tables.fingerprint]], read on
+    * every call: a rewritten or appended events file releases the
+    * superseded cube and builds the new one) —
+    * (dataset, resolution, band, user_id, v) with v = avg
     * of the cell's raw events in the band, exactly [[cube]]'s value.
     * One events scan and ONE shuffle cover every dataset and all of
     * [[Resolutions]] (each event is exploded to its band at each
@@ -278,12 +281,13 @@ object EventCube {
     * datasets × resolutions × cells × bands — bounded by the raster
     * geometry, NOT the event count. The serving index
     * (ServingCoalescer) is collected from this frame once per (session,
-    * dir, variable), and every served request is a lookup in that
-    * index on the request's own thread; the frame stays persisted next
-    * to it. */
+    * dir, variable) and fingerprint, and every served request is a
+    * lookup in that index on the request's own thread; the frame stays
+    * persisted next to it. */
   def servingCubes(spark: SparkSession, dir: String,
       variable: String): DataFrame =
-    graft.pipeline.ArtifactCache.cached(spark, s"servecube:$variable:$dir") {
+    graft.pipeline.ArtifactCache.cached(spark, s"servecube:$variable:$dir",
+        Tables.fingerprint(spark, dir, "events")) {
       val atEachResolution = explode(array(Resolutions.map(r =>
         struct(lit(r.name).as("resolution"), r.band(col("ts")).as("band"))): _*))
       Tables.events(spark, dir)

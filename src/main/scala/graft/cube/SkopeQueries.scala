@@ -160,9 +160,16 @@ object SkopeQueries {
 
   /** Delete `dir` and everything under it when this JVM exits: the
     * per-JVM (pid-named) temp and fixture directories would otherwise
-    * accumulate in tmpdir, one set per JVM that ever ran. */
-  private def deleteOnExit(dir: java.io.File): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(dir)))
+    * accumulate in tmpdir, one set per JVM that ever ran. One shutdown
+    * hook deletes every registered directory. */
+  private[graft] def deleteOnExit(dir: java.io.File): Unit = {
+    onExitHook
+    onExit.add(dir); ()
+  }
+
+  private val onExit = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  private lazy val onExitHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => onExit.forEach(d => deleteTree(d))))
 
   private def deleteTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteTree)); f.delete(); ()

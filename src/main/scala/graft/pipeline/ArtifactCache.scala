@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.concurrent.TrieMap
@@ -21,14 +22,19 @@ import scala.jdk.CollectionConverters._
   *  - `drop(key)` evicts the key in EVERY live session and unpersists
   *    it — a takedown or a new generation is a fact about the lake,
   *    not about the session that caused it;
+  *  - versioned on request: an entry built from one `version` of its
+  *    inputs (a corpus fingerprint) is dropped the same way, and built
+  *    afresh, when a caller sees another;
   *  - `clear()` removes everything (the bench's between-pass reset, so
   *    pass 2 re-pays every build cost).
   * Keys share one namespace; each family prefixes its own. */
 private[graft] object ArtifactCache {
 
-  /** A lazily built entry. `released` covers a drop that lands while
-    * the build runs: the finished frame is unpersisted, not leaked. */
-  private final class Slot(private[this] var build: () => Any) {
+  /** A lazily built entry of one `version` of its inputs. `released`
+    * covers a drop that lands while the build runs: the finished frame
+    * is unpersisted, not leaked. */
+  private final class Slot(val version: String,
+      private[this] var build: () => Any) {
     @volatile private[this] var value: Option[Any] = None
     @volatile private[this] var released = false
 
@@ -76,12 +82,19 @@ private[graft] object ArtifactCache {
   /** Unpersist and forget `key` in every live session. No-op if absent. */
   def drop(key: String): Unit = live.foreach(evict(_, key))
 
-  /** The driver-side value for (session, key), built on first use. */
-  def memo[T](spark: SparkSession, key: String)(build: => T): T = {
+  /** The driver-side value for (session, key), built on first use
+    * from `version` of its inputs. An entry of another version is
+    * dropped in every session, and this one built in its place. */
+  def memo[T](spark: SparkSession, key: String, version: String = "")(
+      build: => T): T = {
     val m = slots(spark)
-    val slot = m.getOrElseUpdate(key, new Slot(() => build))
-    try slot.get.asInstanceOf[T]
-    catch { case t: Throwable => m.remove(key, slot); throw t }
+    val slot = m.getOrElseUpdate(key, new Slot(version, () => build))
+    if (slot.version != version) {
+      drop(key)
+      memo(spark, key, version)(build)
+    } else
+      try slot.get.asInstanceOf[T]
+      catch { case t: Throwable => m.remove(key, slot); throw t }
   }
 
   /** A trained driver value (weights, codebooks, merges) that
@@ -106,11 +119,16 @@ private[graft] object ArtifactCache {
       }
     }
 
-  /** [[memo]] for frames: the stored frame is persisted. */
-  def cached(spark: SparkSession, key: String)
+  /** [[memo]] for frames: the stored frame is persisted. A versioned
+    * frame carries its version in its plan (a filter the optimizer
+    * folds away): Spark matches cached frames by plan, so a superseded
+    * build that finishes late would otherwise uncache its replacement. */
+  def cached(spark: SparkSession, key: String, version: String = "")
       (build: => DataFrame): DataFrame =
-    memo(spark, key) {
-      val df = build
+    memo(spark, key, version) {
+      val df =
+        if (version.isEmpty) build
+        else build.where(lit(version) === lit(version))
       // a build that persisted (and materialized) itself is stored
       // as-is — re-persisting would only log a cache-manager warning
       if (df.storageLevel == StorageLevel.NONE)

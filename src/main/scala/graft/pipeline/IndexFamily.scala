@@ -210,10 +210,11 @@ private[graft] abstract class IndexFamily(val key: String,
     * was built must survive until a build and a compaction materialize
     * it). No table can appear during the sweep: every first touch
     * builds under the same lock ([[IndexTable.read]]). A corpus dir
-    * without this family's corpus has nothing to compact. Returns the
-    * number of tables rewritten. */
+    * without this family's corpus files has nothing to compact (one
+    * listing, no lock). Returns the number of tables rewritten. */
   def compact(spark: SparkSession, dir: String): Int =
-    if (!IndexFamily.hasCorpus(spark, dir, domain)) 0
+    if (TableIO.dataFiles(spark, s"$dir/${Registry.corpus(domain)}.parquet")
+        .isEmpty) 0
     else withLock(dir) {
       val ts = tables(spark, dir)
       val present = ts.filter(t =>
@@ -264,23 +265,17 @@ private[graft] object IndexFamily {
     dir.replaceAll("[^A-Za-z0-9]", "_")
 
   /** The one table-naming rule: `prefix`, the corpus slug, the
-    * content fingerprint of the domain's corpus (a regenerated corpus
-    * misses the catalog and rebuilds instead of reading stale rows),
-    * and for a trained artifact the generation suffix. */
+    * fingerprint of the domain's corpus files ([[graft.Tables.fingerprint]],
+    * memoized per session; a rewritten corpus misses the catalog and
+    * rebuilds instead of reading stale rows), and for a trained
+    * artifact the generation suffix. */
   def name(spark: SparkSession, dir: String, prefix: String,
       domain: String, generation: Boolean = false): String = {
-    val fp =
-      if (domain == Registry.Doc) Dedup.corpusFingerprint(spark, dir)
-      else Similarity.embFingerprint(spark, dir)
+    val table = Registry.corpus(domain)
+    val fp = ArtifactCache.memo(spark, s"corpusfp:$table:$dir")(
+      graft.Tables.fingerprint(spark, dir, table))
     prefix + slug(dir) + "_" + fp +
       (if (generation) Registry.basisSuffix(spark, dir, domain) else "")
-  }
-
-  private def hasCorpus(spark: SparkSession, dir: String,
-      domain: String): Boolean = {
-    val table = if (domain == Registry.Doc) "documents" else "embeddings"
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** MinHash postings and shingle arrays. */

@@ -128,9 +128,9 @@ object QualityClf {
     * the GD rounds scan. */
   private def trainFrame(spark: SparkSession, dir: String): DataFrame =
     ArtifactCache.cached(spark, s"quality_train_$dir") {
-      // RAW terciles: the persisted weights are keyed on corpus
-      // content (fingerprint), so labels must be a pure function of
-      // that content — a takedown recorded before first training must
+      // RAW terciles: the persisted weights are keyed on the corpus
+      // files (fingerprint), so labels must be a pure function of
+      // their content — a takedown recorded before first training must
       // not change what the same artifact name holds (r17 ADVICE)
       val labels = TrainingPrep.lmBucketsRaw(spark, dir)
         .select(col("doc_id"),

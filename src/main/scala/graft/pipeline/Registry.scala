@@ -50,6 +50,10 @@ private[graft] object Registry {
   /** Vector-id domain (the `embeddings` corpus and its artifacts). */
   val Vec = "vec"
 
+  /** Each domain's corpus table, whose fingerprint names its artifacts
+    * ([[IndexFamily.name]]). */
+  val corpus: Map[String, String] = Map(Doc -> "documents", Vec -> "embeddings")
+
   /** Collision-proof corpus-dir slug. The readable part is the same
     * alphanumeric fold every index-table name uses
     * ([[IndexFamily.slug]]), but the registry is the one table where
@@ -163,8 +167,9 @@ private[graft] object Registry {
   }
 
   /** Order-independent-enough fingerprint of a SORTED id list (the
-    * list is canonicalized by the callers above). */
-  private def idsFp(ids: Seq[Long]): String = {
+    * list is canonicalized by the callers: the basis suffix above and
+    * the cluster table's deletion suffix). */
+  private[pipeline] def idsFp(ids: Seq[Long]): String = {
     var h = ids.length.toLong
     ids.foreach(id => h = h * 1000003L + id)
     java.lang.Long.toHexString(h)

@@ -1135,14 +1135,19 @@ object Similarity {
     * rounded-cosine/lowest-id rule as the oracle's asg CTE) and encode
     * it under the kind's codebook (residual kinds encode v − centroid).
     * Output (vec_id, codes, cent_id) — the PqM-byte-per-vector row the
-    * index stores. */
+    * index stores. Encodes the generation population (minus basis:
+    * post-basis permanent removals are hidden by codeTable's
+    * registry-filtered view until the next refresh materializes them)
+    * plus every vector already folded into the index
+    * ([[annStreamVecsTable]]'s view), so a kind first touched after
+    * folds under another kind, or rebuilt by a model refresh, serves
+    * them too. */
   private def buildCodeTable(spark: SparkSession, dir: String,
       kind: String): DataFrame = {
     val (cb, centsOpt, residual, permOpt) = pqKind(spark, dir, kind)
-    // generation population (minus basis): post-basis permanent
-    // removals are hidden by codeTable's registry-filtered view until
-    // the next refresh materializes them
-    encodeCodes(spark, basisVecs(spark, dir),
+    val population = basisVecs(spark, dir)
+    encodeCodes(spark, IndexFamily.ann.vecs.ifPresent(spark, dir)
+        .map(population.unionByName(_)).getOrElse(population),
       centsDf(spark, dir, centsOpt), cb, centsOpt, residual, permOpt)
   }
 
@@ -1338,10 +1343,11 @@ object Similarity {
     * CURRENT generation — PQ/IVF books, per-kind code tables, the
     * semantic posting table — each paired with its deterministic
     * rebuild, the [[Maintenance.refreshModels]] hook. Rebuilds of the
-    * DATA tables (codes, sempost) also re-fold the streamed extension
-    * vectors, whose raw rows the generation change does not touch:
-    * the new generation serves everything the old one did, minus the
-    * removed ids. */
+    * DATA tables (codes, sempost) also cover the streamed extension
+    * vectors, whose raw rows the generation change does not touch (a
+    * code table's first touch encodes them; the posting table re-folds
+    * them): the new generation serves everything the old one did,
+    * minus the removed ids. */
   private[pipeline] def vecGenArtifacts(spark: SparkSession,
       dir: String): Seq[(String, () => Unit)] = {
     import spark.implicits._
@@ -1366,12 +1372,8 @@ object Similarity {
       }
     val codeSpecs: Seq[(String, () => Unit)] =
       annCodeKindsPresent(spark, dir).map { k =>
-        (IndexFamily.ann.codes(k).name(spark, dir), () => {
-          codeTable(spark, dir, k, raw = true)
-          IndexFamily.ann.vecs.ifPresent(spark, dir).foreach(sv =>
-            appendAnnToIndex(spark, dir, sv, k))
-          ()
-        })
+        (IndexFamily.ann.codes(k).name(spark, dir),
+          () => { codeTable(spark, dir, k, raw = true); () })
       }
     val semSpec: Seq[(String, () => Unit)] = {
       val t = IndexFamily.sem.postings.name(spark, dir)
@@ -1569,24 +1571,6 @@ object Similarity {
     * even that one action (judge-advice round-9). */
   private def corpusCount(spark: SparkSession, dir: String): Long =
     ArtifactCache.memo(spark, s"veccount:$dir")(normedVecs(spark, dir).count())
-
-  /** Content fingerprint of the embeddings corpus at `dir`, folded into
-    * the persisted posting table's name: a regenerated corpus misses
-    * the catalog check and rebuilds instead of silently reading stale
-    * assignments, and same-sanitized dirs can only share a table when
-    * their content is identical too. Order-independent (bit_xor of
-    * per-row xxhash64 over id+vector), one narrow corpus-linear agg,
-    * memoized per session — the Dedup.corpusFingerprint discipline
-    * applied to the vector table. */
-  private[pipeline] def embFingerprint(spark: SparkSession,
-      dir: String): String =
-    ArtifactCache.memo(spark, s"embfp:$dir") {
-      val r = Tables.embeddings(spark, dir)
-        .agg(count(lit(1)).as("n"),
-          bit_xor(xxhash64(col("vec_id"), col("embedding"))).as("h"))
-        .head()
-      java.lang.Long.toHexString(r.getLong(0) * 31L + r.getLong(1))
-    }
 
   /** The semantic-dedup cluster assignment as a PERSISTED bucketed
     * lake table — the write-time artifact a production SemDeDup run

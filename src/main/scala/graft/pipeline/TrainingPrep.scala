@@ -673,8 +673,8 @@ object TrainingPrep {
 
   /** [[lmBuckets]] over the CORPUS-RESIDENT slice of the raw scored
     * artifact — the seam the quality classifier trains through: its
-    * persisted weights are fingerprint-keyed on corpus content, so the
-    * labels must be a pure function of that content too. Raw (not the
+    * persisted weights are fingerprint-keyed on the corpus files, so
+    * the labels must be a pure function of their content too. Raw (not the
     * tombstone-filtered view: a takedown recorded before first
     * training must not change what the artifact name holds — r17
     * ADVICE) and corpus-restricted (not the folded view: a streamed

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -173,21 +174,25 @@ object TableIO {
       .partitionBy(partCols: _*)
       .option("path", path).saveAsTable(table)
 
-  /** Count a table directory's DATA files (the hidden-segment filter
-    * of [[compact]]) — what compaction actually promises callers. */
-  def dataFileCount(spark: SparkSession, path: String): Int = {
+  /** The DATA files under a table path (a directory, or a single
+    * file): every file below it except those under a `_` or `.`
+    * segment (`_SUCCESS`, checksums, `_spark_metadata/0` — commit logs
+    * a read ignores). Empty when the path does not exist. The one walk
+    * of a table's files: compaction's file counts and sizing and the
+    * corpus fingerprint ([[graft.Tables.fingerprint]]) all read it.
+    * Plain statuses, not `listFiles`' located ones: on the local file
+    * system a located status forks a process per file to read its
+    * permissions, a hundred times this walk's cost. */
+  def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return 0
-    val it = fs.listFiles(hPath, true)
-    val root = fs.makeQualified(hPath).toString
-    var n = 0
-    while (it.hasNext) {
-      val rel = it.next().getPath.toString.stripPrefix(root).stripPrefix("/")
-      if (!rel.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
-        n += 1
-    }
-    n
+    def walk(f: FileStatus): Seq[FileStatus] =
+      if (!f.isDirectory) Seq(f)
+      else fs.listStatus(f.getPath).toSeq.filterNot { c =>
+        c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith(".")
+      }.flatMap(walk)
+    try walk(fs.getFileStatus(hPath))
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** [[compactBucketed]] for a PARTITIONED catalog table: stage out,
@@ -212,7 +217,7 @@ object TableIO {
     sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(sPath, true)
     spark.catalog.refreshTable(table)
-    dataFileCount(spark, path)
+    dataFiles(spark, path).size
   }
 
   /** Rewrite a bucketed catalog table back to ONE file per bucket —
@@ -244,7 +249,7 @@ object TableIO {
     sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(sPath, true)
     spark.catalog.refreshTable(table)
-    dataFileCount(spark, path)
+    dataFiles(spark, path).size
   }
 
   /** Small-files compaction: rewrite a table directory into
@@ -275,22 +280,9 @@ object TableIO {
       targetBytes: Long = 128L * 1024 * 1024,
       partitionBy: Seq[String] = Nil): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val hPath = new org.apache.hadoop.fs.Path(inPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(hPath, true)
-    val inRoot = fs.makeQualified(hPath).toString
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      // count only data files: skip _SUCCESS / checksums / hidden AND
-      // anything under a metadata directory (_spark_metadata/0 has an
-      // innocent file name — a streaming-sink table, the motivating
-      // case, would otherwise count commit-log bytes the read ignores)
-      val rel = f.getPath.toString.stripPrefix(inRoot).stripPrefix("/")
-      val hidden = rel.split('/')
-        .exists(seg => seg.startsWith("_") || seg.startsWith("."))
-      if (!hidden) bytes += f.getLen
-    }
+    // source bytes of the data files only: a streaming-sink table's
+    // commit log (`_spark_metadata/0`) is not read, so it is not sized
+    val bytes = dataFiles(spark, inPath).map(_.getLen).sum
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val df = read(spark, inPath, format, schema)
     // Unpartitioned: round-robin into exactly n near-target files.

@@ -38,8 +38,7 @@ class FanOutScanSpec extends SparkSpec {
     import spark.implicits._
     val p = spark.sparkContext.defaultParallelism
     // a corpus dir whose documents scan plans >= p splits: p + 3 files
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fanout").toString
+    val dir = SparkSpec.tempDir("graft_fanout")
     (1 to 1000).map(i => (i.toLong, s"doc $i"))
       .toDF("doc_id", "text").repartition(p + 3)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

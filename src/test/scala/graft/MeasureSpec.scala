@@ -95,7 +95,7 @@ class MeasureSpec extends SparkSpec {
     val b = measure("batch", "12")("batch_extract", "value", "unit",
       "selections", "rows", "sf").head
     assert(b.get("selections").asInt === 12)
-    val out = java.nio.file.Files.createTempDirectory("graft_measurespec").toFile
+    val out = new java.io.File(SparkSpec.tempDir("graft_measurespec"))
     try {
       val p = measure("plans", out.getPath, "t", "q1_pricing")("plans", "query",
         "wrote", "chars").head

@@ -12,13 +12,13 @@ import org.apache.spark.sql.functions._
 class ScaleUpSpec extends SparkSpec {
 
   private lazy val x1Dir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x1").toString
+    val dir = SparkSpec.tempDir("graft-x1")
     ScaleUp.run(spark, sfDir, dir, 1)
     dir
   }
 
   private lazy val x2Dir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-x2").toString
+    val dir = SparkSpec.tempDir("graft-x2")
     ScaleUp.run(spark, sfDir, dir, 2)
     dir
   }
@@ -105,7 +105,7 @@ class ScaleUpSpec extends SparkSpec {
   }
 
   test("skew mode concentrates ~20% of facts on one hot key, counts unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = SparkSpec.tempDir("graft-skew")
     ScaleUp.run(spark, sfDir, dir, 2, skew = true)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val ord = spark.read.parquet(s"$dir/orders.parquet")

@@ -13,6 +13,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** A fresh temp directory (absolute path) under `java.io.tmpdir`,
+    * deleted with everything under it when this JVM exits. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    graft.cube.SkopeQueries.deleteOnExit(d)
+    d.getAbsolutePath
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -29,8 +27,7 @@ class TablesSpec extends SparkSpec {
     * session conf, then load via eventsRange with a [t1, t3) bound.
     */
   private def roundTrip(ntz: Boolean): (DataFrame, Seq[String]) = {
-    val dir = Files.createTempDirectory("events-drift").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(SparkSpec.tempDir("events-drift"))
     val path = s"${dir.getAbsolutePath}/events.parquet"
     import spark.implicits._
     val base = Seq(

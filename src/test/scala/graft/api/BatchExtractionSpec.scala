@@ -114,7 +114,7 @@ class BatchExtractionSpec extends SparkSpec {
     // enumeration must not clip them away (round-8 review finding)
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge").toString
+    val dir = SparkSpec.tempDir("graft_edge")
     def t(day: Int) = s"2024-01-0$day 00:00:00"
     Seq(
       (1L, t(1), 135L, "click", 10.0, "{}"), // y=13: inside the grid

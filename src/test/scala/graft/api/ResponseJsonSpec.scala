@@ -133,7 +133,7 @@ class ResponseJsonSpec extends SparkSpec {
     // values array equals [i*100 for i in find_band_range(time_range)]
     // for six time ranges. Same fixture here: cell 12 carries exactly
     // band·100 at every band, probed through the full wire round trip.
-    val dir = java.nio.file.Files.createTempDirectory("graft-annual").toString
+    val dir = SparkSpec.tempDir("graft-annual")
     val s = spark
     import s.implicits._
     (1 to 31).map { b =>

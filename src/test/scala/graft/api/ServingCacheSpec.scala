@@ -99,14 +99,115 @@ class ServingCacheSpec extends SparkSpec {
     assert(blp.collect { case l: LogicalRelation => l }.nonEmpty, blp.toString)
   }
 
+  test("a rewritten, then appended, events corpus is served on the next request") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.storage.StorageLevel
+    import graft.cube.EventCube
+    val dir = SparkSpec.tempDir("graft_servefresh")
+    val events = s"$dir/events.parquet"
+    val source = spark.read.parquet(s"$sfDir/events.parquet")
+    source.write.parquet(events)
+    val reqs = sweep.filter { case (n, _) =>
+      Set("bbox mean", "point", "hourly second dataset")(n) }
+    def servedIsBatch(step: String): Unit = reqs.foreach { case (n, req) =>
+      assert(dump(extractTimeseries(spark, dir, req)) ===
+        dump(extractTimeseries(spark, dir, req, serving = true)),
+        s"$step: '$n' served a stale answer")
+    }
+    // the served cube's (band, cell) values of daily clicks
+    def cells(): Map[(Long, Long), Double] =
+      EventCube.servingCube(spark, dir, "click", EventCube.Daily, "value")
+        .collect().map(r => (r.getAs[Long]("band"), r.getAs[Long]("user_id")) ->
+          r.getAs[Double]("v")).toMap
+    def cachedBlocks() = EventCube.servingCubes(spark, dir, "value")
+      .queryExecution.withCachedData.collect { case m: InMemoryRelation => m }
+      .head.cacheBuilder.cachedColumnBuffers
+    try {
+      servedIsBatch("as written")
+      val before = cells()
+      val blocks = cachedBlocks()
+      assert(blocks.getStorageLevel !== StorageLevel.NONE)
+
+      source.withColumn("value", col("value") * 2)
+        .write.mode("overwrite").parquet(events)
+      servedIsBatch("rewritten")
+      val doubled = cells()
+      assert(doubled.keySet === before.keySet)
+      before.foreach { case (k, v) =>
+        assert(math.abs(doubled(k) - 2 * v) <= 1e-12 * math.abs(2 * v), k)
+      }
+      assert(blocks.getStorageLevel === StorageLevel.NONE,
+        "the superseded cube must be released")
+      val rewritten = cachedBlocks()
+      assert(rewritten.getStorageLevel !== StorageLevel.NONE)
+
+      // one more part file: a click of 1e6 in band 10 of cell 23 (the
+      // corpus stores ts as TIMESTAMP_NTZ)
+      source.filter(col("event_type") === "click").limit(1)
+        .withColumn("ts", lit(java.time.LocalDateTime.of(2024, 1, 10, 1, 0)))
+        .withColumn("user_id", lit(23L))
+        .withColumn("value", lit(1e6))
+        .write.mode("append").parquet(events)
+      servedIsBatch("appended")
+      val appended = cells()
+      assert(appended((10L, 23L)) > 1000.0, appended.get((10L, 23L)))
+      assert(appended.keySet === doubled.keySet + ((10L, 23L)))
+      doubled.foreach { case (k, v) =>
+        if (k != ((10L, 23L)))
+          assert(math.abs(appended(k) - v) <= 1e-12 * math.abs(v), k)
+      }
+      assert(rewritten.getStorageLevel === StorageLevel.NONE,
+        "the superseded cube must be released")
+    } finally {
+      graft.pipeline.ArtifactCache.drop(s"servecube:value:$dir")
+      graft.pipeline.ArtifactCache.drop(s"serveindex:value:$dir")
+    }
+  }
+
+  test("a superseded build that finishes late leaves its replacement persisted") {
+    // a request of the old events version is still building when one
+    // of the new version drops the entry and rebuilds it; both builds
+    // read equal file-scan plans, so the late frame's release must not
+    // uncache the new one
+    import java.util.concurrent.CountDownLatch
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    import graft.pipeline.ArtifactCache
+    val key = s"servecube:late:$sfDir"
+    def frame(): DataFrame =
+      graft.Tables.events(spark, sfDir).groupBy("event_type").count()
+    val started, go = new CountDownLatch(1)
+    var late: DataFrame = null
+    val old = new Thread(() => late = ArtifactCache.cached(spark, key, "v1") {
+      started.countDown()
+      go.await()
+      frame()
+    })
+    old.start()
+    started.await()
+    try {
+      val current = ArtifactCache.cached(spark, key, "v2")(frame())
+      go.countDown()
+      old.join()
+      assert(late.storageLevel === StorageLevel.NONE,
+        "the superseded frame must be released")
+      assert(current.storageLevel !== StorageLevel.NONE,
+        "the late release uncached the replacement")
+      assert(current.count() === frame().count())
+    } finally {
+      go.countDown()
+      ArtifactCache.drop(key)
+    }
+  }
+
   test("null cells: serving skips them like avg/percentile, point and bbox") {
     // `k` is null wherever props has no "k": a hand-written corpus
     // with such events, including one band (2) where every selected
     // cell is null and one (4) where only some are
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nullk")
-      .toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft_nullk")
     val origin = graft.cube.EventCube.OriginEpochSec
     def ev(id: Long, day: Int, hour: Int, cell: Long, dataset: String,
         k: Option[Int]): Row =

@@ -1,12 +1,11 @@
 package graft.cube
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 class CubeWriterSpec extends SparkSpec {
 
   test("materialized cube prunes partitions and matches direct compute") {
-    val out = Files.createTempDirectory("graft-cube").toString
+    val out = SparkSpec.tempDir("graft-cube")
     CubeWriter.materialize(spark, sfDir, out)
 
     val slice = CubeWriter.readSlice(spark, out, "click", 5, 25)
@@ -26,7 +25,7 @@ class CubeWriterSpec extends SparkSpec {
 
   test("Z-ordered cube: x/y pushed, per-file spatial footprint shrinks, values preserved") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("graft-zcube").toString
+    val out = SparkSpec.tempDir("graft-zcube")
     CubeWriter.materializeZOrdered(spark, sfDir, out)
 
     val slice = CubeWriter.readSpatialSlice(spark, out, "click",
@@ -60,7 +59,7 @@ class CubeWriterSpec extends SparkSpec {
     assert(zF.max <= 0.5,
       s"every Z-file must cover <= half the dataset extent, worst ${zF.max}")
 
-    val outBand = Files.createTempDirectory("graft-bcube").toString
+    val outBand = SparkSpec.tempDir("graft-bcube")
     CubeWriter.materialize(spark, sfDir, outBand)
     val bF = footprints(outBand)
     assert(bF.forall(_ >= 0.99),

@@ -121,7 +121,7 @@ class YearArithmeticSpec extends SparkSpec {
     // a corpus slice holding ONLY click events: the other four catalog
     // datasets must still appear with their declared extent (the
     // reference serves metadata.yml regardless of raster content)
-    val dir = java.nio.file.Files.createTempDirectory("graft-meta").toString
+    val dir = SparkSpec.tempDir("graft-meta")
     spark.read.parquet(s"$sfDir/events.parquet")
       .filter(col("event_type") === "click")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -27,11 +27,15 @@ class AnnAppendSpec extends SparkSpec {
 
   private val Off = 1000000L
 
+  // every kind's code table is built before any fold: a kind first
+  // touched after a fold encodes the folded vectors itself, and the
+  // cases below pin the fold path of each kind
   private lazy val cDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_annappend")
-      .toString
+    val d = SparkSpec.tempDir("graft_annappend")
     graft.Tables.embeddings(spark, sfDir)
       .write.parquet(d + "/embeddings.parquet")
+    Seq("md5", "trained", "residual", "opq")
+      .foreach(Similarity.codeTable(spark, d, _).count())
     d
   }
 
@@ -79,6 +83,26 @@ class AnnAppendSpec extends SparkSpec {
       assert(after.contains((p, p + Off)),
         s"probe $p must retrieve its appended exact copy")
     }
+  }
+
+  test("a kind first touched after folds under another kind serves them") {
+    // four new vectors (reversed corpus vectors: no corpus twin shares
+    // their codes) fold under md5 only; the trained code table does not
+    // exist yet, so its first touch must encode them too
+    val d = SparkSpec.tempDir("graft_annappend_kind")
+    graft.Tables.embeddings(spark, sfDir).write.parquet(d + "/embeddings.parquet")
+    val folded = graft.Tables.embeddings(spark, d)
+      .filter(col("vec_id") < 4)
+      .select((col("vec_id") + Off).as("vec_id"),
+        reverse(col("embedding")).as("embedding"))
+    assert(Similarity.appendAnnToIndex(spark, d,
+      Similarity.normedOfBatch(folded), "md5") === 4L)
+    val query = folded.filter(col("vec_id") === Off)
+      .withColumn("vec_id", lit(-1L))
+    val top1 = Similarity.annSearch(spark, d, query, "trained")
+      .filter(col("rank") === 1).select("vec_id").collect().map(_.getLong(0))
+    assert(top1.toSeq === Seq(Off),
+      "an exact copy of a vector folded under md5 must rank its id first")
   }
 
   test("refine re-ranks an appended candidate to rank 1 at cos 1.0") {

@@ -55,8 +55,8 @@ class BpeSpec extends SparkSpec {
 
   test("trained merges persist as a fingerprint-named sidecar") {
     val m1 = Bpe.trainMerges(spark, sfDir)
-    val tbl = "graft_bpe_" + sfDir.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      Dedup.corpusFingerprint(spark, sfDir)
+    val tbl = IndexFamily.name(spark, sfDir, "graft_bpe_", Registry.Doc,
+      generation = true)
     assert(spark.catalog.tableExists(tbl), "sidecar table missing")
     // prove the READ path is actually used: tamper the stored rank-0
     // merge, drop the in-memory memo, and observe the tampered value

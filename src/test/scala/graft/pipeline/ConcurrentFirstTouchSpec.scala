@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 class ConcurrentFirstTouchSpec extends SparkSpec {
 
   private def corpusCopy(name: String, from: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toString
+    val d = SparkSpec.tempDir(name)
     Seq("documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$from/$t.parquet").write.parquet(s"$d/$t.parquet")
     }
@@ -22,7 +22,7 @@ class ConcurrentFirstTouchSpec extends SparkSpec {
   }
 
   private lazy val single: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_touch_1").toString
+    val d = SparkSpec.tempDir("graft_touch_1")
     graft.Tables.documents(spark, sfDir).limit(80)
       .write.parquet(d + "/documents.parquet")
     graft.Tables.embeddings(spark, sfDir).limit(80)

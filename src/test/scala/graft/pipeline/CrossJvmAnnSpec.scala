@@ -34,8 +34,7 @@ class CrossJvmAnnSpec extends SparkSpec {
   }
 
   private lazy val work: String = {
-    val w = java.nio.file.Files.createTempDirectory("graft_xjvm_ann")
-      .toFile.getAbsolutePath
+    val w = SparkSpec.tempDir("graft_xjvm_ann")
     new java.io.File(s"$w/tmp").mkdirs()
     w
   }

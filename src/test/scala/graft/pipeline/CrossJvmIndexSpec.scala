@@ -37,8 +37,7 @@ class CrossJvmIndexSpec extends SparkSpec {
   }
 
   test("a brand-new JVM reads the persisted index back, bucket spec intact") {
-    val work = java.nio.file.Files.createTempDirectory("graft_xjvm")
-      .toFile.getAbsolutePath
+    val work = SparkSpec.tempDir("graft_xjvm")
     val javaBin = new java.io.File(
       sys.props("java.home"), "bin/java").getAbsolutePath
     def run(mode: String): (Int, Vector[String]) = {

@@ -27,7 +27,7 @@ class CurateBatchSpec extends SparkSpec {
   private val B2 = 8000000L
 
   private def mkCorpus(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_curate").toString
+    val d = SparkSpec.tempDir("graft_curate")
     graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
       .write.parquet(d + "/documents.parquet")
     d

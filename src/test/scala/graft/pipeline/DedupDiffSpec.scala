@@ -14,7 +14,7 @@ class DedupDiffSpec extends SparkSpec {
 
   private def corpus(seed: Int): String = {
     val rnd = new scala.util.Random(seed)
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-diff$seed").toString
+    val dir = SparkSpec.tempDir(s"graft-diff$seed")
     import spark.implicits._
     var id = -1L
     val docs = Seq.newBuilder[(Long, String, String, String, Long)]
@@ -50,7 +50,7 @@ class DedupDiffSpec extends SparkSpec {
     // regression: labelSum over an EMPTY label frame is a null sum —
     // the fixpoint compareTo NPE'd on any corpus with zero LSH
     // candidate pairs (the common case: an already-clean corpus)
-    val dir = java.nio.file.Files.createTempDirectory("graft-clean").toString
+    val dir = SparkSpec.tempDir("graft-clean")
     import spark.implicits._
     (0 until 25).map(i =>
         (i.toLong, (0 until 30).map(j => s"clean${i}tok$j").mkString(" "),

@@ -59,7 +59,7 @@ class EmbeddingPairsSpec extends SparkSpec {
     rows += ((20L, vec(4, 0.0, 5), 2))
     rows += ((21L, vec(4, ang - 1e-4, 5), 2)) // just inside
     rows += ((22L, vec(4, ang + 0.05, 5), 2)) // clearly outside
-    val dir = java.nio.file.Files.createTempDirectory("graft-embpairs").toString
+    val dir = SparkSpec.tempDir("graft-embpairs")
     val s = spark
     import s.implicits._
     rows.result().toDF("vec_id", "embedding", "label")

@@ -30,8 +30,7 @@ class IndexAppendSpec extends SparkSpec {
   private val Day2Off = 2000000L
 
   private lazy val cDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_append_corpus")
-      .toString
+    val d = SparkSpec.tempDir("graft_append_corpus")
     graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
       .write.parquet(d + "/documents.parquet")
     d
@@ -67,8 +66,7 @@ class IndexAppendSpec extends SparkSpec {
 
     // gold standard: the full pass over a combined copy (corpus ∪
     // day-1 ∪ day-2), restricted to pairs that touch day 2
-    val comb = java.nio.file.Files.createTempDirectory("graft_append_comb")
-      .toString
+    val comb = SparkSpec.tempDir("graft_append_comb")
     graft.Tables.documents(spark, cDir).unionByName(day1).unionByName(day2)
       .write.parquet(comb + "/documents.parquet")
     val day2Ids = day2.select("doc_id").collect().map(_.getLong(0)).toSet

@@ -31,8 +31,7 @@ class IndexDeleteSpec extends SparkSpec {
   // construction; drop set = SOME copies (their originals' spans then
   // demote iff no other copy keeps them duplicated)
   private lazy val cDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_del_corpus")
-      .toString
+    val d = SparkSpec.tempDir("graft_del_corpus")
     val docs = graft.Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 3 === 0)
     val copies = docs.filter(col("doc_id") % 9 === 0)
@@ -50,8 +49,7 @@ class IndexDeleteSpec extends SparkSpec {
 
   // the fresh-build-minus-docs corpus: same rows minus the drop set
   private lazy val cDir2: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_del_minus")
-      .toString
+    val d = SparkSpec.tempDir("graft_del_minus")
     graft.Tables.documents(spark, cDir)
       .filter(!col("doc_id").isin(dropIds: _*))
       .write.parquet(d + "/documents.parquet")
@@ -153,8 +151,7 @@ class IndexDeleteSpec extends SparkSpec {
     // them; a SECOND copy appended afterwards re-promotes them — the
     // r17 ADVICE corruption sequence: the demotion must not survive
     // the re-duplication, through compaction included.
-    val d = java.nio.file.Files.createTempDirectory("graft_del_redup")
-      .toString
+    val d = SparkSpec.tempDir("graft_del_redup")
     val originals = graft.Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 11 === 1)
       .filter(length(col("text")) >= Dedup.SpanLen)
@@ -169,8 +166,7 @@ class IndexDeleteSpec extends SparkSpec {
     val batch = originals.withColumn("doc_id", col("doc_id") + 2 * CopyOff)
     assert(Dedup.appendSpanToIndex(spark, d, batch) > 0L)
     // rebuild oracle: survivors + batch as a fresh corpus
-    val d2 = java.nio.file.Files.createTempDirectory("graft_del_redup2")
-      .toString
+    val d2 = SparkSpec.tempDir("graft_del_redup2")
     originals.unionByName(batch).write.parquet(d2 + "/documents.parquet")
     val rebuilt = rowSet(Dedup.spanIndexTable(spark, d2))
     assert(rowSet(Dedup.spanIndexTable(spark, d)) === rebuilt)

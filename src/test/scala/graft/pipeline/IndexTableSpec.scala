@@ -18,7 +18,7 @@ class IndexTableSpec extends SparkSpec {
 
   // docs + full-text copies (duplicated spans exist), and vectors
   private lazy val cDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_itable").toString
+    val d = SparkSpec.tempDir("graft_itable")
     val docs = graft.Tables.documents(spark, sfDir).limit(60)
     docs.unionByName(docs.limit(6).withColumn("doc_id", col("doc_id") + CopyOff))
       .write.parquet(d + "/documents.parquet")
@@ -109,7 +109,7 @@ class IndexTableSpec extends SparkSpec {
   }
 
   test("an extension table's first touch is an empty table in its layout") {
-    val d = java.nio.file.Files.createTempDirectory("graft_itable_e").toString
+    val d = SparkSpec.tempDir("graft_itable_e")
     graft.Tables.embeddings(spark, sfDir).limit(10)
       .write.parquet(d + "/embeddings.parquet")
     val vecs = Similarity.semStreamVecsTable(spark, d, raw = true)

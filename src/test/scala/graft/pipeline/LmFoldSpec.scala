@@ -23,8 +23,7 @@ class LmFoldSpec extends SparkSpec {
   private val CopyOff = 7000000L
 
   private lazy val cDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_lmfold")
-      .toString
+    val d = SparkSpec.tempDir("graft_lmfold")
     graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
       .write.parquet(d + "/documents.parquet")
     d

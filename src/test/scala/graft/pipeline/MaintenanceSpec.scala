@@ -13,7 +13,7 @@ class MaintenanceSpec extends SparkSpec {
   private val Off = 1000000L
 
   private lazy val cDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_maint").toString
+    val d = SparkSpec.tempDir("graft_maint")
     graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
       .write.parquet(d + "/documents.parquet")
     graft.Tables.embeddings(spark, sfDir)

@@ -28,8 +28,7 @@ class ModelRefreshSpec extends SparkSpec {
         n.contains(d.replaceAll("[^A-Za-z0-9]", "_"))).sorted
 
   test("doc domain: threshold crossing retrains LM + classifier to fresh-train-minus identity") {
-    val d = java.nio.file.Files.createTempDirectory("graft_refresh_doc")
-      .toString
+    val d = SparkSpec.tempDir("graft_refresh_doc")
     graft.Tables.documents(spark, sfDir)
       .write.parquet(d + "/documents.parquet")
     // train the old generation of EVERY doc-domain trained family:
@@ -72,8 +71,7 @@ class ModelRefreshSpec extends SparkSpec {
 
     // the gold standard: identical to a fresh train over a corpus
     // that never contained the removed docs — for EVERY family
-    val m = java.nio.file.Files.createTempDirectory("graft_refresh_minus")
-      .toString
+    val m = SparkSpec.tempDir("graft_refresh_minus")
     graft.Tables.documents(spark, d)
       .filter(!col("doc_id").isin(removed: _*))
       .write.parquet(m + "/documents.parquet")
@@ -125,8 +123,7 @@ class ModelRefreshSpec extends SparkSpec {
   }
 
   test("a basis advance reaches a session that read the old basis") {
-    val d = java.nio.file.Files.createTempDirectory("graft_refresh_x")
-      .toString
+    val d = SparkSpec.tempDir("graft_refresh_x")
     graft.Tables.documents(spark, sfDir).limit(100)
       .write.parquet(d + "/documents.parquet")
     val b = spark.newSession()
@@ -142,8 +139,7 @@ class ModelRefreshSpec extends SparkSpec {
   }
 
   test("vec domain: threshold crossing retrains books + codes to fresh-train-minus identity") {
-    val d = java.nio.file.Files.createTempDirectory("graft_refresh_vec")
-      .toString
+    val d = SparkSpec.tempDir("graft_refresh_vec")
     graft.Tables.embeddings(spark, sfDir)
       .write.parquet(d + "/embeddings.parquet")
     // old generation: trained books + the trained-kind code table
@@ -164,8 +160,7 @@ class ModelRefreshSpec extends SparkSpec {
     assert(newTables.size === 1 && newTables != oldTables)
 
     // gold standard vs a corpus that never contained the removed vecs
-    val m = java.nio.file.Files.createTempDirectory("graft_refreshv_minus")
-      .toString
+    val m = SparkSpec.tempDir("graft_refreshv_minus")
     graft.Tables.embeddings(spark, d)
       .filter(!col("vec_id").isin(removed: _*))
       .write.parquet(m + "/embeddings.parquet")

@@ -14,8 +14,7 @@ class RegistrySlugSpec extends SparkSpec {
   test("punctuation-variant corpus dirs get independent registries and bases") {
     // the classic collision pair under the alphanumeric fold:
     // both fold to ..._a_b
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_slugreg").toString
+    val root = SparkSpec.tempDir("graft_slugreg")
     val dirA = s"$root/a/b"
     val dirB = s"$root/a_b"
     assert(dirA.replaceAll("[^A-Za-z0-9]", "_")

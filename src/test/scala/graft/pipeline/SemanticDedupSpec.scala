@@ -89,7 +89,7 @@ class SemanticDedupSpec extends SparkSpec {
     (0 until 8).foreach(i => rows += ((100L + i, vec(0, 0.01 * i, 1), 1)))
     // tight cluster around axis 6
     (0 until 8).foreach(i => rows += ((200L + i, vec(6, 0.01 * i, 7), 2)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-semdedup").toString
+    val dir = SparkSpec.tempDir("graft-semdedup")
     val s = spark
     import s.implicits._
     rows.result().toDF("vec_id", "embedding", "label")

@@ -16,7 +16,7 @@ class SemanticSkewSpec extends SparkSpec {
   private val Distinct = 20
 
   private lazy val cDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-semskew").toString
+    val dir = SparkSpec.tempDir("graft-semskew")
     import spark.implicits._
     val dim = Similarity.Dim
     val vecs = (0 until Cluster + Distinct).map { i =>

@@ -17,7 +17,7 @@ class SkewSpec extends SparkSpec {
   private val NearIdentical = 200
 
   private lazy val skewDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = SparkSpec.tempDir("graft-skew")
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again today"
     val docs = (0 until NearIdentical + 20).map { i =>
@@ -105,7 +105,7 @@ class SkewSpec extends SparkSpec {
       add(user, edge + offs(rnd.nextInt(offs.length)), "click", i * 1.0)
       add(user, edge + offs(rnd.nextInt(offs.length)), "purchase", i * 2.0)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+    val dir = SparkSpec.tempDir("graft-attr")
     rows.result().toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = EventOps.attrWindow(spark, dir).collect()
@@ -143,7 +143,7 @@ class SkewSpec extends SparkSpec {
       (i.toLong, s"$boiler $tail", "en", s"src${i % 3}",
         (boiler.length + tail.length + 1).toLong)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-span").toString
+    val dir = SparkSpec.tempDir("graft-span")
     import spark.implicits._
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

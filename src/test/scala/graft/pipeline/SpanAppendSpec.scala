@@ -32,8 +32,7 @@ class SpanAppendSpec extends SparkSpec {
   private val Day2Off = 2000000L
 
   private lazy val cDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_span_corpus")
-      .toString
+    val d = SparkSpec.tempDir("graft_span_corpus")
     graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
       .write.parquet(d + "/documents.parquet")
     d
@@ -53,8 +52,7 @@ class SpanAppendSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getAs[Number]("i").longValue())).toSet
 
   private def combinedDir(batches: DataFrame*): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_span_comb")
-      .toString
+    val d = SparkSpec.tempDir("graft_span_comb")
     batches.foldLeft(graft.Tables.documents(spark, cDir))(_ unionAll _)
       .write.parquet(d + "/documents.parquet")
     d
@@ -83,8 +81,7 @@ class SpanAppendSpec extends SparkSpec {
 
   test("a singleton span promoted by a later batch lands the OWNER's position") {
     // fresh corpus with one unique long doc; a batch duplicates it
-    val d = java.nio.file.Files.createTempDirectory("graft_span_promo")
-      .toString
+    val d = SparkSpec.tempDir("graft_span_promo")
     import spark.implicits._
     // no INTERNAL 40-char repeats (seeded random), so the snapshot
     // index is genuinely empty and the fold's promotion is the only
@@ -115,8 +112,7 @@ class SpanAppendSpec extends SparkSpec {
     // a doc shorter than SpanLen produces ZERO spans, so it can never
     // land a posting row — if it counted as "fresh" a replayed batch
     // containing one would fold nonzero forever (ADVICE r14)
-    val d = java.nio.file.Files.createTempDirectory("graft_span_short")
-      .toString
+    val d = SparkSpec.tempDir("graft_span_short")
     import spark.implicits._
     val long = "b" + ("shared boilerplate sentence for span tests " * 3)
     Seq((1L, long, "s")).toDF("doc_id", "text", "source")
@@ -133,8 +129,7 @@ class SpanAppendSpec extends SparkSpec {
   }
 
   test("a torn append (idx landed, postings lost) heals on replay") {
-    val d = java.nio.file.Files.createTempDirectory("graft_span_torn")
-      .toString
+    val d = SparkSpec.tempDir("graft_span_torn")
     import spark.implicits._
     val txt = "a" + ("some shared boilerplate sentence for spans " * 3)
     Seq((1L, txt, "s")).toDF("doc_id", "text", "source")
@@ -167,8 +162,7 @@ class SpanAppendSpec extends SparkSpec {
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).count()
     assert(dupPost === 0L, "healing replay duplicated postings")
     // and the index still equals the rebuild after interval-dedup
-    val comb = java.nio.file.Files.createTempDirectory("graft_span_torn_c")
-      .toString
+    val comb = SparkSpec.tempDir("graft_span_torn_c")
     graft.Tables.documents(spark, d).unionAll(batch)
       .write.parquet(comb + "/documents.parquet")
     assert(starts(Dedup.spanIndexTable(spark, d)) ===

@@ -23,8 +23,7 @@ class TakedownSpec extends SparkSpec {
   // docs + full-text copies of a sub-slice so duplicated spans exist
   // (the family whose delete path has cross-doc derived state)
   private lazy val cDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_takedown")
-      .toString
+    val d = SparkSpec.tempDir("graft_takedown")
     val docs = graft.Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 3 === 0)
     val copies = docs.filter(col("doc_id") % 9 === 0)
@@ -46,8 +45,7 @@ class TakedownSpec extends SparkSpec {
 
   // fresh-build-minus oracle corpus for the doc families
   private lazy val cDirMinus: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_takedown_m")
-      .toString
+    val d = SparkSpec.tempDir("graft_takedown_m")
     graft.Tables.documents(spark, cDir)
       .filter(!col("doc_id").isin(dropDocs: _*))
       .write.parquet(d + "/documents.parquet")
@@ -161,8 +159,7 @@ class TakedownSpec extends SparkSpec {
     // own corpus (docs + full-text copies, so duplicated spans exist,
     // and vectors): no sidecar exists when session B first reads, so
     // every view B built had Tombstones.minus as the identity
-    val d = java.nio.file.Files.createTempDirectory("graft_takedown_x")
-      .toString
+    val d = SparkSpec.tempDir("graft_takedown_x")
     val docs = graft.Tables.documents(spark, sfDir).limit(60)
     docs.unionByName(docs.limit(6).withColumn("doc_id", col("doc_id") + CopyOff))
       .write.parquet(d + "/documents.parquet")
@@ -217,8 +214,7 @@ class TakedownSpec extends SparkSpec {
     // the registry is shared by every family of the domain: a permanent
     // remove through dedup alone must still drop the mm signature view
     // session B cached before it
-    val d = java.nio.file.Files.createTempDirectory("graft_takedown_r")
-      .toString
+    val d = SparkSpec.tempDir("graft_takedown_r")
     graft.Tables.documents(spark, sfDir).limit(40)
       .write.parquet(d + "/documents.parquet")
     val b = spark.newSession()
@@ -234,8 +230,7 @@ class TakedownSpec extends SparkSpec {
 
   test("permanent takedown records both id domains in the registry once") {
     // separate corpus: registry state must not leak into the main test
-    val d = java.nio.file.Files.createTempDirectory("graft_takedown_p")
-      .toString
+    val d = SparkSpec.tempDir("graft_takedown_p")
     graft.Tables.documents(spark, sfDir).limit(50)
       .write.parquet(d + "/documents.parquet")
     graft.Tables.embeddings(spark, sfDir).limit(50)

@@ -81,7 +81,7 @@ class TrainingPrepSpec extends SparkSpec {
       (7L, text, "src0", "en", text.length.toLong),
       (63L, text, "src1", "en", text.length.toLong)
     ).toDF("doc_id", "text", "source", "lang", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("trainingprep").toString
+    val tmp = SparkSpec.tempDir("trainingprep")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = TrainingPrep.contamination(spark, tmp).collect()
     assert(out.length == 1 && out.head.getAs[Long]("doc_id") == 63L)
@@ -112,7 +112,7 @@ class TrainingPrepSpec extends SparkSpec {
       (7L, text, "src0", "en", text.length.toLong),
       (63L, text, "src1", "en", text.length.toLong)
     ).toDF("doc_id", "text", "source", "lang", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("decontam").toString
+    val tmp = SparkSpec.tempDir("decontam")
     fixture.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = TrainingPrep.decontaminate(spark, tmp).collect()
     assert(out.isEmpty, "the fully-contaminated train doc must be dropped")
@@ -169,7 +169,7 @@ class TrainingPrepSpec extends SparkSpec {
     // MaxEpochs and the dominant source absorbs the excess
     val s = spark
     import s.implicits._
-    val d = java.nio.file.Files.createTempDirectory("mix_skew").toString
+    val d = SparkSpec.tempDir("mix_skew")
     def doc(id: Long, words: Int, src: String) =
       (id, Seq.fill(words)("w").mkString(" "), src)
     ((0 until 10).map(i => doc(i.toLong, 1000, "big")) ++
@@ -230,7 +230,7 @@ class TrainingPrepSpec extends SparkSpec {
       (2L, "a b a b", "s", "en", 7L),
       (3L, "a b", "s", "en", 3L)
     ).toDF("doc_id", "text", "source", "lang", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("bigram_short").toString
+    val tmp = SparkSpec.tempDir("bigram_short")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val rows = TrainingPrep.bigramLogprob(spark, tmp).collect()
       .map(r => r.getLong(0) -> r.getAs[Long]("n_bigrams")).toMap

@@ -323,8 +323,7 @@ class GeoTiffSpec extends SparkSpec {
     // ingestion parallelism must come from FILE COUNT (binaryFile scan
     // splits, each granule decoded whole on an executor), never from a
     // single-file driver loop
-    val dir = java.nio.file.Files.createTempDirectory("gt_many")
-    dir.toFile.deleteOnExit()
+    val dir = java.nio.file.Paths.get(graft.SparkSpec.tempDir("gt_many"))
     (0 until 64).foreach { i =>
       val bytes = makeTiff(ByteOrder.LITTLE_ENDIAN, 8, 8, 4,
         planar = 1, tiled = false, deflate = false, rowsPerStrip = 4,

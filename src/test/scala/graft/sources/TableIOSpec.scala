@@ -1,13 +1,12 @@
 package graft.sources
 
 import graft.{SparkSpec, Tables}
-import java.nio.file.Files
 
 class TableIOSpec extends SparkSpec {
 
   private def roundTrip(fmt: TableIO.Format, table: String): Unit = {
     val df = Tables.load(spark, sfDir, table)
-    val dir = Files.createTempDirectory(s"graft_io_${fmt.name}").toString
+    val dir = SparkSpec.tempDir(s"graft_io_${fmt.name}")
     TableIO.write(df, dir, fmt)
     val back = TableIO.read(spark, dir, fmt, df.schema)
     assert(back.schema == df.schema, s"$fmt schema drift")
@@ -30,7 +29,7 @@ class TableIOSpec extends SparkSpec {
 
   test("parquet round-trips lineitem with partitioning") {
     val df = Tables.lineitem(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_io_part").toString
+    val dir = SparkSpec.tempDir("graft_io_part")
     TableIO.write(df, dir, TableIO.Parquet, partitionBy = Seq("l_returnflag"))
     val back = TableIO.read(spark, dir, TableIO.Parquet, df.schema)
     assert(back.count() == df.count())
@@ -40,7 +39,7 @@ class TableIOSpec extends SparkSpec {
 
   test("csv refuses nested columns instead of silently stringifying") {
     val df = Tables.embeddings(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_io_bad").toString
+    val dir = SparkSpec.tempDir("graft_io_bad")
     intercept[IllegalArgumentException] {
       TableIO.write(df, dir, TableIO.Csv)
     }
@@ -48,7 +47,7 @@ class TableIOSpec extends SparkSpec {
 
   test("timestamps survive csv with microsecond precision") {
     val df = Tables.events(spark, sfDir).select("event_id", "ts", "value")
-    val dir = Files.createTempDirectory("graft_io_ts").toString
+    val dir = SparkSpec.tempDir("graft_io_ts")
     TableIO.write(df, dir, TableIO.Csv)
     val back = TableIO.read(spark, dir, TableIO.Csv, df.schema)
     val a = df.collect().map(_.toString).sorted
@@ -60,7 +59,7 @@ class TableIOSpec extends SparkSpec {
     // the small-files problem in miniature: events sprayed across 64
     // tiny files, compacted back to ~target-sized ones
     val df = Tables.events(spark, sfDir)
-    val smallDir = Files.createTempDirectory("graft_small").toString
+    val smallDir = SparkSpec.tempDir("graft_small")
     TableIO.write(df.repartition(64), smallDir, TableIO.Parquet)
     def dataFiles(d: String) = new java.io.File(d).listFiles()
       .filter(f => f.isFile && !f.getName.startsWith("_") &&
@@ -69,7 +68,7 @@ class TableIOSpec extends SparkSpec {
     assert(before.length == 64, s"expected 64 small files, got ${before.length}")
     val totalBytes = before.map(_.length).sum
     val target = totalBytes / 4 // aim for ~4 output files
-    val outDir = Files.createTempDirectory("graft_compact").toString
+    val outDir = SparkSpec.tempDir("graft_compact")
     val n = TableIO.compact(spark, smallDir, outDir, TableIO.Parquet,
       df.schema, targetBytes = target)
     val after = dataFiles(outDir)
@@ -91,10 +90,10 @@ class TableIOSpec extends SparkSpec {
     // hash-cluster so each dataset directory holds exactly one file
     val df = Tables.events(spark, sfDir)
       .select("event_id", "ts", "event_type", "value")
-    val smallDir = Files.createTempDirectory("graft_small_p").toString
+    val smallDir = SparkSpec.tempDir("graft_small_p")
     TableIO.write(df.repartition(16), smallDir, TableIO.Parquet,
       partitionBy = Seq("event_type"))
-    val outDir = Files.createTempDirectory("graft_compact_p").toString
+    val outDir = SparkSpec.tempDir("graft_compact_p")
     TableIO.compact(spark, smallDir, outDir, TableIO.Parquet, df.schema,
       targetBytes = 4L * 1024, partitionBy = Seq("event_type"))
     val dirs = new java.io.File(outDir).listFiles()
@@ -116,8 +115,8 @@ class TableIOSpec extends SparkSpec {
     // straight off the scan — no Exchange, no Sort in the plan.
     // Broadcast is disabled so the shuffle-free-ness comes from the
     // bucket layout, not from the tables being small.
-    val liDir = Files.createTempDirectory("graft_bkt_li").toString
-    val ordDir = Files.createTempDirectory("graft_bkt_ord").toString
+    val liDir = SparkSpec.tempDir("graft_bkt_li")
+    val ordDir = SparkSpec.tempDir("graft_bkt_ord")
     TableIO.writeBucketed(
       Tables.lineitem(spark, sfDir)
         .select("l_orderkey", "l_extendedprice", "l_discount"),

@@ -28,8 +28,7 @@ class AnnStreamSpec extends SparkSpec {
   private val Off3 = 3000000L
 
   private def freshCorpus(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_annstream")
-      .toString
+    val d = SparkSpec.tempDir("graft_annstream")
     graft.Tables.embeddings(spark, sfDir)
       .write.parquet(d + "/embeddings.parquet")
     d
@@ -55,14 +54,14 @@ class AnnStreamSpec extends SparkSpec {
     rows.filter(_._2 == probe).map(_._4)
 
   private lazy val sink: String =
-    java.nio.file.Files.createTempDirectory("ann_sink").toString
+    SparkSpec.tempDir("ann_sink")
 
   private lazy val streamed: Set[(Long, Long, Int, Long, Double)] = {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, Array[Float])]
-    val ckpt = java.nio.file.Files.createTempDirectory("ann_ckpt").toString
+    val ckpt = SparkSpec.tempDir("ann_ckpt")
     val q = AnnStream.start(spark, cDir,
       input.toDF().toDF("vec_id", "embedding"), sink, ckpt)
     try {
@@ -117,7 +116,7 @@ class AnnStreamSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, Array[Float])]
-    val ckpt2 = java.nio.file.Files.createTempDirectory("ann_ckpt2").toString
+    val ckpt2 = SparkSpec.tempDir("ann_ckpt2")
     val q = AnnStream.start(spark, cDir,
       input.toDF().toDF("vec_id", "embedding"), sink, ckpt2)
     try {

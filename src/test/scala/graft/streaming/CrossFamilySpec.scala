@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 class CrossFamilySpec extends SparkSpec {
 
   private def freshCorpus(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    val d = SparkSpec.tempDir(prefix)
     graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
       .write.parquet(d + "/documents.parquet")
     graft.Tables.embeddings(spark, sfDir)
@@ -111,9 +111,9 @@ class CrossFamilySpec extends SparkSpec {
   test("three twins + compactAll interleaved equal the serial run " +
       "per family") {
     def sinks() = (
-      java.nio.file.Files.createTempDirectory("xf_span").toString,
-      java.nio.file.Files.createTempDirectory("xf_dedup").toString,
-      java.nio.file.Files.createTempDirectory("xf_ann").toString)
+      SparkSpec.tempDir("xf_span"),
+      SparkSpec.tempDir("xf_dedup"),
+      SparkSpec.tempDir("xf_ann"))
 
     // serial reference
     val dS = freshCorpus("xf_serial")

@@ -45,8 +45,8 @@ class DedupStreamSpec extends SparkSpec {
 
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, String)]
-    val sink = java.nio.file.Files.createTempDirectory("dedup_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("dedup_ckpt").toString
+    val sink = SparkSpec.tempDir("dedup_sink")
+    val ckpt = SparkSpec.tempDir("dedup_ckpt")
     val q = DedupStream.start(spark, sfDir,
       input.toDF().toDF("doc_id", "text"), sink, ckpt)
     try {
@@ -90,7 +90,7 @@ class DedupStreamSpec extends SparkSpec {
     val n1 = maxId + 1
     val n2 = maxId + 2
 
-    val sink = tmp("dedup_new_sink")
+    val sink = SparkSpec.tempDir("dedup_new_sink")
     streamBatches(spark, Seq("doc_id", "text"),
         Seq((n1, srcText)), Seq((n2, srcText))) {
       (in, ckpt) => DedupStream.start(spark, cDir, in, sink, ckpt)
@@ -118,7 +118,7 @@ class DedupStreamSpec extends SparkSpec {
     import s.implicits._
     val cDir = freshCorpus(spark, sfDir, "documents", "dedup_replay_corpus")
     val (srcText, maxId) = seed(cDir)
-    val sink = tmp("dedup_replay")
+    val sink = SparkSpec.tempDir("dedup_replay")
     def batchDf(id: Long) = Seq((id, srcText)).toDF("doc_id", "text")
     DedupStream.processBatch(spark, cDir, batchDf(maxId + 11), sink, 0L)
     DedupStream.processBatch(spark, cDir, batchDf(maxId + 12), sink, 1L)
@@ -146,7 +146,7 @@ class DedupStreamSpec extends SparkSpec {
     import s.implicits._
     val cDir = freshCorpus(spark, sfDir, "documents", "dedup_restart_corpus")
     val (srcText, maxId) = seed(cDir)
-    val sink = tmp("dedup_restart")
+    val sink = SparkSpec.tempDir("dedup_restart")
     val start = (in: org.apache.spark.sql.DataFrame, ckpt: String) =>
       DedupStream.start(spark, cDir, in, sink, ckpt)
 
@@ -180,7 +180,7 @@ class DedupStreamSpec extends SparkSpec {
     val cDir = freshCorpus(spark, sfDir, "documents", "dedup_td_corpus")
     val (srcText, maxId) = seed(cDir)
     val (n1, n2) = (maxId + 1, maxId + 2)
-    val sink = tmp("dedup_td")
+    val sink = SparkSpec.tempDir("dedup_td")
     def takedown() = Maintenance.takedown(spark, cDir, docIds = Seq(n1),
       permanent = permanent)
     if (permanent) takedown()

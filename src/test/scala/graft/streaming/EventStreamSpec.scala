@@ -110,7 +110,7 @@ class EventStreamSpec extends SparkSpec {
     val (minUs, maxUs) = microBounds(raw)
     val cut1 = minUs + (maxUs - minUs) / 2
     val cut2 = minUs + (maxUs - minUs) * 3 / 4
-    val dir = java.nio.file.Files.createTempDirectory("graft_parity").toString
+    val dir = SparkSpec.tempDir("graft_parity")
     new java.io.File(s"$dir/src").mkdirs()
     Seq(tsMicros < cut1,
         tsMicros >= cut1 && tsMicros < cut2,
@@ -170,7 +170,7 @@ class EventStreamSpec extends SparkSpec {
     val (minUs, maxUs) = microBounds(raw)
     val cut1 = minUs + (maxUs - minUs) / 2
     val cut2 = minUs + (maxUs - minUs) * 3 / 4
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_join").toString
+    val dir = SparkSpec.tempDir("graft_attr_join")
     new java.io.File(s"$dir/src").mkdirs()
     Seq(tsMicros < cut1,
         tsMicros >= cut1 && tsMicros < cut2,
@@ -243,7 +243,7 @@ class EventStreamSpec extends SparkSpec {
     val (minUs, maxUs) = microBounds(raw)
     val cut1 = minUs + (maxUs - minUs) / 3
     val cut2 = minUs + (maxUs - minUs) * 2 / 3
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = SparkSpec.tempDir("graft_ckpt")
     new java.io.File(s"$dir/src").mkdirs()
     def land(name: String, p: org.apache.spark.sql.Column, mtime: Long): Unit = {
       raw.filter(p).coalesce(1).write.mode("overwrite").parquet(s"$dir/st_$name")
@@ -305,7 +305,7 @@ class EventStreamSpec extends SparkSpec {
     val s = spark
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy").toString
+    val dir = SparkSpec.tempDir("graft_legacy")
     def ns(day: Int) = (1704067200L + day * 86400L) * 1000000000L
     Seq((1L, ns(0), 1L, "click", 10.0, "{}"),
         (2L, ns(0), 2L, "click", 30.0, "{}"),
@@ -330,7 +330,7 @@ class EventStreamSpec extends SparkSpec {
     // fails at construction instead (judge-advice fix)
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mixed").toString
+    val dir = SparkSpec.tempDir("graft_mixed")
     Seq((1L, 1704067200L * 1000000000L, 1L, "click", 10.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.parquet(s"$dir/src/legacy")

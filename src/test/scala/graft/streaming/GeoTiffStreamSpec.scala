@@ -21,9 +21,9 @@ class GeoTiffStreamSpec extends SparkSpec {
   }
 
   test("streaming ingest: exactly-once across restart, equals batch readCube") {
-    val arch = Files.createTempDirectory("graft-arch").toFile
-    val out = Files.createTempDirectory("graft-arch-out").toString
-    val ckpt = Files.createTempDirectory("graft-arch-ckpt").toString
+    val arch = new java.io.File(SparkSpec.tempDir("graft-arch"))
+    val out = SparkSpec.tempDir("graft-arch-out")
+    val ckpt = SparkSpec.tempDir("graft-arch-ckpt")
 
     def drop(seed: Int): Unit =
       Files.write(new java.io.File(arch, f"granule_$seed%03d.tif").toPath,

@@ -11,14 +11,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * restart compaction promises. */
 object IndexStreamFixtures {
 
-  def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** A private copy of the sf corpus `table` ("documents" or
     * "embeddings"). */
   def freshCorpus(spark: SparkSession, sfDir: String, table: String,
       prefix: String): String = {
-    val d = tmp(prefix)
+    val d = graft.SparkSpec.tempDir(prefix)
     spark.read.parquet(s"$sfDir/$table.parquet")
       .write.parquet(s"$d/$table.parquet")
     d
@@ -32,7 +29,7 @@ object IndexStreamFixtures {
       before: Int => Unit = _ => ()): Unit = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[T]
-    val q = start(input.toDF().toDF(cols: _*), tmp("stream_ckpt"))
+    val q = start(input.toDF().toDF(cols: _*), graft.SparkSpec.tempDir("stream_ckpt"))
     try batches.zipWithIndex.foreach { case (b, i) =>
       before(i)
       input.addData(b)

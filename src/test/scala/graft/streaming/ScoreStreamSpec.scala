@@ -17,7 +17,7 @@ class ScoreStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val cDir = {
-      val d = java.nio.file.Files.createTempDirectory("scst_corpus").toString
+      val d = SparkSpec.tempDir("scst_corpus")
       graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
         .write.parquet(d + "/documents.parquet")
       d
@@ -30,8 +30,8 @@ class ScoreStreamSpec extends SparkSpec {
 
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, String)]
-    val sink = java.nio.file.Files.createTempDirectory("scst_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("scst_ckpt").toString
+    val sink = SparkSpec.tempDir("scst_sink")
+    val ckpt = SparkSpec.tempDir("scst_ckpt")
     val q = ScoreStream.start(spark, cDir,
       input.toDF().toDF("doc_id", "text"), sink, ckpt)
     try {

@@ -52,8 +52,8 @@ class SemanticStreamSpec extends SparkSpec {
 
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, Array[Float])]
-    val sink = java.nio.file.Files.createTempDirectory("sem_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sem_ckpt").toString
+    val sink = SparkSpec.tempDir("sem_sink")
+    val ckpt = SparkSpec.tempDir("sem_ckpt")
     val q = SemanticStream.start(spark, sfDir,
       input.toDF().toDF("vec_id", "embedding"), sink, ckpt)
     try {
@@ -76,7 +76,7 @@ class SemanticStreamSpec extends SparkSpec {
     val n1 = maxId + 31
     val n2 = maxId + 32
 
-    val sink = tmp("sem_new_sink")
+    val sink = SparkSpec.tempDir("sem_new_sink")
     streamBatches(spark, Seq("vec_id", "embedding"),
         Seq((n1, src._2)), Seq((n2, src._2))) {
       (in, ckpt) => SemanticStream.start(spark, cDir, in, sink, ckpt)
@@ -100,7 +100,7 @@ class SemanticStreamSpec extends SparkSpec {
     import s.implicits._
     val cDir = freshCorpus(spark, sfDir, "embeddings", "sem_replay_corpus")
     val (src, maxId) = seed(cDir)
-    val sink = tmp("sem_replay")
+    val sink = SparkSpec.tempDir("sem_replay")
     def batchDf(id: Long) = Seq((id, src._2)).toDF("vec_id", "embedding")
     SemanticStream.processBatch(spark, cDir, batchDf(maxId + 11), sink, 0L)
     SemanticStream.processBatch(spark, cDir, batchDf(maxId + 12), sink, 1L)
@@ -127,7 +127,7 @@ class SemanticStreamSpec extends SparkSpec {
     val (src, maxId) = seed(cDir)
     val n1 = maxId + 41
     val n2 = maxId + 42
-    val sink = tmp("sem_restart")
+    val sink = SparkSpec.tempDir("sem_restart")
     val start = (in: org.apache.spark.sql.DataFrame, ckpt: String) =>
       SemanticStream.start(spark, cDir, in, sink, ckpt)
 
@@ -166,7 +166,7 @@ class SemanticStreamSpec extends SparkSpec {
     val cDir = freshCorpus(spark, sfDir, "embeddings", "sem_td_corpus")
     val (src, maxId) = seed(cDir)
     val (n1, n2) = (maxId + 1, maxId + 2)
-    val sink = tmp("sem_td")
+    val sink = SparkSpec.tempDir("sem_td")
     def takedown() = Maintenance.takedown(spark, cDir, vecIds = Seq(n1),
       permanent = permanent)
     if (permanent) takedown()
@@ -189,8 +189,7 @@ class SemanticStreamSpec extends SparkSpec {
 
   test("a corpus-resident vec_id folds no duplicate into semvecs") {
     import org.apache.spark.sql.functions._
-    val cDir = java.nio.file.Files
-      .createTempDirectory("graft_semdup").toString
+    val cDir = SparkSpec.tempDir("graft_semdup")
     graft.Tables.embeddings(spark, sfDir).filter(col("vec_id") < 64)
       .write.parquet(cDir + "/embeddings.parquet")
     val S = graft.pipeline.Similarity

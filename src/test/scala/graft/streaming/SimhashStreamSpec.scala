@@ -47,8 +47,8 @@ class SimhashStreamSpec extends SparkSpec {
 
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, String)]
-    val sink = java.nio.file.Files.createTempDirectory("sh_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sh_ckpt").toString
+    val sink = SparkSpec.tempDir("sh_sink")
+    val ckpt = SparkSpec.tempDir("sh_ckpt")
     val q = SimhashStream.start(spark, sfDir,
       input.toDF().toDF("doc_id", "text"), sink, ckpt)
     try {
@@ -69,7 +69,7 @@ class SimhashStreamSpec extends SparkSpec {
     val n1 = maxId + 21
     val n2 = maxId + 22
 
-    val sink = tmp("sh_new_sink")
+    val sink = SparkSpec.tempDir("sh_new_sink")
     val s = spark
     import s.implicits._
     streamBatches(spark, Seq("doc_id", "text"),
@@ -100,7 +100,7 @@ class SimhashStreamSpec extends SparkSpec {
     import s.implicits._
     val cDir = freshCorpus(spark, sfDir, "documents", "sh_replay_corpus")
     val (srcText, maxId) = seed(cDir)
-    val sink = tmp("sh_replay")
+    val sink = SparkSpec.tempDir("sh_replay")
     def batchDf(id: Long) = Seq((id, srcText)).toDF("doc_id", "text")
     SimhashStream.processBatch(spark, cDir, batchDf(maxId + 11), sink, 0L)
     SimhashStream.processBatch(spark, cDir, batchDf(maxId + 12), sink, 1L)
@@ -119,7 +119,7 @@ class SimhashStreamSpec extends SparkSpec {
   test("restart compacts the stored table and keeps the cross-run pair") {
     val cDir = freshCorpus(spark, sfDir, "documents", "sh_restart_corpus")
     val (srcText, maxId) = seed(cDir)
-    val sink = tmp("sh_restart")
+    val sink = SparkSpec.tempDir("sh_restart")
     val s = spark
     import s.implicits._
     val start = (in: org.apache.spark.sql.DataFrame, ckpt: String) =>
@@ -152,7 +152,7 @@ class SimhashStreamSpec extends SparkSpec {
     val cDir = freshCorpus(spark, sfDir, "documents", "sh_td_corpus")
     val (srcText, maxId) = seed(cDir)
     val (n1, n2) = (maxId + 1, maxId + 2)
-    val sink = tmp("sh_td")
+    val sink = SparkSpec.tempDir("sh_td")
     def takedown() = Maintenance.takedown(spark, cDir, docIds = Seq(n1),
       permanent = permanent)
     if (permanent) takedown()

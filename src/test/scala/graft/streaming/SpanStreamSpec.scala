@@ -23,7 +23,7 @@ class SpanStreamSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getAs[Number]("i").longValue())).toSet
 
   private def freshCorpus(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    val d = SparkSpec.tempDir(prefix)
     graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 3 === 0)
       .write.parquet(d + "/documents.parquet")
     d
@@ -43,8 +43,8 @@ class SpanStreamSpec extends SparkSpec {
 
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, String)]
-    val sink = java.nio.file.Files.createTempDirectory("spst_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("spst_ckpt").toString
+    val sink = SparkSpec.tempDir("spst_sink")
+    val ckpt = SparkSpec.tempDir("spst_ckpt")
     val q = SpanStream.start(spark, cDir,
       input.toDF().toDF("doc_id", "text"), sink, ckpt)
     try {
@@ -55,7 +55,7 @@ class SpanStreamSpec extends SparkSpec {
     } finally q.stop()
 
     val folded = starts(graft.pipeline.Dedup.spanIndexTable(spark, cDir))
-    val comb = java.nio.file.Files.createTempDirectory("spst_comb").toString
+    val comb = SparkSpec.tempDir("spst_comb")
     val deltaDf = (day1 ++ day2).toSeq.toDF("doc_id", "text")
       .withColumn("source", lit("s"))
     graft.Tables.documents(spark, cDir)
@@ -77,7 +77,7 @@ class SpanStreamSpec extends SparkSpec {
     // corpus with NO internal 40-char repeats; batch 1 adds a unique
     // doc (still singleton), batch 2 duplicates it — the promotion
     // must flow through the stored posting table, not stream state
-    val d = java.nio.file.Files.createTempDirectory("spst_promo").toString
+    val d = SparkSpec.tempDir("spst_promo")
     val rnd = new scala.util.Random(11)
     val uniq = Array.fill(150)(('a' + rnd.nextInt(26)).toChar).mkString
     Seq((1L, "short corpus doc", "s")).toDF("doc_id", "text", "source")
@@ -85,8 +85,8 @@ class SpanStreamSpec extends SparkSpec {
 
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, String)]
-    val sink = java.nio.file.Files.createTempDirectory("spst_p_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("spst_p_ckpt").toString
+    val sink = SparkSpec.tempDir("spst_p_sink")
+    val ckpt = SparkSpec.tempDir("spst_p_ckpt")
     val q = SpanStream.start(spark, d,
       input.toDF().toDF("doc_id", "text"), sink, ckpt)
     try {
@@ -109,11 +109,11 @@ class SpanStreamSpec extends SparkSpec {
   test("restart compacts the span tables back toward one file per bucket") {
     val s = spark
     import s.implicits._
-    val d = java.nio.file.Files.createTempDirectory("spst_cmp").toString
+    val d = SparkSpec.tempDir("spst_cmp")
     val txt = "d" + ("restart compaction boilerplate sentence for spans " * 3)
     Seq((1L, txt, "s")).toDF("doc_id", "text", "source")
       .write.parquet(d + "/documents.parquet")
-    val sink = java.nio.file.Files.createTempDirectory("spst_c_sink").toString
+    val sink = SparkSpec.tempDir("spst_c_sink")
     // two folds: snapshot build + two appends → multi-file buckets
     SpanStream.processBatch(spark, d,
       Seq((10L, txt)).toDF("doc_id", "text"), sink, 0L)
@@ -135,7 +135,7 @@ class SpanStreamSpec extends SparkSpec {
     // restart: the span family compacts before the stream begins
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[(Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("spst_c_ckpt").toString
+    val ckpt = SparkSpec.tempDir("spst_c_ckpt")
     val q = SpanStream.start(spark, d,
       input.toDF().toDF("doc_id", "text"), sink, ckpt)
     q.stop()
@@ -150,11 +150,11 @@ class SpanStreamSpec extends SparkSpec {
   test("a replayed micro-batch folds nothing and rewrites identical sink rows") {
     val s = spark
     import s.implicits._
-    val d = java.nio.file.Files.createTempDirectory("spst_replay").toString
+    val d = SparkSpec.tempDir("spst_replay")
     val txt = "c" + ("span stream replay boilerplate sentence " * 3)
     Seq((1L, txt, "s")).toDF("doc_id", "text", "source")
       .write.parquet(d + "/documents.parquet")
-    val sink = java.nio.file.Files.createTempDirectory("spst_r_sink").toString
+    val sink = SparkSpec.tempDir("spst_r_sink")
     val batch = Seq((10L, txt), (11L, "tiny")).toDF("doc_id", "text")
 
     SpanStream.processBatch(spark, d, batch, sink, 0L)
